@@ -41,6 +41,9 @@ class Inputs:
     seed: int
     docs_path: str
     media_path: str
+    # the warm-up corpus: the same recipe at `WARMUP_SCALE`, no oracle
+    warmup_docs_path: str
+    warmup_media_path: str
     oracle: dict[str, tuple[list, dict]]
     planted: dict[str, set[int]]
     meta: dict
@@ -82,11 +85,16 @@ def compute_oracle(w: W.Workload, procs: int) -> dict[str, tuple[list, dict]]:
 
 
 def _build(tmp: str, name: str, seed: int, procs: int) -> None:
-    """Generate, write and run the oracle into `tmp` (in a child process,
-    so the engine's Spark modules are not imported before set-up)."""
+    """Generate and write the workload and its warm-up corpus, and run the
+    oracle, into `tmp` (in a child process, so the engine's Spark modules
+    are not imported before set-up)."""
     t0 = time.perf_counter()
     w = W.build(name, seed)
     W.write_corpus(w, tmp, W.JOBS[name]["layout_buckets"])
+    W.write_corpus(
+        W.build(name, seed, scale=W.WARMUP_SCALE),
+        os.path.join(tmp, "warmup"), W.JOBS[name]["layout_buckets"],
+    )
     t1 = time.perf_counter()
     oracle = compute_oracle(w, procs)
     t2 = time.perf_counter()
@@ -139,5 +147,7 @@ def prepare(root: str, work: str, name: str, seed: int, procs: int) -> Inputs:
         name, seed,
         os.path.join(final, "documents.parquet"),
         os.path.join(final, "media.parquet"),
+        os.path.join(final, "warmup", "documents.parquet"),
+        os.path.join(final, "warmup", "media.parquet"),
         oracle, planted, meta,
     )

@@ -6,7 +6,7 @@ Times the product entry point, `checkpoint.run_extraction_job` (what
 nproc), over one seeded workload, and checks every committed document
 against the single-process oracle.
 
-    python3 perfbench/run.py --workload media_mix --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload media_mix --seed 1 --seconds 6 --trace 0
 
 Run from the repository root. The last stdout line is one JSON object
 {"correct", "attempted", "failed", "metrics"}; the line before it is the
@@ -34,8 +34,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.getcwd()
 WORK = os.path.join(ROOT, ".perfbench_work")
 
-# warm-up passes charged to set-up: after one, passes sit within host
-# noise of each other; a second would add ~10 s to every run
+# warm-up passes over the small warm-up corpus, charged to set-up: most
+# of a cold pass is fixed cost (class loading, codegen, Python worker
+# start), so a small corpus of the same recipe pays it for less
 WARMUP_PASSES = 1
 GC_SETTLE_S = 1.0
 
@@ -104,14 +105,15 @@ def stop_resource_tracker() -> None:
         stop()
 
 
-def run_pass(spark, inputs, out_dir: str, run_id: str) -> dict:
-    """One job: every bucket committed, over as many invocations as the
-    workload's shape needs (a stop after `max_buckets`, then a resume).
-    Returns the summed invocation wall time and the reports."""
+def run_pass(spark, name: str, tables: tuple[str, str], out_dir: str, run_id: str) -> dict:
+    """One job over the (documents, media) `tables`: every bucket
+    committed, over as many invocations as workload `name`'s shape needs
+    (a stop after `max_buckets`, then a resume). Returns the summed
+    invocation wall time and the reports."""
     import workloads as W
     from ocr_spark.spark.checkpoint import run_extraction_job
 
-    shape = W.JOBS[inputs.name]
+    shape = W.JOBS[name]
     kw = {}
     if shape["span_partitions_per_core"]:
         kw["span_partitions"] = (
@@ -121,8 +123,8 @@ def run_pass(spark, inputs, out_dir: str, run_id: str) -> dict:
     max_buckets = shape["max_buckets"]
     while True:
         t0 = time.perf_counter()
-        docs = spark.read.parquet(inputs.docs_path)
-        media = spark.read.parquet(inputs.media_path)
+        docs = spark.read.parquet(tables[0])
+        media = spark.read.parquet(tables[1])
         rep = run_extraction_job(
             spark, docs, media, out_dir=out_dir, run_id=run_id,
             n_buckets=shape["n_buckets"], mode="fused",
@@ -173,9 +175,12 @@ def main(argv: list[str] | None = None) -> int:
     runs_dir = os.path.join(WORK, "runs", f"{os.getpid()}")
     shutil.rmtree(runs_dir, ignore_errors=True)
     try:
+        warm_walls = []
         for i in range(WARMUP_PASSES):
             out = os.path.join(runs_dir, f"warm{i}")
-            run_pass(spark, inp, out, f"warm{i}")
+            res = run_pass(spark, inp.name, (inp.warmup_docs_path, inp.warmup_media_path),
+                           out, f"warm{i}")
+            warm_walls.append(res["wall_s"])
             shutil.rmtree(out, ignore_errors=True)
         t_first = time.perf_counter()
         setup_s = t_first - T_START - prep_s
@@ -186,8 +191,7 @@ def main(argv: list[str] | None = None) -> int:
             probe.mark()
         passes, attempted, failed, problems = [], 0, 0, {}
         timed = 0.0
-        min_passes = W.JOBS[args.workload]["min_passes"]
-        while timed < args.seconds or len(passes) < min_passes:
+        while timed < args.seconds:
             out = os.path.join(runs_dir, f"pass{len(passes)}")
             # every pass starts from a collected driver heap, so the JVM's
             # share of the peak does not depend on when it last collected;
@@ -196,7 +200,8 @@ def main(argv: list[str] | None = None) -> int:
             time.sleep(GC_SETTLE_S)
             pss.reset()
             ticks0 = host.cpu_ticks()
-            res = run_pass(spark, inp, out, f"pass{len(passes)}")
+            res = run_pass(spark, inp.name, (inp.docs_path, inp.media_path),
+                           out, f"pass{len(passes)}")
             ticks1 = host.cpu_ticks()
             peak, peak_by = pss.peak()
             timed += res["wall_s"]
@@ -233,13 +238,14 @@ def main(argv: list[str] | None = None) -> int:
         "trace": args.trace,
         "inputs": {**inp.meta, "spans_per_doc": round(inp.meta["spans"] / inp.meta["docs"], 3)},
         "cores": cores,
-        "warmup_passes": WARMUP_PASSES,
+        "warmup_walls_s": [round(w, 3) for w in warm_walls],
         "prepare_s": round(prep_s, 3),
         "setup_s": round(setup_s, 3),
         "passes": passes,
         "fail_ratio": failed / attempted if attempted else 1.0,
         "first_problems": dict(list(problems.items())[:10]),
         "host": host.host_record(code_hash, cores),
+        "run_s": round(time.perf_counter() - T_START, 3),
     }
     if args.trace:
         import ktrace as T

@@ -47,18 +47,18 @@ _PAGE_FN = dict(FX.PAGE_CLASSES)
 #                    (None: one invocation does everything)
 #   span_partitions_per_core: the job's --span-partitions per core (None:
 #                    the engine default, 8 per core; small buckets take 1)
-#   min_passes:      timed passes a run makes at least; resume_buckets'
-#                    many short actions make one pass vary by ~25 %
-# Sizes keep a run near a minute on 4 vCPUs: a run pays ~8 s of JVM
-# start and a 20-30 s cold first pass before its timed passes.
+# Sizes keep a run under a minute on 4 vCPUs: a run pays ~8 s of JVM
+# start and ~20 s of cold Spark (class loading, codegen, Python worker
+# start) before its timed passes, whatever the warm-up corpus's size.
 JOBS = {
     "media_mix": {"scale": 0.5, "layout_buckets": 8, "n_buckets": 1,
-                  "max_buckets": None, "span_partitions_per_core": None,
-                  "min_passes": 1},
-    "resume_buckets": {"scale": 0.35, "layout_buckets": 4, "n_buckets": 4,
-                       "max_buckets": 2, "span_partitions_per_core": 1,
-                       "min_passes": 2},
+                  "max_buckets": None, "span_partitions_per_core": None},
+    "resume_buckets": {"scale": 0.35, "layout_buckets": 4, "n_buckets": 2,
+                       "max_buckets": 1, "span_partitions_per_core": 1},
 }
+# Scale of each workload's warm-up corpus: the same recipe, so the same
+# page classes, query plans and Python worker paths, for less work.
+WARMUP_SCALE = 0.1
 
 
 @dataclass
