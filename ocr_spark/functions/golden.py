@@ -28,7 +28,7 @@ import tempfile
 GOLDEN_DOCS = 60
 GOLDEN_SKEW = 24
 # bump when fixture generation, kernels, or golden schemas change
-GOLDEN_VERSION = "v4"  # v3: + video_frames; v4: + audio_features
+GOLDEN_VERSION = "v5"  # v3: + video_frames; v4: + audio_features; v5: noisy-page skew estimate
 
 _TABLES = (
     "extract_spans", "pdf_metadata", "image_stats", "quality",

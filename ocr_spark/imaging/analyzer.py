@@ -113,7 +113,7 @@ def analyze_quality(
         # noisy-but-level page can read as ~1.3 deg and get rotated into
         # undecodability), so estimate on the same denoised view the
         # noise_removal step will hand to downstream stages
-        skew_angle = K.hough_skew(K.median3(gray))
+        skew_angle = K.hough_skew(K.median3(gray), peak_lobe_only=True)
     else:
         skew_angle = K.hough_skew(gray, _precomputed=(mag, gx, gy))
 

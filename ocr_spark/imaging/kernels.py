@@ -205,6 +205,7 @@ def hough_skew(
     rho_step: float = 3.0,
     max_points: int = 12000,
     min_count: int = 20,
+    peak_lobe_only: bool = False,
     _precomputed: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
 ) -> float:
     """Hough-transform skew estimate in degrees (A3).
@@ -216,6 +217,12 @@ def hough_skew(
     edges -> HoughLines -> near-horizontal angle scheme as
     /root/reference/app/ocr/preprocessing/analyzer.py:123-155.  The sign is
     chosen so that `rotate_expand(img, -hough_skew(img))` levels the image.
+
+    `peak_lobe_only` restricts the refinement to the contiguous run of
+    near-peak orientations around the maximum.  Meant for denoised views
+    of noisy pages: residual speckle lifts the whole per-theta profile, so
+    orientations far from the true peak can clear the plateau threshold
+    and drag the average off a level page.
     """
     if _precomputed is not None:
         mag, gx, gy = _precomputed
@@ -260,6 +267,14 @@ def hough_skew(
         return 0.0
     # center-of-mass refinement over the near-peak plateau
     strong = per_theta >= 0.85 * peak
+    if peak_lobe_only:
+        lo = hi = int(np.argmax(per_theta))
+        while lo > 0 and strong[lo - 1]:
+            lo -= 1
+        while hi < len(strong) - 1 and strong[hi + 1]:
+            hi += 1
+        strong = np.zeros_like(strong)
+        strong[lo : hi + 1] = True
     est = float(np.average(thetas_deg[strong], weights=per_theta[strong]))
     return -(est - 90.0)
 

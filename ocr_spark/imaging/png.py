@@ -98,19 +98,22 @@ def decode_png(data: bytes) -> np.ndarray:
 
     if np.any(filters > 2):
         raise ValueError("unsupported PNG filter type")
-    # Sub (1): out[x] += out[x - channels], sequential along the row
-    for y in np.flatnonzero(filters == 1):
-        row = out[y].astype(np.int16)
-        for x in range(channels, stride):
-            row[x] = (row[x] + row[x - channels]) & 0xFF
-        out[y] = row.astype(np.uint8)
-    # Up (2): out[y] += out[y-1] — rows must be resolved top-down
-    up_rows = np.flatnonzero(filters == 2)
-    for y in up_rows:
-        if y > 0:
-            out[y] = (out[y].astype(np.int16) + out[y - 1].astype(np.int16)).astype(
-                np.uint8
-            )
+    # Sub (1): out[x] += out[x - channels] — per channel, a wrapping
+    # uint8 cumulative sum along the row. Sub rows never read other rows.
+    sub = filters == 1
+    if sub.any():
+        rows = out[sub].reshape(-1, width, channels)
+        out[sub] = np.cumsum(rows, axis=1, dtype=np.uint8).reshape(-1, stride)
+    # Up (2): out[y] += out[y-1]. Every other row is final by now, so a
+    # run of consecutive Up rows is a wrapping cumulative sum down the
+    # run, added to the row above it (zeros above the first row).
+    up = np.flatnonzero(filters == 2)
+    for run in np.split(up, np.flatnonzero(np.diff(up) != 1) + 1) if up.size else ():
+        y0, y1 = run[0], run[-1] + 1
+        block = np.cumsum(out[y0:y1], axis=0, dtype=np.uint8)
+        if y0 > 0:
+            block += out[y0 - 1]
+        out[y0:y1] = block
 
     if channels == 1:
         return out.reshape(height, width)

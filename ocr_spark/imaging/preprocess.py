@@ -206,7 +206,7 @@ def global_deskew_ex(
     # bias the Hough peak, and the rotation they cause is what corrupts
     # an otherwise-decodable page
     if noise > cfg.noise_threshold:
-        angle = K.hough_skew(K.median3(gray))
+        angle = K.hough_skew(K.median3(gray), peak_lobe_only=True)
         sobel = None
     else:
         gx, gy = K._sobel(gray)

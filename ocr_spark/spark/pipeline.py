@@ -3,18 +3,19 @@
     read documents (+ media join)            [scan, column pruning]
     explode_outer(spans) -> branch on kind   [Filter/Project]
       text:  Catalyst boilerplate expression [zero Python]
-      media/pdf: join media -> span-salted repartition
+      media/pdf: join media -> cost-dealt repartition
                  -> fused OR staged Arrow UDF stages
     union branches
     repartition(doc_id)                      [explicit, north_rule]
     groupBy(doc_id) reassembly agg           [pure Catalyst]
 
 Skew: heavy docs never pin a task because parallelism is at span (fused)
-or chunk (staged) granularity — the repartition key is (doc_id, offset),
-i.e. the doc's own fan-out is the salt. Reassembly regroups by pure
-doc_id hash; collect_list of small text structs is cheap even for a
-500-span doc, and Spark's partial (ObjectHashAggregate) pre-merge runs
-map-side.
+or chunk (staged) granularity. Media spans are dealt to one partition
+per core by an estimated pixel cost read from the payload header
+(_deal_by_cost): heaviest first, in snake order, so a skew-monster doc's
+big pages land on distinct tasks. Reassembly regroups by pure doc_id
+hash; collect_list of small text structs is cheap even for a 500-span
+doc, and Spark's partial (ObjectHashAggregate) pre-merge runs map-side.
 """
 
 from __future__ import annotations
@@ -134,15 +135,76 @@ def _media_input(
         .join(m, "media_ref", how)
         .select("doc_id", "kind", "media_ref", "offset", "png", *dim_cols)
     )
-    # span-level salt: a skew-monster doc's spans spread over the cluster.
     # Explicit partition count — AQE coalesces by *bytes*, but this stage's
     # cost is compute per image, so byte-based coalescing recreates skew.
     # span_partitions=None opts INTO AQE coalescing — right when row count
     # is data-dependent and possibly tiny (the hybrid heavy branch), where
     # fixed counts schedule hundreds of empty tasks.
     if span_partitions:
-        return joined.repartition(span_partitions, "doc_id", "offset")
+        return _deal_by_cost(joined, span_partitions)
     return joined.repartition("doc_id", "offset")
+
+
+def _be_u32(pos: int) -> "F.Column":
+    """Big-endian u32 at 1-based byte `pos` of the payload, as a double
+    (hex the 4-byte slice, conv base16 -> base10). A payload too short
+    for the slice reads as NULL."""
+    word = F.expr(f"substring(png, {pos}, 4)")
+    return F.when(F.length(word) == 4, F.conv(F.hex(word), 16, 10).cast("double"))
+
+
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+_SPDF_MAGIC = b"SPDF1\n"
+# SPDF pages are 72-dpi bases rendered at 300 dpi (pdfio.render_pages)
+_PDF_RENDER_AREA = (300 / 72) ** 2
+
+
+def _span_cost_col() -> "F.Column":
+    """Estimated extraction cost of a media span, in rendered pixels,
+    read from the payload header in pure Catalyst (no scan beyond the
+    `png` column the join already reads):
+
+    * PNG: IHDR width x height (bytes 17-24);
+    * SPDF: page count x first-page IHDR pixels x the 300-dpi zoom area
+      (the first page PNG starts at byte 15, so its IHDR at byte 31);
+    * anything else (missing payloads, %PDF streams, garbage): 0 — these
+      are skips or fitz-bound payloads with no header to read.
+
+    Pixels track the per-span work well: a ~2.3 MP page takes 1-2 s, a
+    2-3 page pdf 0.6-0.9 s and a 0.2 MP page 50-150 ms on a 4-vCPU host."""
+    head = F.expr("substring(png, 1, 8)")
+    cost = F.when(head == F.lit(_PNG_SIG), _be_u32(17) * _be_u32(21)).when(
+        F.expr("substring(png, 1, 6)") == F.lit(_SPDF_MAGIC),
+        _be_u32(7) * _be_u32(31) * _be_u32(35) * F.lit(_PDF_RENDER_AREA),
+    )
+    return F.coalesce(cost, F.lit(0.0))
+
+
+def _deal_by_cost(joined: DataFrame, n: int) -> DataFrame:
+    """Place media spans on `n` partitions by estimated cost: inside each
+    input partition, deal spans heaviest first in snake order (0..n-1,
+    n-1..0, ...), starting at an offset of the input partition's id, so
+    the heavy pages of one partition land on distinct tasks and the
+    first picks of different partitions start on different tasks.
+
+    Map-side: the rank is the row's position in its sorted partition
+    (monotonically_increasing_id minus the partition id in its top
+    bits), so there is no Window and no extra stage. The sort makes the
+    rank deterministic, so a recomputed partition deals identically.
+    The `span_slot` helper column is the last projection under the
+    Exchange and rides into the UDF, which ignores it: a Project that
+    dropped it would sit between the Exchange and MapInPandas."""
+    pid = F.spark_partition_id().cast("long")
+    rank = F.monotonically_increasing_id() - F.shiftleft(pid, 33)
+    lap, pos = F.floor(rank / n), F.pmod(rank, F.lit(n))
+    slot = F.when(lap % 2 == 0, pos).otherwise(n - 1 - pos)
+    return (
+        joined.sortWithinPartitions(
+            F.desc(_span_cost_col()), "doc_id", "offset", "media_ref"
+        )
+        .withColumn("span_slot", F.pmod(slot + pid, F.lit(n)).cast("int"))
+        .repartitionById(n, "span_slot")
+    )
 
 
 def _media_branch_fused(media_in: DataFrame, profile: EngineProfile) -> DataFrame:
@@ -275,8 +337,6 @@ PDF_STAGED_MIN_BYTES = 4 << 20
 IMG_STAGED_MIN_PIXELS = 16_000_000
 IMG_STAGED_MAX_DIM = 8192
 
-_SPDF_MAGIC = b"SPDF1\n"
-
 
 def media_is_heavy(png: bytes | None, width: int, height: int) -> bool:
     """Python twin of the hybrid routing predicate — used by the ingest
@@ -302,11 +362,10 @@ def media_is_heavy(png: bytes | None, width: int, height: int) -> bool:
 
 def _pdf_page_count_col() -> "F.Column":
     """SPDF page count parsed from the container header with pure
-    Catalyst (bytes 7-10, big-endian u32 — pdfio.encode_pdf): hex the
-    4-byte slice, conv base16 -> base10. NULL for non-SPDF payloads."""
+    Catalyst (bytes 7-10, big-endian u32 — pdfio.encode_pdf). NULL for
+    non-SPDF payloads."""
     is_spdf = F.expr("substring(png, 1, 6)") == F.lit(_SPDF_MAGIC)
-    count = F.conv(F.hex(F.expr("substring(png, 7, 4)")), 16, 10).cast("long")
-    return F.when(is_spdf, count)
+    return F.when(is_spdf, _be_u32(7).cast("long"))
 
 
 def _media_branch_hybrid(
@@ -536,16 +595,13 @@ def run_pipeline(
         )
     if docs_filter is not None:
         docs_df = docs_df.filter(docs_filter)
-    # Heavy-compute stages want many small tasks: per-image cost varies by
-    # ~100x (a clean 0.15 MP page vs a 2 MP split+merge page), so default
-    # to 8 tasks per core and let the scheduler even it out. Measured at
-    # local[32] on 2,400-doc fixture corpora (bench-style, interleaved):
-    # 4/core left the last wave straggling (~0.72 core utilization,
-    # 8-10 s tail); 8/core packs to ~0.85 and had the best wall; a
-    # r4 re-sweep at 16/core and 32/core confirmed higher utilization
-    # but WORSE walls (per-task overhead, not useful work).
-    default_parts = spark.sparkContext.defaultParallelism * 8
-    span_partitions = span_partitions or default_parts
+    # One span task per core: _deal_by_cost evens the per-task pixel cost,
+    # so more tasks only add per-task mapInPandas overhead. Measured on a
+    # 4-vCPU host (perfbench media_mix, 54 media spans, one SparkSession, 5
+    # interleaved passes, median wall for seeds 3 / 12): dealt 1/core
+    # 6.27 / 5.91 s, dealt 2/core 6.03 / 5.86 s (a wash), (doc_id, offset)
+    # hash 8/core 8.01 / 7.41 s, hash 1/core 8.79 / 8.00 s.
+    span_partitions = span_partitions or spark.sparkContext.defaultParallelism
     # chunk rows are already finer-grained than spans; 2x parallelism
     # balances without paying extra scheduling waves
     chunk_partitions = chunk_partitions or spark.sparkContext.defaultParallelism * 2

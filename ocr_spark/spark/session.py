@@ -59,6 +59,12 @@ def get_spark(
             _MALLOC_ENV["MALLOC_MMAP_THRESHOLD_"],
         )
         .config("spark.sql.session.timeZone", "UTC")
+        # Tungsten page: every sort or hash-aggregate task allocates and
+        # zero-fills at least one page on its first row, and the default
+        # (heap / cores / 16, rounded up: 64 MB at 4g on 4 cores) made the
+        # span deal's per-partition sort cost the JVM ~300 MB of RSS on a
+        # 4-core run. A row larger than a page still gets a page of its own.
+        .config("spark.buffer.pageSize", "2m")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # modest heap: in this sandbox first-touch faults are ~5 MB/s, so

@@ -292,7 +292,13 @@ def stream_sessionize(
     """events parquet files arriving in input_dir -> closed sessions.
 
     Open sessions live in group state across micro-batches and close on
-    a processing-time timeout of one gap."""
+    a processing-time timeout of one gap.
+
+    available_now=True drains the currently-visible files and stops. A
+    processing-time timeout always asks for another (no-data) batch, so
+    the drain turns no-data micro-batches off for this query: it ends
+    once the input is consumed, and open sessions stay in the state for
+    the next run, exactly as at a batch boundary."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(input_dir)
@@ -309,6 +315,14 @@ def stream_sessionize(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    if not available_now:
+        return writer.start()
+    writer = writer.trigger(availableNow=True)
+    # the query reads its conf from a session clone taken at start()
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, prev)

@@ -49,6 +49,18 @@ def _value_hash(cols: list[str], rows, getter) -> tuple[int, str]:
     return len(canon), h
 
 
+_NO_ORACLE = "no oracle_sql entry"
+
+
+def _status(row: dict) -> str:
+    """green | fail | no_oracle. A query without an oracle ran, but
+    nothing checked its values, so it is never counted green."""
+    if row["err"] == _NO_ORACLE:
+        return "no_oracle"
+    ok = row["hash_match"] if row["hash_match"] is not None else row["rows_match"]
+    return "green" if ok else "fail"
+
+
 def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "CORRECTNESS_local_r5.json"
     import __spark_entry__ as entry
@@ -79,9 +91,8 @@ def main() -> int:
             row["spark_rows"] = n_s
             sql = oracles.get(name)
             if sql is None:
-                # rows-only entry (driver's weaker check)
-                row["rows_match"] = n_s >= 0
-                row["err"] = "rows-only (no oracle_sql entry)"
+                # nothing to compare against: neither green nor failed
+                row["err"] = _NO_ORACLE
             else:
                 ores = con.execute(sql)
                 ocols_raw = [d[0] for d in ores.description]
@@ -98,21 +109,18 @@ def main() -> int:
         except Exception as exc:  # record, keep sweeping
             row["err"] = f"{type(exc).__name__}: {exc}"[:500]
             row["rows_match"] = row["rows_match"] or False
+        row["status"] = _status(row)
         results[name] = row
-        ok = row["hash_match"] if row["hash_match"] is not None else row["rows_match"]
         print(
-            f"[{i}/{len(qs)}] {name}: {'OK' if ok else 'FAIL'} "
+            f"[{i}/{len(qs)}] {name}: {row['status'].upper()} "
             f"({row['spark_rows']} rows, {time.time()-t0:.0f}s elapsed)",
             flush=True,
         )
     with open(out_path, "w") as f:
         json.dump(results, f, indent=2)
-    n_ok = sum(
-        1
-        for v in results.values()
-        if (v["hash_match"] if v["hash_match"] is not None else v["rows_match"])
-    )
-    print(f"{n_ok}/{len(results)} green -> {out_path}")
+    n_ok = sum(v["status"] == "green" for v in results.values())
+    n_none = sum(v["status"] == "no_oracle" for v in results.values())
+    print(f"{n_ok}/{len(results)} green, {n_none} without oracle -> {out_path}")
     return 0 if n_ok == len(results) else 1
 
 

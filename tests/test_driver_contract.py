@@ -45,3 +45,26 @@ def test_golden_build_is_idempotent_and_complete():
     assert d1 == d2
     for t in _TABLES:
         assert os.path.exists(golden_path(t)), t
+
+
+def test_local_replay_never_counts_a_missing_oracle_green():
+    """scripts/correctness_local.py: a query that ran but has no oracle
+    is its own status, not green; a failed or errored compare is fail."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "scripts", "correctness_local.py"
+    )
+    spec = importlib.util.spec_from_file_location("correctness_local", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    base = {"rows_match": None, "schema_match": None, "hash_match": None,
+            "spark_rows": 12, "oracle_rows": None, "err": None}
+    assert mod._status({**base, "err": mod._NO_ORACLE}) == "no_oracle"
+    assert mod._status({**base, "oracle_rows": 12, "rows_match": True,
+                        "schema_match": True, "hash_match": True}) == "green"
+    assert mod._status({**base, "oracle_rows": 12, "rows_match": True,
+                        "schema_match": True, "hash_match": False}) == "fail"
+    assert mod._status({**base, "rows_match": False, "err": "ValueError: x"}) == "fail"

@@ -725,3 +725,49 @@ def test_q19_prefiltered_broadcast_build(spark):
         l for l in plan.splitlines() if "PushedFilters" in l and "p_brand" in l
     ]
     assert part_pushed, plan
+
+
+def test_media_udf_input_is_one_map_side_deal(spark, corpus_dir):
+    """The cost-dealt span placement adds no stage: one scan reads png,
+    no Window, and the deal is the only shuffle Exchange the span
+    placement uses (the same count as a hash repartition). MapInPandas
+    reads that Exchange directly — a Project between them would hide
+    the exchange from the UDF stage, so the deal's helper column rides
+    into the UDF instead. Fused and staged inputs, and the hybrid
+    light branch, all place spans this way."""
+    from ocr_spark.config import get_profile
+    from ocr_spark.spark.corpus import read_corpus
+    from ocr_spark.spark.pipeline import (
+        _media_branch_fused,
+        _media_branch_staged,
+        _media_input,
+        _media_span_rows,
+        run_pipeline,
+    )
+
+    docs, media = read_corpus(spark, corpus_dir)
+    mi = _media_input(_media_span_rows(docs), media, True, 4)
+    profile = get_profile("default")
+    # shuffle Exchanges: the deal; staged adds the chunk rebalance, the
+    # merge grouping and the page fan-in aggregation
+    for out, n_shuffles in (
+        (_media_branch_fused(mi, profile), 1),
+        (_media_branch_staged(mi, profile, 4), 4),
+        (run_pipeline(spark, docs, media, mode="hybrid", span_partitions=4), None),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        lines = [l.lstrip(" :+-") for l in plan.splitlines()]
+        assert "Window" not in plan, plan
+        deals = [i for i, l in enumerate(lines) if "shufflepartitionidpassthrough" in l]
+        assert len(deals) == 1, plan
+        # a tree child is printed on the line after its parent
+        assert lines[deals[0]].startswith("Exchange"), plan
+        assert lines[deals[0] - 1].startswith("MapInPandas"), plan
+        if n_shuffles is None:
+            continue  # hybrid: pruned scans are test_hybrid_pruned_media_scans'
+        png_scans = [
+            l for l in lines
+            if l.startswith("FileScan") and "png" in l.split("ReadSchema", 1)[-1]
+        ]
+        assert len(png_scans) == 1, plan
+        assert sum(l.startswith("Exchange ") for l in lines) == n_shuffles, plan

@@ -29,3 +29,61 @@ def test_reject_bad_dims():
         encode_png(np.zeros((4, 4, 2), dtype=np.uint8))
     with pytest.raises(ValueError):
         encode_png(np.zeros((4, 4), dtype=np.float32))
+
+
+def _filtered_png(img: np.ndarray, filters: list[int]) -> bytes:
+    """PNG bytes of `img` with scanline y written under filter
+    filters[y] (0 None, 1 Sub, 2 Up), as an external writer would."""
+    import struct
+    import zlib
+
+    h, w = img.shape[:2]
+    ch = 1 if img.ndim == 2 else img.shape[2]
+    rows = img.reshape(h, w * ch).astype(np.int16)
+    lines = []
+    for y, f in enumerate(filters):
+        if f == 1:
+            left = np.concatenate([np.zeros(ch, np.int16), rows[y, :-ch]])
+            line = rows[y] - left
+        elif f == 2:
+            line = rows[y] - (rows[y - 1] if y else 0)
+        else:
+            line = rows[y]
+        lines.append(bytes([f]) + (line & 0xFF).astype(np.uint8).tobytes())
+
+    def chunk(tag, payload):
+        crc = zlib.crc32(tag + payload) & 0xFFFFFFFF
+        return struct.pack(">I", len(payload)) + tag + payload + struct.pack(">I", crc)
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, {1: 0, 3: 2, 4: 6}[ch], 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(b"".join(lines)))
+        + chunk(b"IEND", b"")
+    )
+
+
+@pytest.mark.parametrize("shape", [(11, 7), (9, 6, 3), (10, 5, 4)])
+def test_decode_mixed_none_sub_up_rows(shape):
+    """Rows under filters 0, 1 and 2 in one image — an Up row first, Up
+    runs of several rows, Up over a Sub row and Sub over an Up row —
+    decode to the exact pixels."""
+    rng = np.random.default_rng(7)
+    img = rng.integers(0, 256, size=shape, dtype=np.uint8)
+    filters = [2, 2, 1, 2, 0, 1, 1, 2, 2, 2, 0][: shape[0]]
+    assert np.array_equal(decode_png(_filtered_png(img, filters)), img)
+
+
+def test_decode_sub_page_is_vectorized():
+    """A 2 MP page written with Sub on every row decodes exactly, and in
+    well under the ~6 s a per-byte loop took on a 4-vCPU host."""
+    import time
+
+    rng = np.random.default_rng(3)
+    img = rng.integers(0, 256, size=(1400, 1500), dtype=np.uint8)
+    data = _filtered_png(img, [1] * img.shape[0])
+    t0 = time.perf_counter()
+    out = decode_png(data)
+    assert time.perf_counter() - t0 < 2.0
+    assert np.array_equal(out, img)

@@ -131,3 +131,16 @@ def test_global_deskew_roundtrip():
     # below-threshold skew leaves the image alone (processor.py:239-241)
     same, was2, _ = global_deskew(page, CFG)
     assert not was2 and same is page
+
+
+def test_global_deskew_leaves_level_noisy_pages_alone():
+    """Level salt-and-pepper pages whose denoised view has a flat Hough
+    profile must not read as skewed; a spurious rotation makes the page
+    undecodable (these seeds once did)."""
+    from ocr_spark.fixtures import page_noisy
+
+    for seed in (10, 27, 119, 255, 1711596878):
+        page = page_noisy(np.random.default_rng(seed))
+        _, was, angle = global_deskew(page, CFG)
+        assert not was, (seed, angle)
+        assert abs(analyze_quality(page, CFG).skew_angle) < CFG.skew_threshold, seed

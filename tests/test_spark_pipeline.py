@@ -446,3 +446,106 @@ def test_hybrid_null_heavy_routes_fused_not_dropped(spark, tmp_path):
         for s in out[0]["spans"]
     ]
     assert got == want
+
+
+def _png_head(w: int, h: int) -> bytes:
+    """The first 33 bytes of a w x h gray PNG: all the span cost reads."""
+    import struct
+
+    return (
+        b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
+        + struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0) + b"\0" * 4
+    )
+
+
+def _span_rows_df(spark, rows):
+    """(doc_id, kind, media_ref, offset, png) rows, the shape the media
+    join hands to the span placement."""
+    return spark.createDataFrame(
+        rows, "doc_id string, kind string, media_ref string, offset int, png binary"
+    )
+
+
+def test_span_cost_reads_payload_headers(spark):
+    """PNG: IHDR width x height. SPDF: pages x first-page pixels x the
+    300-dpi zoom area. Missing, garbage and %PDF payloads: 0."""
+    import numpy as np
+
+    from ocr_spark.pdfio import encode_pdf
+    from ocr_spark.spark.pipeline import _span_cost_col
+
+    pdf = encode_pdf([np.full((190, 220), 255, np.uint8)] * 3)
+    payloads = [_png_head(1500, 1520), pdf, b"not-a-png", b"%PDF-1.4 x", None,
+                _png_head(7, 5)[:20]]
+    df = _span_rows_df(
+        spark, [("d", "media", f"m{i}", i, p) for i, p in enumerate(payloads)]
+    )
+    got = [r.c for r in df.orderBy("offset").select(_span_cost_col().alias("c")).collect()]
+    want = [1500 * 1520, 3 * 220 * 190 * (300 / 72) ** 2, 0, 0, 0, 0]
+    assert got == pytest.approx(want)
+
+
+@pytest.mark.parametrize("n", [3, 4])
+def test_deal_by_cost_balances_partitions(spark, n):
+    """Synthetic costs dealt from one input partition: every span lands
+    in exactly one partition, and each partition's total cost is within
+    one max-span of the ideal (total / n)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from ocr_spark.spark.pipeline import _deal_by_cost, _span_cost_col
+
+    rng = np.random.default_rng(n)
+    rows = [
+        (f"d{i % 7}", "media", f"m{i}", i,
+         _png_head(int(rng.integers(10, 2000)), int(rng.integers(10, 1500))))
+        for i in range(45)
+    ] + [(f"d{i}", "media", f"x{i}", 100 + i, b"junk") for i in range(5)]
+    src = _span_rows_df(spark, rows)
+    placed = _deal_by_cost(src.coalesce(1), n).select(
+        "doc_id", "offset", _span_cost_col().alias("c"),
+        F.spark_partition_id().alias("p"),
+    ).collect()
+    assert sorted((r.doc_id, r.offset) for r in placed) == sorted(
+        (d, o) for d, _k, _m, o, _p in rows
+    )
+    load = [sum(r.c for r in placed if r.p == p) for p in range(n)]
+    ideal = sum(load) / n
+    biggest = max(r.c for r in placed)
+    assert all(abs(x - ideal) <= biggest for x in load), (load, ideal, biggest)
+    # many input partitions: still each span exactly once
+    placed = _deal_by_cost(src.repartition(5), n).select("doc_id", "offset").collect()
+    assert sorted(placed) == sorted((d, o) for d, _k, _m, o, _p in rows)
+
+
+def test_skew_monster_heavy_pages_spread(spark):
+    """A skew-monster doc carrying more >2 MP pages than there are span
+    partitions puts them on every partition, not where (doc_id, offset)
+    happens to hash."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.spark import schemas as S
+    from ocr_spark.spark.pipeline import _media_input, _media_span_rows
+
+    n = 4
+    media, spans = [], []
+    for off in range(30):
+        big = off % 5 == 0  # 6 heavy pages among 24 light ones
+        ref = f"sm{off}"
+        w, h = (1600, 1500) if big else (400, 300)
+        media.append((ref, _png_head(w, h), w, h))
+        spans.append(("media", "", ref, off))
+    docs = [("monster", spans)] + [
+        (f"d{i}", [("media", "", f"sm{i}", 0)]) for i in range(6)
+    ]
+    docs_df = spark.createDataFrame(docs, S.DOCUMENTS_SCHEMA)
+    media_df = spark.createDataFrame(media, S.MEDIA_SCHEMA)
+    placed = (
+        _media_input(_media_span_rows(docs_df), media_df, True, n)
+        .filter(F.col("doc_id") == "monster")
+        .select("offset", F.spark_partition_id().alias("p"))
+        .collect()
+    )
+    assert len(placed) == 30
+    heavy_parts = [r.p for r in placed if r.offset % 5 == 0]
+    assert len(heavy_parts) == 6 and set(heavy_parts) == set(range(n))

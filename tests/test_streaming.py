@@ -30,7 +30,8 @@ def test_stream_extract_matches_oracle(spark, corpus_dir, oracle_extracted, tmp_
         spark, in_dir, media, out_dir, ckpt,
         available_now=True, span_partitions=8,
     )
-    q.awaitTermination(600)
+    assert q.awaitTermination(600) is True
+    assert not q.isActive
 
     rows = {r["doc_id"]: r for r in spark.read.parquet(out_dir).collect()}
     assert set(rows) == set(oracle_extracted)
@@ -48,7 +49,8 @@ def test_stream_extract_matches_oracle(spark, corpus_dir, oracle_extracted, tmp_
         spark, in_dir, media, out_dir, ckpt,
         available_now=True, span_partitions=8,
     )
-    q2.awaitTermination(300)
+    assert q2.awaitTermination(300) is True
+    assert not q2.isActive
     assert spark.read.parquet(out_dir).count() == len(oracle_extracted)
     assert len(glob.glob(os.path.join(out_dir, "*.parquet"))) == n_files_before
 
@@ -92,7 +94,8 @@ def test_windowed_rollup_drops_late_events(spark, tmp_path):
             spark, in_dir, out_dir, ckpt,
             window="1 hour", watermark="30 minutes", available_now=True,
         )
-        q.awaitTermination(600)
+        assert q.awaitTermination(600) is True
+        assert not q.isActive
         try:
             return spark.read.parquet(out_dir).collect()
         except Exception:  # noqa: BLE001 — no output yet
@@ -157,7 +160,8 @@ def test_stateful_sessionize_across_batches(spark, tmp_path):
         [(1, t0), (1, t0 + 10 * sec), (1, t0 + 3000 * sec), (2, t0)],
     )
     q = stream_sessionize(spark, in_dir, out_dir, ckpt, gap_s=1800, available_now=True)
-    q.awaitTermination(600)
+    assert q.awaitTermination(600) is True
+    assert not q.isActive
     got1 = {
         (r["user_id"], r["n_events"])
         for r in spark.read.parquet(out_dir).collect()
@@ -170,7 +174,8 @@ def test_stateful_sessionize_across_batches(spark, tmp_path):
         [(1, t0 + 3010 * sec), (2, t0 + 7200 * sec)],
     )
     q = stream_sessionize(spark, in_dir, out_dir, ckpt, gap_s=1800, available_now=True)
-    q.awaitTermination(600)
+    assert q.awaitTermination(600) is True
+    assert not q.isActive
     got2 = {
         (r["user_id"], r["n_events"])
         for r in spark.read.parquet(out_dir).collect()
@@ -307,7 +312,8 @@ def test_stream_dedup_drops_duplicates_across_batches(spark, tmp_path):
         ],
     )
     q = stream_dedup_exact(spark, in_dir, out_dir, ckpt, available_now=True)
-    q.awaitTermination(600)
+    assert q.awaitTermination(600) is True
+    assert not q.isActive
     first = spark.read.parquet(out_dir).collect()
     assert len(first) == 2, first  # one survivor per distinct hash
     hashes1 = {r["norm_hash"] for r in first}
@@ -323,7 +329,8 @@ def test_stream_dedup_drops_duplicates_across_batches(spark, tmp_path):
         ],
     )
     q = stream_dedup_exact(spark, in_dir, out_dir, ckpt, available_now=True)
-    q.awaitTermination(600)
+    assert q.awaitTermination(600) is True
+    assert not q.isActive
     allrows = spark.read.parquet(out_dir).collect()
     assert len(allrows) == 3, allrows
     new = [r for r in allrows if r["norm_hash"] not in hashes1]
