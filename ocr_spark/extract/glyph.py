@@ -36,6 +36,11 @@ MAX_BYTES_PER_LINE = 15  # keeps pitch-estimation rounding exact (n_cells <= 17)
 
 # patch slot (row, col) for bit 7..0
 _BIT_SLOTS = [(0, 1), (0, 2), (1, 0), (1, 1), (1, 2), (2, 0), (2, 1), (2, 2)]
+# sample centre of every slot the decoder reads, as a fraction of the
+# cell pitch: the anchor (0, 0) first, then bits 7..0
+_SAMPLE_SLOTS = np.array([(0, 0)] + _BIT_SLOTS)
+_SAMPLE_FY = (3 * _SAMPLE_SLOTS[:, 0] + 1) / 9.0
+_SAMPLE_FX = (3 * _SAMPLE_SLOTS[:, 1] + 1) / 9.0
 
 
 # --------------------------------------------------------------------------
@@ -119,17 +124,6 @@ def render_page(
 # --------------------------------------------------------------------------
 # decoding (extractor side)
 # --------------------------------------------------------------------------
-
-
-def _sample(ink: np.ndarray, yc: float, xc: float, ry: int, rx: int) -> float:
-    h, w = ink.shape
-    y0 = max(0, int(round(yc)) - ry)
-    y1 = min(h, int(round(yc)) + ry + 1)
-    x0 = max(0, int(round(xc)) - rx)
-    x1 = min(w, int(round(xc)) + rx + 1)
-    if y0 >= y1 or x0 >= x1:
-        return 0.0
-    return float(ink[y0:y1, x0:x1].mean())
 
 
 def _col_span(band: np.ndarray, x: int) -> tuple[int, int] | None:
@@ -218,29 +212,33 @@ def _try_decode(
     top_b: float,
     ry: int,
 ) -> str | None:
+    """Decode the band as n cells of pitch w/n, or None when any cell's
+    always-dark anchor patch reads light.
+
+    All (n-2) x 9 sample windows are read in one gather: a window (the
+    (2ry+1) x (2rx+1) box around the rounded sample centre, clipped to
+    the band) is dark when at least half its pixels are ink. A window
+    wholly outside the band reads light.
+    """
     s_x = w / n  # exact pitch: ink spans exactly n cells by construction
     rx = max(1, int(s_x // 12))
-
-    def cell_top(k: int) -> float:
-        return top_a + (top_b - top_a) * ((k + 0.5) / n)
-
-    data = bytearray()
-    for k in range(1, n - 1):
-        cell_x = x0 + k * s_x
-        cy0 = cell_top(k)
-        # anchor patch must be dark
-        ax = cell_x + (1.0 / 9.0) * s_x
-        ay = cy0 + (1.0 / 9.0) * s_y
-        if _sample(band, ay, ax, ry, rx) < 0.5:
-            return None
-        byte = 0
-        for bit, (pr, pc) in enumerate(_BIT_SLOTS):
-            xc = cell_x + ((3 * pc + 1) / 9.0) * s_x
-            yc = cy0 + ((3 * pr + 1) / 9.0) * s_y
-            if _sample(band, yc, xc, ry, rx) >= 0.5:
-                byte |= 1 << (7 - bit)
-        data.append(byte)
-    return data.decode("utf-8", errors="replace")
+    k = np.arange(1, n - 1)
+    cell_x = x0 + k * s_x
+    # tilt model: top-of-cell y interpolated between the two bars
+    cy0 = top_a + (top_b - top_a) * ((k + 0.5) / n)
+    xc = np.rint(cell_x[:, None] + _SAMPLE_FX * s_x).astype(np.int64)
+    yc = np.rint(cy0[:, None] + _SAMPLE_FY * s_y).astype(np.int64)
+    h, bw = band.shape
+    ys = yc[:, :, None, None] + np.arange(-ry, ry + 1)[:, None]
+    xs = xc[:, :, None, None] + np.arange(-rx, rx + 1)
+    inside = ((ys >= 0) & (ys < h)) & ((xs >= 0) & (xs < bw))
+    ink = band[np.clip(ys, 0, h - 1), np.clip(xs, 0, bw - 1)] & inside
+    count = inside.sum(axis=(2, 3))
+    dark = (count > 0) & (2 * ink.sum(axis=(2, 3)) >= count)
+    if not dark[:, 0].all():
+        return None
+    data = np.packbits(dark[:, 1:], axis=1)
+    return data.tobytes().decode("utf-8", errors="replace")
 
 
 def extract_text(img: np.ndarray) -> tuple[str, float]:

@@ -61,7 +61,7 @@ class AnalysisReuse:
 
     gray: np.ndarray
     noise_level: float
-    sobel: tuple[np.ndarray, np.ndarray, np.ndarray] | None  # (mag, gx, gy)
+    sobel: tuple[np.ndarray, np.ndarray] | None  # sobel_masks(gray)
 
 
 def analyze_quality(
@@ -100,11 +100,9 @@ def analyze_quality(
 
     # one Sobel pass feeds the edge mask (A7/A8) and the Hough estimate (A3)
     if reuse is not None and reuse.sobel is not None:
-        mag, gx, gy = reuse.sobel
+        edges, horiz = reuse.sobel
     else:
-        gx, gy = K._sobel(gray)
-        mag = np.hypot(gx, gy)
-    edges = mag > 200.0
+        edges, horiz = K.sobel_masks(gray)
     if not compute_skew:
         skew_angle = 0.0
     elif noise_level > cfg.noise_threshold:
@@ -115,7 +113,7 @@ def analyze_quality(
         # noise_removal step will hand to downstream stages
         skew_angle = K.hough_skew(K.median3(gray), peak_lobe_only=True)
     else:
-        skew_angle = K.hough_skew(gray, _precomputed=(mag, gx, gy))
+        skew_angle = K.hough_skew(gray, horiz=horiz)
 
     gmin, gmax = float(gray.min()), float(gray.max())
     contrast = 0.0 if (gmax + gmin) == 0 else (gmax - gmin) / (gmax + gmin)

@@ -16,10 +16,12 @@ nlmeans_denoise.
 
 Reference counterparts:
   to_gray ............. cv2.cvtColor RGB2GRAY (analyzer.py:41, grayscale.py:42-63)
-  box_mean ............ cv2.blur (analyzer.py:113-114)
+  box_mean/box_mean_u8  cv2.blur (analyzer.py:113-114)
   laplacian_var ....... cv2.Laplacian(...).var() (analyzer.py:95-103)
   estimate_noise ...... local-variance method (analyzer.py:105-121)
-  sobel_edges ......... cv2.Canny stand-in for edge masks (analyzer.py:130,223,236)
+  sobel_masks ......... cv2.Canny stand-in for edge masks, plus the
+                        near-horizontal subset hough_skew reads
+                        (analyzer.py:130,223,236)
   hough_skew .......... cv2.HoughLines near-horizontal median (analyzer.py:123-155)
   otsu/binarize_* ..... cv2.threshold OTSU / adaptiveThreshold (binarization.py:59-86)
   median3 ............. fastNlMeansDenoising stand-in (noise_removal.py:33-53)
@@ -73,46 +75,39 @@ def _box_mean_block(img_f: np.ndarray, k: int) -> np.ndarray:
 _BOX_STRIP_ELEMS = 2 << 20
 
 
-def _box_mean_block_u8(img_u8: np.ndarray, k: int, sq: bool = False) -> np.ndarray:
+def _box_mean_block_u8(img_u8: np.ndarray, k: int) -> np.ndarray:
     """Integer-exact twin of _box_mean_block for uint8 inputs.
 
-    Window sums are exact integers in int32/int64 just as they are in
-    float64, so sum/(k*k) rounds identically — bit-identical to
-    box_mean(img.astype(float64)[**2], k) at roughly half the memory
-    traffic (int32 cumsums vs float64, and no float conversion pass).
+    Window sums are exact integers in int32 just as they are in float64,
+    so sum/(k*k) rounds identically — bit-identical to
+    box_mean(img.astype(float64), k) at roughly half the memory traffic
+    (int32 cumsums vs float64, and no float conversion pass).
     """
     pad = k // 2
     padded = np.pad(img_u8, pad, mode="edge")
-    if sq:
-        p = padded.astype(np.int32)
-        p *= p  # <= 255^2; row sums need int64 below
-        cs = p.cumsum(axis=0, dtype=np.int64)
-        dt2 = np.int64
-    else:
-        cs = padded.cumsum(axis=0, dtype=np.int32)
-        dt2 = np.int32
-    rows = np.empty((cs.shape[0] - k + 1, cs.shape[1]), dtype=cs.dtype)
+    cs = padded.cumsum(axis=0, dtype=np.int32)
+    rows = np.empty((cs.shape[0] - k + 1, cs.shape[1]), dtype=np.int32)
     rows[0] = cs[k - 1]
     np.subtract(cs[k:], cs[:-k], out=rows[1:])
-    cs2 = rows.cumsum(axis=1, dtype=dt2)
-    summed = np.empty((rows.shape[0], cs2.shape[1] - k + 1), dtype=dt2)
+    cs2 = rows.cumsum(axis=1, dtype=np.int32)
+    summed = np.empty((rows.shape[0], cs2.shape[1] - k + 1), dtype=np.int32)
     summed[:, 0] = cs2[:, k - 1]
     np.subtract(cs2[:, k:], cs2[:, :-k], out=summed[:, 1:])
     return summed / (k * k)
 
 
-def box_mean_u8(img_u8: np.ndarray, k: int, sq: bool = False) -> np.ndarray:
-    """box_mean over a uint8 image (optionally of its squared values),
-    bit-identical to the float64 path (see _box_mean_block_u8). Strips
-    like box_mean; int32 temps allow 2x wider strips."""
+def box_mean_u8(img_u8: np.ndarray, k: int) -> np.ndarray:
+    """box_mean over a uint8 image, bit-identical to the float64 path
+    (see _box_mean_block_u8). Strips like box_mean; int32 temps allow 2x
+    wider strips."""
     h, w = img_u8.shape
     # int32 horizontal cumsum of k-row window sums must not overflow:
     # values <= 255*k, accumulated over w+k columns
-    if not sq and 255 * k * (w + k + 1) >= 2**31:
+    if 255 * k * (w + k + 1) >= 2**31:
         return box_mean(img_u8.astype(np.float64), k)
-    elems = _BOX_STRIP_ELEMS if sq else 2 * _BOX_STRIP_ELEMS
+    elems = 2 * _BOX_STRIP_ELEMS
     if h * w <= elems or h <= 2 * k:
-        return _box_mean_block_u8(img_u8, k, sq)
+        return _box_mean_block_u8(img_u8, k)
     pad = k // 2
     out = np.empty((h, w), dtype=np.float64)
     step = max(k, elems // w)
@@ -123,7 +118,7 @@ def box_mean_u8(img_u8: np.ndarray, k: int, sq: bool = False) -> np.ndarray:
         top, bot = pad - (s - s0), pad - (e0 - e)
         if top or bot:
             block = np.pad(block, ((top, bot), (0, 0)), mode="edge")
-        out[s:e] = _box_mean_block_u8(block, k, sq)[pad:pad + (e - s)]
+        out[s:e] = _box_mean_block_u8(block, k)[pad:pad + (e - s)]
     return out
 
 
@@ -162,40 +157,103 @@ def laplacian_var(gray: np.ndarray) -> float:
     return float(lap.var(dtype=np.float64))
 
 
+# ~256 KB per strip temporary: a strip's working set stays in the L2
+# cache, far below glibc's 32 MiB mmap threshold (see resize_bilinear)
+_STRIP_BYTES = 256 << 10
+
+
+def _strip_rows(row_bytes: int) -> int:
+    """Rows per strip when one row of the largest temporary takes
+    `row_bytes`."""
+    return max(1, _STRIP_BYTES // max(1, row_bytes))
+
+
+def _local_sd_u8(gray: np.ndarray) -> np.ndarray:
+    """Per-pixel 5x5 (replicate-border) standard deviation of a uint8
+    image, bit-identical to the float64 box_mean formulation
+    sqrt(|box(x^2) - box(x)^2|): the window sums S1 (uint16) and S2
+    (int32) are exact integers built by shifted adds, and the float64
+    expression S2/25 - (S1/25)^2 is kept as is."""
+    h, w = gray.shape
+    p = np.pad(gray, 2, mode="edge")
+    out = np.empty((h, w), dtype=np.float64)
+    step = _strip_rows(8 * w)
+    for s in range(0, h, step):
+        e = min(s + step, h)
+        b = p[s : e + 4].astype(np.uint16)
+        sq = b * b  # <= 255^2 fits uint16; the 5-row sum needs int32
+        v1 = b[:-4] + b[1:-3]
+        v2 = sq[:-4].astype(np.int32)
+        for i in range(1, 5):
+            if i > 1:
+                v1 += b[i : i + e - s]
+            v2 += sq[i : i + e - s]
+        s1 = v1[:, :-4] + v1[:, 1:-3]
+        s2 = v2[:, :-4] + v2[:, 1:-3]
+        for j in range(2, 5):
+            s1 += v1[:, j : j + w]
+            s2 += v2[:, j : j + w]
+        mean = s1 / 25
+        mean *= mean
+        var = out[s:e]
+        np.divide(s2, 25, out=var)
+        var -= mean
+        np.abs(var, out=var)
+        np.sqrt(var, out=var)
+    return out
+
+
 def estimate_noise(gray: np.ndarray) -> float:
     """Median local std-dev over 5x5 windows, normalized by 50, clamped [0,1] (A2)."""
     if gray.dtype == np.uint8:
-        mean = box_mean_u8(gray, 5)
-        sq_mean = box_mean_u8(gray, 5, sq=True)
+        sd = _local_sd_u8(gray)
     else:
         g = gray.astype(np.float64)
         mean = box_mean(g, 5)
-        sq_mean = box_mean(g * g, 5)
-    variance = sq_mean - mean * mean
-    noise = float(np.median(np.sqrt(np.abs(variance))))
+        sd = np.sqrt(np.abs(box_mean(g * g, 5) - mean * mean))
+    noise = float(np.median(sd))
     return min(1.0, noise / 50.0)
 
 
-def _sobel(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    # float32: the gradients only feed >200 / 1.5x-ratio threshold tests,
-    # and halving the temp footprint matters on 2 MP pages
-    g = gray.astype(np.float32)
-    p = np.pad(g, 1, mode="edge")
-    gx = (
-        (p[:-2, 2:] + 2 * p[1:-1, 2:] + p[2:, 2:])
-        - (p[:-2, :-2] + 2 * p[1:-1, :-2] + p[2:, :-2])
-    )
-    gy = (
-        (p[2:, :-2] + 2 * p[2:, 1:-1] + p[2:, 2:])
-        - (p[:-2, :-2] + 2 * p[:-2, 1:-1] + p[:-2, 2:])
-    )
-    return gx, gy
+def sobel_masks(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """3x3 Sobel (replicate border) of a uint8 image as two masks:
+    `edges` = gradient magnitude > 200 (the Canny stand-in for A7/A8) and
+    `horiz` = edges whose gradient is mostly vertical, |gy| > 1.5|gx|
+    (the near-horizontal points hough_skew accumulates).
 
-
-def sobel_edges(gray: np.ndarray, thresh: float = 200.0) -> np.ndarray:
-    """Boolean edge mask from 3x3 Sobel gradient magnitude (Canny stand-in)."""
-    gx, gy = _sobel(gray)
-    return np.hypot(gx, gy) > thresh
+    The gradients are exact int16 values in [-1020, 1020], so both tests
+    are integer comparisons: gx^2 + gy^2 > 40000 and 2|gy| > 3|gx| give
+    the same masks as float32 hypot(gx, gy) > 200 and |gy| > 1.5|gx|
+    over every reachable gradient pair. Runs in cache-sized row strips.
+    """
+    if gray.dtype != np.uint8:
+        raise TypeError(f"sobel_masks expects a uint8 image, got {gray.dtype}")
+    h, w = gray.shape
+    p = np.pad(gray, 1, mode="edge")
+    edges = np.empty((h, w), dtype=bool)
+    horiz = np.empty((h, w), dtype=bool)
+    step = _strip_rows(4 * w)
+    for s in range(0, h, step):
+        e = min(s + step, h)
+        b = p[s : e + 2].astype(np.int16)
+        d = b[:, 2:] - b[:, :-2]  # horizontal difference, one per row
+        gx = d[:-2] + d[2:]
+        gx += d[1:-1]
+        gx += d[1:-1]
+        t = b[:, :-2] + b[:, 2:]  # horizontal [1 2 1] smoothing
+        t += b[:, 1:-1]
+        t += b[:, 1:-1]
+        gy = t[2:] - t[:-2]
+        mag2 = np.square(gx, dtype=np.int32)
+        mag2 += np.square(gy, dtype=np.int32)
+        np.greater(mag2, 40000, out=edges[s:e])
+        np.abs(gx, out=gx)
+        gx *= 3
+        np.abs(gy, out=gy)
+        gy += gy
+        np.greater(gy, gx, out=horiz[s:e])
+        horiz[s:e] &= edges[s:e]
+    return edges, horiz
 
 
 def hough_skew(
@@ -206,7 +264,7 @@ def hough_skew(
     max_points: int = 12000,
     min_count: int = 20,
     peak_lobe_only: bool = False,
-    _precomputed: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
+    horiz: np.ndarray | None = None,
 ) -> float:
     """Hough-transform skew estimate in degrees (A3).
 
@@ -223,13 +281,11 @@ def hough_skew(
     of noisy pages: residual speckle lifts the whole per-theta profile, so
     orientations far from the true peak can clear the plateau threshold
     and drag the average off a level page.
+
+    `horiz` is sobel_masks(gray)[1] when the caller already has it.
     """
-    if _precomputed is not None:
-        mag, gx, gy = _precomputed
-    else:
-        gx, gy = _sobel(gray)
-        mag = np.hypot(gx, gy)
-    horiz = (mag > 200.0) & (np.abs(gy) > 1.5 * np.abs(gx))
+    if horiz is None:
+        horiz = sobel_masks(gray)[1]
     ys, xs = np.nonzero(horiz)
     n = xs.size
     if n < min_count:
@@ -378,10 +434,12 @@ def invert(img: np.ndarray) -> np.ndarray:
 def resize_bilinear(img: np.ndarray, new_w: int, new_h: int) -> np.ndarray:
     """Bilinear resize with cv2-style half-pixel centers (separable).
 
-    The vertical pass runs in output-row strips so no float temp exceeds
-    ~16 MB: allocations above glibc's 32 MiB mmap-threshold cap bypass
-    the reusable heap and pay first-touch page faults on every call in
-    this sandbox (they are also cache-unfriendly everywhere else).
+    Both passes run per cache-sized strip of output rows: the horizontal
+    pass covers only the input rows the strip reads, gathering uint8
+    columns before widening them to float32. Every output pixel is the
+    same float32 expression whatever the strip size, and no temporary
+    nears glibc's 32 MiB mmap threshold (above it, allocations bypass the
+    reusable heap and pay first-touch page faults on every call).
     """
     h, w = img.shape[:2]
     if (new_w, new_h) == (w, h):
@@ -395,45 +453,31 @@ def resize_bilinear(img: np.ndarray, new_w: int, new_h: int) -> np.ndarray:
     wx = np.clip(xs - x0, 0.0, 1.0).astype(np.float32)
     wy = np.clip(ys - y0, 0.0, 1.0).astype(np.float32)
 
-    f = img.astype(np.float32)
-    # pass 1: horizontal (h x new_w), pass 2: vertical (new_h x new_w).
-    # In-place multiplies/adds keep each pass to two temporaries; the
-    # final uint8 assignment truncates (x + 0.5) exactly like
-    # (x + 0.5).astype(uint8) for non-negative pixel values.
-    if img.ndim == 2:
-        row = f.take(x0, axis=1)
-        row *= (1 - wx)[None, :]
-        tmp = f.take(x1, axis=1)
-        tmp *= wx[None, :]
-        row += tmp
-        out = np.empty((new_h, new_w), dtype=np.uint8)
-        step = max(1, (16 << 20) // (4 * new_w))
-        for s in range(0, new_h, step):
-            e = min(s + step, new_h)
-            strip = row.take(y0[s:e], axis=0)
-            strip *= (1 - wy[s:e])[:, None]
-            tmp = row.take(y1[s:e], axis=0)
-            tmp *= wy[s:e][:, None]
-            strip += tmp
-            strip += 0.5
-            out[s:e] = strip
-        return out
-    wxc = wx[None, :, None]
-    ch = img.shape[2]
-    row = f.take(x0, axis=1)
-    row *= (1 - wxc)
-    tmp = f.take(x1, axis=1)
-    tmp *= wxc
-    row += tmp
-    out = np.empty((new_h, new_w, ch), dtype=np.uint8)
-    step = max(1, (16 << 20) // (4 * new_w * ch))
+    # weights broadcast over a trailing channel axis when there is one
+    tail = (1,) * (img.ndim - 2)
+    wx1 = wx.reshape((1, new_w) + tail)
+    wx0 = 1 - wx1
+    wy = wy.reshape((new_h, 1) + tail)
+    ch = img.shape[2] if img.ndim == 3 else 1
+    out = np.empty((new_h, new_w) + img.shape[2:], dtype=np.uint8)
+    step = _strip_rows(4 * new_w * ch)
     for s in range(0, new_h, step):
         e = min(s + step, new_h)
-        wyc = wy[s:e][:, None, None]
-        strip = row.take(y0[s:e], axis=0)
-        strip *= 1 - wyc
-        tmp = row.take(y1[s:e], axis=0)
-        tmp *= wyc
+        r0 = y0[s]
+        block = img[r0 : y1[e - 1] + 1]
+        # pass 1: horizontal over the strip's input rows; in-place
+        # multiplies/adds keep each pass to two temporaries
+        row = block.take(x0, axis=1).astype(np.float32)
+        row *= wx0
+        tmp = block.take(x1, axis=1).astype(np.float32)
+        tmp *= wx1
+        row += tmp
+        # pass 2: vertical. The uint8 assignment truncates (x + 0.5)
+        # exactly like (x + 0.5).astype(uint8) for non-negative values.
+        strip = row.take(y0[s:e] - r0, axis=0)
+        strip *= 1 - wy[s:e]
+        tmp = row.take(y1[s:e] - r0, axis=0)
+        tmp *= wy[s:e]
         strip += tmp
         strip += 0.5
         out[s:e] = strip
@@ -875,71 +919,72 @@ def dilate(mask: np.ndarray, k: int = 5, iterations: int = 2) -> np.ndarray:
 def connected_components(mask: np.ndarray, min_area: int = 0):
     """8-connected component bounding boxes via row-run union-find.
 
-    Returns a list of (x, y, w, h, area) tuples, insertion-ordered by the
-    first row each component appears in — the stats the reference pulls
-    from cv2.connectedComponentsWithStats (components.py:175-191).
+    Returns a list of (x, y, w, h, area) tuples ordered by each
+    component's first run in raster order — the stats the reference
+    pulls from cv2.connectedComponentsWithStats (components.py:175-191).
+
+    Vectorized over the whole mask: every row run is found at once, each
+    run's touching runs in the row above come from two searchsorted
+    calls (runs in a row are sorted and disjoint, so they form one
+    contiguous range), and the runs are labelled by array union-find —
+    hook the larger root under the smaller, then jump pointers until
+    nothing changes. A component's root is thus its smallest run index,
+    i.e. its first run in raster order.
     """
     h, w = mask.shape
-    parent: list[int] = []
+    m = np.zeros((h, w + 2), dtype=np.int8)
+    m[:, 1:-1] = mask != 0
+    d = np.diff(m, axis=1)
+    ry, rs = np.nonzero(d == 1)  # runs [rs, re) in raster order
+    re = np.nonzero(d == -1)[1]
+    n = rs.size
+    if n == 0:
+        return []
+    # 8-connectivity between half-open runs on adjacent rows: touching
+    # (incl. diagonals) iff prev_start <= end and start <= prev_end.
+    # Keys row*(w+2)+col sort like (row, col) and never cross rows.
+    stride = w + 2
+    key_s = ry * stride + rs
+    key_e = ry * stride + re
+    above = (ry - 1) * stride
+    lo = np.searchsorted(key_e, above + rs, side="left")
+    hi = np.searchsorted(key_s, above + re, side="right")
+    cnt = np.maximum(hi - lo, 0)
+    a = np.repeat(np.arange(n), cnt)
+    b = np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(a.size)
 
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
+    parent = np.arange(n)
+    while a.size:
+        ra, rb = parent[a], parent[b]
+        apart = ra != rb
+        if not apart.any():
+            break
+        a, b, ra, rb = a[apart], b[apart], ra[apart], rb[apart]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            nxt = parent[parent]
+            if np.array_equal(nxt, parent):
+                break
+            parent = nxt
 
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    run_rows: list[tuple[int, int, int, int]] = []  # (y, start, end, label)
-    prev: list[tuple[int, int, int]] = []  # (start, end, label) half-open
-    m = mask.astype(np.int8)
-    for y in range(h):
-        row = m[y]
-        diff = np.diff(np.concatenate(([0], row, [0])))
-        starts = np.flatnonzero(diff == 1)
-        ends = np.flatnonzero(diff == -1)
-        cur: list[tuple[int, int, int]] = []
-        pi = 0
-        for s, e in zip(starts, ends):
-            label = -1
-            # 8-connectivity between half-open runs [s,e) on adjacent rows:
-            # touching (incl. diagonals) iff s <= prev_end and prev_start <= e
-            for ps, pe, pl in prev:
-                if ps <= e and s <= pe:
-                    if label == -1:
-                        label = find(pl)
-                    else:
-                        union(label, pl)
-            if label == -1:
-                label = len(parent)
-                parent.append(label)
-            cur.append((int(s), int(e), label))
-            run_rows.append((y, int(s), int(e), label))
-            pi += 1
-        prev = cur
-
-    stats: dict[int, list[int]] = {}  # root -> [minx, miny, maxx, maxy, area]
-    order: list[int] = []
-    for y, s, e, l in run_rows:
-        r = find(l)
-        st = stats.get(r)
-        if st is None:
-            stats[r] = [s, y, e - 1, y, e - s]
-            order.append(r)
-        else:
-            if s < st[0]:
-                st[0] = s
-            if e - 1 > st[2]:
-                st[2] = e - 1
-            st[3] = y
-            st[4] += e - s
-
-    out = []
-    for r in order:
-        minx, miny, maxx, maxy, area = stats[r]
-        if area >= min_area:
-            out.append((minx, miny, maxx - minx + 1, maxy - miny + 1, area))
-    return out
+    roots, comp = np.unique(parent, return_inverse=True)
+    k = roots.size
+    minx = np.full(k, w, dtype=np.int64)
+    np.minimum.at(minx, comp, rs)
+    maxx = np.zeros(k, dtype=np.int64)
+    np.maximum.at(maxx, comp, re - 1)
+    maxy = np.zeros(k, dtype=np.int64)
+    np.maximum.at(maxy, comp, ry)
+    area = np.zeros(k, dtype=np.int64)
+    np.add.at(area, comp, re - rs)
+    miny = ry[roots]
+    keep = area >= min_area
+    return list(
+        zip(
+            minx[keep].tolist(),
+            miny[keep].tolist(),
+            (maxx - minx + 1)[keep].tolist(),
+            (maxy - miny + 1)[keep].tolist(),
+            area[keep].tolist(),
+        )
+    )

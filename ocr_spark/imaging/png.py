@@ -18,6 +18,13 @@ import numpy as np
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 
+# hard bound on any single raster a decoder here will allocate (pixels
+# x channels): dimensions come from untrusted bytes, and an unbounded
+# allocation is an executor OOM-kill, not a counted skip. 64 MP (uint8)
+# is ~8x a letter page at dpi=300 — far above any legitimate
+# fixture-grade page, far below memory trouble.
+_MAX_RASTER_PX = 64_000_000
+
 # PNG color types for our supported layouts
 _COLOR_TYPE = {1: 0, 3: 2, 4: 6}  # channels -> color type
 _CHANNELS = {0: 1, 2: 3, 6: 4}  # color type -> channels
@@ -79,6 +86,12 @@ def decode_png(data: bytes) -> np.ndarray:
             )
             if depth != 8 or interlace != 0 or color_type not in _CHANNELS:
                 raise ValueError("unsupported PNG layout")
+            # checked before any inflate: a tiny IDAT can claim gigabytes
+            if width * height * _CHANNELS[color_type] > _MAX_RASTER_PX:
+                raise ValueError(
+                    f"PNG raster {width}x{height} exceeds the "
+                    f"{_MAX_RASTER_PX / 1e6:.0f} MP bound"
+                )
         elif tag == b"IDAT":
             idat.extend(payload)
         elif tag == b"IEND":
@@ -89,12 +102,24 @@ def decode_png(data: bytes) -> np.ndarray:
 
     channels = _CHANNELS[color_type]
     stride = width * channels
-    raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-    if raw.size != height * (stride + 1):
+    expected = height * (stride + 1)
+    # inflate at most one byte past the IHDR's size, so a payload that
+    # inflates further (a decompression bomb) costs no more than that
+    inflater = zlib.decompressobj()
+    try:
+        inflated = inflater.decompress(bytes(idat), expected + 1)
+    except zlib.error as exc:
+        raise ValueError(f"corrupt PNG data: {exc}") from exc
+    if len(inflated) > expected:
+        raise ValueError("PNG data inflates past its IHDR size")
+    if not inflater.eof:
+        raise ValueError("truncated PNG data")
+    if len(inflated) != expected:
         raise ValueError("bad PNG data size")
+    raw = np.frombuffer(inflated, dtype=np.uint8)
     raw = raw.reshape(height, stride + 1)
     filters = raw[:, 0]
-    out = raw[:, 1:].astype(np.uint8).copy()
+    out = raw[:, 1:].copy()  # writable, C-contiguous pixels
 
     if np.any(filters > 2):
         raise ValueError("unsupported PNG filter type")

@@ -184,12 +184,6 @@ def preprocess(
     )
 
 
-# pages above this pixel count will (almost) always split into chunks,
-# so retaining their 3x float32 Sobel planes for passthrough reuse would
-# only pin memory during the split cascade
-_REUSE_SOBEL_MAX_PX = 4 << 20
-
-
 def global_deskew_ex(
     img: np.ndarray, cfg: PreprocessConfig
 ) -> tuple[np.ndarray, bool, float, AnalysisReuse | None]:
@@ -209,10 +203,8 @@ def global_deskew_ex(
         angle = K.hough_skew(K.median3(gray), peak_lobe_only=True)
         sobel = None
     else:
-        gx, gy = K._sobel(gray)
-        mag = np.hypot(gx, gy)
-        angle = K.hough_skew(gray, _precomputed=(mag, gx, gy))
-        sobel = (mag, gx, gy) if gray.size <= _REUSE_SOBEL_MAX_PX else None
+        sobel = K.sobel_masks(gray)
+        angle = K.hough_skew(gray, horiz=sobel[1])
     if abs(angle) < cfg.skew_threshold:
         return img, False, angle, AnalysisReuse(gray, noise, sobel)
     return K.rotate_expand(img, -angle), True, angle, None

@@ -23,7 +23,7 @@ import zlib
 import numpy as np
 
 from ocr_spark.imaging import kernels as K
-from ocr_spark.imaging.png import decode_png, encode_png
+from ocr_spark.imaging.png import _MAX_RASTER_PX, decode_png, encode_png
 
 _MAGIC = b"SPDF1\n"
 _PDF_MAGIC = b"%PDF-"
@@ -77,13 +77,6 @@ _PDF_META_KEYS = {
 # Info-dictionary name the walker (and fitz) match. .capitalize() would
 # mangle the camelCase names (/Creationdate is matched by nothing).
 _PDF_INFO_NAMES = {v: k for k, v in _PDF_META_KEYS.items()}
-
-# hard bound on any single raster the no-fitz walker will allocate:
-# canvas and placement dimensions come from untrusted PDF bytes, and an
-# unbounded np.full() is an executor OOM-kill, not a counted skip.
-# 64 MP (uint8) is ~8x a letter page at dpi=300 — far above any
-# legitimate fixture-grade page, far below memory trouble.
-_MAX_RASTER_PX = 64_000_000
 
 
 def _walk_pdf_metadata(data: bytes) -> dict:
@@ -202,10 +195,18 @@ def _pdf_stream_decoded(
             raise ValueError(
                 "predictored FlateDecode stream; requires PyMuPDF"
             )
+        # bounded like decode_png: a few hundred KB of Flate data can
+        # inflate to gigabytes, so stop one byte past the raster bound
         try:
-            return zlib.decompressobj().decompress(raw)
+            out = zlib.decompressobj().decompress(raw, _MAX_RASTER_PX + 1)
         except zlib.error as exc:
             raise ValueError(f"corrupt FlateDecode stream: {exc}") from exc
+        if len(out) > _MAX_RASTER_PX:
+            raise ValueError(
+                f"FlateDecode stream inflates past the "
+                f"{_MAX_RASTER_PX / 1e6:.0f} MB walker bound"
+            )
+        return out
     raise ValueError(
         "unsupported stream filter(s) %s; requires PyMuPDF"
         % b"/".join(filters).decode("latin-1", "replace")
@@ -535,6 +536,14 @@ def render_pages(data: bytes, dpi: int = 300) -> list[np.ndarray]:
         img = decode_png(blob)
         if zoom != 1.0:
             h, w = img.shape[:2]
-            img = K.resize_bilinear(img, int(w * zoom), int(h * zoom))
+            zw, zh = int(w * zoom), int(h * zoom)
+            channels = img.shape[2] if img.ndim == 3 else 1
+            # decode_png bounds the stored page; the zoom multiplies it
+            if zw * zh * channels > _MAX_RASTER_PX:
+                raise ValueError(
+                    f"page raster {zw}x{zh} at dpi={dpi} exceeds the "
+                    f"{_MAX_RASTER_PX / 1e6:.0f} MP bound"
+                )
+            img = K.resize_bilinear(img, zw, zh)
         out.append(img)
     return out

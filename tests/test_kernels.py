@@ -360,3 +360,240 @@ def test_preprocess_cv2_fidelity_mode_runs():
     r_cv2 = preprocess(img, hi)
     assert r_cv2.steps_applied == r_fast.steps_applied
     assert r_cv2.image.shape[0] >= img.shape[0]  # scaling still applies
+
+
+# --------------------------------------------------------------------------
+# parity of the vectorized kernels with the loop/float code they replace.
+# The reference functions below are the previous implementations, kept
+# here (and only here) as the definition the engine must reproduce bit
+# for bit.
+# --------------------------------------------------------------------------
+
+
+def _ref_connected_components(mask, min_area=0):
+    """Python row-run union-find: O(runs x runs in the previous row)."""
+    h, w = mask.shape
+    parent = []
+
+    def find(a):
+        while parent[a] != a:
+            parent[a] = parent[parent[a]]
+            a = parent[a]
+        return a
+
+    run_rows, prev = [], []
+    m = mask.astype(np.int8)
+    for y in range(h):
+        diff = np.diff(np.concatenate(([0], m[y], [0])))
+        cur = []
+        for s, e in zip(np.flatnonzero(diff == 1), np.flatnonzero(diff == -1)):
+            label = -1
+            for ps, pe, pl in prev:
+                if ps <= e and s <= pe:
+                    if label == -1:
+                        label = find(pl)
+                    else:
+                        ra, rb = find(label), find(pl)
+                        if ra != rb:
+                            parent[max(ra, rb)] = min(ra, rb)
+            if label == -1:
+                label = len(parent)
+                parent.append(label)
+            cur.append((int(s), int(e), label))
+            run_rows.append((y, int(s), int(e), label))
+        prev = cur
+    stats, order = {}, []
+    for y, s, e, lab in run_rows:
+        r = find(lab)
+        st = stats.get(r)
+        if st is None:
+            stats[r] = [s, y, e - 1, y, e - s]
+            order.append(r)
+        else:
+            st[0], st[2], st[3], st[4] = min(st[0], s), max(st[2], e - 1), y, st[4] + e - s
+    return [
+        (x0, y0, x1 - x0 + 1, y1 - y0 + 1, a)
+        for x0, y0, x1, y1, a in (stats[r] for r in order)
+        if a >= min_area
+    ]
+
+
+def _comb(n, tooth=1, gap=1):
+    """Vertical teeth joined by a spine on the bottom row: every row has
+    ~n/2 runs, the old loop's worst case, and the teeth only join at the
+    very end."""
+    mask = np.zeros((n, n), dtype=bool)
+    for x in range(0, n, tooth + gap):
+        mask[:, x : x + tooth] = True
+    mask[-1] = True
+    return mask
+
+
+def _spiral(n):
+    """One long serpentine component plus its complement's pieces."""
+    mask = np.zeros((n, n), dtype=bool)
+    for i, y in enumerate(range(0, n, 2)):
+        mask[y] = True
+        if y + 1 < n:
+            mask[y + 1, -1 if i % 2 == 0 else 0] = True
+    return mask
+
+
+def _random_masks():
+    rng = np.random.default_rng(11)
+    masks = []
+    for _ in range(60):
+        h, w = rng.integers(1, 48, size=2)
+        masks.append(rng.random((h, w)) < rng.uniform(0.05, 0.7))
+    # dilated specks: the component splitter's input shape
+    for _ in range(6):
+        specks = rng.random((90, 120)) < 0.004
+        masks.append(K.dilate(specks, k=5, iterations=2))
+    return masks
+
+
+@pytest.mark.parametrize("min_area", [0, 3])
+def test_connected_components_matches_loop(min_area):
+    edge_shapes = [np.ones((1, 1), bool), np.zeros((1, 1), bool),
+                   np.array([[1, 0, 1, 1, 0, 1]], bool),
+                   np.array([[1], [0], [1], [1]], bool),
+                   np.ones((1, 37), bool), np.ones((29, 1), bool)]
+    for mask in edge_shapes + _random_masks() + [_comb(60), _comb(61, 2, 3), _spiral(41)]:
+        got = K.connected_components(mask, min_area=min_area)
+        assert got == _ref_connected_components(mask, min_area=min_area)
+        assert all(type(v) is int for box in got for v in box)
+
+
+def test_connected_components_comb_is_fast():
+    """An 800x800 comb (400 runs per row) took ~13 s in the old loop."""
+    import time
+
+    t0 = time.perf_counter()
+    comps = K.connected_components(_comb(800))
+    assert time.perf_counter() - t0 < 2.0
+    assert comps == [(0, 0, 800, 800, 400 * 800 + 400)]
+
+
+def _ref_sobel(gray):
+    g = gray.astype(np.float32)
+    p = np.pad(g, 1, mode="edge")
+    gx = (p[:-2, 2:] + 2 * p[1:-1, 2:] + p[2:, 2:]) - (p[:-2, :-2] + 2 * p[1:-1, :-2] + p[2:, :-2])
+    gy = (p[2:, :-2] + 2 * p[2:, 1:-1] + p[2:, 2:]) - (p[:-2, :-2] + 2 * p[:-2, 1:-1] + p[:-2, 2:])
+    return gx, gy
+
+
+def test_sobel_integer_thresholds_exhaustive():
+    """Over every integer gradient pair a uint8 Sobel can produce
+    (|gx|, |gy| <= 4*255), the integer tests sobel_masks uses equal the
+    float32 tests they replace: hypot > 200 and |gy| > 1.5|gx|."""
+    v = np.arange(-1020, 1021, dtype=np.int32)
+    gx, gy = np.meshgrid(v, v, indexing="ij")
+    fx, fy = gx.astype(np.float32), gy.astype(np.float32)
+    assert np.array_equal(np.hypot(fx, fy) > 200.0, gx * gx + gy * gy > 40000)
+    assert np.array_equal(np.abs(fy) > 1.5 * np.abs(fx), 2 * np.abs(gy) > 3 * np.abs(gx))
+    assert gx.size == 4_165_681
+
+
+def _gray_images():
+    from ocr_spark import fixtures as FX
+
+    rng = np.random.default_rng(5)
+    imgs = [rng.integers(0, 256, (h, w), dtype=np.uint8)
+            for h, w in [(1, 1), (1, 9), (9, 1), (2, 3), (37, 53), (700, 90)]]
+    for name in ("clean", "skewed", "noisy", "low_contrast", "inverted"):
+        imgs.append(K.to_gray(dict(FX.PAGE_CLASSES)[name](np.random.default_rng(2))))
+    return imgs
+
+
+def test_sobel_masks_match_float_sobel():
+    for gray in _gray_images():
+        gx, gy = _ref_sobel(gray)
+        mag = np.hypot(gx, gy)
+        edges, horiz = K.sobel_masks(gray)
+        assert np.array_equal(edges, mag > 200.0)
+        assert np.array_equal(horiz, (mag > 200.0) & (np.abs(gy) > 1.5 * np.abs(gx)))
+
+
+def _patch_with_gradient(gx, gy):
+    """A 3x3 uint8 patch whose centre Sobel gradient is (gx, gy); gx and
+    gy must share parity (true of every uint8 Sobel) and |gx|, |gy| <= 254."""
+    q = gx % 2
+    p = np.full((3, 3), 128, dtype=np.int32)
+    p[1, 2] += (gx - q) // 2  # middle-right: 2 in gx
+    p[0, 2] += q  # top-right: +1 in gx, -1 in gy
+    p[2, 1] += (gy + q) // 2  # bottom-middle: 2 in gy
+    return p.astype(np.uint8)
+
+
+def test_sobel_masks_threshold_boundaries():
+    """Gradients exactly on and next to both thresholds: magnitude 200
+    is not an edge, |gy| = 1.5|gx| is not near-horizontal."""
+    # (gx, gy) -> (edge, near-horizontal edge)
+    cases = {
+        (200, 0): (False, False), (0, 200): (False, False),
+        (120, 160): (False, False), (160, -120): (False, False),
+        (-120, -160): (False, False), (200, 2): (True, False),
+        (0, 202): (True, True), (1, 201): (True, True),
+        (140, 142): (False, False), (136, 204): (True, False),
+        (-136, 204): (True, False), (136, -206): (True, True),
+        (138, 206): (True, False), (0, 0): (False, False),
+    }
+    pairs = list(cases)
+    img = np.hstack([_patch_with_gradient(gx, gy) for gx, gy in pairs])
+    gx, gy = _ref_sobel(img)
+    assert [(int(gx[1, 3 * i + 1]), int(gy[1, 3 * i + 1])) for i in range(len(pairs))] == pairs
+    mag = np.hypot(gx, gy)
+    edges, horiz = K.sobel_masks(img)
+    assert np.array_equal(edges, mag > 200.0)
+    assert np.array_equal(horiz, (mag > 200.0) & (np.abs(gy) > 1.5 * np.abs(gx)))
+    assert list(zip(edges[1, 1::3].tolist(), horiz[1, 1::3].tolist())) == list(cases.values())
+
+
+def test_estimate_noise_u8_matches_float_path():
+    """The uint8 path (exact integer window sums in strips) gives the same
+    float as the float64 box_mean path, strip boundaries included."""
+    rng = np.random.default_rng(9)
+    extra = [np.where(rng.random((400, 300)) < 0.1, 0, 255).astype(np.uint8)]
+    for gray in _gray_images() + extra:
+        assert K.estimate_noise(gray) == K.estimate_noise(gray.astype(np.float64))
+
+
+def _ref_resize_bilinear(img, new_w, new_h):
+    h, w = img.shape[:2]
+    xs = (np.arange(new_w) + 0.5) * (w / new_w) - 0.5
+    ys = (np.arange(new_h) + 0.5) * (h / new_h) - 0.5
+    x0 = np.clip(np.floor(xs), 0, w - 1).astype(np.int64)
+    y0 = np.clip(np.floor(ys), 0, h - 1).astype(np.int64)
+    x1, y1 = np.minimum(x0 + 1, w - 1), np.minimum(y0 + 1, h - 1)
+    wx = np.clip(xs - x0, 0.0, 1.0).astype(np.float32)
+    wy = np.clip(ys - y0, 0.0, 1.0).astype(np.float32)
+    tail = (1,) * (img.ndim - 2)
+    wx = wx.reshape((1, new_w) + tail)
+    wy = wy.reshape((new_h, 1) + tail)
+    f = img.astype(np.float32)
+    row = f.take(x0, axis=1) * (1 - wx) + f.take(x1, axis=1) * wx
+    out = row.take(y0, axis=0) * (1 - wy) + row.take(y1, axis=0) * wy
+    return (out + 0.5).astype(np.uint8)
+
+
+@pytest.mark.parametrize("shape", [(37, 53), (1, 17), (17, 1), (301, 203, 3), (64, 48, 4)])
+@pytest.mark.parametrize("scale", [(0.37, 0.61), (1.0, 2.3), (300 / 72, 300 / 72), (0.5, 0.5)])
+def test_resize_bilinear_matches_whole_image(shape, scale):
+    rng = np.random.default_rng(4)
+    img = rng.integers(0, 256, shape, dtype=np.uint8)
+    new_w = max(1, int(shape[1] * scale[0]))
+    new_h = max(1, int(shape[0] * scale[1]))
+    got = K.resize_bilinear(img, new_w, new_h)
+    ref = _ref_resize_bilinear(img, new_w, new_h)
+    assert got.dtype == np.uint8 and got.shape == ref.shape
+    assert np.array_equal(got, ref)
+
+
+def test_resize_bilinear_many_strips():
+    """A tall upscale and a tall downscale cross many strip boundaries."""
+    rng = np.random.default_rng(6)
+    img = rng.integers(0, 256, (900, 700), dtype=np.uint8)
+    for new_w, new_h in [(2917, 3750), (311, 229)]:
+        assert np.array_equal(
+            K.resize_bilinear(img, new_w, new_h), _ref_resize_bilinear(img, new_w, new_h)
+        )

@@ -302,6 +302,16 @@ def test_walker_render_bounds_hostile_dimensions():
         _walk_pdf_render(hostile, 300)
 
 
+def test_spdf_zoom_is_bounded():
+    """A stored page under decode_png's bound can still zoom (300/72 per
+    side, ~17x the pixels) past it: raise (-> counted skip) before the
+    resize allocates."""
+    data = encode_pdf([np.full((2000, 2000), 255, dtype=np.uint8)])
+    with pytest.raises(ValueError, match="MP bound"):
+        render_pages(data, dpi=300)
+    assert render_pages(data, dpi=72)[0].shape == (2000, 2000)
+
+
 def test_encode_image_pdf_metadata_roundtrip_camelcase():
     """creationDate/modDate must survive the write->probe round trip:
     the writer emits the exact Info names the walker (and fitz) match."""

@@ -87,3 +87,106 @@ def test_decode_sub_page_is_vectorized():
     out = decode_png(data)
     assert time.perf_counter() - t0 < 2.0
     assert np.array_equal(out, img)
+
+
+# --------------------------------------------------------------------------
+# decompression bombs: a small payload whose IDAT inflates far past what
+# its IHDR allows must be a counted skip in bounded memory
+# --------------------------------------------------------------------------
+
+_BOMB_MB = 400
+
+
+@pytest.fixture(scope="module")
+def zero_stream():
+    """A zlib stream that inflates to ~400 MB of zeros (~1.8 MB
+    compressed), built in 1 MB pieces so the test never holds it
+    inflated."""
+    import zlib
+
+    c = zlib.compressobj(1)
+    zeros = bytes(1 << 20)
+    parts = [c.compress(zeros) for _ in range(_BOMB_MB)]
+    parts.append(c.flush())
+    return b"".join(parts)
+
+
+def _png_with(width: int, height: int, idat: bytes) -> bytes:
+    import struct
+    import zlib
+
+    def chunk(tag, payload):
+        crc = zlib.crc32(tag + payload) & 0xFFFFFFFF
+        return struct.pack(">I", len(payload)) + tag + payload + struct.pack(">I", crc)
+
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", idat)
+        + chunk(b"IEND", b"")
+    )
+
+
+def _skip_peak_mb(payload: bytes) -> tuple[int, float]:
+    """(skipped count, tracemalloc peak in MB) of one media span over
+    `payload` through the oracle."""
+    import tracemalloc
+
+    from ocr_spark.core import process_document
+
+    spans = [{"kind": "media", "text": "", "media_ref": "m", "offset": 0}]
+    tracemalloc.start()
+    try:
+        _, metrics = process_document("d", spans, {"m": payload}.get)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    return metrics["skipped"], peak / 2**20
+
+
+@pytest.mark.parametrize("dims", [(20000, 20000), (1, 1)], ids=["huge_ihdr", "tiny_ihdr"])
+def test_png_bomb_is_bounded_skip(zero_stream, dims):
+    """A 20000x20000 IHDR is refused before any inflate; a 1x1 IHDR over
+    the same ~400 MB zero stream stops inflating one byte past its
+    2-byte scanline. Both are counted skips under 16 MB of Python
+    allocations."""
+    payload = _png_with(*dims, zero_stream)
+    with pytest.raises(ValueError, match="bound|inflates past"):
+        decode_png(payload)
+    skipped, peak_mb = _skip_peak_mb(payload)
+    assert skipped == 1
+    assert peak_mb < 16, f"peak {peak_mb:.1f} MB"
+
+
+def test_truncated_idat_still_rejected():
+    """A stream cut before its end is refused, as the one-shot inflate
+    refused it: the bounded inflate checks that the stream ended."""
+    import zlib
+
+    img = np.arange(64, dtype=np.uint8).reshape(8, 8)
+    raw = b"".join(b"\x00" + img[y].tobytes() for y in range(8))
+    with pytest.raises(ValueError, match="truncated"):
+        decode_png(_png_with(8, 8, zlib.compress(raw)[:-4]))
+    assert np.array_equal(decode_png(_png_with(8, 8, zlib.compress(raw))), img)
+
+
+def test_pdf_flate_stream_is_bounded(zero_stream):
+    """A FlateDecode stream over the same zero stream is refused once it
+    inflates past the walker's raster bound, instead of inflating all
+    ~400 MB."""
+    import zlib
+
+    from ocr_spark.pdfio import _MAX_RASTER_PX, _pdf_stream_decoded
+
+    assert _MAX_RASTER_PX < _BOMB_MB << 20
+    body = (
+        b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(zero_stream)
+        + zero_stream
+        + b"\nendstream"
+    )
+    with pytest.raises(ValueError, match="inflates past"):
+        _pdf_stream_decoded(body)
+    ops = b"q 1 0 0 1 0 0 cm Q"
+    small = b"<< /Filter /FlateDecode >>\nstream\n" + zlib.compress(ops) + b"\nendstream"
+    assert _pdf_stream_decoded(small) == ops
