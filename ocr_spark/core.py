@@ -117,8 +117,16 @@ def process_pdf_bytes(data: bytes | None, profile: EngineProfile) -> MediaResult
     total_conf = 0.0
     steps: set[str] = set()
     methods: set[str] = set()
-    for i, page in enumerate(pages, start=1):
+    # pages render as they are read, so one zoomed page is alive at a
+    # time; a page that fails to render skips the whole span, while an
+    # error inside process_image still propagates
+    for i in range(1, n + 1):
+        try:
+            page = pages[i - 1]
+        except Exception:  # noqa: BLE001
+            return MediaResult(skipped=True)
         res = process_image(page, profile)
+        del page
         parts.append(f"{PAGE_MARKER.format(i=i, n=n)}\n{res.text}")
         total_conf += res.confidence
         steps.update(res.steps_applied)

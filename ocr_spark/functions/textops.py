@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.functions import QuerySpec, load
-from ocr_spark.spark.text_branch import is_boilerplate_col
+from ocr_spark.spark.text_branch import is_boilerplate_sql, sql_str
 from ocr_spark.textproc.boilerplate import STOPWORDS
 
 # BPE-ish pre-tokenizer: letter runs | digit runs | single punctuation
@@ -245,14 +245,14 @@ FROM g
 
 def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    blocks = F.split(F.col("text"), "\n\n")
-    keep = lambda b: (~b.rlike("^\\s*$")) & (~is_boilerplate_col(b))  # noqa: E731
-    kept = F.filter(blocks, keep)
-    return docs.select(
+    sep, blank = sql_str("\n\n"), sql_str("^\\s*$")
+    blocks = f"split(text, {sep})"
+    kept = f"filter({blocks}, b -> NOT b RLIKE {blank} AND NOT {is_boilerplate_sql('b')})"
+    return docs.selectExpr(
         "doc_id",
-        F.size(blocks).alias("n_blocks"),
-        F.size(kept).alias("n_kept"),
-        F.md5(F.array_join(kept, "\n\n").cast("binary")).alias("main_text_hash"),
+        f"size({blocks}) AS n_blocks",
+        f"size({kept}) AS n_kept",
+        f"md5(CAST(array_join({kept}, {sep}) AS BINARY)) AS main_text_hash",
     )
 
 

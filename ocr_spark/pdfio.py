@@ -19,11 +19,12 @@ import json
 import re
 import struct
 import zlib
+from collections.abc import Sequence
 
 import numpy as np
 
 from ocr_spark.imaging import kernels as K
-from ocr_spark.imaging.png import _MAX_RASTER_PX, decode_png, encode_png
+from ocr_spark.imaging.png import _CHANNELS, _MAX_RASTER_PX, decode_png, encode_png
 
 _MAGIC = b"SPDF1\n"
 _PDF_MAGIC = b"%PDF-"
@@ -105,9 +106,12 @@ def _walk_pdf_metadata(data: bytes) -> dict:
                 if val:
                     meta[key] = val
                     break
-    # direct page objects + any serialized inside Flate object streams
-    # (disjoint by construction: a page dict lives in exactly one place)
-    n_pages = sum(
+    # direct page objects vs. those serialized inside Flate object
+    # streams: a writer normally puts each page dict in one place, but an
+    # incremental update can re-serialize a raw page into an /ObjStm, so
+    # the two spaces may overlap and the larger count is taken, not the
+    # sum (a file splitting distinct pages across both would undercount)
+    n_pages = max(
         len(re.findall(rb"/Type\s*/Page\s*(?=[/>\s])", s)) for s in spaces
     )
     if n_pages == 0:
@@ -505,10 +509,15 @@ def _parse(data: bytes, decode_pages: bool = True):
     return n_pages, meta
 
 
-def render_pages(data: bytes, dpi: int = 300) -> list[np.ndarray]:
-    """Render every page at the requested DPI, zoom = dpi/72
-    (pdf_service.py:102-113).  Page order is the stored order; the caller
-    assigns span offsets from it (tasks.py:182-204)."""
+def render_pages(data: bytes, dpi: int = 300) -> Sequence[np.ndarray]:
+    """Every page rendered at the requested DPI, zoom = dpi/72
+    (pdf_service.py:102-113). Page order is the stored order; the caller
+    assigns span offsets from it (tasks.py:182-204).
+
+    SPDF pages are decoded and zoomed when read (_SpdfPages), so a caller
+    that processes each page before reading the next holds one zoomed
+    page, not all of them; a page that fails to decode raises when read.
+    %PDF streams render in full up front."""
     if data[: len(_PDF_MAGIC)] == _PDF_MAGIC:
         fitz = _fitz()
         if fitz is None:
@@ -530,20 +539,40 @@ def render_pages(data: bytes, dpi: int = 300) -> list[np.ndarray]:
         finally:
             doc.close()
     page_blobs, _meta = _parse(data)
-    zoom = dpi / BASE_DPI
-    out = []
-    for blob in page_blobs:
-        img = decode_png(blob)
-        if zoom != 1.0:
+    return _SpdfPages(page_blobs, dpi)
+
+
+class _SpdfPages(Sequence):
+    """SPDF pages as a sequence that renders page `i` on each read. The
+    count comes from the container header, and every page's zoomed
+    raster is checked against the bound up front from its PNG header, so
+    an oversize page is rejected before any page is processed."""
+
+    def __init__(self, blobs: list[bytes], dpi: int):
+        self._blobs, self._dpi = blobs, dpi
+        for blob in blobs:
+            if blob[12:16] == b"IHDR":
+                w, h = struct.unpack(">II", blob[16:24])
+                self._check_zoom(w, h, _CHANNELS.get(blob[25], 1))
+
+    def __len__(self) -> int:
+        return len(self._blobs)
+
+    def __getitem__(self, i: int) -> np.ndarray:
+        img = decode_png(self._blobs[i])
+        if self._dpi != BASE_DPI:
             h, w = img.shape[:2]
-            zw, zh = int(w * zoom), int(h * zoom)
-            channels = img.shape[2] if img.ndim == 3 else 1
-            # decode_png bounds the stored page; the zoom multiplies it
-            if zw * zh * channels > _MAX_RASTER_PX:
-                raise ValueError(
-                    f"page raster {zw}x{zh} at dpi={dpi} exceeds the "
-                    f"{_MAX_RASTER_PX / 1e6:.0f} MP bound"
-                )
+            zw, zh = self._check_zoom(w, h, img.shape[2] if img.ndim == 3 else 1)
             img = K.resize_bilinear(img, zw, zh)
-        out.append(img)
-    return out
+        return img
+
+    def _check_zoom(self, w: int, h: int, channels: int) -> tuple[int, int]:
+        # decode_png bounds the stored page; the zoom multiplies it
+        zoom = self._dpi / BASE_DPI
+        zw, zh = int(w * zoom), int(h * zoom)
+        if zw * zh * channels > _MAX_RASTER_PX:
+            raise ValueError(
+                f"page raster {zw}x{zh} at dpi={self._dpi} exceeds the "
+                f"{_MAX_RASTER_PX / 1e6:.0f} MP bound"
+            )
+        return zw, zh

@@ -18,9 +18,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.spark.pipeline import run_pipeline
@@ -57,20 +59,24 @@ def _table_layout_of(df: DataFrame) -> int | None:
         return None
 
 
+def _bucket_sql(n_buckets: int) -> str:
+    return (
+        "pmod(CAST(conv(substring(md5(doc_id), 1, 15), 16, 10) AS BIGINT),"
+        f" {int(n_buckets)})"
+    )
+
+
 def bucket_expr(n_buckets: int):
     """Deterministic doc -> bucket hash (the resume partition key).
 
     md5-based so it is portable: identical to corpus.bucket_of (Python)
     and computable in any SQL engine — the ingest-time layout column and
     this runtime fallback always agree."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id")), 1, 15), 16, 10).cast("long"),
-        F.lit(n_buckets),
-    )
+    return F.expr(_bucket_sql(n_buckets))
 
 
-def bucket_filter(df, n_buckets: int, b: int):
-    """Predicate selecting runtime bucket `b`.
+def bucket_filter(df, n_buckets: int, b: int) -> str:
+    """Predicate (SQL text) selecting runtime bucket `b`.
 
     If the input carries the materialized `bucket` layout column
     (corpus.write_corpus_parquet), filter on IT — Catalyst turns a
@@ -89,22 +95,39 @@ def bucket_filter(df, n_buckets: int, b: int):
     and media with the other in the same bucket run — see
     run_extraction_job, which only prunes media when docs also filter on
     the bucket column."""
-    if "bucket" in df.columns:
-        return F.pmod(F.col("bucket"), F.lit(n_buckets)) == b
-    return bucket_expr(n_buckets) == b
+    return group_filter(df, n_buckets, [b])
 
 
-def group_filter(df, n_buckets: int, buckets: list[int]):
-    """Predicate selecting a GROUP of runtime buckets in one scan.
+def group_filter(df, n_buckets: int, buckets: list[int]) -> str:
+    """Predicate (SQL text) selecting a GROUP of runtime buckets in one
+    scan.
 
-    Same two methods as bucket_filter; `pmod(partition_col, n).isin(...)`
+    Same two methods as bucket_filter; `pmod(partition_col, n) IN (...)`
     is still a deterministic partition predicate, so bucketed layouts
     prune to exactly the group's files."""
+    key = (
+        f"pmod(bucket, {int(n_buckets)})"
+        if "bucket" in df.columns
+        else _bucket_sql(n_buckets)
+    )
     if len(buckets) == 1:
-        return bucket_filter(df, n_buckets, buckets[0])
-    if "bucket" in df.columns:
-        return F.pmod(F.col("bucket"), F.lit(n_buckets)).isin(buckets)
-    return bucket_expr(n_buckets).isin(buckets)
+        return f"{key} = {int(buckets[0])}"
+    return f"{key} IN ({', '.join(str(int(b)) for b in buckets)})"
+
+
+def _bucket_stats(group: list[int]) -> list[Column]:
+    """Manifest counts of every bucket in `group`, as aggregates over the
+    written rows (the `bucket` column tells the buckets of a grouped
+    write apart)."""
+    exprs = []
+    for b in group:
+        in_b = f"bucket = {int(b)}" if len(group) > 1 else "true"
+        exprs += [
+            f"count_if({in_b}) AS n_docs_{b}",
+            f"sum(CASE WHEN {in_b} THEN metrics.n_spans END) AS n_spans_{b}",
+            f"sum(CASE WHEN {in_b} THEN metrics.skipped END) AS n_skipped_{b}",
+        ]
+    return [F.expr(e) for e in exprs]
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -313,16 +336,24 @@ def run_extraction_job(
         )
         paths = {b: os.path.join(out_dir, f"bucket={b}") for b in group}
         t0 = time.time()
+        # The manifest counts ride on the write itself: an Observation
+        # aggregates the rows as they stream into the writer, so no second
+        # action re-reads the bucket. The observed node sits in the write's
+        # result stage (no Exchange above it), where Spark applies each
+        # partition's accumulator update once, so a retried task cannot
+        # double count.
+        obs = Observation(f"manifest-{group[0]}-{uuid.uuid4().hex}")
+        stats = _bucket_stats(group)
         if len(group) == 1:
-            result.write.mode("overwrite").parquet(paths[group[0]])
+            result.observe(obs, *stats).write.mode("overwrite").parquet(
+                paths[group[0]]
+            )
         else:
             # any existing dir for an uncommitted bucket is garbage from a
             # crashed attempt (committed ones were filtered out of pending)
             # — clear it so a now-empty bucket can't resurrect stale rows
             for p in paths.values():
                 if os.path.isdir(p):
-                    import shutil
-
                     shutil.rmtree(p)
             if filter_method == "bucket-column":
                 # the doc's runtime bucket comes from the SAME layout
@@ -331,39 +362,20 @@ def run_extraction_job(
                 # the result side is already hash-partitioned by doc_id.
                 ids = docs_df.filter(
                     group_filter(docs_df, n_buckets, group)
-                ).select(
-                    "doc_id",
-                    F.pmod(F.col("bucket"), F.lit(n_buckets)).alias("bucket"),
-                )
+                ).selectExpr("doc_id", f"pmod(bucket, {n_buckets}) AS bucket")
                 out_df = result.join(ids, "doc_id")
             else:
                 out_df = result.withColumn("bucket", bucket_expr(n_buckets))
             (
-                out_df.write.mode("overwrite")
+                out_df.observe(obs, *stats)
+                .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(out_dir)
             )
-        existing = [p for p in paths.values() if os.path.isdir(p)]
-        stats: dict[int, dict] = {}
-        if existing:
-            # one stats action for the whole group; basePath recovers the
-            # bucket partition column from the directory names
-            for r in (
-                spark.read.option("basePath", out_dir)
-                .parquet(*existing)
-                .groupBy("bucket")
-                .agg(
-                    F.count("*").alias("n_docs"),
-                    F.sum("metrics.n_spans").alias("n_spans"),
-                    F.sum("metrics.skipped").alias("n_skipped"),
-                )
-                .collect()
-            ):
-                stats[int(r["bucket"])] = r
+        counts = obs.get
         elapsed = round(time.time() - t0, 3)
         for b in group:
-            s = stats.get(b)
             _commit_manifest(
                 out_dir,
                 {
@@ -372,9 +384,9 @@ def run_extraction_job(
                     "n_buckets": n_buckets,
                     "filter": filter_method,
                     "attempt": attempts[b],
-                    "n_docs": int(s["n_docs"]) if s else 0,
-                    "n_spans": int(s["n_spans"] or 0) if s else 0,
-                    "n_skipped": int(s["n_skipped"] or 0) if s else 0,
+                    "n_docs": int(counts[f"n_docs_{b}"]),
+                    "n_spans": int(counts[f"n_spans_{b}"] or 0),
+                    "n_skipped": int(counts[f"n_skipped_{b}"] or 0),
                     "elapsed_s": elapsed,
                     "buckets_per_job": len(group),
                     "profile": profile,

@@ -33,51 +33,41 @@ from ocr_spark.spark.stages import (
     make_pdf_fanout,
     make_split_stage,
 )
-from ocr_spark.spark.text_branch import main_content_col
+from ocr_spark.spark.text_branch import main_content_sql, sql_str
 
 MEDIA_KINDS = ("media", "pdf")
 
+# Static expressions are Spark SQL text: one py4j call parses a whole
+# projection JVM-side, where the same expression built from Column calls
+# costs a round trip per node (the text classifier alone has ~650).
+_IS_MEDIA = f"kind IN ({', '.join(map(sql_str, MEDIA_KINDS))})"
+# constant columns of a span row that never went through the UDF
+_NO_STEPS = "CAST(array() AS ARRAY<STRING>) AS steps_applied"
+_NO_TIME = "0L AS elapsed_ms"
+
 
 def _span_rows(docs_df: DataFrame) -> DataFrame:
-    """explode_outer keeps empty-spans docs as a null-kind row so the doc
+    """inline_outer keeps empty-spans docs as a null-kind row so the doc
     still appears in the output with spans=[] (FIXTURES.md edge case)."""
-    return docs_df.select(
-        "doc_id", F.explode_outer("spans").alias("span")
-    ).select(
-        "doc_id",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
-
-
-def _finish_branch(df: DataFrame) -> DataFrame:
-    cols = [f.name for f in S.SPAN_RESULT_SCHEMA.fields]
-    return df.select(*cols)
+    return docs_df.selectExpr("doc_id", "inline_outer(spans)")
 
 
 def _non_media_branch(spans: DataFrame) -> DataFrame:
     """Text spans (boilerplate strip, entirely JVM-side), unknown kinds
     (counted skips, core.py else-branch), and the null-kind rows that
     keep empty-spans docs alive — one scan, one Filter+Project."""
-    is_text = F.col("kind") == "text"
-    return _finish_branch(
-        spans.filter(F.col("kind").isNull() | ~F.col("kind").isin(*MEDIA_KINDS))
-        .select(
-            "doc_id",
-            "kind",
-            F.when(is_text, main_content_col(F.col("text")))
-            .when(F.col("kind").isNotNull(), F.lit(""))
-            .alias("text"),
-            "media_ref",
-            "offset",
-            F.lit(0.0).alias("confidence"),
-            F.array().cast("array<string>").alias("steps_applied"),
-            F.when(F.col("kind").isNotNull(), F.lit("none")).alias("split_method"),
-            (F.col("kind").isNotNull() & ~is_text).alias("skipped"),
-            F.lit(0).cast("long").alias("elapsed_ms"),
-        )
+    return spans.where(f"kind IS NULL OR NOT {_IS_MEDIA}").selectExpr(
+        "doc_id",
+        "kind",
+        f"CASE WHEN kind = 'text' THEN {main_content_sql('text')}"
+        " WHEN kind IS NOT NULL THEN '' END AS text",
+        "media_ref",
+        "offset",
+        "0.0D AS confidence",
+        _NO_STEPS,
+        "CASE WHEN kind IS NOT NULL THEN 'none' END AS split_method",
+        "kind IS NOT NULL AND kind != 'text' AS skipped",
+        _NO_TIME,
     )
 
 
@@ -85,7 +75,7 @@ def _media_span_rows(docs_df: DataFrame) -> DataFrame:
     """Span rows for the media branch, WITHOUT the text payload.
 
     Catalyst's generator pruning only handles single-field explodes, so
-    a plain `explode(spans)` here would read the whole text corpus a
+    a plain `inline(spans)` here would read the whole text corpus a
     second time. `arrays_zip` over direct field extracts
     (GetArrayStructFields) IS covered by the nested SchemaPruning rule,
     so zipping (kind, media_ref, offset) and exploding the zipped array
@@ -93,19 +83,8 @@ def _media_span_rows(docs_df: DataFrame) -> DataFrame:
     temp views, and catalog (Iceberg) tables alike (VERDICT r2 #1; the
     r2 build special-cased parquet paths with a pruned re-scan and left
     the production `table:` inputs reading text twice)."""
-    zipped = docs_df.select(
-        "doc_id",
-        F.arrays_zip(
-            F.col("spans.kind").alias("kind"),
-            F.col("spans.media_ref").alias("media_ref"),
-            F.col("spans.offset").alias("offset"),
-        ).alias("spans"),
-    )
-    return zipped.select("doc_id", F.explode("spans").alias("span")).select(
-        "doc_id",
-        F.col("span.kind").alias("kind"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
+    return docs_df.selectExpr(
+        "doc_id", "inline(arrays_zip(spans.kind, spans.media_ref, spans.offset))"
     )
 
 
@@ -119,21 +98,20 @@ def _media_input(
     how: str = "left",
 ) -> DataFrame:
     dim_cols = ["width", "height"] if with_dims else []
-    m = media_df.select("media_ref", "png", *dim_cols)
-    if max_payload_bytes:
-        # oversize-payload guard (file_validation.py:149-162): nulling the
-        # payload turns the span into a counted skip, never an exception
-        m = m.select(
-            "media_ref",
-            F.when(F.length("png") <= max_payload_bytes, F.col("png")).alias("png"),
-            *dim_cols,
-        )
+    # oversize-payload guard (file_validation.py:149-162): nulling the
+    # payload turns the span into a counted skip, never an exception
+    png = (
+        f"CASE WHEN length(png) <= {int(max_payload_bytes)} THEN png END AS png"
+        if max_payload_bytes
+        else "png"
+    )
+    m = media_df.selectExpr("media_ref", png, *dim_cols)
     if broadcast_media:
         m = F.broadcast(m)
     joined = (
-        media_spans.filter(F.col("kind").isin(*MEDIA_KINDS))
+        media_spans.where(_IS_MEDIA)
         .join(m, "media_ref", how)
-        .select("doc_id", "kind", "media_ref", "offset", "png", *dim_cols)
+        .selectExpr("doc_id", "kind", "media_ref", "offset", "png", *dim_cols)
     )
     # Explicit partition count — AQE coalesces by *bytes*, but this stage's
     # cost is compute per image, so byte-based coalescing recreates skew.
@@ -145,39 +123,38 @@ def _media_input(
     return joined.repartition("doc_id", "offset")
 
 
-def _be_u32(pos: int) -> "F.Column":
+def _be_u32(pos: int) -> str:
     """Big-endian u32 at 1-based byte `pos` of the payload, as a double
     (hex the 4-byte slice, conv base16 -> base10). A payload too short
     for the slice reads as NULL."""
-    word = F.expr(f"substring(png, {pos}, 4)")
-    return F.when(F.length(word) == 4, F.conv(F.hex(word), 16, 10).cast("double"))
+    word = f"substring(png, {pos}, 4)"
+    return f"CASE WHEN length({word}) = 4 THEN CAST(conv(hex({word}), 16, 10) AS DOUBLE) END"
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _SPDF_MAGIC = b"SPDF1\n"
+_IS_PNG = f"substring(png, 1, {len(_PNG_SIG)}) = X'{_PNG_SIG.hex()}'"
+_IS_SPDF = f"substring(png, 1, {len(_SPDF_MAGIC)}) = X'{_SPDF_MAGIC.hex()}'"
 # SPDF pages are 72-dpi bases rendered at 300 dpi (pdfio.render_pages)
 _PDF_RENDER_AREA = (300 / 72) ** 2
 
-
-def _span_cost_col() -> "F.Column":
-    """Estimated extraction cost of a media span, in rendered pixels,
-    read from the payload header in pure Catalyst (no scan beyond the
-    `png` column the join already reads):
-
-    * PNG: IHDR width x height (bytes 17-24);
-    * SPDF: page count x first-page IHDR pixels x the 300-dpi zoom area
-      (the first page PNG starts at byte 15, so its IHDR at byte 31);
-    * anything else (missing payloads, %PDF streams, garbage): 0 — these
-      are skips or fitz-bound payloads with no header to read.
-
-    Pixels track the per-span work well: a ~2.3 MP page takes 1-2 s, a
-    2-3 page pdf 0.6-0.9 s and a 0.2 MP page 50-150 ms on a 4-vCPU host."""
-    head = F.expr("substring(png, 1, 8)")
-    cost = F.when(head == F.lit(_PNG_SIG), _be_u32(17) * _be_u32(21)).when(
-        F.expr("substring(png, 1, 6)") == F.lit(_SPDF_MAGIC),
-        _be_u32(7) * _be_u32(31) * _be_u32(35) * F.lit(_PDF_RENDER_AREA),
-    )
-    return F.coalesce(cost, F.lit(0.0))
+# Estimated extraction cost of a media span, in rendered pixels, read
+# from the payload header in pure Catalyst (no scan beyond the `png`
+# column the join already reads):
+#
+# * PNG: IHDR width x height (bytes 17-24);
+# * SPDF: page count x first-page IHDR pixels x the 300-dpi zoom area
+#   (the first page PNG starts at byte 15, so its IHDR at byte 31);
+# * anything else (missing payloads, %PDF streams, garbage): 0 — these
+#   are skips or fitz-bound payloads with no header to read.
+#
+# Pixels track the per-span work well: a ~2.3 MP page takes 1-2 s, a
+# 2-3 page pdf 0.6-0.9 s and a 0.2 MP page 50-150 ms on a 4-vCPU host.
+SPAN_COST_SQL = (
+    f"coalesce(CASE WHEN {_IS_PNG} THEN {_be_u32(17)} * {_be_u32(21)}"
+    f" WHEN {_IS_SPDF} THEN {_be_u32(7)} * {_be_u32(31)} * {_be_u32(35)}"
+    f" * {_PDF_RENDER_AREA!r}D END, 0.0D)"
+)
 
 
 def _deal_by_cost(joined: DataFrame, n: int) -> DataFrame:
@@ -191,25 +168,31 @@ def _deal_by_cost(joined: DataFrame, n: int) -> DataFrame:
     (monotonically_increasing_id minus the partition id in its top
     bits), so there is no Window and no extra stage. The sort makes the
     rank deterministic, so a recomputed partition deals identically.
-    The `span_slot` helper column is the last projection under the
-    Exchange and rides into the UDF, which ignores it: a Project that
-    dropped it would sit between the Exchange and MapInPandas."""
-    pid = F.spark_partition_id().cast("long")
-    rank = F.monotonically_increasing_id() - F.shiftleft(pid, 33)
-    lap, pos = F.floor(rank / n), F.pmod(rank, F.lit(n))
-    slot = F.when(lap % 2 == 0, pos).otherwise(n - 1 - pos)
+    The rank is computed once, in its own projection: every occurrence
+    of monotonically_increasing_id keeps its own counter and counts only
+    the rows that evaluate it, so one inside a CASE branch would count
+    that branch's rows only. The `span_slot` helper column is the last
+    projection under the Exchange and rides into the UDF, which ignores
+    it: a Project that dropped it would sit between the Exchange and
+    MapInPandas."""
+    pid = "spark_partition_id()"
+    rank = f"monotonically_increasing_id() - shiftleft(CAST({pid} AS BIGINT), 33)"
+    lap, pos = f"_rank div {n}", f"pmod(_rank, {n})"
+    slot = f"CASE WHEN {lap} % 2 = 0 THEN {pos} ELSE {n - 1} - {pos} END"
     return (
         joined.sortWithinPartitions(
-            F.desc(_span_cost_col()), "doc_id", "offset", "media_ref"
+            F.expr(SPAN_COST_SQL).desc(), "doc_id", "offset", "media_ref"
         )
-        .withColumn("span_slot", F.pmod(slot + pid, F.lit(n)).cast("int"))
+        .selectExpr("*", f"{rank} AS _rank")
+        .selectExpr("*", f"CAST(pmod({slot} + {pid}, {n}) AS INT) AS span_slot")
+        .drop("_rank")
         .repartitionById(n, "span_slot")
     )
 
 
 def _media_branch_fused(media_in: DataFrame, profile: EngineProfile) -> DataFrame:
-    out = media_in.mapInPandas(make_fused_extract(profile), S.SPAN_RESULT_SCHEMA)
-    return _finish_branch(out)
+    return media_in.mapInPandas(make_fused_extract(profile), S.SPAN_RESULT_SCHEMA)
+
 
 
 def _media_branch_staged(
@@ -248,77 +231,41 @@ def _media_branch_staged(
 
     # page fan-in per span (M7 page markers) — pure Catalyst
     pages_agg = page_texts.groupBy("doc_id", "offset", "kind", "media_ref").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("page_idx").alias("page_idx"),
-                    F.col("n_pages").alias("n_pages"),
-                    F.col("text").alias("text"),
-                    F.col("confidence").alias("confidence"),
-                    F.col("steps_applied").alias("steps_applied"),
-                    F.col("split_method").alias("split_method"),
-                )
-            )
-        ).alias("pages"),
-        F.max(F.col("skipped").cast("int")).alias("any_skipped"),
+        F.expr(
+            "array_sort(collect_list(struct(page_idx, n_pages, text, confidence,"
+            " steps_applied, split_method))) AS pages"
+        ),
+        F.expr("max(CAST(skipped AS INT)) AS any_skipped"),
     )
-    real = F.filter(F.col("pages"), lambda p: p["page_idx"] >= 0)
+    real = "filter(pages, p -> p.page_idx >= 0)"
     # marker pieces derive from core.PAGE_MARKER (the oracle's format),
     # so an edit to the shared constant cannot silently desync the
     # Catalyst fan-in from the single-process reference
     _pre, _rest = PAGE_MARKER.split("{i}")
     _mid, _post = _rest.split("{n}")
-    page_text = F.when(
-        F.col("kind") == "pdf",
-        F.array_join(
-            F.transform(
-                real,
-                lambda p: F.concat(
-                    F.lit(_pre),
-                    (p["page_idx"] + 1).cast("string"),
-                    F.lit(_mid),
-                    p["n_pages"].cast("string"),
-                    F.lit(_post + "\n"),
-                    p["text"],
-                ),
-            ),
-            "\n\n",
-        ),
-    ).otherwise(F.element_at(F.col("pages"), 1)["text"])
-    conf = F.when(
-        F.size(real) > 0,
-        F.aggregate(real, F.lit(0.0), lambda acc, p: acc + p["confidence"])
-        / F.size(real),
-    ).otherwise(F.lit(0.0))
-    steps = F.array_sort(
-        F.array_distinct(F.flatten(F.transform(real, lambda p: p["steps_applied"])))
+    pre, mid, post = map(sql_str, (_pre, _mid, _post + "\n"))
+    marker = (
+        f"concat({pre}, CAST(p.page_idx + 1 AS STRING), {mid},"
+        f" CAST(p.n_pages AS STRING), {post}, p.text)"
     )
-    method = F.when(
-        F.col("kind") == "pdf",
-        F.when(
-            F.size(real) > 0,
-            F.array_join(
-                F.array_sort(
-                    F.array_distinct(F.transform(real, lambda p: p["split_method"]))
-                ),
-                ",",
-            ),
-        ).otherwise(F.lit("none")),
-    ).otherwise(F.element_at(F.col("pages"), 1)["split_method"])
-
-    out = pages_agg.select(
+    sep = sql_str("\n\n")
+    return pages_agg.selectExpr(
         "doc_id",
         "kind",
-        page_text.alias("text"),
+        f"CASE WHEN kind = 'pdf' THEN array_join(transform({real}, p -> {marker}),"
+        f" {sep}) ELSE element_at(pages, 1).text END AS text",
         "media_ref",
         "offset",
-        conf.alias("confidence"),
-        steps.alias("steps_applied"),
-        method.alias("split_method"),
-        (F.col("any_skipped") > 0).alias("skipped"),
-        F.lit(0).cast("long").alias("elapsed_ms"),
+        f"CASE WHEN size({real}) > 0 THEN aggregate({real}, 0.0D,"
+        f" (acc, p) -> acc + p.confidence) / size({real}) ELSE 0.0D END AS confidence",
+        f"array_sort(array_distinct(flatten(transform({real}, p -> p.steps_applied))))"
+        " AS steps_applied",
+        f"CASE WHEN kind = 'pdf' THEN CASE WHEN size({real}) > 0 THEN"
+        f" array_join(array_sort(array_distinct(transform({real}, p -> p.split_method))), ',')"
+        " ELSE 'none' END ELSE element_at(pages, 1).split_method END AS split_method",
+        "any_skipped > 0 AS skipped",
+        _NO_TIME,
     )
-    return _finish_branch(out)
 
 
 # hybrid routing thresholds: the staged path pays a second media
@@ -360,12 +307,10 @@ def media_is_heavy(png: bytes | None, width: int, height: int) -> bool:
     return w * h > IMG_STAGED_MIN_PIXELS or max(w, h) > IMG_STAGED_MAX_DIM
 
 
-def _pdf_page_count_col() -> "F.Column":
-    """SPDF page count parsed from the container header with pure
-    Catalyst (bytes 7-10, big-endian u32 — pdfio.encode_pdf). NULL for
-    non-SPDF payloads."""
-    is_spdf = F.expr("substring(png, 1, 6)") == F.lit(_SPDF_MAGIC)
-    return F.when(is_spdf, _be_u32(7).cast("long"))
+# SPDF page count parsed from the container header with pure Catalyst
+# (bytes 7-10, big-endian u32 — pdfio.encode_pdf). NULL for non-SPDF
+# payloads.
+_PDF_PAGES_SQL = f"CASE WHEN {_IS_SPDF} THEN CAST({_be_u32(7)} AS BIGINT) END"
 
 
 def _media_branch_hybrid(
@@ -380,18 +325,18 @@ def _media_branch_hybrid(
     takes the fused path. Any routing is semantics-preserving (both
     paths are oracle-equal); this one puts the staged overhead only
     where its skew-defeating fan-out pays."""
-    pdf_heavy = (F.col("kind") == "pdf") & (
-        (_pdf_page_count_col() >= PDF_STAGED_MIN_PAGES)
-        | (F.length("png") > PDF_STAGED_MIN_BYTES)
+    pdf_heavy = (
+        f"kind = 'pdf' AND ({_PDF_PAGES_SQL} >= {PDF_STAGED_MIN_PAGES}"
+        f" OR length(png) > {PDF_STAGED_MIN_BYTES})"
     )
     heavy = (
-        pdf_heavy
-        | (F.col("width").cast("long") * F.col("height") > IMG_STAGED_MIN_PIXELS)
-        | (F.greatest("width", "height") > IMG_STAGED_MAX_DIM)
+        f"coalesce({pdf_heavy}"
+        f" OR CAST(width AS BIGINT) * height > {IMG_STAGED_MIN_PIXELS}"
+        f" OR greatest(width, height) > {IMG_STAGED_MAX_DIM}, false)"
     )
     base = ["doc_id", "kind", "media_ref", "offset", "png"]
-    small = media_in.filter(~F.coalesce(heavy, F.lit(False))).select(*base)
-    big = media_in.filter(F.coalesce(heavy, F.lit(False))).select(*base)
+    small = media_in.where(f"NOT {heavy}").selectExpr(*base)
+    big = media_in.where(heavy).selectExpr(*base)
     return _media_branch_fused(small, profile).unionByName(
         _media_branch_staged(big, profile, chunk_partitions, chunk_codec)
     )
@@ -421,7 +366,7 @@ def _media_branch_hybrid_pruned(
     bytes are read exactly ONCE across branches — the two-branch plan's
     structural extra scan is gone, so hybrid ~= fused on corpora with no
     stragglers while keeping the fan-out where it pays."""
-    spans_m = media_spans.filter(F.col("kind").isin(*MEDIA_KINDS))
+    spans_m = media_spans.where(_IS_MEDIA)
     # NULL-inclusive light filter: a user-supplied media table may carry
     # NULL in `heavy` (our ingest never does — it's a partition column).
     # Plain heavy==0 and heavy==1 would BOTH drop such rows, and the
@@ -430,7 +375,7 @@ def _media_branch_hybrid_pruned(
     # filter, so the pruned layout pays nothing for the disjunct.
     light_in = _media_input(
         spans_m,
-        media_df.filter((F.col("heavy") == 0) | F.col("heavy").isNull()),
+        media_df.where("heavy = 0 OR heavy IS NULL"),
         broadcast_media,
         span_partitions,
         max_payload_bytes,
@@ -442,26 +387,24 @@ def _media_branch_hybrid_pruned(
     # scheduled hundreds of empty tasks (measured: 4 s for 0 rows)
     heavy_in = _media_input(
         spans_m,
-        media_df.filter(F.col("heavy") == 1),
+        media_df.where("heavy = 1"),
         broadcast_media,
         None,
         max_payload_bytes,
         how="inner",
     )
-    missing = spans_m.join(media_df.select("media_ref"), "media_ref", "left_anti")
-    miss_out = _finish_branch(
-        missing.select(
-            "doc_id",
-            "kind",
-            F.lit("").alias("text"),
-            "media_ref",
-            "offset",
-            F.lit(0.0).alias("confidence"),
-            F.array().cast("array<string>").alias("steps_applied"),
-            F.lit("none").alias("split_method"),
-            F.lit(True).alias("skipped"),
-            F.lit(0).cast("long").alias("elapsed_ms"),
-        )
+    missing = spans_m.join(media_df.selectExpr("media_ref"), "media_ref", "left_anti")
+    miss_out = missing.selectExpr(
+        "doc_id",
+        "kind",
+        "'' AS text",
+        "media_ref",
+        "offset",
+        "0.0D AS confidence",
+        _NO_STEPS,
+        "'none' AS split_method",
+        "true AS skipped",
+        _NO_TIME,
     )
     return (
         _media_branch_fused(light_in, profile)
@@ -472,6 +415,25 @@ def _media_branch_hybrid_pruned(
     )
 
 
+_OK_MEDIA = f"{_IS_MEDIA} AND NOT skipped"
+# groupBy(doc_id) aggregates of reassemble, in METRICS_STRUCT order
+# after the span list
+_REASSEMBLE_AGGS = (
+    "array_sort(collect_list(CASE WHEN kind IS NOT NULL"
+    " THEN struct(offset, kind, text, media_ref) END)) AS _spans",
+    "CAST(sum(CASE WHEN kind IS NOT NULL THEN 1 ELSE 0 END) AS INT) AS n_spans",
+    f"CAST(sum(coalesce(CAST({_IS_MEDIA} AS INT), 0)) AS INT) AS n_media",
+    "CAST(sum(coalesce(CAST(kind = 'text' AS INT), 0)) AS INT) AS n_text",
+    "CAST(sum(CAST(skipped AS INT)) AS INT) AS skipped",
+    "array_sort(array_distinct(flatten(collect_list("
+    f"CASE WHEN {_OK_MEDIA} THEN steps_applied END)))) AS steps_applied",
+    "array_sort(array_distinct(collect_list("
+    f"CASE WHEN {_OK_MEDIA} THEN split_method END))) AS split_methods",
+    f"coalesce(avg(CASE WHEN {_OK_MEDIA} THEN confidence END), 0.0D) AS ocr_confidence",
+    "sum(coalesce(elapsed_ms, 0)) AS elapsed_ms",
+)
+
+
 def reassemble(span_results: DataFrame, run_id: str, attempt: int,
                doc_partitions: int | None = None) -> DataFrame:
     """groupBy(doc_id) span-order reassembly + metrics (M7/M9) — pure
@@ -480,77 +442,15 @@ def reassemble(span_results: DataFrame, run_id: str, attempt: int,
         df = span_results.repartition(doc_partitions, "doc_id")
     else:
         df = span_results.repartition("doc_id")
-
-    is_media = F.col("kind").isin(*MEDIA_KINDS)
-    ok_media = is_media & ~F.col("skipped")
-    agg = df.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    F.col("kind").isNotNull(),
-                    F.struct(
-                        F.col("offset").alias("offset"),
-                        F.col("kind").alias("kind"),
-                        F.col("text").alias("text"),
-                        F.col("media_ref").alias("media_ref"),
-                    ),
-                )
-            )
-        ).alias("_spans"),
-        F.sum(F.when(F.col("kind").isNotNull(), 1).otherwise(0))
-        .cast("int")
-        .alias("n_spans"),
-        F.sum(F.coalesce(is_media.cast("int"), F.lit(0)))
-        .cast("int")
-        .alias("n_media"),
-        F.sum(F.coalesce((F.col("kind") == "text").cast("int"), F.lit(0)))
-        .cast("int")
-        .alias("n_text"),
-        F.sum(F.col("skipped").cast("int")).cast("int").alias("skipped"),
-        F.array_sort(
-            F.array_distinct(
-                F.flatten(
-                    F.collect_list(F.when(ok_media, F.col("steps_applied")))
-                )
-            )
-        ).alias("steps_applied"),
-        F.array_sort(
-            F.array_distinct(
-                F.collect_list(F.when(ok_media, F.col("split_method")))
-            )
-        ).alias("split_methods"),
-        F.coalesce(
-            F.avg(F.when(ok_media, F.col("confidence"))), F.lit(0.0)
-        ).alias("ocr_confidence"),
-        F.sum(F.coalesce(F.col("elapsed_ms"), F.lit(0))).alias("elapsed_ms"),
-    )
-    return agg.select(
+    agg = df.groupBy("doc_id").agg(*map(F.expr, _REASSEMBLE_AGGS))
+    return agg.selectExpr(
         "doc_id",
-        F.transform(
-            "_spans",
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ),
-        ).alias("spans"),
-        F.struct(
-            F.col("n_spans").alias("n_spans"),
-            F.col("n_media").alias("n_media"),
-            F.col("n_text").alias("n_text"),
-            F.col("skipped").alias("skipped"),
-            F.col("steps_applied").alias("steps_applied"),
-            F.col("split_methods").alias("split_methods"),
-            F.col("ocr_confidence").alias("ocr_confidence"),
-            F.col("elapsed_ms").alias("elapsed_ms"),
-        ).alias("metrics"),
-        F.struct(
-            F.lit(run_id).alias("run_id"),
-            F.spark_partition_id().alias("partition_id"),
-            F.lit(attempt).alias("attempt"),
-            F.current_timestamp().alias("ts"),
-        ).alias("lineage"),
+        "transform(_spans, s -> struct(s.kind AS kind, s.text AS text,"
+        " s.media_ref AS media_ref, s.offset AS offset)) AS spans",
+        "struct(n_spans, n_media, n_text, skipped, steps_applied, split_methods,"
+        " ocr_confidence, elapsed_ms) AS metrics",
+        f"struct({sql_str(run_id)} AS run_id, spark_partition_id() AS partition_id,"
+        f" {int(attempt)} AS attempt, current_timestamp() AS ts) AS lineage",
     )
 
 
@@ -576,8 +476,9 @@ def run_pipeline(
     mode='fused'  — one Arrow stage per span (fewest shuffles).
     mode='staged' — pdf/split/extract/merge stages with chunk-level
                     rebalance (heavy-doc skew path).
-    docs_filter   — optional Column predicate applied to every scan of
-                    the documents table (the resume bucket filter).
+    docs_filter   — optional predicate (Column or SQL text) applied to
+                    every scan of the documents table (the resume
+                    bucket filter).
     fidelity      — overrides PreprocessConfig.fidelity on the resolved
                     profile ("fast" numpy stand-ins | "cv2" reference
                     algorithms, kernels.py cv2-fidelity section).

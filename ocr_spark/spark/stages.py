@@ -150,8 +150,8 @@ def make_pdf_fanout(profile: EngineProfile, dpi: int = 300):
                 if payload is None or not is_pdf(payload):
                     emit(row, -1, 0, None, True)
                     continue
-                try:
-                    pages = render_pages(payload, dpi=dpi)
+                try:  # every page, so a bad one skips the span before any emit
+                    pages = list(render_pages(payload, dpi=dpi))
                 except Exception:  # noqa: BLE001 — decode failure = skip
                     emit(row, -1, 0, None, True)
                     continue

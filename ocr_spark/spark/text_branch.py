@@ -1,4 +1,4 @@
-"""Text-span branch: boilerplate strip as pure Catalyst expressions.
+"""Text-span branch: boilerplate strip as one Spark SQL expression.
 
 Re-expresses ocr_spark.textproc.boilerplate (the frozen classifier spec,
 SURVEY.md §7.4) with Spark SQL higher-order functions — split / filter /
@@ -7,14 +7,15 @@ whole-stage codegen: zero Python, zero Arrow transfer. At 100 TB the text
 branch is the majority of spans (FIXTURES.md row mix), so keeping it off
 the Python worker path matters more than anything else in this file.
 
+The classifier is built as SQL text, not as a Column tree: the same
+expression assembled from Column calls costs one py4j round trip per
+node (~650 per plan), the text is parsed JVM-side in one call.
+
 tests/test_spark_text_branch.py asserts exact string equality against the
 Python classifier over the fixture corpus.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from ocr_spark.textproc.boilerplate import STOPWORDS
 
@@ -33,65 +34,49 @@ _COPYRIGHT_PATTERN = f"(?iU)^{_WS}*(©|\\(c\\)|copyright\\b)"
 _ENDS_SENTENCE_PATTERN = f"(?U)[.!?]{_WS}*$"
 _BLANK_PATTERN = f"(?U)^{_WS}*$"
 
-def _stopwords_arr() -> Column:
-    """Frozen 50-word stopword list as a literal array — part of the plan
-    itself (constant-folded by Catalyst), no closure, no Python."""
-    return F.array(*[F.lit(w) for w in sorted(STOPWORDS)])
+
+def sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal: the parser unescapes `\\` and
+    `'`, so both are escaped here and every other character (regex
+    backslashes included) reaches the JVM verbatim."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def words_col(block: Column) -> Column:
-    """Non-empty whitespace-separated tokens (re.findall(r'\\S+', b))."""
-    return F.filter(F.split(block, f"(?U){_WS}+"), lambda w: w != F.lit(""))
+_STOPWORDS_SQL = "array(" + ", ".join(sql_str(w) for w in sorted(STOPWORDS)) + ")"
 
 
-def _norm_word(w: Column) -> Column:
-    """w.lower().strip('.,;:!?\"\\'()') — the stopword lookup key."""
-    return F.regexp_replace(
-        F.lower(w), f"^{_PUNCT_CLASS}+|{_PUNCT_CLASS}+$", ""
+def is_boilerplate_sql(b: str) -> str:
+    """Catalyst twin of boilerplate.is_boilerplate (rules B1-B3) over the
+    block expression or lambda variable `b`."""
+    words = f"filter(split({b}, {sql_str(f'(?U){_WS}+')}), w -> w != '')"
+    n_words = f"size({words})"
+    link_words = (
+        f"size(filter({words}, w -> lower(w) RLIKE {sql_str(_LINK_PATTERN)}))"
     )
-
-
-def block_features_cols(block: Column) -> dict[str, Column]:
-    """Per-block density features (mirrors boilerplate.block_features)."""
-    words = words_col(block)
-    n_words = F.size(words)
-    link_words = F.size(
-        F.filter(words, lambda w: F.lower(w).rlike(_LINK_PATTERN))
+    # w.lower().strip('.,;:!?"\'()') — the stopword lookup key
+    norm = (
+        "regexp_replace(lower(w), "
+        f"{sql_str(f'^{_PUNCT_CLASS}+|{_PUNCT_CLASS}+$')}, '')"
     )
-    sw = _stopwords_arr()
-    stop_words = F.size(
-        F.filter(words, lambda w: F.array_contains(sw, _norm_word(w)))
-    )
-    nw = n_words.cast("double")
-    return {
-        "n_words": n_words,
-        "link_density": F.when(n_words > 0, link_words / nw).otherwise(F.lit(0.0)),
-        "stopword_ratio": F.when(n_words > 0, stop_words / nw).otherwise(F.lit(0.0)),
-        "ends_sentence": block.rlike(_ENDS_SENTENCE_PATTERN),
-        "is_copyright": block.rlike(_COPYRIGHT_PATTERN),
-    }
-
-
-def is_boilerplate_col(block: Column) -> Column:
-    """Catalyst twin of boilerplate.is_boilerplate (rules B1-B3)."""
-    f = block_features_cols(block)
+    stop_words = f"size(filter({words}, w -> array_contains({_STOPWORDS_SQL}, {norm})))"
+    nw = f"CAST({n_words} AS DOUBLE)"
+    link_density = f"CASE WHEN {n_words} > 0 THEN {link_words} / {nw} ELSE 0.0D END"
+    stopword_ratio = f"CASE WHEN {n_words} > 0 THEN {stop_words} / {nw} ELSE 0.0D END"
     return (
-        (f["n_words"] == 0)
-        | (f["link_density"] >= 0.25)  # B1
-        | f["is_copyright"]  # B2
-        | ((f["n_words"] <= 6) & (f["stopword_ratio"] <= 0.2) & ~f["ends_sentence"])  # B3
+        f"({n_words} = 0"
+        f" OR {link_density} >= 0.25D"  # B1
+        f" OR {b} RLIKE {sql_str(_COPYRIGHT_PATTERN)}"  # B2
+        f" OR ({n_words} <= 6 AND {stopword_ratio} <= 0.2D"  # B3
+        f" AND NOT {b} RLIKE {sql_str(_ENDS_SENTENCE_PATTERN)}))"
     )
 
 
-def main_content_col(text: Column) -> Column:
-    """extract_main_content as one Catalyst expression.
+def main_content_sql(text: str) -> str:
+    """extract_main_content over the SQL expression `text`.
 
     blocks = text.split('\\n\\n'); keep non-blank, non-boilerplate blocks
     in order; join with '\\n\\n'.
     """
-    blocks = F.split(F.coalesce(text, F.lit("")), "\n\n")
-    kept = F.filter(
-        blocks,
-        lambda b: (~b.rlike(_BLANK_PATTERN)) & (~is_boilerplate_col(b)),
-    )
-    return F.array_join(kept, "\n\n")
+    keep = f"NOT b RLIKE {sql_str(_BLANK_PATTERN)} AND NOT {is_boilerplate_sql('b')}"
+    sep = sql_str("\n\n")
+    return f"array_join(filter(split(coalesce({text}, ''), {sep}), b -> {keep}), {sep})"

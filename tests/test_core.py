@@ -100,3 +100,81 @@ def test_text_span_boilerplate_stripped():
     for span in out:
         assert "https://example.com" not in span["text"]
         assert "©" not in span["text"]
+
+
+def _white_pdf(n_pages: int) -> bytes:
+    from ocr_spark.pdfio import encode_pdf
+
+    return encode_pdf([np.full((500, 500), 255, np.uint8)] * n_pages)
+
+
+def test_pdf_pages_render_one_at_a_time():
+    """An SPDF span holds one zoomed page at a time: the tracemalloc peak
+    of an 8-page span stays within one zoomed page (~4.3 MB at 300 dpi)
+    of the 2-page peak, where rendering every page up front added a
+    zoomed page per page (74 / 99 MB for 2 / 8 pages)."""
+    import tracemalloc
+
+    from ocr_spark.core import process_pdf_bytes
+
+    def peak(n_pages: int) -> int:
+        data = _white_pdf(n_pages)
+        process_pdf_bytes(data, PROFILE)  # first-call allocations out of the way
+        tracemalloc.start()
+        try:
+            process_pdf_bytes(data, PROFILE)
+            return tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+
+    zoomed = int(500 * 300 / 72) ** 2
+    p2, p8 = peak(2), peak(8)
+    assert p8 - p2 <= 1.2 * zoomed, (p2, p8)
+
+
+def test_pdf_lazy_pages_match_eager_render():
+    """Reading pages one at a time gives the span the same text,
+    confidence and steps as processing the fully rendered page list."""
+    from ocr_spark.core import PAGE_MARKER, process_pdf_bytes
+    from ocr_spark.extract.glyph import render_page
+    from ocr_spark.pdfio import encode_pdf, render_pages
+
+    data = encode_pdf(
+        [render_page([f"pg{i} abc"], 220, 120, margin=10) for i in range(3)]
+    )
+    got = process_pdf_bytes(data, PROFILE)
+    pages = list(render_pages(data, dpi=300))
+    want = [process_image(p, PROFILE) for p in pages]
+    assert got.text == "\n\n".join(
+        f"{PAGE_MARKER.format(i=i, n=3)}\n{r.text}" for i, r in enumerate(want, 1)
+    )
+    assert got.confidence == sum(r.confidence for r in want) / 3
+    assert got.steps_applied == sorted({s for r in want for s in r.steps_applied})
+    assert not got.skipped and got.n_chunks == 3
+
+
+def test_pdf_bad_later_page_skips_span_kernel_error_propagates(monkeypatch):
+    """A page that fails to decode after earlier pages were processed
+    still makes the whole span a counted skip; an error raised inside
+    page processing is not swallowed."""
+    import struct
+
+    from ocr_spark import core
+    from ocr_spark.core import process_pdf_bytes
+
+    data = bytearray(_white_pdf(3))
+    # corrupt the last page's IDAT bytes (pages are length-prefixed PNGs)
+    pos = 10
+    for _ in range(2):
+        pos += 4 + struct.unpack(">I", data[pos : pos + 4])[0]
+    ln = struct.unpack(">I", data[pos : pos + 4])[0]
+    idat = data.index(b"IDAT", pos)
+    data[idat + 4 : pos + 4 + ln - 12] = b"\xff" * (pos + 4 + ln - 12 - idat - 4)
+    assert process_pdf_bytes(bytes(data), PROFILE).skipped
+
+    def boom(page, profile):
+        raise RuntimeError("kernel bug")
+
+    monkeypatch.setattr(core, "process_image", boom)
+    with pytest.raises(RuntimeError, match="kernel bug"):
+        process_pdf_bytes(_white_pdf(2), PROFILE)

@@ -249,6 +249,27 @@ def test_metadata_walker_sees_inside_objstm():
     assert meta["title"] == "hidden title"
 
 
+def test_metadata_walker_counts_reserialized_page_once():
+    """An incremental update that re-serializes a raw page object into a
+    Flate /ObjStm leaves the same page dict in both search spaces; the
+    walker takes the larger per-space count, so the page counts once."""
+    import zlib
+
+    from ocr_spark.pdfio import _walk_pdf_metadata
+
+    page = b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 10 10] >>"
+    z = zlib.compress(b"3 0 " + page)
+    data = (
+        b"%PDF-1.6\n"
+        b"2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
+        b"3 0 obj\n" + page + b"\nendobj\n%%EOF\n"
+        # the appended update section: same page, now inside an ObjStm
+        b"9 0 obj\n<< /Type /ObjStm /N 1 /Filter /FlateDecode /Length %d >>"
+        b"\nstream\n" % len(z) + z + b"\nendstream\nendobj\n%%EOF\n"
+    )
+    assert _walk_pdf_metadata(data)["page_count"] == 1
+
+
 def test_real_pdf_roundtrip_under_fitz():
     import pytest as _pytest
 

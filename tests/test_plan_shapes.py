@@ -6,6 +6,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
 
 def _plan(df) -> str:
@@ -771,3 +772,44 @@ def test_media_udf_input_is_one_map_side_deal(spark, corpus_dir):
         ]
         assert len(png_scans) == 1, plan
         assert sum(l.startswith("Exchange ") for l in lines) == n_shuffles, plan
+
+
+def test_manifest_observation_sits_in_the_write_result_stage(spark, corpus_dir, tmp_path):
+    """The manifest counts are observed on the written rows: in the
+    executed write plan of every bucket group, single and grouped, no
+    Exchange sits above CollectMetrics. Result-stage accumulator updates
+    are applied once per partition, so a retried task cannot double
+    count, and each group is one action."""
+    from ocr_spark.spark.checkpoint import run_extraction_job
+    from ocr_spark.spark.corpus import read_corpus
+
+    docs, media = read_corpus(spark, corpus_dir)
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    n = store.executionsCount()  # the store keeps the newest executions
+    last = store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+    for i, bpj in enumerate((1, 2)):
+        run_extraction_job(
+            spark, docs, media, str(tmp_path / f"out{i}"), run_id=f"cm{i}",
+            n_buckets=2, buckets_per_job=bpj, span_partitions=4,
+        )
+    bus.waitUntilEmpty()
+    found = [store.execution(i) for i in range(last + 1, last + 20)]
+    plans = [e.get().physicalPlanDescription() for e in found if e.isDefined()]
+    # 2 single-bucket groups + 1 grouped write: one action each
+    assert len(plans) == 3, plans
+    for desc in plans:
+        # the adaptive plan's executed tree; the store may still hold it
+        # as the "Current" plan when its last update event lands late
+        executed = re.split(r"== (?:Final|Current) Plan ==", desc)[1]
+        lines = executed.split("== Initial Plan ==")[0].splitlines()
+        at = [i for i, l in enumerate(lines) if "CollectMetrics" in l]
+        assert len(at) == 1, executed
+        # walk up the tree: each shallower line above is an ancestor
+        depth = len(lines[at[0]]) - len(lines[at[0]].lstrip(" :+-"))
+        for line in reversed(lines[: at[0]]):
+            d = len(line) - len(line.lstrip(" :+-"))
+            if d < depth:
+                assert "Exchange" not in line, executed
+                depth = d

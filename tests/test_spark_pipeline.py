@@ -472,7 +472,7 @@ def test_span_cost_reads_payload_headers(spark):
     import numpy as np
 
     from ocr_spark.pdfio import encode_pdf
-    from ocr_spark.spark.pipeline import _span_cost_col
+    from ocr_spark.spark.pipeline import SPAN_COST_SQL
 
     pdf = encode_pdf([np.full((190, 220), 255, np.uint8)] * 3)
     payloads = [_png_head(1500, 1520), pdf, b"not-a-png", b"%PDF-1.4 x", None,
@@ -480,7 +480,7 @@ def test_span_cost_reads_payload_headers(spark):
     df = _span_rows_df(
         spark, [("d", "media", f"m{i}", i, p) for i, p in enumerate(payloads)]
     )
-    got = [r.c for r in df.orderBy("offset").select(_span_cost_col().alias("c")).collect()]
+    got = [r.c for r in df.orderBy("offset").selectExpr(f"{SPAN_COST_SQL} AS c").collect()]
     want = [1500 * 1520, 3 * 220 * 190 * (300 / 72) ** 2, 0, 0, 0, 0]
     assert got == pytest.approx(want)
 
@@ -493,7 +493,7 @@ def test_deal_by_cost_balances_partitions(spark, n):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from ocr_spark.spark.pipeline import _deal_by_cost, _span_cost_col
+    from ocr_spark.spark.pipeline import SPAN_COST_SQL, _deal_by_cost
 
     rng = np.random.default_rng(n)
     rows = [
@@ -503,7 +503,7 @@ def test_deal_by_cost_balances_partitions(spark, n):
     ] + [(f"d{i}", "media", f"x{i}", 100 + i, b"junk") for i in range(5)]
     src = _span_rows_df(spark, rows)
     placed = _deal_by_cost(src.coalesce(1), n).select(
-        "doc_id", "offset", _span_cost_col().alias("c"),
+        "doc_id", "offset", F.expr(SPAN_COST_SQL).alias("c"),
         F.spark_partition_id().alias("p"),
     ).collect()
     assert sorted((r.doc_id, r.offset) for r in placed) == sorted(
@@ -549,3 +549,104 @@ def test_skew_monster_heavy_pages_spread(spark):
     assert len(placed) == 30
     heavy_parts = [r.p for r in placed if r.offset % 5 == 0]
     assert len(heavy_parts) == 6 and set(heavy_parts) == set(range(n))
+
+
+@pytest.mark.parametrize("n", [3, 4])
+def test_deal_slot_is_snake_order(spark, n):
+    """Inside each sorted input partition the k-th heaviest span gets
+    slot snake(k) + partition id (mod n), where snake deals 0..n-1,
+    n-1..0, ...: also for a partial last lap and a non-zero partition
+    id (the rank is one counter per row, not one per CASE branch)."""
+    from ocr_spark.spark.pipeline import _deal_by_cost
+
+    def snake(k: int) -> int:
+        lap, pos = divmod(k, n)
+        return pos if lap % 2 == 0 else n - 1 - pos
+
+    sizes = [n + 2, 2 * n + 1]  # both end in a partial lap
+    sc = spark.sparkContext
+    parts = [
+        # strictly decreasing cost, so the sorted rank is k
+        [(f"p{p}", "media", f"m{p}_{k}", k, _png_head(1000 - 10 * k, 50))
+         for k in range(size)]
+        for p, size in enumerate(sizes)
+    ]
+    src = spark.createDataFrame(
+        sc.parallelize(parts[0], 1).union(sc.parallelize(parts[1], 1)),
+        "doc_id string, kind string, media_ref string, offset int, png binary",
+    )
+    assert src.rdd.getNumPartitions() == 2
+    got = {
+        (r.doc_id, r.offset): r.span_slot
+        for r in _deal_by_cost(src, n).select("doc_id", "offset", "span_slot").collect()
+    }
+    for p, size in enumerate(sizes):
+        assert [got[(f"p{p}", k)] for k in range(size)] == [
+            (snake(k) + p) % n for k in range(size)
+        ]
+
+
+def _assert_manifest_matches_output(spark, out_dir):
+    """Every committed manifest row's counts equal the counts re-read
+    from that bucket's parquet (zero for a bucket with no directory)."""
+    from ocr_spark.spark.checkpoint import completed_buckets
+
+    done = completed_buckets(out_dir)
+    assert done
+    for b, row in done.items():
+        path = os.path.join(out_dir, f"bucket={b}")
+        want = (0, 0, 0)
+        if os.path.isdir(path):
+            r = spark.read.parquet(path).selectExpr(
+                "count(*) AS n", "sum(metrics.n_spans) AS s",
+                "sum(metrics.skipped) AS k",
+            ).first()
+            want = (r.n, r.s or 0, r.k or 0)
+        assert (row["n_docs"], row["n_spans"], row["n_skipped"]) == want, (b, row)
+    return done
+
+
+def test_manifest_counts_equal_reread_single_bucket_groups(spark, corpus_dir, tmp_path):
+    from ocr_spark.spark.checkpoint import run_extraction_job
+
+    docs, media = read_corpus(spark, corpus_dir)
+    out_dir = str(tmp_path / "out")
+    run_extraction_job(
+        spark, docs, media, out_dir, run_id="m1", n_buckets=2, span_partitions=4,
+    )
+    done = _assert_manifest_matches_output(spark, out_dir)
+    assert sum(r["n_docs"] for r in done.values()) == docs.count()
+    assert sum(r["n_skipped"] for r in done.values()) > 0  # planted skips
+
+
+def test_manifest_counts_equal_reread_grouped_with_empty_bucket(
+    spark, corpus_dir, tmp_path
+):
+    from ocr_spark.spark.checkpoint import run_extraction_job
+
+    docs, media = read_corpus(spark, corpus_dir)
+    docs = docs.where("pmod(bucket, 3) != 2")  # runtime bucket 2 is empty
+    out_dir = str(tmp_path / "out")
+    run_extraction_job(
+        spark, docs, media, out_dir, run_id="m3", n_buckets=3,
+        buckets_per_job=3, span_partitions=4,
+    )
+    done = _assert_manifest_matches_output(spark, out_dir)
+    assert sorted(done) == [0, 1, 2]
+    assert done[2]["n_docs"] == 0 and done[0]["n_docs"] > 0
+    assert sum(r["n_docs"] for r in done.values()) == docs.count()
+
+
+def test_manifest_counts_equal_reread_hash_fallback(spark, corpus_dir, tmp_path):
+    from ocr_spark.spark.checkpoint import run_extraction_job
+
+    docs, media = read_corpus(spark, corpus_dir)
+    docs, media = docs.drop("bucket"), media.drop("bucket")
+    out_dir = str(tmp_path / "out")
+    run_extraction_job(
+        spark, docs, media, out_dir, run_id="mh", n_buckets=4,
+        buckets_per_job=2, span_partitions=4,
+    )
+    done = _assert_manifest_matches_output(spark, out_dir)
+    assert {r["filter"] for r in done.values()} == {"hash"}
+    assert sum(r["n_docs"] for r in done.values()) == docs.count()

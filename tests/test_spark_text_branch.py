@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ocr_spark.spark.text_branch import main_content_col
+from ocr_spark.spark.text_branch import main_content_sql
 from ocr_spark.textproc.boilerplate import extract_main_content
 
 
@@ -40,13 +40,11 @@ def _cases() -> list[str]:
 
 
 def test_catalyst_matches_python(spark):
-    from pyspark.sql import functions as F
-
     cases = _cases()
     df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)], "id int, text string")
     got = {
         r["id"]: r["out"]
-        for r in df.select("id", main_content_col(F.col("text")).alias("out")).collect()
+        for r in df.selectExpr("id", f"{main_content_sql('text')} AS out").collect()
     }
     for i, c in enumerate(cases):
         assert got[i] == extract_main_content(c), repr(c)
@@ -58,11 +56,6 @@ def test_text_branch_matches_python_on_unicode_whitespace(spark):
     than in the Python classifier and the branch DROPS a block the
     oracle keeps. Covers NBSP, ideographic space, NEL, and the \\x1c-1f
     separator controls Python treats as whitespace."""
-    from pyspark.sql import functions as F
-
-    from ocr_spark.spark.text_branch import main_content_col
-    from ocr_spark.textproc.boilerplate import extract_main_content
-
     cases = [
         "this is\u00a0a test ok yes",  # NBSP inside a would-be B3 block
         "the\u3000and of to in it is was for on end.",
@@ -74,6 +67,20 @@ def test_text_branch_matches_python_on_unicode_whitespace(spark):
         "short\u00a0nbsp",
     ]
     df = spark.createDataFrame([(c,) for c in cases], "text string")
-    got = [r[0] for r in df.select(main_content_col(F.col("text"))).collect()]
+    got = [r[0] for r in df.selectExpr(main_content_sql("text")).collect()]
     for c, g in zip(cases, got):
         assert g == extract_main_content(c), repr(c)
+
+
+def test_sql_str_round_trips_through_the_parser(spark):
+    """sql_str literals reach the JVM verbatim: quotes, backslashes
+    (regex escapes included), escape-looking sequences, raw newlines and
+    non-ASCII characters."""
+    from ocr_spark.spark.text_branch import sql_str
+
+    cases = ["it's", "a\\sb", "\\n", "\\u0041", "new\nline", "\\'", "x\\",
+             "© 　", "(?U)^(?:\\s|[\\x1c-\\x1f])*$", ""]
+    row = spark.range(1).selectExpr(
+        *[f"{sql_str(c)} AS c{i}" for i, c in enumerate(cases)]
+    ).first()
+    assert list(row) == cases
