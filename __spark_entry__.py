@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 _DEFAULT_DOCS = 30
 
 
-def _extract_query(mode: str):
+def _extract_query():
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ocr_spark.functions.golden import GOLDEN_DOCS, GOLDEN_SKEW
         from ocr_spark.spark.corpus import fixture_corpus_dir, read_corpus
@@ -31,7 +31,7 @@ def _extract_query(mode: str):
         # precomputed for exactly this corpus (functions/golden.py)
         corpus = fixture_corpus_dir(GOLDEN_DOCS, GOLDEN_SKEW)
         docs, media = read_corpus(spark, corpus)
-        out = run_pipeline(spark, docs, media, mode=mode, run_id=f"q-{mode}")
+        out = run_pipeline(spark, docs, media, run_id="q-fused")
         # flatten to scalar columns (driver-hashable shape); the
         # explode_outer null row (empty-spans doc) maps to non-null
         # sentinels — nullable int columns go float64 in pandas-style
@@ -75,7 +75,7 @@ def entry(spark: SparkSession) -> DataFrame:
     corpus = fixture_corpus_dir(_DEFAULT_DOCS)
     fix_docs, media = read_corpus(spark, corpus)
     docs = text_docs.unionByName(fix_docs.select("doc_id", "spans"))
-    out = run_pipeline(spark, docs, media, mode="fused", run_id="entry")
+    out = run_pipeline(spark, docs, media, run_id="entry")
     return out.select(
         "doc_id",
         F.col("metrics.n_spans").alias("n_spans"),
@@ -95,9 +95,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         name: spec.fn for name, spec in all_queries().items()
     }
-    out["extract_pipeline_fused"] = _extract_query("fused")
-    out["extract_pipeline_staged"] = _extract_query("staged")
-    out["extract_pipeline_hybrid"] = _extract_query("hybrid")
+    out["extract_pipeline_fused"] = _extract_query()
     return out
 
 
@@ -120,9 +118,7 @@ def oracle_sql() -> dict[str, str]:
         for name, spec in all_queries().items()
         if spec.sql
     }
-    # all three physical modes are oracle-equal by construction — each is
-    # checked against the same single-process golden spans table
+    # the extraction pipeline is checked against the single-process
+    # golden spans table
     out["extract_pipeline_fused"] = SQL_EXTRACT_SPANS
-    out["extract_pipeline_staged"] = SQL_EXTRACT_SPANS
-    out["extract_pipeline_hybrid"] = SQL_EXTRACT_SPANS
     return out

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32).
+"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 test data) on local[$SPARK_GRAFT_CPUS] (default: nproc).
 
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
@@ -34,12 +34,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 BENCH_DOCS = {"sf0.001": 60, "sf0.01": 120, "sf0.1": 240}
 # scaling runs need enough work to amortize the heaviest single span
 # (a 2 MP grid page costs ~100x a clean page). After the kernel strip
-# fixes the heaviest span is ~3 s, so fused no longer hits a critical-
-# path bound at this corpus size and measures the cleanest efficiency;
-# hybrid/staged remain the answer for giant-single-span docs (500-page
-# pdfs) and measure >=0.9 as well (BENCH/BASELINE.md).
+# fixes the heaviest span is ~3 s, so the run no longer hits a critical-
+# path bound at this corpus size and measures the cleanest efficiency.
 SCALE_DOCS = {"sf0.001": 120, "sf0.01": 240, "sf0.1": 4800}
-SCALE_MODE = "fused"
 WARMUP_DOCS = 16
 
 
@@ -65,13 +62,13 @@ def _extraction_stats(corpus_dir: str) -> tuple[int, int]:
     return tbl.num_rows, spans
 
 
-def _run_extraction(spark, corpus_dir: str, mode: str) -> float:
+def _run_extraction(spark, corpus_dir: str) -> float:
     from ocr_spark.spark.corpus import read_corpus
     from ocr_spark.spark.pipeline import run_pipeline
 
     docs, media = read_corpus(spark, corpus_dir)
     t0 = time.time()
-    run_pipeline(spark, docs, media, mode=mode, run_id=f"bench-{mode}").count()
+    run_pipeline(spark, docs, media, run_id="bench").count()
     return time.time() - t0
 
 
@@ -83,7 +80,7 @@ def _warmup(spark, sf_dir: str | None = None) -> None:
     JVM heap reaches its working size before anything is timed."""
     from ocr_spark.functions import all_queries
 
-    _run_extraction(spark, _corpus(WARMUP_DOCS, skew=8), "fused")
+    _run_extraction(spark, _corpus(WARMUP_DOCS, skew=8))
     specs = all_queries()
     warm_sf = sf_dir or "/root/testdata/sf0.001"
     for name in ("dedup_minhash_lsh", "dedup_simhash", "events_rollup"):
@@ -197,24 +194,10 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
     docs_n, spans_n = _extraction_stats(corpus)
 
     queries: dict[str, float] = {}
-    # extraction modes run INTERLEAVED round-robin with per-mode minima
-    # (VERDICT r2 #3): sequential per-mode blocks let whichever mode runs
-    # first absorb residual page-fault/contention tax, which once
-    # recorded hybrid (a superset plan) as faster than fused — an
-    # ordering artifact, not a plan property. Round-robin spreads the tax
-    # across modes; min-of-3 recovers each mode's steady state.
-    modes = ("fused", "hybrid", "staged")
-    runs: dict[str, list[float]] = {m: [] for m in modes}
-    for _ in range(3):
-        for m in modes:
-            t0 = time.time()
-            _run_extraction(spark, corpus, m)
-            runs[m].append(round(time.time() - t0, 3))
-    best = {m: min(ts) for m, ts in runs.items()}
-    t_fused, t_hy = best["fused"], best["hybrid"]
-    queries["extract_fused"] = round(best["fused"], 3)
-    queries["extract_hybrid"] = round(best["hybrid"], 3)
-    queries["extract_staged"] = round(best["staged"], 3)
+    # min-of-3 recovers the steady state past residual page-fault tax
+    runs = [round(_run_extraction(spark, corpus), 3) for _ in range(3)]
+    t_fused = min(runs)
+    queries["extract_fused"] = t_fused
 
     # measure EVERY registered query: a curated list silently dropped
     # newly added operators from the artifact once; deriving from the
@@ -258,7 +241,7 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
     from ocr_spark.spark.pipeline import run_pipeline
 
     docs_df, media_df = read_corpus(spark, corpus)
-    ext = run_pipeline(spark, docs_df, media_df, mode="fused", run_id="bench-metrics")
+    ext = run_pipeline(spark, docs_df, media_df, run_id="bench-metrics")
     # confidence over docs that extracted at least one media span —
     # all-skipped docs report 0.0 by construction and would skew the stat
     has_media = F.col("metrics.n_media") > F.col("metrics.skipped")
@@ -294,20 +277,10 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
         "extraction": {
             "docs": docs_n,
             "spans": spans_n,
-            # headline throughput is the FUSED mode's (a single named
-            # mode, not best-of); per-mode figures alongside
             "docs_per_sec": round(docs_n / t_fused, 3),
             "spans_per_sec": round(spans_n / t_fused, 3),
-            "docs_per_sec_by_mode": {
-                "fused": round(docs_n / t_fused, 3),
-                "hybrid": round(docs_n / t_hy, 3),
-                "staged": round(docs_n / queries["extract_staged"], 3),
-            },
-            # all interleaved iterations (round-robin order), so the
-            # recorded artifact itself shows the run distribution — a
-            # mode ranking is a plan property only if it holds across
-            # these, not just in the minima (VERDICT r2 #3)
-            "mode_runs_interleaved": runs,
+            # every timed run, so the artifact shows the distribution
+            "runs": runs,
             "skip_count": int(agg["skips"] or 0),
             "avg_ocr_confidence": round(float(agg["avg_conf"] or 0.0), 4),
             "min_ocr_confidence": round(float(agg["min_conf"] or 0.0), 4),
@@ -618,7 +591,7 @@ def _scale_worker(n: int, corpus: str, conn) -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     _warmup(spark)
-    _run_extraction(spark, corpus, SCALE_MODE)  # corpus-scale warm pass
+    _run_extraction(spark, corpus)  # corpus-scale warm pass
     pool = _cal_pool(n)
     conn.send("ready")
     while True:
@@ -627,7 +600,7 @@ def _scale_worker(n: int, corpus: str, conn) -> None:
         rate_before = _pool_rate(pool, n)
         cpu0 = _tree_cpu_seconds()
         b0, s0 = _guest_busy_steal()
-        wall = _run_extraction(spark, corpus, SCALE_MODE)
+        wall = _run_extraction(spark, corpus)
         b1, s1 = _guest_busy_steal()
         util = (_tree_cpu_seconds() - cpu0) / (wall * n)
         steal_f = (b1 - b0) / max(1, (b1 - b0) + (s1 - s0))
@@ -730,7 +703,6 @@ def run_scaling(sf_dir: str, cpus: int, reps: int = 5) -> dict:
     # its raw and vs-machine figures are the quiet-window spot check
     quiet = min(per_rep, key=lambda r: r["calib_drift"])
     return {
-        "mode": SCALE_MODE,
         "cores_small": n_small,
         "cores_big": cpus,
         "docs": docs_n,
@@ -764,7 +736,7 @@ def run_scaling(sf_dir: str, cpus: int, reps: int = 5) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if "--scaling" in sys.argv:
         out = run_scaling(sf_dir, cpus)
         out["metric"] = "extraction scaling N->4N"

@@ -1,5 +1,5 @@
 """Driver-layer microbenchmark: milliseconds and py4j round trips to build
-the extraction plan (`pipeline.run_pipeline`, no action) per media mode.
+the extraction plan (`pipeline.run_pipeline`, no action).
 
 Run it from the repository root (it is not part of the tests/ gate):
 
@@ -58,12 +58,11 @@ def _round_trips(spark, build) -> int:
     return n
 
 
-@pytest.mark.parametrize("mode", ["fused", "staged", "hybrid"])
-def test_plan_build(benchmark, spark, tables, mode):
+def test_plan_build(benchmark, spark, tables):
     docs, media = tables
 
     def build():
-        run_pipeline(spark, docs, media, mode=mode, run_id="bench", span_partitions=4)
+        run_pipeline(spark, docs, media, run_id="bench", span_partitions=4)
 
     benchmark.extra_info["py4j_round_trips"] = _round_trips(spark, build)
     benchmark.pedantic(build, rounds=7, warmup_rounds=1)

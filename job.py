@@ -6,7 +6,6 @@
         --input <documents parquet/iceberg path> \
         --media <media parquet/iceberg path> \
         --out <output dir> --run-id r1 [--buckets 64]
-        [--mode fused|staged|hybrid]
         [--profile default|got|deepseek|qari] [--resume-only]
 
 Resumable: re-running with the same --out skips buckets whose manifest
@@ -45,9 +44,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--run-id", required=True)
     p.add_argument("--buckets", type=int, default=256)
     p.add_argument(
-        "--mode", choices=["fused", "staged", "hybrid"], default="fused"
-    )
-    p.add_argument(
         "--profile", choices=["default", "got", "deepseek", "qari"],
         default="default",
     )
@@ -60,12 +56,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     p.add_argument("--span-partitions", type=int, default=None)
     p.add_argument("--doc-partitions", type=int, default=None)
-    p.add_argument(
-        "--chunk-codec", choices=["raw", "png"], default="raw",
-        help="staged-mode chunk wire format: raw uint8 under lz4 "
-        "(default; best single-node) or png (~5-10x smaller — use on "
-        "clusters where the chunk shuffle crosses the network)",
-    )
     p.add_argument(
         "--fidelity", choices=["fast", "cv2"], default="fast",
         help="preprocess kernel fidelity: fast numpy stand-ins (default)"
@@ -99,12 +89,10 @@ def main(argv: list[str] | None = None) -> int:
         run_id=args.run_id,
         n_buckets=args.buckets,
         profile=args.profile,
-        mode=args.mode,
         max_buckets=args.max_buckets,
         buckets_per_job=args.buckets_per_job,
         span_partitions=args.span_partitions,
         doc_partitions=args.doc_partitions,
-        chunk_codec=args.chunk_codec,
         fidelity=args.fidelity,
     )
     print(json.dumps(report))

@@ -20,7 +20,9 @@ between the two (the BASELINE.json input_hint invariant).
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field, replace
+from functools import partial
 
 import numpy as np
 
@@ -104,40 +106,70 @@ def process_media_bytes(png: bytes | None, profile: EngineProfile) -> MediaResul
     return process_image(img, profile)
 
 
-def process_pdf_bytes(data: bytes | None, profile: EngineProfile) -> MediaResult:
-    """Per-page fan-out + page-marker fan-in (tasks.py:182-213)."""
+PDF_DPI = 300  # pdf pages render at zoom = dpi/72 (pdf_service.py:106-109)
+
+
+def open_pdf(data: bytes | None) -> Sequence[np.ndarray] | None:
+    """The pages of a pdf payload, or None when the container does not
+    parse: a counted skip. SPDF pages render as they are read, so the
+    container checks (header walk, metadata, every page's zoomed size)
+    run here and no page is decoded yet."""
     if not data or not is_pdf(data):
-        return MediaResult(skipped=True)
+        return None
     try:
-        pages = render_pages(data, dpi=300)
+        return render_pages(data, dpi=PDF_DPI)
+    except Exception:  # noqa: BLE001 — any parse failure = skip
+        return None
+
+
+def process_pdf_page(
+    read_page: Callable[[], np.ndarray], profile: EngineProfile
+) -> MediaResult:
+    """One pdf page: a page that fails to render is a skip (of the whole
+    span, see fan_in_pages), while an error inside process_image
+    propagates."""
+    try:
+        page = read_page()
     except Exception:  # noqa: BLE001
         return MediaResult(skipped=True)
+    return process_image(page, profile)
+
+
+def fan_in_pages(pages: list[MediaResult]) -> MediaResult:
+    """Page-marker fan-in (tasks.py:182-213): page texts under markers,
+    mean confidence, the union of steps and split methods."""
     n = len(pages)
-    parts: list[str] = []
+    # a plain left-to-right sum (Python's sum() compensates), the order
+    # the Catalyst fan-in (pipeline._FAN_IN) adds in
     total_conf = 0.0
-    steps: set[str] = set()
-    methods: set[str] = set()
-    # pages render as they are read, so one zoomed page is alive at a
-    # time; a page that fails to render skips the whole span, while an
-    # error inside process_image still propagates
-    for i in range(1, n + 1):
-        try:
-            page = pages[i - 1]
-        except Exception:  # noqa: BLE001
-            return MediaResult(skipped=True)
-        res = process_image(page, profile)
-        del page
-        parts.append(f"{PAGE_MARKER.format(i=i, n=n)}\n{res.text}")
-        total_conf += res.confidence
-        steps.update(res.steps_applied)
-        methods.add(res.split_method)
+    for p in pages:
+        total_conf += p.confidence
+    methods = sorted({p.split_method for p in pages})
     return MediaResult(
-        text="\n\n".join(parts),
+        text="\n\n".join(
+            f"{PAGE_MARKER.format(i=i, n=n)}\n{p.text}" for i, p in enumerate(pages, 1)
+        ),
         confidence=total_conf / n if n else 0.0,
-        steps_applied=sorted(steps),
-        split_method=",".join(sorted(methods)) if methods else "none",
+        steps_applied=sorted({s for p in pages for s in p.steps_applied}),
+        split_method=",".join(methods) if methods else "none",
         n_chunks=n,
     )
+
+
+def process_pdf_bytes(data: bytes | None, profile: EngineProfile) -> MediaResult:
+    """Per-page fan-out + page-marker fan-in (tasks.py:182-213). One
+    zoomed page is alive at a time, and the first page that fails to
+    render ends the span as a skip."""
+    pages = open_pdf(data)
+    if pages is None:
+        return MediaResult(skipped=True)
+    results: list[MediaResult] = []
+    for i in range(len(pages)):
+        res = process_pdf_page(partial(pages.__getitem__, i), profile)
+        if res.skipped:
+            return res
+        results.append(res)
+    return fan_in_pages(results)
 
 
 def process_document(

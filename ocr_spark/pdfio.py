@@ -553,26 +553,34 @@ class _SpdfPages(Sequence):
         for blob in blobs:
             if blob[12:16] == b"IHDR":
                 w, h = struct.unpack(">II", blob[16:24])
-                self._check_zoom(w, h, _CHANNELS.get(blob[25], 1))
+                _zoomed_size(w, h, _CHANNELS.get(blob[25], 1), dpi)
 
     def __len__(self) -> int:
         return len(self._blobs)
 
     def __getitem__(self, i: int) -> np.ndarray:
-        img = decode_png(self._blobs[i])
-        if self._dpi != BASE_DPI:
-            h, w = img.shape[:2]
-            zw, zh = self._check_zoom(w, h, img.shape[2] if img.ndim == 3 else 1)
-            img = K.resize_bilinear(img, zw, zh)
-        return img
+        return render_spdf_page(self._blobs[i], self._dpi)
 
-    def _check_zoom(self, w: int, h: int, channels: int) -> tuple[int, int]:
-        # decode_png bounds the stored page; the zoom multiplies it
-        zoom = self._dpi / BASE_DPI
-        zw, zh = int(w * zoom), int(h * zoom)
-        if zw * zh * channels > _MAX_RASTER_PX:
-            raise ValueError(
-                f"page raster {zw}x{zh} at dpi={self._dpi} exceeds the "
-                f"{_MAX_RASTER_PX / 1e6:.0f} MP bound"
-            )
-        return zw, zh
+
+def render_spdf_page(blob: bytes, dpi: int = 300) -> np.ndarray:
+    """One SPDF page (a stored PNG, as the container holds it) decoded
+    and zoomed to `dpi`; raises on a page that does not decode or whose
+    zoomed raster exceeds the bound."""
+    img = decode_png(blob)
+    if dpi != BASE_DPI:
+        h, w = img.shape[:2]
+        zw, zh = _zoomed_size(w, h, img.shape[2] if img.ndim == 3 else 1, dpi)
+        img = K.resize_bilinear(img, zw, zh)
+    return img
+
+
+def _zoomed_size(w: int, h: int, channels: int, dpi: int) -> tuple[int, int]:
+    # decode_png bounds the stored page; the zoom multiplies it
+    zoom = dpi / BASE_DPI
+    zw, zh = int(w * zoom), int(h * zoom)
+    if zw * zh * channels > _MAX_RASTER_PX:
+        raise ValueError(
+            f"page raster {zw}x{zh} at dpi={dpi} exceeds the "
+            f"{_MAX_RASTER_PX / 1e6:.0f} MP bound"
+        )
+    return zw, zh

@@ -207,7 +207,12 @@ def run_extraction_job(
     N=1 loop; a kill between groups loses at most one group's work, and
     each bucket still commits its own manifest row. At --buckets 256
     this turns 256 sequential jobs (whose fixed scheduling cost
-    dominates once buckets are small) into 256/N."""
+    dominates once buckets are small) into 256/N.
+
+    `mode` must be "fused", the one media path; it remains so existing
+    callers that name it keep working."""
+    if mode != "fused":
+        raise ValueError(f"unknown mode {mode!r}: the one media path is 'fused'")
     done = completed_buckets(out_dir)
     filter_method = "bucket-column" if "bucket" in docs_df.columns else "hash"
     # a committed manifest row only covers THIS invocation's doc subsets
@@ -226,17 +231,12 @@ def run_extraction_job(
                 f"{row.get('filter')}, this input implies {filter_method}"
             )
         fid = pipeline_kw.get("fidelity") or "fast"
-        if (
-            row.get("mode", mode) != mode
-            or row.get("profile", profile) != profile
-            or row.get("fidelity", fid) != fid
-        ):
+        if row.get("profile", profile) != profile or row.get("fidelity", fid) != fid:
             import warnings
 
             warnings.warn(
-                f"bucket {b} committed with mode={row.get('mode')}/"
-                f"profile={row.get('profile')}/fidelity={row.get('fidelity')}; "
-                f"resuming with {mode}/{profile}/{fid}",
+                f"bucket {b} committed with profile={row.get('profile')}/"
+                f"fidelity={row.get('fidelity')}; resuming with {profile}/{fid}",
                 stacklevel=2,
             )
     media_has_bucket = "bucket" in media_df.columns
@@ -328,7 +328,6 @@ def run_extraction_job(
             docs_df,
             media_g,
             profile=profile,
-            mode=mode,
             run_id=run_id,
             attempt=max(attempts.values()),
             docs_filter=group_filter(docs_df, n_buckets, group),
@@ -390,7 +389,6 @@ def run_extraction_job(
                     "elapsed_s": elapsed,
                     "buckets_per_job": len(group),
                     "profile": profile,
-                    "mode": mode,
                     "fidelity": pipeline_kw.get("fidelity") or "fast",
                     "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 },

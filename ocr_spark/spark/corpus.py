@@ -66,7 +66,6 @@ MEDIA_ARROW = pa.schema(
         ("width", pa.int32()),
         ("height", pa.int32()),
         ("bucket", pa.int32()),
-        ("heavy", pa.int32()),
     ]
 )
 
@@ -112,12 +111,6 @@ def write_corpus_parquet(
         pq.write_table(docs_tbl, docs_path, row_group_size=row_group_docs)
         pq.write_table(media_tbl, media_path, row_group_size=256)
         return docs_path, media_path
-
-    # ingest-time routing metadata: the hybrid extraction mode partitions
-    # its media scan on `heavy` (straggler classification), so each branch
-    # reads ONLY its own files — a pure function of the payload, computed
-    # once at write time (pipeline.media_is_heavy is the single source)
-    from ocr_spark.spark.pipeline import media_is_heavy
 
     doc_bucket = {d["doc_id"]: bucket_of(d["doc_id"], layout_buckets) for d in docs}
     # media inherits the owning doc's bucket so per-bucket runs prune
@@ -171,14 +164,10 @@ def write_corpus_parquet(
     # media rows carry PNGs; small row groups keep Spark input splits balanced
     _write_partitioned(
         [
-            {
-                **m,
-                "bucket": ref_bucket.get(m["media_ref"], 0),
-                "heavy": int(media_is_heavy(m["png"], m["width"], m["height"])),
-            }
+            {**m, "bucket": ref_bucket.get(m["media_ref"], 0)}
             for m in media
         ],
-        MEDIA_ARROW, media_path, ["bucket", "heavy"], 256,
+        MEDIA_ARROW, media_path, ["bucket"], 256,
     )
     for root in (docs_path, media_path):
         with open(os.path.join(root, LAYOUT_META), "w") as f:

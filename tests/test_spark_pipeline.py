@@ -1,7 +1,7 @@
 """End-to-end distributed-pipeline tests: span-sequence equality between
-the Spark plan (fused and staged physical modes) and the single-process
-oracle (the BASELINE.json input_hint invariant), plus metrics parity and
-checkpoint/resume semantics."""
+the Spark plan and the single-process oracle (the BASELINE.json
+input_hint invariant), plus metrics parity and checkpoint/resume
+semantics."""
 
 from __future__ import annotations
 
@@ -35,12 +35,10 @@ def assert_equals_oracle(rows_by_doc, oracle_extracted):
         ), doc_id
 
 
-@pytest.mark.parametrize("mode", ["fused", "staged", "hybrid"])
+@pytest.mark.parametrize("mode", ["fused"])
 def test_pipeline_matches_oracle(spark, corpus_dir, oracle_extracted, mode):
     docs, media = read_corpus(spark, corpus_dir)
-    out = run_pipeline(
-        spark, docs, media, mode=mode, run_id=f"t-{mode}", span_partitions=16,
-    )
+    out = run_pipeline(spark, docs, media, run_id=f"t-{mode}", span_partitions=16)
     rows = {r["doc_id"]: r for r in out.collect()}
     assert_equals_oracle(rows, oracle_extracted)
     # lineage is attached and run-scoped
@@ -150,13 +148,12 @@ def test_empty_documents_input(spark, corpus_dir):
     """Zero input docs -> zero output rows, no exceptions."""
     docs, media = read_corpus(spark, corpus_dir)
     out = run_pipeline(
-        spark, docs.filter("doc_id = 'nope'"), media, mode="fused",
-        span_partitions=4,
+        spark, docs.filter("doc_id = 'nope'"), media, span_partitions=4
     )
     assert out.count() == 0
 
 
-@pytest.mark.parametrize("mode", ["fused", "staged"])
+@pytest.mark.parametrize("mode", ["fused"])
 def test_profile_qari_rtl(spark, oracle_extracted, mode):
     """The RTL/qari profile flows through both sides identically."""
     from ocr_spark.core import process_document
@@ -189,7 +186,8 @@ def test_profile_qari_rtl(spark, oracle_extracted, mode):
         schema=MEDIA_SCHEMA,
     )
     out = run_pipeline(
-        spark, docs_df, media_df, profile="qari", mode=mode, span_partitions=8
+        spark, docs_df, media_df, profile="qari", run_id=f"qari-{mode}",
+        span_partitions=8,
     )
     rows = {r["doc_id"]: r for r in out.collect()}
     for doc_id, (ospans, _om) in oracle.items():
@@ -203,14 +201,27 @@ def test_oversize_payload_cap_skips(spark, corpus_dir):
 
     docs, media = read_corpus(spark, corpus_dir)
     out = run_pipeline(
-        spark, docs, media, mode="fused", span_partitions=8,
-        max_payload_bytes=10,
+        spark, docs, media, span_partitions=8, max_payload_bytes=10,
     )
     r = out.agg(
         F.sum("metrics.n_media").alias("m"),
         F.sum("metrics.skipped").alias("s"),
     ).collect()[0]
     assert r["m"] > 0 and r["m"] == r["s"]
+
+
+def test_extraction_job_takes_only_the_fused_mode(spark, corpus_dir, tmp_path):
+    """One media path: `mode` still accepts "fused" (the default every
+    other job test runs) and rejects anything else before any work."""
+    from ocr_spark.spark.checkpoint import run_extraction_job
+
+    docs, media = read_corpus(spark, corpus_dir)
+    for mode in ("staged", "hybrid"):
+        with pytest.raises(ValueError, match="fused"):
+            run_extraction_job(
+                spark, docs, media, str(tmp_path / mode), run_id="m", mode=mode
+            )
+        assert not os.path.exists(tmp_path / mode)
 
 
 def test_resume_rejects_bucket_count_change(spark, corpus_dir, tmp_path):
@@ -329,21 +340,8 @@ def test_mixed_geometry_unknown_layout_degrades_unpruned(
     assert_equals_oracle(rows, oracle_extracted)
 
 
-def test_staged_png_chunk_codec_matches_oracle(spark, corpus_dir, oracle_extracted):
-    """chunk_codec='png' (the network-shuffle wire format) must be
-    byte-equal to the default raw codec — both are lossless."""
-    docs, media = read_corpus(spark, corpus_dir)
-    out = run_pipeline(
-        spark, docs, media, mode="staged", run_id="t-png",
-        span_partitions=16, chunk_codec="png",
-    )
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert_equals_oracle(rows, oracle_extracted)
-
-
-def _write_tiny_corpus(tmp_path, docs_rows, media_rows, heavy_vals=None):
-    """Unpartitioned documents/media parquet; heavy_vals adds a nullable
-    `heavy` column (the user-supplied-table shape, not our ingest's)."""
+def _write_tiny_corpus(tmp_path, docs_rows, media_rows):
+    """Unpartitioned documents/media parquet."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -370,11 +368,6 @@ def _write_tiny_corpus(tmp_path, docs_rows, media_rows, heavy_vals=None):
         ("width", pa.int32()),
         ("height", pa.int32()),
     ]
-    if heavy_vals is not None:
-        media_rows = [
-            {**m, "heavy": h} for m, h in zip(media_rows, heavy_vals)
-        ]
-        media_schema.append(("heavy", pa.int32()))
     pq.write_table(
         pa.Table.from_pylist(media_rows, schema=pa.schema(media_schema)),
         str(d / "media.parquet"),
@@ -405,41 +398,7 @@ def test_duplicate_offsets_match_oracle(spark, tmp_path):
     )
     docs, media = read_corpus(spark, cdir)
     want, _ = process_document("dup1", spans, {"m1": png}.get, "got")
-    for mode in ("fused", "staged"):
-        out = run_pipeline(
-            spark, docs, media, mode=mode, run_id=f"dup-{mode}", span_partitions=4
-        ).collect()
-        got = [
-            {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"],
-             "offset": s["offset"]}
-            for s in out[0]["spans"]
-        ]
-        assert got == want, mode
-
-
-def test_hybrid_null_heavy_routes_fused_not_dropped(spark, tmp_path):
-    """A user-supplied media table with NULL in `heavy`: the span must
-    come out of the hybrid plan (routed fused), not vanish between the
-    heavy==0 / heavy==1 / anti-join branches."""
-    from ocr_spark.core import process_document
-    from ocr_spark.extract.glyph import render_page
-    from ocr_spark.imaging.png import encode_png
-
-    png = encode_png(render_page(["null heavy page"], 400, 200))
-    spans = [{"kind": "media", "text": "", "media_ref": "m1", "offset": 0}]
-    cdir = _write_tiny_corpus(
-        tmp_path,
-        [{"doc_id": "nh1", "spans": spans}],
-        [{"media_ref": "m1", "png": png, "width": 400, "height": 200}],
-        heavy_vals=[None],
-    )
-    docs, media = read_corpus(spark, cdir)
-    assert "heavy" in media.columns
-    out = run_pipeline(
-        spark, docs, media, mode="hybrid", run_id="nullheavy", span_partitions=4
-    ).collect()
-    assert len(out) == 1
-    want, _ = process_document("nh1", spans, {"m1": png}.get, "got")
+    out = run_pipeline(spark, docs, media, run_id="dup", span_partitions=4).collect()
     got = [
         {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"],
          "offset": s["offset"]}
@@ -650,3 +609,137 @@ def test_manifest_counts_equal_reread_hash_fallback(spark, corpus_dir, tmp_path)
     done = _assert_manifest_matches_output(spark, out_dir)
     assert {r["filter"] for r in done.values()} == {"hash"}
     assert sum(r["n_docs"] for r in done.values()) == docs.count()
+
+
+def _run_docs(spark, docs, media, **kw):
+    """run_pipeline over in-memory (doc_id, spans) and (media_ref, payload)
+    rows; returns (rows by doc_id, the oracle's output by doc_id)."""
+    from ocr_spark.core import process_document
+    from ocr_spark.spark import schemas as S
+
+    docs_df = spark.createDataFrame(
+        [(d, [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans])
+         for d, spans in docs],
+        S.DOCUMENTS_SCHEMA,
+    )
+    media_df = spark.createDataFrame(
+        [(ref, payload, 0, 0) for ref, payload in media.items()], S.MEDIA_SCHEMA
+    )
+    out = run_pipeline(spark, docs_df, media_df, span_partitions=4, **kw)
+    rows = {r["doc_id"]: r for r in out.collect()}
+    return rows, {d: process_document(d, spans, media.get) for d, spans in docs}
+
+
+def _spdf_page_at(data: bytes, k: int) -> tuple[int, int]:
+    """(start, length) of page k's PNG inside an SPDF container."""
+    import struct
+
+    pos = 10
+    for _ in range(k):
+        pos += 4 + struct.unpack(">I", data[pos : pos + 4])[0]
+    return pos + 4, struct.unpack(">I", data[pos : pos + 4])[0]
+
+
+def test_pdf_edge_cases_match_oracle(spark):
+    """Page rows fan back in exactly as core.process_pdf_bytes does:
+    twin spans stay two spans; a 0-page SPDF is one non-skipped empty
+    span; an impossible page count, a truncated container, bad metadata
+    JSON and a bad later page are each one counted skip whose pages add
+    no confidence, steps or split method; a %PDF payload stays one row."""
+    import json
+    import struct
+
+    import numpy as np
+
+    from ocr_spark.extract.glyph import render_page
+    from ocr_spark.imaging.png import encode_png
+    from ocr_spark.pdfio import encode_image_pdf, encode_pdf
+
+    pages = [render_page([f"pg{i} abc"], 220, 120, margin=10) for i in range(3)]
+    good = encode_pdf(pages, {"title": "t"})
+    start, ln = _spdf_page_at(good, 2)
+    bad_page = bytearray(good)
+    idat = bad_page.index(b"IDAT", start)
+    bad_page[idat + 4 : start + ln - 12] = b"\xff" * (start + ln - 12 - idat - 4)
+    meta_at = len(good) - len(json.dumps({"title": "t"}, sort_keys=True))
+    bad_meta = good[: meta_at - 4] + struct.pack(">I", 9) + b"{not json"
+    media = {
+        "good": good,
+        "zero": encode_pdf([]),
+        "claims": b"SPDF1\n" + struct.pack(">I", 2**32 - 1) + b"\0" * 40,
+        "trunc": good[: start + ln // 2],
+        "meta": bad_meta,
+        "badpage": bytes(bad_page),
+        "real": encode_image_pdf([np.asarray(p, np.uint8) for p in pages[:2]]),
+        "png": encode_png(render_page(["a media page"], 300, 120)),
+    }
+
+    def span(kind, ref, off):
+        return {"kind": kind, "text": "", "media_ref": ref, "offset": off}
+
+    docs = [
+        ("twins", [span("pdf", "good", 0), span("pdf", "good", 0)]),
+        ("zero", [span("pdf", "zero", 0), span("media", "png", 1)]),
+    ] + [
+        (ref, [span("media", "png", 0), span("pdf", ref, 1)])
+        for ref in ("claims", "trunc", "meta", "badpage", "real")
+    ]
+    rows, oracle = _run_docs(spark, docs, media)
+    assert_equals_oracle(rows, oracle)
+    assert len(rows["twins"]["spans"]) == 2
+    assert rows["twins"]["spans"][0]["text"].count("=== Page") == 3
+    assert rows["zero"]["metrics"]["skipped"] == 0
+    assert "none" in rows["zero"]["metrics"]["split_methods"]
+    for ref in ("claims", "trunc", "meta", "badpage"):
+        m = rows[ref]["metrics"]
+        assert m["skipped"] == 1 and rows[ref]["spans"][1]["text"] == "", ref
+    assert rows["real"]["metrics"]["skipped"] == 0
+
+
+def test_twelve_page_pdf_matches_oracle(spark):
+    from ocr_spark.extract.glyph import render_page
+    from ocr_spark.pdfio import encode_pdf
+
+    data = encode_pdf(
+        [render_page([f"page {i} of twelve"], 220, 190, margin=12) for i in range(12)]
+    )
+    docs = [("p12", [{"kind": "pdf", "text": "", "media_ref": "p", "offset": 0}])]
+    rows, oracle = _run_docs(spark, docs, {"p": data})
+    assert_equals_oracle(rows, oracle)
+    assert rows["p12"]["spans"][0]["text"].count("=== Page") == 12
+
+
+def test_500_page_pdf_pages_spread_over_every_deal_partition(spark):
+    """The deal's output, without running the UDF: a 500-page SPDF's page
+    rows land on every one of the n partitions, each within one page of
+    the ideal count, and its rows carry at most twice the payload (each
+    page its own PNG, plus the container check's whole payload)."""
+    from collections import Counter
+
+    import numpy as np
+
+    from ocr_spark.pdfio import encode_pdf
+    from ocr_spark.spark import schemas as S
+    from ocr_spark.spark.pipeline import _media_input, _media_span_rows
+
+    n = 4
+    data = encode_pdf([np.full((8, 8), 255, np.uint8)] * 500)
+    docs_df = spark.createDataFrame(
+        [("big", [("pdf", "", "big", 0)])], S.DOCUMENTS_SCHEMA
+    )
+    media_df = spark.createDataFrame([("big", data, 0, 0)], S.MEDIA_SCHEMA)
+    placed = (
+        _media_input(_media_span_rows(docs_df), media_df, True, n)
+        .selectExpr("page", "png", "spark_partition_id() AS p")
+        .collect()
+    )
+    pages = [r for r in placed if r.page >= 0]
+    assert sorted(r.page for r in pages) == list(range(500))
+    assert [r.png for r in placed if r.page == -1] == [data]
+    for r in pages:
+        start, ln = _spdf_page_at(data, r.page)
+        assert r.png == data[start : start + ln]
+    counts = Counter(r.p for r in pages)
+    assert set(counts) == set(range(n)), counts
+    assert all(abs(c - 500 / n) <= 1 for c in counts.values()), counts
+    assert sum(len(r.png) for r in placed) <= 2 * len(data)
