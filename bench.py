@@ -99,84 +99,29 @@ def _timed(fn, repeats: int = 2) -> float:
 
 
 def _ann_recall(spark, sf_dir: str) -> dict:
-    """recall@IVF_TOPK of each ANN variant vs the brute-force top-k,
-    plus the trained-IVF recall-cost CURVE over (IVF_K, nprobe) — the
-    evidence behind the chosen defaults (VERDICT r3 #5). The collects
-    are (n_queries * k) id pairs — bounded and tiny."""
+    """recall@IVF_TOPK of each ANN variant vs the brute-force top-k. The
+    collects are (n_queries * k) id pairs — bounded and tiny."""
     from pyspark.sql import functions as F
 
     from ocr_spark.functions import similarity as S
 
-    def pairs_of(df):
-        df = df.filter(F.col("rnk") <= S.IVF_TOPK)
+    def pairs(name):
+        df = S.QUERIES[name].fn(spark, sf_dir).filter(F.col("rnk") <= S.IVF_TOPK)
         return {
             (r["query_id"], r["neighbor_id"])
             for r in df.select("query_id", "neighbor_id").collect()
         }
 
-    def pairs(name):
-        return pairs_of(S.QUERIES[name].fn(spark, sf_dir))
-
     truth = pairs("embedding_cosine_topk")
-    out = {"k": S.IVF_TOPK, "defaults": {"ivf_k": S.IVF_K, "nprobe": S.IVF_NPROBE}}
-    for name in ("embedding_ann_ivf", "embedding_ann_ivf_trained",
-                 "embedding_ann_adc", "embedding_ann_adc_trained",
-                 "embedding_ann_ivfadc", "embedding_ann_ivfadc_rerank",
+    out = {
+        "k": S.IVF_TOPK,
+        "defaults": {
+            "ivf_k": S.IVF_K, "nprobe": S.IVF_NPROBE, "adc_rerank": S.ADC_RERANK
+        },
+    }
+    for name in ("embedding_ann_ivf_trained", "embedding_ann_adc_trained",
                  "embedding_ann_ivfadc_trained_rerank"):
         out[name] = round(len(pairs(name) & truth) / len(truth), 3)
-    curve = []
-    for ck in (16, 32, 64):
-        cents = S.train_centroids(sf_dir, ck)
-        for nprobe in (2, 4, 8):
-            t0 = time.time()
-            p = pairs_of(S._ivf_search(spark, sf_dir, cents, "double", nprobe))
-            curve.append(
-                {
-                    "ivf_k": ck,
-                    "nprobe": nprobe,
-                    "recall": round(len(p & truth) / len(truth), 3),
-                    "sec": round(time.time() - t0, 3),
-                }
-            )
-    out["ivf_curve"] = curve
-    # rerank/nprobe recall-cost curve for the PRODUCTION config (trained
-    # IVFADC + exact rerank, VERDICT r4 #2): every (R, nprobe) combo
-    # runs the full plan end-to-end, so `sec` carries the real cost of
-    # probing more lists AND reranking a deeper shortlist. Defaults
-    # (R=ADC_RERANK, nprobe=IVF_NPROBE) are chosen from this curve with
-    # the stated target: max recall@5 while probing <= 1/4 of the
-    # IVF_K lists; the curve records what the next rung up would buy.
-    cents = S.train_centroids(sf_dir)
-    books = S.train_pq_codebooks(sf_dir)
-    out["defaults"]["adc_rerank"] = S.ADC_RERANK
-    adc_curve = []
-    for nprobe in (4, 8, 16):
-        for rr in (25, 50, 100):
-            t0 = time.time()
-            p = pairs_of(
-                S._rerank_tail(
-                    spark,
-                    sf_dir,
-                    S._ivfadc_scored(
-                        spark,
-                        sf_dir,
-                        centroids=cents,
-                        books=books,
-                        cent_type="double",
-                        nprobe=nprobe,
-                    ),
-                    rerank=rr,
-                )
-            )
-            adc_curve.append(
-                {
-                    "nprobe": nprobe,
-                    "rerank": rr,
-                    "recall": round(len(p & truth) / len(truth), 3),
-                    "sec": round(time.time() - t0, 3),
-                }
-            )
-    out["ivfadc_rerank_curve"] = adc_curve
     return out
 
 
@@ -202,35 +147,13 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
     # measure EVERY registered query: a curated list silently dropped
     # newly added operators from the artifact once; deriving from the
     # registry keeps BENCH coverage == driver coverage by construction
-    headline = sorted(all_queries())
     specs = all_queries()
-    # cache-honest reporting for the CC-label consumers (VERDICT r4 #4):
-    # these three share the session-memoized label frame, so their suite
-    # numbers after the first consumer are cache reads — record a COLD
-    # figure per query (memo cleared before each rep) alongside, and
-    # name the suite entries that are memoized so per-round comparisons
-    # aren't misled
-    label_consumers = (
-        "dedup_clusters",
-        "dedup_representatives",
-        "split_leakage_safe",
-    )
-    from ocr_spark.functions import dedup as _dedup
-
-    label_cold: dict[str, float] = {}
-    for name in headline:
-        if name in label_consumers:
-
-            def cold_run(n=name):
-                _dedup._LABELS_CACHE.clear()
-                specs[n].fn(spark, sf_dir).count()
-
-            label_cold[name] = round(_timed(cold_run), 3)
+    for name in sorted(specs):
         queries[name] = round(
             _timed(lambda: specs[name].fn(spark, sf_dir).count()), 3
         )
 
-    # ANN quality: recall@k of each IVF variant against the brute-force
+    # ANN quality: recall@k of each ANN variant against the brute-force
     # truth (VERDICT r2 #6 — the trained quantizer must show its recall)
     recall = _ann_recall(spark, sf_dir)
 
@@ -252,26 +175,11 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
     ).collect()[0]
     spark.stop()
 
-    skew = _skew_evidence(sf_dir, cpus)
-
-    # cold label-consumer runs are real suite work: count them in the
-    # headline total so the fixpoint cost is visible, not hidden by the
-    # memo (per-query cold/memoized split in label_consumers below)
-    total = round(sum(queries.values()) + sum(label_cold.values()), 3)
     return {
         "metric": "extraction+ops suite wall clock",
-        "value": total,
+        "value": round(sum(queries.values()), 3),
         "unit": "sec",
         "queries": queries,
-        "label_consumers": {
-            "cold": label_cold,
-            "memoized_in_suite": sorted(label_consumers),
-            "note": (
-                "queries[] times for these entries read the session-"
-                "memoized CC label frame; cold[] clears the memo per rep"
-            ),
-        },
-        "skew_join": skew,
         "ann_recall": recall,
         "sf": _sf_of(sf_dir),
         "extraction": {
@@ -286,158 +194,6 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
             "min_ocr_confidence": round(float(agg["min_conf"] or 0.0), 4),
         },
     }
-
-
-HOT_TENTHS = 3  # hot-key fixture: this many tenths of orders -> one custkey
-# row multiplier: the hot reducer must do seconds of real work to rise
-# above this sandbox's ~0.5 s constant per-task overhead (measured:
-# ~0.17 us/row marginal join+agg cost), or the duration ratio hides
-# under the noise floor even while the record ratio shows the skew
-SKEW_AMPLIFY = 400
-
-
-def _task_skew(spark, group: str) -> dict:
-    """max/median completed-task duration of the heaviest stage in job
-    group `group`, read from the Spark UI REST API (the evidence a
-    SparkListener would give, without py4j callback plumbing)."""
-    import urllib.request
-
-    base = (
-        f"{spark.sparkContext.uiWebUrl}/api/v1/applications/"
-        f"{spark.sparkContext.applicationId}"
-    )
-
-    def get(path):
-        with urllib.request.urlopen(base + path) as r:
-            return json.load(r)
-
-    jobs = [j for j in get("/jobs") if j.get("jobGroup") == group]
-    best = None
-    for sid in sorted({s for j in jobs for s in j["stageIds"]}):
-        try:
-            tasks = get(f"/stages/{sid}/0/taskList?length=10000")
-        except Exception:
-            continue
-        durs, recs = [], []
-        for t in tasks:
-            if not t.get("duration"):
-                continue
-            durs.append(t["duration"])
-            recs.append(
-                t.get("taskMetrics", {})
-                .get("shuffleReadMetrics", {})
-                .get("recordsRead", 0)
-            )
-        # the join stage is the one READING the shuffled fact rows —
-        # pick by total shuffle-read records, not wall (the scan stage's
-        # uniform IO tasks would otherwise win and hide the reducer)
-        if len(durs) >= 4 and sum(recs) > 0 and (
-            best is None or sum(recs) > best[3]
-        ):
-            best = (sid, sorted(durs), sorted(recs), sum(recs))
-    if best is None:
-        return {"err": "no shuffle-read stage found"}
-    sid, durs, recs, _tot = best
-    med_d = durs[len(durs) // 2]
-    med_r = recs[len(recs) // 2]
-    return {
-        "stage": sid,
-        "n_tasks": len(durs),
-        "task_ms_max": durs[-1],
-        "task_ms_median": med_d,
-        "task_skew_ratio": round(durs[-1] / max(1, med_d), 2),
-        "shuffle_records_max": recs[-1],
-        "shuffle_records_median": med_r,
-        "shuffle_records_ratio": round(recs[-1] / max(1, med_r), 2),
-    }
-
-
-def _skew_evidence(sf_dir: str, cpus: int) -> dict:
-    """Hot-key fixture evidence for the salted join (VERDICT r4 #7):
-    redirect HOT_TENTHS/10 of (amplified) orders onto ONE custkey, run
-    the plain and salted join shapes (relational.plain/salted_
-    revenue_frames — the exact library plans) over the SAME
-    materialized input, and record each variant's wall plus the
-    max-task/median-task duration ratio of its heaviest stage. Runs in
-    its own session with the UI on (task metrics come from the REST
-    API) and AQE OFF — the point is to isolate the salt REWRITE from
-    AQE's runtime skew split; the library default keeps AQE on as the
-    second line of defense. Results must match exactly: the salt is a
-    pure partitioning rewrite."""
-    from pyspark.sql import functions as F
-
-    from ocr_spark.functions.relational import (
-        SALT_R,
-        load,
-        plain_revenue_frames,
-        salted_revenue_frames,
-    )
-    from ocr_spark.spark.session import get_spark
-
-    spark = get_spark(
-        f"local[{cpus}]",
-        app_name="ocr-spark-skew",
-        shuffle_partitions=cpus,
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    base = (
-        load(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        # spread the checkpoint across cores: the parquet base is one
-        # partition at test scales, which would serialize the explode
-        .repartition(cpus)
-        .localCheckpoint()  # both variants read the identical base
-    )
-    cust = load(spark, sf_dir, "customer")
-    hot_key = cust.agg(F.min("c_custkey")).collect()[0][0]
-    key_type = base.schema["o_custkey"].dataType
-    # amplification stays IN-PLAN (map-side explode before the shuffle,
-    # deterministic) so the fixture never materializes SKEW_AMPLIFY x
-    # the table — only the small base is checkpointed
-    skewed = (
-        base.withColumn(
-            "_rep", F.explode(F.array(*[F.lit(i) for i in range(SKEW_AMPLIFY)]))
-        )
-        .withColumn(
-            "o_custkey",
-            F.when(
-                F.pmod(F.hash("o_orderkey", "_rep"), F.lit(10)) < HOT_TENTHS,
-                F.lit(hot_key).cast(key_type),
-            ).otherwise(F.col("o_custkey")),
-        )
-        .withColumn(  # keep salts distinct across replicas
-            "o_orderkey",
-            F.col("o_orderkey") * SKEW_AMPLIFY + F.col("_rep"),
-        )
-        .drop("_rep")
-    )
-    n_rows = base.count() * SKEW_AMPLIFY
-    sc = spark.sparkContext
-    out: dict = {
-        "hot_key": int(hot_key),
-        "hot_fraction": HOT_TENTHS / 10,
-        "rows": n_rows,
-        "salt_r": SALT_R,
-        "aqe": "off (isolates the salt rewrite)",
-    }
-    results = {}
-    for name, frame in (
-        ("plain", plain_revenue_frames(skewed, cust)),
-        ("salted", salted_revenue_frames(skewed, cust)),
-    ):
-        sc.setJobGroup(name, f"skew-evidence-{name}")
-        t0 = time.time()
-        rows = {tuple(r) for r in frame.collect()}
-        wall = round(time.time() - t0, 3)
-        results[name] = rows
-        out[name] = {"sec": wall, **_task_skew(spark, name)}
-    out["results_equal"] = results["plain"] == results["salted"]
-    spark.stop()
-    return out
 
 
 _CAL_CORPUS = None

@@ -1119,7 +1119,7 @@ def _semdedup_sql(sf_dir: str) -> str:
     """Oracle generated from the SAME trained centroids as the Spark
     plan (QuerySpec callable-SQL form — the quantizer is data-derived);
     the assignment window's `csim DESC, cid` tiebreak is the proven
-    bit-identical twin of ivf_assign_col (see similarity._ann_ivf_sql)."""
+    bit-identical twin of ivf_assign_col (see similarity.sql_ann_ivf_trained)."""
     from ocr_spark.functions.similarity import _cos_sql, train_centroids
 
     rows = ", ".join(

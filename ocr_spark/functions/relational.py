@@ -1604,21 +1604,28 @@ SQL_BRACKETED_REVENUE = _q19_sql()
 SALT_R = 4  # fact-side salt fan-out for the skewed large-large join
 
 
-def salted_revenue_frames(
-    orders: DataFrame, cust: DataFrame, salt_r: int = SALT_R
-) -> DataFrame:
-    """The salted join SHAPE over caller-supplied frames (orders must
-    carry o_custkey/o_orderkey/o_totalprice; cust c_custkey/c_nationkey)
-    — shared by q_salted_join_revenue and bench.py's hot-key skew
-    evidence, which feeds a deliberately skewed orders frame through
-    the identical plan."""
-    cust_rep = cust.select("c_custkey", "c_nationkey").withColumn(
-        "salt", F.explode(F.array(*[F.lit(i) for i in range(salt_r)]))
+def q_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Large-large skew-join pattern: orders x customer on custkey with
+    an explicit salt — the mitigation for a hot key that AQE's skew
+    split cannot always reach (e.g. a single custkey holding 1% of
+    10^12 orders). The dimension side replicates SALT_R ways (explode
+    over a literal range — map-side, no shuffle of its own), the fact
+    side tags a deterministic salt from its PRIMARY key (any hash
+    works: the salt only spreads partitions, the join key still decides
+    matches), and the join runs on (custkey, salt) — the hot key's rows
+    now land in SALT_R different reducers. The salt never reaches the
+    result, so the oracle is the PLAIN join: equality with it proves
+    salting is a pure partitioning rewrite. Downstream, the per-nation
+    rollup partial-aggregates map-side."""
+    cust_rep = (
+        load(spark, sf_dir, "customer")
+        .select("c_custkey", "c_nationkey")
+        .withColumn("salt", F.explode(F.array(*[F.lit(i) for i in range(SALT_R)])))
     )
-    fact = orders.select(
+    fact = load(spark, sf_dir, "orders").select(
         "o_custkey",
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-        F.pmod(F.hash("o_orderkey"), F.lit(salt_r)).alias("salt"),
+        F.pmod(F.hash("o_orderkey"), F.lit(SALT_R)).alias("salt"),
     )
     # the hint encodes the design point: at 10^12 rows the customer
     # dimension does NOT fit a broadcast, so the salt must reach a real
@@ -1634,45 +1641,6 @@ def salted_revenue_frames(
     ).agg(
         F.count("*").cast("long").alias("n_orders"),
         F.sum("cents").cast("long").alias("revenue_cents"),
-    )
-
-
-def plain_revenue_frames(orders: DataFrame, cust: DataFrame) -> DataFrame:
-    """The UNSALTED twin of salted_revenue_frames (same projection, same
-    shuffle_hash hint, join on custkey alone) — the baseline bench.py
-    times against the salted shape on a hot-key fixture to record the
-    straggler-task ratio the salt removes."""
-    fact = orders.select(
-        "o_custkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-    )
-    joined = fact.join(
-        cust.select("c_custkey", "c_nationkey").hint("shuffle_hash"),
-        F.col("o_custkey") == F.col("c_custkey"),
-    )
-    return joined.groupBy(
-        F.col("c_nationkey").cast("long").alias("nationkey")
-    ).agg(
-        F.count("*").cast("long").alias("n_orders"),
-        F.sum("cents").cast("long").alias("revenue_cents"),
-    )
-
-
-def q_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Large-large skew-join pattern: orders x customer on custkey with
-    an explicit salt — the mitigation for a hot key that AQE's skew
-    split cannot always reach (e.g. a single custkey holding 1% of
-    10^12 orders). The dimension side replicates SALT_R ways (explode
-    over a literal range — map-side, no shuffle of its own), the fact
-    side tags a deterministic salt from its PRIMARY key (any hash
-    works: the salt only spreads partitions, the join key still decides
-    matches), and the join runs on (custkey, salt) — the hot key's rows
-    now land in SALT_R different reducers. The salt never reaches the
-    result, so the oracle is the PLAIN join: equality with it proves
-    salting is a pure partitioning rewrite. Downstream, the per-nation
-    rollup partial-aggregates map-side."""
-    return salted_revenue_frames(
-        load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer")
     )
 
 

@@ -257,22 +257,21 @@ SELECT query_id, neighbor_id, rnk, cos_sim FROM ranked WHERE rnk <= {LSH_TOPK}
 
 
 # --------------------------------------------------------------------------
-# IVF-style ANN: deterministic coarse quantizer + inverted lists + nprobe
+# IVF-style ANN: trained coarse quantizer + inverted lists + nprobe
 # --------------------------------------------------------------------------
 
-# Defaults chosen from the measured recall-cost curve at sf0.01
-# (bench.py reports it each round; VERDICT r3 #5): trained recall@5 by
-# (K, nprobe) — 16/8: 0.86 probing 1/2 of lists; 32/8: 0.76 probing
-# 1/4; 64/8: 0.62; 64/16: 0.74 probing 1/4 but with 2x the assignment
-# dots. 32/8 clears the >=0.7 bar while scanning the smallest corpus
-# fraction — note the fixture embeddings are i.i.d. random (the
-# adversarial case for any ANN index); clustered real embeddings give
-# higher recall at the same probe fraction. At sf0.1 the same curve
-# sits lower (32/8: 0.65, 16/8: 0.84 — bench ivf_curve): with i.i.d.
-# vectors recall tracks the probed-list FRACTION, so a 5x bigger
-# corpus at fixed K spreads true neighbors over more lists. On real
-# (clustered) embeddings K grows with corpus size — sqrt(N) is the
-# usual rule — which holds the probe fraction and recall steady; the
+# Defaults chosen from the trained-IVF recall-cost curve at sf0.01
+# (BENCH/BASELINE.md; VERDICT r3 #5): recall@5 by (K, nprobe) — 16/8:
+# 0.86 probing 1/2 of lists; 32/8: 0.76 probing 1/4; 64/8: 0.62;
+# 64/16: 0.74 probing 1/4 but with 2x the assignment dots. 32/8 clears
+# the >=0.7 bar while scanning the smallest corpus fraction — note the
+# fixture embeddings are i.i.d. random (the adversarial case for any ANN
+# index); clustered real embeddings give higher recall at the same probe
+# fraction. At sf0.1 the same curve sits lower (32/8: 0.65, 16/8:
+# 0.84): with i.i.d. vectors recall tracks the probed-list FRACTION, so
+# a 5x bigger corpus at fixed K spreads true neighbors over more lists.
+# On real (clustered) embeddings K grows with corpus size — sqrt(N) is
+# the usual rule — which holds the probe fraction and recall steady; the
 # constants here stay fixed so the oracle literals are reproducible.
 IVF_K = 32  # coarse centroid count
 IVF_NPROBE = 8
@@ -372,26 +371,19 @@ def _ivf_search(
     spark: SparkSession,
     sf_dir: str,
     centroids: list[tuple[int, list[float]]],
-    cent_type: str,
-    nprobe: int = None,
 ) -> DataFrame:
     """Shared IVF search body: map-side inverted-list assignment over
     literal centroids (ivf_lists — Exchange-free, plan-test asserted),
     query-side probe of IVF_NPROBE nearest lists via a broadcast
-    centroid table, exact rerank of only the probed candidates.
-    `cent_type` is the element type of the broadcast centroid arrays:
-    "float" for centroids read back from the float32 embedding column,
-    "double" for trained centroids (rounded doubles don't fit float32).
-    `nprobe` defaults to IVF_NPROBE; bench.py sweeps it for the
-    recall-cost curve."""
+    centroid table, exact rerank of only the probed candidates. The
+    broadcast centroid arrays are doubles: trained centroids are 6-dp
+    doubles, which float32 cannot hold."""
     from pyspark.sql.window import Window
 
-    if nprobe is None:
-        nprobe = IVF_NPROBE
     emb = load(spark, sf_dir, "embeddings")
     cent = F.broadcast(
         spark.createDataFrame(
-            [(cid, ce) for cid, ce in centroids], f"cid int, ce array<{cent_type}>"
+            [(cid, ce) for cid, ce in centroids], "cid int, ce array<double>"
         )
     )
 
@@ -419,7 +411,7 @@ def _ivf_search(
         q.select(F.col("query_id"), F.col("qe").alias("embedding")),
         "query_id",
         "embedding",
-        nprobe,
+        IVF_NPROBE,
     )
     cand = (
         probes.join(lists, "cid")
@@ -443,79 +435,6 @@ def _ivf_search(
     )
 
 
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF search with the deterministic first-K quantizer: every vector
-    is assigned to its nearest coarse centroid (inverted lists); a query
-    probes its IVF_NPROBE nearest lists and exact-reranks only those
-    candidates. Swapping in k-means centroids (q_ann_ivf_trained)
-    changes recall, not the plan shape. At scale the list id is the
-    partition key: the probe is a centroid-key join, never a corpus
-    scan.
-
-    The K centroids are collected driver-side (K tiny rows — at real
-    scale the quantizer is a trained artifact loaded by the driver
-    anyway) and inlined as literals, so corpus list-assignment is a pure
-    map-side projection instead of a join + per-vector window."""
-    emb = load(spark, sf_dir, "embeddings")
-    centroids = sorted(
-        (
-            (int(r["vec_id"]), list(r["embedding"]))
-            for r in emb.filter(F.col("vec_id") < IVF_K)
-            .select("vec_id", "embedding")
-            .collect()
-        ),
-    )
-    return _ivf_search(spark, sf_dir, centroids, "float")
-
-
-def _ann_ivf_sql(cent_cte: str) -> str:
-    """IVF oracle SQL with a pluggable centroid CTE (first-K scan or
-    inlined trained literals); everything downstream is shared."""
-    return f"""
-WITH cent AS (
-  {cent_cte}
-), assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.embedding', 'c.ce')} DESC, c.cid) AS crank
-    FROM embeddings e, cent c
-  ) WHERE crank = 1
-), lists AS (
-  SELECT a.cid, e.vec_id, e.embedding FROM assign a JOIN embeddings e USING (vec_id)
-), q AS (
-  SELECT vec_id AS query_id, embedding AS qe
-  FROM embeddings WHERE vec_id % {QUERY_MOD} = 0
-), probes AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY {_cos_sql('q.qe', 'c.ce')} DESC, c.cid) AS crank
-    FROM q, cent c
-  ) WHERE crank <= {IVF_NPROBE}
-), cand AS (
-  SELECT DISTINCT p.query_id, l.vec_id AS neighbor_id
-  FROM probes p JOIN lists l USING (cid)
-  WHERE l.vec_id != p.query_id
-), scored AS (
-  SELECT c.query_id, c.neighbor_id,
-         {_cos_sql('q.qe', 'e.embedding')} AS cos_sim
-  FROM cand c JOIN q USING (query_id) JOIN embeddings e ON e.vec_id = c.neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, rnk, cos_sim FROM ranked WHERE rnk <= {IVF_TOPK}
-"""
-
-
-SQL_ANN_IVF = _ann_ivf_sql(
-    f"SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < {IVF_K}"
-)
-
-
 # --------------------------------------------------------------------------
 # trained IVF: deterministic spherical k-means quantizer (VERDICT r2 #6)
 # --------------------------------------------------------------------------
@@ -523,7 +442,7 @@ SQL_ANN_IVF = _ann_ivf_sql(
 IVF_TRAIN_SAMPLE = 4096  # driver-side fit on at most this many vectors
 IVF_TRAIN_ITERS = 10
 
-_CENTROID_CACHE: dict[tuple[str, int], list[tuple[int, list[float]]]] = {}
+_CENTROID_CACHE: dict[str, list[tuple[int, list[float]]]] = {}
 
 
 TRAIN_BATCH_ROWS = 4096  # streaming read granularity of the fit sample
@@ -567,12 +486,11 @@ def _bounded_lowest_sample(
     return kept_vid, kept_emb, peak
 
 
-def train_centroids(sf_dir: str, k: int = None) -> list[tuple[int, list[float]]]:
+def train_centroids(sf_dir: str) -> list[tuple[int, list[float]]]:
     """Deterministic spherical k-means (Lloyd's with cosine assignment)
     over a bounded, order-fixed sample of the embeddings table.
 
-    Scale posture: this is the driver-side quantizer fit — the same
-    pattern as the first-K collect (K tiny rows), except the sample is
+    Scale posture: this is the driver-side quantizer fit over at most
     IVF_TRAIN_SAMPLE vectors. The read is BOUNDED BY CONSTRUCTION
     (_bounded_lowest_sample streams record batches, holding at most
     sample + one batch in memory). At real scale the quantizer is a
@@ -584,9 +502,7 @@ def train_centroids(sf_dir: str, k: int = None) -> list[tuple[int, list[float]]]
     sample rows, fixed iteration count, float64 throughout, centroids
     rounded to 6 dp so the literals inlined into the Spark plan and the
     DuckDB VALUES list are the same doubles."""
-    if k is None:
-        k = IVF_K
-    cached = _CENTROID_CACHE.get((sf_dir, k))
+    cached = _CENTROID_CACHE.get(sf_dir)
     if cached is not None:
         return cached
     import os
@@ -598,11 +514,11 @@ def train_centroids(sf_dir: str, k: int = None) -> list[tuple[int, list[float]]]
     )
     norms = np.linalg.norm(emb, axis=1, keepdims=True)
     unit = np.divide(emb, norms, out=np.zeros_like(emb), where=norms > 0)
-    init_idx = np.round(np.linspace(0, len(unit) - 1, k)).astype(int)
+    init_idx = np.round(np.linspace(0, len(unit) - 1, IVF_K)).astype(int)
     cent = unit[init_idx].copy()
     for _ in range(IVF_TRAIN_ITERS):
         assign = (unit @ cent.T).argmax(axis=1)  # ties -> lowest cid
-        for ci in range(k):
+        for ci in range(IVF_K):
             members = unit[assign == ci]
             if len(members):
                 v = members.mean(axis=0)
@@ -611,18 +527,21 @@ def train_centroids(sf_dir: str, k: int = None) -> list[tuple[int, list[float]]]
                     cent[ci] = v / n
             # empty cluster: keep the previous centroid (deterministic)
     out = [
-        (ci, [float(round(float(v), 6)) for v in cent[ci]]) for ci in range(k)
+        (ci, [float(round(float(v), 6)) for v in cent[ci]]) for ci in range(IVF_K)
     ]
-    _CENTROID_CACHE[(sf_dir, k)] = out
+    _CENTROID_CACHE[sf_dir] = out
     return out
 
 
 def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF search with k-means-trained centroids: same Exchange-free
-    map-side assignment plan as q_ann_ivf (ivf_lists is centroid-
-    agnostic; the plan-shape test covers both), better list balance and
-    recall (bench.py reports recall@k vs embedding_cosine_topk)."""
-    return _ivf_search(spark, sf_dir, train_centroids(sf_dir), "double")
+    """IVF search with k-means-trained centroids: the coarse quantizer
+    probes the corpus's inverted lists and only the probed candidates
+    are exact-reranked. At scale the list id is the partition key: the
+    probe is a centroid-key join, never a corpus scan. The trained
+    centroids beat the first-K vectors of the table as a quantizer on
+    list balance and recall (BENCH/BASELINE.md "Dominated ANN variants";
+    bench.py reports recall@k vs embedding_cosine_topk)."""
+    return _ivf_search(spark, sf_dir, train_centroids(sf_dir))
 
 
 def sql_ann_ivf_trained(sf_dir: str) -> str:
@@ -634,7 +553,44 @@ def sql_ann_ivf_trained(sf_dir: str) -> str:
         "({}, [{}])".format(cid, ", ".join(repr(v) for v in ce))
         for cid, ce in train_centroids(sf_dir)
     )
-    return _ann_ivf_sql(f"SELECT cid, ce FROM (VALUES {rows}) v(cid, ce)")
+    return f"""
+WITH cent AS (
+  SELECT cid, ce FROM (VALUES {rows}) v(cid, ce)
+), assign AS (
+  SELECT vec_id, cid FROM (
+    SELECT e.vec_id, c.cid,
+           row_number() OVER (PARTITION BY e.vec_id
+                              ORDER BY {_cos_sql('e.embedding', 'c.ce')} DESC, c.cid) AS crank
+    FROM embeddings e, cent c
+  ) WHERE crank = 1
+), lists AS (
+  SELECT a.cid, e.vec_id, e.embedding FROM assign a JOIN embeddings e USING (vec_id)
+), q AS (
+  SELECT vec_id AS query_id, embedding AS qe
+  FROM embeddings WHERE vec_id % {QUERY_MOD} = 0
+), probes AS (
+  SELECT query_id, cid FROM (
+    SELECT q.query_id, c.cid,
+           row_number() OVER (PARTITION BY q.query_id
+                              ORDER BY {_cos_sql('q.qe', 'c.ce')} DESC, c.cid) AS crank
+    FROM q, cent c
+  ) WHERE crank <= {IVF_NPROBE}
+), cand AS (
+  SELECT DISTINCT p.query_id, l.vec_id AS neighbor_id
+  FROM probes p JOIN lists l USING (cid)
+  WHERE l.vec_id != p.query_id
+), scored AS (
+  SELECT c.query_id, c.neighbor_id,
+         {_cos_sql('q.qe', 'e.embedding')} AS cos_sim
+  FROM cand c JOIN q USING (query_id) JOIN embeddings e ON e.vec_id = c.neighbor_id
+), ranked AS (
+  SELECT query_id, neighbor_id, cos_sim,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY cos_sim DESC, neighbor_id) AS rnk
+  FROM scored
+)
+SELECT query_id, neighbor_id, rnk, cos_sim FROM ranked WHERE rnk <= {IVF_TOPK}
+"""
 
 
 # --------------------------------------------------------------------------
@@ -835,9 +791,9 @@ SQL_IVF_TRAIN_KMEANS = _sql_ivf_train_kmeans()
 # (round(x * KM_Q)) and the assignment metric is INTEGER squared L2, so
 # Spark and the oracle compare identical integers — no float parity
 # surface at all. Codebooks here are the deterministic first-KSUB
-# subvectors (the same honest stand-in as q_ann_ivf's first-K
-# quantizer); swapping in trained codebooks changes recall, not the
-# plan or the gate.
+# subvectors, so the oracle derives them from the table alone; the
+# ANN search uses trained codebooks (train_pq_codebooks), which change
+# recall, not the plan.
 PQ_M = 8  # subspaces
 PQ_DSUB = DIM // PQ_M  # dims per subspace
 PQ_KSUB = 16  # codes per subspace
@@ -845,8 +801,8 @@ PQ_KSUB = 16  # codes per subspace
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[int]]]:
     """codebooks[m][code] = quantized subvector (list of PQ_DSUB ints)
-    from the lowest-PQ_KSUB vec_ids — KSUB tiny rows collected, the
-    same bounded driver collect as the first-K IVF centroids."""
+    from the lowest-PQ_KSUB vec_ids — KSUB tiny rows collected, a
+    bounded driver collect."""
     emb = load(spark, sf_dir, "embeddings")
     rows = sorted(
         (int(r["vec_id"]), [float(v) for v in r["embedding"]])
@@ -949,122 +905,8 @@ FROM ranked WHERE rk = 1
 
 
 # --------------------------------------------------------------------------
-# ADC search over PQ codes (the asymmetric-distance half of IVFADC)
-# --------------------------------------------------------------------------
-
-# Queries stay exact, the corpus is its PQ codes: distance(q, x) ≈
-# sum_m LUT[q][m][code_m(x)] where LUT holds the integer squared L2
-# from the query's m-th quantized subvector to each codebook entry.
-# Shapes: the LUT frame is n_queries x PQ_M x PQ_KSUB rows (tiny —
-# built by crossing the query frame with a literal codebook relation,
-# then BROADCAST), the per-code join is map-side against it, and the
-# only shuffles are the (query_id, vec_id) distance sum and the
-# per-query top-K window. At the 100 TB design point ADC runs inside
-# IVF-probed lists rather than the whole code table (full IVFADC); the
-# ranking math and the gate are identical either way. Integer-exact end
-# to end — the gate compares exact BIGINTs.
-ADC_TOPK = 5
-
-
-def _adc_search_with(
-    spark: SparkSession, sf_dir: str, books: list[list[list[int]]]
-) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    emb_all = load(spark, sf_dir, "embeddings")
-    codes = _pq_encode_with(emb_all, books).select("vec_id", "m", "code")
-    cb = spark.createDataFrame(
-        [(m, c, books[m][c]) for m in range(PQ_M) for c in range(PQ_KSUB)],
-        "m int, code int, cq array<long>",
-    )
-    q = (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(F.col("vec_id").alias("query_id"), _km_eq_col().alias("qe"))
-    )
-    ld = F.aggregate(
-        F.zip_with(
-            F.slice(F.col("qe"), F.col("m") * PQ_DSUB + 1, PQ_DSUB),
-            F.col("cq"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    lut = q.crossJoin(cb).select("query_id", "m", "code", ld.alias("ld"))
-    scored = (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("ld").alias("adc_d"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= ADC_TOPK)
-        .select("query_id", "neighbor_id", "rnk", "adc_d")
-    )
-
-
-def q_embedding_ann_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _adc_search_with(spark, sf_dir, _pq_codebooks(spark, sf_dir))
-
-
-SQL_EMBEDDING_ADC = f"""
-WITH base AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * {KM_Q}) AS BIGINT)) AS eq
-  FROM embeddings
-), cb AS (
-  SELECT vec_id AS code,
-         list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * {KM_Q}) AS BIGINT)) AS cq
-  FROM embeddings WHERE vec_id < {PQ_KSUB}
-), pqscored AS (
-  SELECT b.vec_id, m.m, c.code,
-         list_reduce(
-           list_transform(range(1, {PQ_DSUB} + 1),
-                          k -> (b.eq[m.m * {PQ_DSUB} + k]
-                                - c.cq[m.m * {PQ_DSUB} + k]) ** 2),
-           (x, y) -> x + y) AS d_q
-  FROM base b, range(0, {PQ_M}) m(m), cb c
-), codes AS (
-  SELECT vec_id, m, code FROM (
-    SELECT vec_id, m, code,
-           row_number() OVER (PARTITION BY vec_id, m ORDER BY d_q, code) AS rk
-    FROM pqscored
-  ) WHERE rk = 1
-), q AS (
-  SELECT vec_id AS query_id, eq AS qe FROM base WHERE vec_id % {QUERY_MOD} = 0
-), lut AS (
-  SELECT q.query_id, m.m, c.code,
-         list_reduce(
-           list_transform(range(1, {PQ_DSUB} + 1),
-                          k -> (q.qe[m.m * {PQ_DSUB} + k]
-                                - c.cq[m.m * {PQ_DSUB} + k]) ** 2),
-           (x, y) -> x + y) AS ld
-  FROM q, range(0, {PQ_M}) m(m), cb c
-), s AS (
-  SELECT l.query_id, cd.vec_id AS neighbor_id, CAST(sum(l.ld) AS BIGINT) AS adc_d
-  FROM codes cd JOIN lut l ON l.m = cd.m AND l.code = cd.code
-  WHERE cd.vec_id != l.query_id
-  GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id, rnk, adc_d FROM (
-  SELECT query_id, neighbor_id, adc_d,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adc_d, neighbor_id) AS rnk
-  FROM s
-) WHERE rnk <= {ADC_TOPK}
-"""
-
-
-# --------------------------------------------------------------------------
 # trained PQ codebooks: per-subspace k-means (the codebooks Jégou et al.
-# actually use — first-KSUB rows are the honest untrained stand-in)
+# actually use)
 # --------------------------------------------------------------------------
 
 PQ_TRAIN_ITERS = 8
@@ -1114,12 +956,68 @@ def train_pq_codebooks(sf_dir: str) -> list[list[list[int]]]:
     return books
 
 
+# --------------------------------------------------------------------------
+# ADC search over PQ codes (the asymmetric-distance half of IVFADC)
+# --------------------------------------------------------------------------
+
+# Queries stay exact, the corpus is its PQ codes: distance(q, x) ≈
+# sum_m LUT[q][m][code_m(x)] where LUT holds the integer squared L2
+# from the query's m-th quantized subvector to each codebook entry.
+# Shapes: the LUT frame is n_queries x PQ_M x PQ_KSUB rows (tiny —
+# built by crossing the query frame with a literal codebook relation,
+# then BROADCAST), the per-code join is map-side against it, and the
+# only shuffles are the (query_id, vec_id) distance sum and the
+# per-query top-K window. At the 100 TB design point ADC runs inside
+# IVF-probed lists rather than the whole code table (full IVFADC); the
+# ranking math and the gate are identical either way. Integer-exact end
+# to end — the gate compares exact BIGINTs.
+ADC_TOPK = 5
+
+
 def q_embedding_ann_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADC search with k-means-trained codebooks: identical plan to
-    q_embedding_ann_adc (the encode and LUT are codebook-agnostic),
-    lower quantization distortion — bench.py reports the recall lift
-    over the first-KSUB stand-in codebooks."""
-    return _adc_search_with(spark, sf_dir, train_pq_codebooks(sf_dir))
+    """ADC search with k-means-trained codebooks: the corpus is encoded
+    against the codebooks, the LUT holds each query's distance to every
+    codebook entry. Trained codebooks have lower quantization distortion
+    than the first-KSUB rows, hence higher recall (BENCH/BASELINE.md
+    "Dominated ANN variants")."""
+    from pyspark.sql.window import Window
+
+    books = train_pq_codebooks(sf_dir)
+    emb_all = load(spark, sf_dir, "embeddings")
+    codes = _pq_encode_with(emb_all, books).select("vec_id", "m", "code")
+    cb = spark.createDataFrame(
+        [(m, c, books[m][c]) for m in range(PQ_M) for c in range(PQ_KSUB)],
+        "m int, code int, cq array<long>",
+    )
+    q = (
+        load(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") % QUERY_MOD == 0)
+        .select(F.col("vec_id").alias("query_id"), _km_eq_col().alias("qe"))
+    )
+    ld = F.aggregate(
+        F.zip_with(
+            F.slice(F.col("qe"), F.col("m") * PQ_DSUB + 1, PQ_DSUB),
+            F.col("cq"),
+            lambda x, y: (x - y) * (x - y),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    lut = q.crossJoin(cb).select("query_id", "m", "code", ld.alias("ld"))
+    scored = (
+        codes.join(F.broadcast(lut), ["m", "code"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("ld").alias("adc_d"))
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("adc_d").asc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= ADC_TOPK)
+        .select("query_id", "neighbor_id", "rnk", "adc_d")
+    )
 
 
 def sql_embedding_adc_trained(sf_dir: str) -> str:
@@ -1191,37 +1089,23 @@ SELECT query_id, neighbor_id, rnk, adc_d FROM (
 # Exchange, plan-tested on their standalone queries), the probe is a
 # broadcast K-row centroid table, the LUT is broadcast (n_queries x
 # PQ_M x PQ_KSUB integer rows), and the only corpus shuffles carry
-# (cid/vec_id/m/code) ids. Integer-exact ADC distances gate against a
-# literal-free oracle that re-derives lists, codes, and LUT from the
-# table alone.
+# (cid/vec_id/m/code) ids. The ADC distances are integer-exact; the
+# oracle inlines the same trained centroids and codebooks as VALUES
+# literals and re-derives lists, codes and LUT from them.
 
 
 def _ivfadc_scored(
     spark: SparkSession,
     sf_dir: str,
-    centroids=None,
-    books=None,
-    cent_type: str = "float",
-    nprobe: int = IVF_NPROBE,
+    centroids: list[tuple[int, list[float]]],
+    books: list[list[list[int]]],
 ) -> DataFrame:
     """(query_id, neighbor_id, adc_d) ADC distances restricted to the
-    IVF-probed lists — the shared core of q_embedding_ann_ivfadc and
-    its exact-rerank refinements. Defaults are the honest stand-ins
-    (first-K centroids / first-KSUB codebooks); the trained variants
-    pass their fitted artifacts (cent_type='double' — trained centroid
-    components are 6-dp doubles, not the table's float32)."""
+    IVF-probed lists. The broadcast centroid arrays are doubles: trained
+    centroid components are 6-dp doubles, not the table's float32."""
     from pyspark.sql.window import Window
 
     emb = load(spark, sf_dir, "embeddings")
-    if centroids is None:
-        centroids = sorted(
-            (int(r["vec_id"]), list(r["embedding"]))
-            for r in emb.filter(F.col("vec_id") < IVF_K)
-            .select("vec_id", "embedding")
-            .collect()
-        )
-    if books is None:
-        books = _pq_codebooks(spark, sf_dir)
     # id-only inverted lists: (cid, vec_id); the embedding never shuffles
     lists = ivf_lists(emb, centroids).select("cid", "vec_id")
     codes = _pq_encode_with(emb, books).select("vec_id", "m", "code")
@@ -1232,7 +1116,7 @@ def _ivfadc_scored(
     cent = F.broadcast(
         spark.createDataFrame(
             [(cid, ce) for cid, ce in centroids],
-            f"cid int, ce array<{cent_type}>",
+            "cid int, ce array<double>",
         )
     )
     q = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
@@ -1240,17 +1124,16 @@ def _ivfadc_scored(
         F.col("embedding").alias("qemb"),
         _km_eq_col().alias("qe"),
     )
-    # probe: nearest `nprobe` centroids per query by the same rounded
+    # probe: nearest IVF_NPROBE centroids per query by the same rounded
     # cosine + tie rule as _ivf_search's assign (window over the tiny
-    # query set only); default IVF_NPROBE, sweepable for the bench's
-    # recall-cost curve
+    # query set only)
     pscore = q.join(cent).select(
         "query_id", "cid", _cos(F.col("qemb"), F.col("ce")).alias("csim")
     )
     pw = Window.partitionBy("query_id").orderBy(F.col("csim").desc(), F.col("cid"))
     probes = (
         pscore.withColumn("crank", F.row_number().over(pw))
-        .filter(F.col("crank") <= nprobe)
+        .filter(F.col("crank") <= IVF_NPROBE)
         .select("query_id", "cid")
     )
     ld = F.aggregate(
@@ -1274,96 +1157,6 @@ def _ivfadc_scored(
     )
 
 
-def q_embedding_ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    scored = _ivfadc_scored(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= ADC_TOPK)
-        .select("query_id", "neighbor_id", "rnk", "adc_d")
-    )
-
-
-# shared CTE chain (through ADC distances `s`) for the IVFADC query and
-# its exact-rerank refinement — one source of truth, two final ranks
-_IVFADC_CTES = f"""
-WITH cent AS (
-  SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < {IVF_K}
-), assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.embedding', 'c.ce')} DESC, c.cid) AS crank
-    FROM embeddings e, cent c
-  ) WHERE crank = 1
-), base AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * {KM_Q}) AS BIGINT)) AS eq
-  FROM embeddings
-), cb AS (
-  SELECT vec_id AS code,
-         list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * {KM_Q}) AS BIGINT)) AS cq
-  FROM embeddings WHERE vec_id < {PQ_KSUB}
-), pqscored AS (
-  SELECT b.vec_id, m.m, c.code,
-         list_reduce(
-           list_transform(range(1, {PQ_DSUB} + 1),
-                          k -> (b.eq[m.m * {PQ_DSUB} + k]
-                                - c.cq[m.m * {PQ_DSUB} + k]) ** 2),
-           (x, y) -> x + y) AS d_q
-  FROM base b, range(0, {PQ_M}) m(m), cb c
-), codes AS (
-  SELECT vec_id, m, code FROM (
-    SELECT vec_id, m, code,
-           row_number() OVER (PARTITION BY vec_id, m ORDER BY d_q, code) AS rk
-    FROM pqscored
-  ) WHERE rk = 1
-), q AS (
-  SELECT e.vec_id AS query_id, e.embedding AS qemb, b.eq AS qe
-  FROM embeddings e JOIN base b USING (vec_id)
-  WHERE e.vec_id % {QUERY_MOD} = 0
-), probes AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY {_cos_sql('q.qemb', 'c.ce')} DESC, c.cid) AS crank
-    FROM q, cent c
-  ) WHERE crank <= {IVF_NPROBE}
-), lut AS (
-  SELECT q.query_id, m.m, c.code,
-         list_reduce(
-           list_transform(range(1, {PQ_DSUB} + 1),
-                          k -> (q.qe[m.m * {PQ_DSUB} + k]
-                                - c.cq[m.m * {PQ_DSUB} + k]) ** 2),
-           (x, y) -> x + y) AS ld
-  FROM q, range(0, {PQ_M}) m(m), cb c
-), cand AS (
-  SELECT p.query_id, a.vec_id FROM probes p JOIN assign a USING (cid)
-  WHERE a.vec_id != p.query_id
-), s AS (
-  SELECT c.query_id, cd.vec_id AS neighbor_id, CAST(sum(l.ld) AS BIGINT) AS adc_d
-  FROM cand c
-  JOIN codes cd ON cd.vec_id = c.vec_id
-  JOIN lut l ON l.query_id = c.query_id AND l.m = cd.m AND l.code = cd.code
-  GROUP BY 1, 2
-)"""
-
-SQL_EMBEDDING_IVFADC = f"""{_IVFADC_CTES}
-SELECT query_id, neighbor_id, rnk, adc_d FROM (
-  SELECT query_id, neighbor_id, adc_d,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adc_d, neighbor_id) AS rnk
-  FROM s
-) WHERE rnk <= {ADC_TOPK}
-"""
-
-
 # --------------------------------------------------------------------------
 # IVFADC + exact rerank (the "refine" stage: FAISS IndexRefineFlat /
 # Jégou et al. §V-D — ADC shortlists, exact distances re-rank)
@@ -1381,7 +1174,7 @@ SELECT query_id, neighbor_id, rnk, adc_d FROM (
 # the shortlist shuffle carries only (query_id, neighbor_id). Recall
 # approaches exact-IVF at the same nprobe while the scan stays PQ-coded.
 # Exact-rerank shortlist depth. Chosen from the measured (R, nprobe)
-# recall-cost curve (bench.py ivfadc_rerank_curve, r5 @ sf0.1): at the
+# recall-cost curve (BENCH/BASELINE.md, r5 @ sf0.1): at the
 # production probe budget nprobe=8 (1/4 of IVF_K lists), R=100 lifts
 # recall@5 0.455 -> 0.585 over R=50 at equal wall (the rerank is R
 # point lookups per query — negligible either way); R beyond 100 is
@@ -1390,15 +1183,8 @@ SELECT query_id, neighbor_id, rnk, adc_d FROM (
 ADC_RERANK = 100
 
 
-def _rerank_tail(
-    spark: SparkSession,
-    sf_dir: str,
-    scored: DataFrame,
-    rerank: int = ADC_RERANK,
-) -> DataFrame:
-    """ADC top-R shortlist -> exact-cosine re-rank (shared by the
-    stand-in and trained IVFADC rerank variants; R defaults to
-    ADC_RERANK, sweepable for the bench's recall-cost curve)."""
+def _rerank_tail(spark: SparkSession, sf_dir: str, scored: DataFrame) -> DataFrame:
+    """ADC top-R shortlist (R = ADC_RERANK) -> exact-cosine re-rank."""
     from pyspark.sql.window import Window
 
     ws = Window.partitionBy("query_id").orderBy(
@@ -1406,7 +1192,7 @@ def _rerank_tail(
     )
     short = (
         scored.withColumn("srk", F.row_number().over(ws))
-        .filter(F.col("srk") <= rerank)
+        .filter(F.col("srk") <= ADC_RERANK)
         .select("query_id", "neighbor_id")
     )
     emb = load(spark, sf_dir, "embeddings")
@@ -1439,36 +1225,6 @@ def _rerank_tail(
     )
 
 
-def q_embedding_ann_ivfadc_rerank(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _rerank_tail(spark, sf_dir, _ivfadc_scored(spark, sf_dir))
-
-
-SQL_EMBEDDING_IVFADC_RERANK = f"""{_IVFADC_CTES}
-, short AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adc_d, neighbor_id) AS srk
-    FROM s
-  ) WHERE srk <= {ADC_RERANK}
-), re AS (
-  SELECT sh.query_id, sh.neighbor_id,
-         {_cos_sql('q.qemb', 'n.embedding')} AS csim
-  FROM short sh
-  JOIN q ON q.query_id = sh.query_id
-  JOIN embeddings n ON n.vec_id = sh.neighbor_id
-)
-SELECT query_id, neighbor_id, rnk, csim FROM (
-  SELECT query_id, neighbor_id, csim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY csim DESC, neighbor_id) AS rnk
-  FROM re
-) WHERE rnk <= {ADC_TOPK}
-"""
-
-
 # --------------------------------------------------------------------------
 # trained IVFADC + rerank: the production configuration
 # --------------------------------------------------------------------------
@@ -1480,16 +1236,11 @@ def q_embedding_ann_ivfadc_trained_rerank(
     """The full production ANN stack in one plan: k-means-trained coarse
     quantizer (spherical, bounded driver fit) + k-means-trained PQ
     codebooks + ADC scoring inside the probed lists + exact-cosine
-    rerank of the top-R shortlist. Identical plan shapes to the
-    stand-in variants (both are literal-driven); only the literals —
-    and therefore recall — change. bench.py reports the recall ladder:
-    untrained ADC -> trained ADC -> +rerank."""
+    rerank of the top-R shortlist. The plan is literal-driven: the
+    first-K/first-KSUB artifacts ran the same plan at lower recall
+    (BENCH/BASELINE.md "Dominated ANN variants")."""
     scored = _ivfadc_scored(
-        spark,
-        sf_dir,
-        centroids=train_centroids(sf_dir),
-        books=train_pq_codebooks(sf_dir),
-        cent_type="double",
+        spark, sf_dir, train_centroids(sf_dir), train_pq_codebooks(sf_dir)
     )
     return _rerank_tail(spark, sf_dir, scored)
 
@@ -1745,19 +1496,11 @@ QUERIES = {
     "embedding_cosine_topk": QuerySpec(q_cosine_topk, SQL_COSINE_TOPK),
     "embedding_lsh_buckets": QuerySpec(q_lsh_buckets, SQL_LSH_BUCKETS),
     "embedding_ann_lsh": QuerySpec(q_ann_lsh, SQL_ANN_LSH),
-    "embedding_ann_ivf": QuerySpec(q_ann_ivf, SQL_ANN_IVF),
     "embedding_ann_ivf_trained": QuerySpec(q_ann_ivf_trained, sql_ann_ivf_trained),
     "ivf_train_kmeans": QuerySpec(q_ivf_train_kmeans, SQL_IVF_TRAIN_KMEANS),
     "embedding_pq_encode": QuerySpec(q_embedding_pq_encode, SQL_EMBEDDING_PQ),
-    "embedding_ann_adc": QuerySpec(q_embedding_ann_adc, SQL_EMBEDDING_ADC),
     "embedding_ann_adc_trained": QuerySpec(
         q_embedding_ann_adc_trained, sql_embedding_adc_trained
-    ),
-    "embedding_ann_ivfadc": QuerySpec(
-        q_embedding_ann_ivfadc, SQL_EMBEDDING_IVFADC
-    ),
-    "embedding_ann_ivfadc_rerank": QuerySpec(
-        q_embedding_ann_ivfadc_rerank, SQL_EMBEDDING_IVFADC_RERANK
     ),
     "embedding_ann_ivfadc_trained_rerank": QuerySpec(
         q_embedding_ann_ivfadc_trained_rerank, sql_ivfadc_trained_rerank

@@ -130,12 +130,52 @@ def _walk_pdf_metadata(data: bytes) -> dict:
     return meta
 
 
+_OBJ_HEAD = re.compile(rb"(\d+)\s+\d+\s+obj\b")
+_STREAM_KW = re.compile(rb"stream\r?\n")
+_LENGTH = re.compile(rb"/Length\s+(\d+)(\s+\d+\s+R)?")
+_ENDSTREAM_AT = re.compile(rb"\s*endstream")
+
+
 def _pdf_objects(data: bytes) -> dict[int, bytes]:
-    """num -> body bytes for every `N G obj ... endobj` in the stream."""
-    return {
-        int(m.group(1)): m.group(2)
-        for m in re.finditer(rb"(\d+)\s+\d+\s+obj\b(.*?)endobj", data, re.S)
-    }
+    """num -> body bytes for every `N G obj ... endobj` in the stream.
+
+    Stream payloads are binary and may spell `endobj`, so an object
+    holding `stream` is searched for `endobj` only past its payload: the
+    /Length (direct, or an indirect integer object) must land on
+    `endstream`; when it is missing, unresolvable or wrong, the search
+    resumes after the next `endstream`."""
+    int_objs = None  # num -> value of `N G obj <int> endobj`, built on demand
+    out = {}
+    pos = 0
+    while (m := _OBJ_HEAD.search(data, pos)) is not None:
+        start = m.end()
+        end = data.find(b"endobj", start)
+        if end < 0:
+            break
+        kw = _STREAM_KW.search(data, start, end)
+        if kw is not None:
+            ln = _LENGTH.search(data, start, kw.start())
+            length = None
+            if ln is not None and ln.group(2) is None:
+                length = int(ln.group(1))
+            elif ln is not None:
+                if int_objs is None:
+                    int_objs = {
+                        int(a): int(b)
+                        for a, b in re.findall(
+                            rb"(\d+)\s+\d+\s+obj\s+(\d+)\s+endobj", data
+                        )
+                    }
+                length = int_objs.get(int(ln.group(1)))
+            after = -1 if length is None else kw.end() + length
+            if after < 0 or not _ENDSTREAM_AT.match(data, after):
+                after = max(data.find(b"endstream", kw.end()), kw.end())
+            end = data.find(b"endobj", after)
+            if end < 0:
+                break
+        out[int(m.group(1))] = data[start:end]
+        pos = end + len(b"endobj")
+    return out
 
 
 def _pdf_ref(body: bytes, key: bytes) -> int | None:

@@ -103,7 +103,6 @@ def _media_span_rows(docs_df: DataFrame) -> DataFrame:
 def _media_input(
     media_spans: DataFrame,
     media_df: DataFrame,
-    broadcast_media: bool | None,
     span_partitions: int,
     max_payload_bytes: int | None = None,
 ) -> DataFrame:
@@ -115,8 +114,6 @@ def _media_input(
         else "png"
     )
     m = media_df.selectExpr("media_ref", png)
-    if broadcast_media:
-        m = F.broadcast(m)
     joined = media_spans.where(_IS_MEDIA).join(m, "media_ref", "left")
     # Explicit partition count — AQE coalesces by *bytes*, but this
     # stage's cost is compute per page, so byte-based coalescing
@@ -396,7 +393,6 @@ def run_pipeline(
     attempt: int = 1,
     span_partitions: int | None = None,
     doc_partitions: int | None = None,
-    broadcast_media: bool | None = None,
     docs_filter=None,
     max_payload_bytes: int | None = None,
     fidelity: str | None = None,
@@ -433,7 +429,6 @@ def run_pipeline(
     media_in = _media_input(
         _media_span_rows(docs_df),
         media_df,
-        broadcast_media,
         span_partitions,
         max_payload_bytes,
     )

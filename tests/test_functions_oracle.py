@@ -321,49 +321,89 @@ def test_trained_ivf_is_deterministic_and_lifts_recall(spark):
     (lower max list size AND stddev: balance is the trained quantizer's
     scale guarantee — the heaviest inverted list bounds probe-stage
     skew), and (c) higher-recall at sf0.01 (at the 500-vector sf0.001
-    the recall comparison is noise; bench.py reports the full curve)."""
+    the recall comparison is noise; BENCH/BASELINE.md has the curve).
+    The first-K quantizer (the table's first IVF_K vectors) is built
+    here as the reference."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from ocr_spark.functions import similarity as S
 
-    S._CENTROID_CACHE.pop((SF_DIR, S.IVF_K), None)
+    S._CENTROID_CACHE.pop(SF_DIR, None)
     c1 = S.train_centroids(SF_DIR)
-    S._CENTROID_CACHE.pop((SF_DIR, S.IVF_K), None)
+    S._CENTROID_CACHE.pop(SF_DIR, None)
     c2 = S.train_centroids(SF_DIR)
     assert c1 == c2
     assert len(c1) == S.IVF_K and len(c1[0][1]) == S.DIM
 
+    def first_k_of(sf):
+        return sorted(
+            (int(r["vec_id"]), list(r["embedding"]))
+            for r in S.load(spark, sf, "embeddings")
+            .filter(F.col("vec_id") < S.IVF_K)
+            .select("vec_id", "embedding")
+            .collect()
+        )
+
     emb = S.load(spark, SF_DIR, "embeddings")
-    first_k = sorted(
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in emb.filter(F.col("vec_id") < S.IVF_K)
-        .select("vec_id", "embedding")
-        .collect()
-    )
 
     def list_sizes(cents):
         rows = S.ivf_lists(emb, cents).groupBy("cid").count().collect()
         return np.array([r["count"] for r in rows])
 
-    s_first, s_trained = list_sizes(first_k), list_sizes(c1)
+    s_first, s_trained = list_sizes(first_k_of(SF_DIR)), list_sizes(c1)
     assert s_trained.max() <= s_first.max(), (s_trained.max(), s_first.max())
     assert s_trained.std() < s_first.std(), (s_trained.std(), s_first.std())
 
     sf01 = "/root/testdata/sf0.01"
 
-    def pairs(name):
-        df = S.QUERIES[name].fn(spark, sf01).filter(F.col("rnk") <= S.IVF_TOPK)
+    def pairs(df):
+        df = df.filter(F.col("rnk") <= S.IVF_TOPK)
         return {
             (r["query_id"], r["neighbor_id"])
             for r in df.select("query_id", "neighbor_id").collect()
         }
 
-    truth = pairs("embedding_cosine_topk")
-    r_first_k = len(pairs("embedding_ann_ivf") & truth) / len(truth)
-    r_trained = len(pairs("embedding_ann_ivf_trained") & truth) / len(truth)
+    truth = pairs(S.q_cosine_topk(spark, sf01))
+    first_k = pairs(S._ivf_search(spark, sf01, first_k_of(sf01)))
+    r_first_k = len(first_k & truth) / len(truth)
+    r_trained = len(pairs(S.q_ann_ivf_trained(spark, sf01)) & truth) / len(truth)
     assert r_trained > r_first_k, (r_trained, r_first_k)
     assert r_trained >= 0.7, r_trained  # the default (K, nprobe) bar
+
+
+# sha256 of json.dumps(artifact), recorded when the first-K ANN variants
+# and their sweep parameters were deleted; the trained stack must not move
+_TRAINED_DIGESTS = {
+    "sf0.001": (
+        "293421a337869a840deaf13787d76285df2598eaaaa1ef2eabe314a1f454901f",
+        "f163769feafd5ace743bead0e08018e1e333dc77f7279dfa5132458216c56f40",
+    ),
+    "sf0.01": (
+        "71701adfbb277627999eefec0a95d640f815004f831734b461b0ca55e2e31397",
+        "a182ce5b7fc12360d2dc8410394c0aea244e51f9122c56c8f6ac44a6cf69bccf",
+    ),
+}
+
+
+@pytest.mark.parametrize("sf", sorted(_TRAINED_DIGESTS))
+def test_trained_ann_artifacts_are_pinned(sf):
+    """The trained ANN oracles inline the same centroid and codebook
+    literals as the Spark plans, so a change in training passes the
+    oracle gate unseen: pin both artifacts by digest."""
+    import hashlib
+    import json
+
+    from ocr_spark.functions import similarity as S
+
+    d = f"/root/testdata/{sf}"
+    S._CENTROID_CACHE.pop(d, None)
+    S._PQ_TRAIN_CACHE.pop(d, None)
+    got = tuple(
+        hashlib.sha256(json.dumps(a).encode()).hexdigest()
+        for a in (S.train_centroids(d), S.train_pq_codebooks(d))
+    )
+    assert got == _TRAINED_DIGESTS[sf]
 
 
 def test_trained_ivf_fit_read_is_bounded():
@@ -1002,18 +1042,19 @@ def test_pq_encode_oracle_and_self_codes(spark):
 def test_adc_oracle_and_recall_positive(spark):
     """ADC over PQ codes: hash-exact vs the oracle, each query gets
     exactly ADC_TOPK ranked neighbors, and the compressed-domain ranking
-    retrieves a nonzero fraction of the exact-cosine top-k (PQ with
-    first-K codebooks on i.i.d. vectors is lossy — the gate pins the
-    machinery, bench reports the recall curve)."""
+    retrieves a nonzero fraction of the exact-cosine top-k (PQ on
+    i.i.d. vectors is lossy — the gate pins the machinery, bench
+    reports the recall)."""
     from ocr_spark.functions import similarity as S
 
     sf = "/root/testdata/sf0.001"
     r = compare_query(
-        spark, sf, "embedding_ann_adc", S.QUERIES["embedding_ann_adc"]
+        spark, sf, "embedding_ann_adc_trained",
+        S.QUERIES["embedding_ann_adc_trained"],
     )
     assert r["ok"], r["detail"]
 
-    adc = S.q_embedding_ann_adc(spark, sf).collect()
+    adc = S.q_embedding_ann_adc_trained(spark, sf).collect()
     per_q = {}
     for row in adc:
         per_q.setdefault(row["query_id"], []).append(row)

@@ -323,6 +323,31 @@ def test_walker_render_bounds_hostile_dimensions():
         _walk_pdf_render(hostile, 300)
 
 
+@pytest.mark.parametrize("length", ["direct", "indirect", "missing"])
+def test_stream_payload_spelling_endobj_renders(length):
+    """An uncompressed image stream whose first row spells `endobj` in
+    pixel values renders exactly like the Flate encoding of the same
+    page: the object scan skips the payload by its /Length (direct or
+    indirect), or past `endstream` without one, instead of ending the
+    object at the first `endobj` inside the payload."""
+    from ocr_spark.pdfio import encode_image_pdf
+
+    page = render_page(["endobj row"], 200, 80, margin=8)
+    page[0, :6] = np.frombuffer(b"endobj", np.uint8)
+    data = encode_image_pdf([page])
+    head = b"/BitsPerComponent 8 /Length %d >>" % page.size
+    assert data.count(head) == 1 and data.count(b"endobj") == 7
+    if length == "indirect":
+        data = data.replace(head, b"/BitsPerComponent 8 /Length 99 0 R >>")
+        data += b"99 0 obj\n%d\nendobj\n" % page.size
+    elif length == "missing":
+        data = data.replace(head, b"/BitsPerComponent 8 >>")
+    want = render_pages(encode_image_pdf([page], compress=True), dpi=72)
+    got = render_pages(data, dpi=72)
+    assert len(got) == len(want) == 1
+    assert np.array_equal(got[0], want[0]) and np.array_equal(got[0], page)
+
+
 def test_spdf_zoom_is_bounded():
     """A stored page under decode_png's bound can still zoom (300/72 per
     side, ~17x the pixels) past it: raise (-> counted skip) before the

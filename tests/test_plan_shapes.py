@@ -42,7 +42,7 @@ def test_media_table_scan_prunes_dims(spark, corpus_dir):
     from ocr_spark.spark.pipeline import _media_input, _media_span_rows
 
     docs, media = read_corpus(spark, corpus_dir)
-    mi = _media_input(_media_span_rows(docs), media, None, 8)
+    mi = _media_input(_media_span_rows(docs), media, 8)
     plan = _plan(mi)
     media_scan = [
         l
@@ -476,9 +476,11 @@ def test_ivfadc_corpus_joins_are_hash_joins(spark):
     queries x centroids for probes — both broadcast). Every join that
     touches a corpus-sized frame (lists, codes) must be a hash join;
     a CartesianProduct anywhere is a regression."""
-    from ocr_spark.functions.similarity import q_embedding_ann_ivfadc
+    from ocr_spark.functions.similarity import (
+        q_embedding_ann_ivfadc_trained_rerank,
+    )
 
-    df = q_embedding_ann_ivfadc(spark, "/root/testdata/sf0.001")
+    df = q_embedding_ann_ivfadc_trained_rerank(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert plan.count("BroadcastNestedLoopJoin") <= 2, plan
@@ -706,6 +708,8 @@ def test_media_udf_input_is_one_map_side_deal(spark, corpus_dir):
     reads that Exchange directly — a Project between them would hide
     the exchange from the UDF stage, so the deal's helper column rides
     into the UDF instead."""
+    from pyspark.sql import functions as F
+
     from ocr_spark.config import get_profile
     from ocr_spark.spark.corpus import read_corpus
     from ocr_spark.spark.pipeline import (
@@ -715,7 +719,7 @@ def test_media_udf_input_is_one_map_side_deal(spark, corpus_dir):
     )
 
     docs, media = read_corpus(spark, corpus_dir)
-    mi = _media_input(_media_span_rows(docs), media, True, 4)
+    mi = _media_input(_media_span_rows(docs), F.broadcast(media), 4)
     out = _media_branch_fused(mi, get_profile("default"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     lines = [l.lstrip(" :+-") for l in plan.splitlines()]

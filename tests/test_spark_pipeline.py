@@ -500,7 +500,7 @@ def test_skew_monster_heavy_pages_spread(spark):
     docs_df = spark.createDataFrame(docs, S.DOCUMENTS_SCHEMA)
     media_df = spark.createDataFrame(media, S.MEDIA_SCHEMA)
     placed = (
-        _media_input(_media_span_rows(docs_df), media_df, True, n)
+        _media_input(_media_span_rows(docs_df), F.broadcast(media_df), n)
         .filter(F.col("doc_id") == "monster")
         .select("offset", F.spark_partition_id().alias("p"))
         .collect()
@@ -717,6 +717,7 @@ def test_500_page_pdf_pages_spread_over_every_deal_partition(spark):
     from collections import Counter
 
     import numpy as np
+    from pyspark.sql import functions as F
 
     from ocr_spark.pdfio import encode_pdf
     from ocr_spark.spark import schemas as S
@@ -729,7 +730,7 @@ def test_500_page_pdf_pages_spread_over_every_deal_partition(spark):
     )
     media_df = spark.createDataFrame([("big", data, 0, 0)], S.MEDIA_SCHEMA)
     placed = (
-        _media_input(_media_span_rows(docs_df), media_df, True, n)
+        _media_input(_media_span_rows(docs_df), F.broadcast(media_df), n)
         .selectExpr("page", "png", "spark_partition_id() AS p")
         .collect()
     )
