@@ -1117,26 +1117,11 @@ def q_dedup_semantic(
 
 def _semdedup_sql(sf_dir: str) -> str:
     """Oracle generated from the SAME trained centroids as the Spark
-    plan (QuerySpec callable-SQL form — the quantizer is data-derived);
-    the assignment window's `csim DESC, cid` tiebreak is the proven
-    bit-identical twin of ivf_assign_col (see similarity.sql_ann_ivf_trained)."""
-    from ocr_spark.functions.similarity import _cos_sql, train_centroids
+    plan: similarity._assign_sql, the oracle of ivf_assign_col."""
+    from ocr_spark.functions.similarity import _assign_sql, _cos_sql
 
-    rows = ", ".join(
-        "({}, [{}])".format(cid, ", ".join(repr(v) for v in ce))
-        for cid, ce in train_centroids(sf_dir)
-    )
     return f"""
-WITH cent AS (
-  SELECT cid, ce FROM (VALUES {rows}) v(cid, ce)
-), assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.embedding', 'c.ce')} DESC, c.cid) AS crank
-    FROM embeddings e, cent c
-  ) WHERE crank = 1
-), capped AS (
+WITH {_assign_sql(sf_dir)}, capped AS (
   SELECT vec_id, cid FROM (
     SELECT *, row_number() OVER (PARTITION BY cid ORDER BY vec_id) AS rn
     FROM assign
@@ -1483,9 +1468,12 @@ FROM rep
 SUBSTR_K = 8
 
 
-def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
+def _dup_grams(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(base, occ): base is (doc_id, n_words, ws) per document; occ is
+    (gkey, doc_id, pos), one row per occurrence of a SUBSTR_K-word gram
+    (md5 key, 1-based start) found in two or more documents."""
     # ws materialized in its own projection: Spark has no CSE across
     # higher-order-function boundaries (see textops.q_decontaminate)
     base = (
@@ -1512,14 +1500,40 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("nd") >= 2)
         .select("gkey")
     )
+    return base, sh.join(dup, "gkey")
+
+
+# b: (doc_id, n_words, ws); s: (doc_id, pos, gkey) per gram; d: the gkeys
+# found in two or more documents — the oracle of _dup_grams
+_DUP_GRAMS_SQL = f"""b AS (
+  SELECT doc_id, len({_TOKENS_SQL}) AS n_words, {_TOKENS_SQL} AS ws
+  FROM documents
+), g AS (
+  SELECT doc_id,
+         unnest(list_transform(
+           range(1, n_words - {SUBSTR_K} + 2),
+           i -> {{'pos': i,
+                  'gkey': md5(list_aggregate(ws[i:i + {SUBSTR_K} - 1],
+                                             'string_agg', ' '))}})) AS u
+  FROM b
+), s AS (
+  SELECT doc_id, u.pos AS pos, u.gkey AS gkey FROM g
+), d AS (
+  SELECT gkey FROM s GROUP BY gkey HAVING count(DISTINCT doc_id) >= 2
+)"""
+
+
+def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    base, occ = _dup_grams(spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy("pos")
     contrib = F.least(
         F.lit(SUBSTR_K),
         F.coalesce(F.lead("pos").over(w) - F.col("pos"), F.lit(SUBSTR_K)),
     )
     per_doc = (
-        sh.join(dup, "gkey")
-        .select("doc_id", "pos")
+        occ.select("doc_id", "pos")
         .withColumn("c", contrib)
         .groupBy("doc_id")
         .agg(F.sum("c").cast("int").alias("dup_tokens"))
@@ -1544,22 +1558,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DEDUP_SUBSTRING = f"""
-WITH b AS (
-  SELECT doc_id, len({_TOKENS_SQL}) AS n_words, {_TOKENS_SQL} AS ws
-  FROM documents
-), g AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           range(1, n_words - {SUBSTR_K} + 2),
-           i -> {{'pos': i,
-                  'gkey': md5(list_aggregate(ws[i:i + {SUBSTR_K} - 1],
-                                             'string_agg', ' '))}})) AS u
-  FROM b
-), s AS (
-  SELECT doc_id, u.pos AS pos, u.gkey AS gkey FROM g
-), d AS (
-  SELECT gkey FROM s GROUP BY gkey HAVING count(DISTINCT doc_id) >= 2
-), c AS (
+WITH {_DUP_GRAMS_SQL}, c AS (
   SELECT doc_id,
          least({SUBSTR_K},
                coalesce(lead(pos) OVER (PARTITION BY doc_id ORDER BY pos) - pos,
@@ -1599,34 +1598,10 @@ FROM b LEFT JOIN p USING (doc_id)
 def q_dedup_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    base = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", _tokens_col().alias("ws"))
-        .select("doc_id", F.size("ws").alias("n_words"), "ws")
-    )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.col("n_words") - (SUBSTR_K - 1)),
-        lambda i: F.md5(
-            F.concat_ws(
-                " ", *[F.element_at(F.col("ws"), i + k) for k in range(SUBSTR_K)]
-            ).cast("binary")
-        ),
-    )
-    sh = (
-        base.where(F.col("n_words") >= SUBSTR_K)
-        .select("doc_id", F.posexplode(grams).alias("pos0", "gkey"))
-        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "gkey")
-    )
-    dup = (
-        sh.groupBy("gkey")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .where(F.col("nd") >= 2)
-        .select("gkey")
-    )
+    base, occ = _dup_grams(spark, sf_dir)
     wg = Window.partitionBy("gkey").orderBy("doc_id", "pos")
     removed = (
-        sh.join(dup, "gkey")
-        .withColumn("rn", F.row_number().over(wg))
+        occ.withColumn("rn", F.row_number().over(wg))
         .where(F.col("rn") >= 2)
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("pos")).alias("cuts"))
@@ -1656,22 +1631,7 @@ def q_dedup_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DEDUP_SUBSTRING_REWRITE = f"""
-WITH b AS (
-  SELECT doc_id, len({_TOKENS_SQL}) AS n_words, {_TOKENS_SQL} AS ws
-  FROM documents
-), g AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           range(1, n_words - {SUBSTR_K} + 2),
-           i -> {{'pos': i,
-                  'gkey': md5(list_aggregate(ws[i:i + {SUBSTR_K} - 1],
-                                             'string_agg', ' '))}})) AS u
-  FROM b
-), s AS (
-  SELECT doc_id, u.pos AS pos, u.gkey AS gkey FROM g
-), d AS (
-  SELECT gkey FROM s GROUP BY gkey HAVING count(DISTINCT doc_id) >= 2
-), r AS (
+WITH {_DUP_GRAMS_SQL}, r AS (
   SELECT doc_id, pos FROM (
     SELECT s.doc_id, s.pos,
            row_number() OVER (PARTITION BY s.gkey

@@ -367,6 +367,32 @@ def ivf_lists(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataF
     )
 
 
+def _probe(
+    spark: SparkSession, q: DataFrame, centroids: list[tuple[int, list[float]]]
+) -> DataFrame:
+    """(query_id, cid): each query's IVF_NPROBE nearest centroids by the
+    rounded cosine of its float vector `qemb`, ties to the lower cid.
+    The centroid table is broadcast and the window shuffles only the
+    (tiny) query set. Its arrays are doubles: trained centroids are 6-dp
+    doubles, which float32 cannot hold."""
+    from pyspark.sql.window import Window
+
+    cent = F.broadcast(
+        spark.createDataFrame(
+            [(cid, ce) for cid, ce in centroids], "cid int, ce array<double>"
+        )
+    )
+    scored = q.join(cent).select(
+        "query_id", "cid", _cos(F.col("qemb"), F.col("ce")).alias("csim")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("csim").desc(), F.col("cid"))
+    return (
+        scored.withColumn("crank", F.row_number().over(w))
+        .filter(F.col("crank") <= IVF_NPROBE)
+        .select("query_id", "cid")
+    )
+
+
 def _ivf_search(
     spark: SparkSession,
     sf_dir: str,
@@ -374,47 +400,20 @@ def _ivf_search(
 ) -> DataFrame:
     """Shared IVF search body: map-side inverted-list assignment over
     literal centroids (ivf_lists — Exchange-free, plan-test asserted),
-    query-side probe of IVF_NPROBE nearest lists via a broadcast
-    centroid table, exact rerank of only the probed candidates. The
-    broadcast centroid arrays are doubles: trained centroids are 6-dp
-    doubles, which float32 cannot hold."""
+    query-side probe of IVF_NPROBE nearest lists (_probe), exact rerank
+    of only the probed candidates."""
     from pyspark.sql.window import Window
 
     emb = load(spark, sf_dir, "embeddings")
-    cent = F.broadcast(
-        spark.createDataFrame(
-            [(cid, ce) for cid, ce in centroids], "cid int, ce array<double>"
-        )
-    )
-
-    def assign(df, id_col, emb_col, n_keep):
-        # query-side probe: the window shuffles only the (tiny) query set
-        scored = df.join(cent).select(
-            id_col,
-            "cid",
-            _cos(F.col(emb_col), F.col("ce")).alias("csim"),
-        )
-        w = Window.partitionBy(id_col).orderBy(F.col("csim").desc(), F.col("cid"))
-        return (
-            scored.withColumn("crank", F.row_number().over(w))
-            .filter(F.col("crank") <= n_keep)
-            .select(id_col, "cid", "crank")
-        )
-
     lists = ivf_lists(emb, centroids)
     q = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
+        F.col("embedding").alias("qemb"),
         _norm_col(F.col("embedding")).alias("qn"),
     )
-    probes = assign(
-        q.select(F.col("query_id"), F.col("qe").alias("embedding")),
-        "query_id",
-        "embedding",
-        IVF_NPROBE,
-    )
     cand = (
-        probes.join(lists, "cid")
+        _probe(spark, q, centroids)
+        .join(lists, "cid")
         .join(q, "query_id")
         .filter(F.col("vec_id") != F.col("query_id"))
     )
@@ -422,7 +421,7 @@ def _ivf_search(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         _cos_pre(
-            F.col("qe"), F.col("embedding"), F.col("qn"), F.col("en")
+            F.col("qemb"), F.col("embedding"), F.col("qn"), F.col("en")
         ).alias("cos_sim"),
     ).dropDuplicates(["query_id", "neighbor_id"])
     w = Window.partitionBy("query_id").orderBy(
@@ -544,44 +543,53 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_search(spark, sf_dir, train_centroids(sf_dir))
 
 
-def sql_ann_ivf_trained(sf_dir: str) -> str:
-    """Oracle SQL generated from the SAME trained-centroid constants as
-    the Spark plan: the quantizer is data-dependent, so the SQL is a
+def _nearest_cent_sql(name: str, key: str, src: str, vec: str, n_keep: int) -> str:
+    """CTE `name`: the `n_keep` nearest `cent` centroids of each `src`
+    row by the rounded cosine of its `vec`, ties to the lower cid — the
+    oracle of ivf_assign_col (n_keep = 1) and of _probe."""
+    return f"""{name} AS (
+  SELECT {key}, cid FROM (
+    SELECT s.{key}, c.cid,
+           row_number() OVER (PARTITION BY s.{key}
+                              ORDER BY {_cos_sql(f's.{vec}', 'c.ce')} DESC, c.cid) AS crank
+    FROM {src} s, cent c
+  ) WHERE crank <= {n_keep}
+)"""
+
+
+# probes: each query's (q.qemb, the float vector) IVF_NPROBE nearest lists
+_PROBES_SQL = _nearest_cent_sql("probes", "query_id", "q", "qemb", IVF_NPROBE)
+
+
+def _assign_sql(sf_dir: str) -> str:
+    """CTEs `cent` (the trained centroids as a VALUES list of 6-dp
+    doubles) and `assign` (every vector's nearest centroid). The
+    quantizer is data-dependent, so every oracle that inlines it is a
     function of sf_dir (QuerySpec.sql callable form) — the driver
     resolves it at its compare scale, tests at theirs."""
     rows = ", ".join(
         "({}, [{}])".format(cid, ", ".join(repr(v) for v in ce))
         for cid, ce in train_centroids(sf_dir)
     )
-    return f"""
-WITH cent AS (
+    return f"""cent AS (
   SELECT cid, ce FROM (VALUES {rows}) v(cid, ce)
-), assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.embedding', 'c.ce')} DESC, c.cid) AS crank
-    FROM embeddings e, cent c
-  ) WHERE crank = 1
-), lists AS (
-  SELECT a.cid, e.vec_id, e.embedding FROM assign a JOIN embeddings e USING (vec_id)
-), q AS (
-  SELECT vec_id AS query_id, embedding AS qe
+), {_nearest_cent_sql("assign", "vec_id", "embeddings", "embedding", 1)}"""
+
+
+def sql_ann_ivf_trained(sf_dir: str) -> str:
+    """Oracle SQL generated from the SAME trained-centroid constants as
+    the Spark plan."""
+    return f"""
+WITH {_assign_sql(sf_dir)}, q AS (
+  SELECT vec_id AS query_id, embedding AS qemb
   FROM embeddings WHERE vec_id % {QUERY_MOD} = 0
-), probes AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY {_cos_sql('q.qe', 'c.ce')} DESC, c.cid) AS crank
-    FROM q, cent c
-  ) WHERE crank <= {IVF_NPROBE}
-), cand AS (
-  SELECT DISTINCT p.query_id, l.vec_id AS neighbor_id
-  FROM probes p JOIN lists l USING (cid)
-  WHERE l.vec_id != p.query_id
+), {_PROBES_SQL}, cand AS (
+  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
+  FROM probes p JOIN assign a USING (cid)
+  WHERE a.vec_id != p.query_id
 ), scored AS (
   SELECT c.query_id, c.neighbor_id,
-         {_cos_sql('q.qe', 'e.embedding')} AS cos_sim
+         {_cos_sql('q.qemb', 'e.embedding')} AS cos_sim
   FROM cand c JOIN q USING (query_id) JOIN embeddings e ON e.vec_id = c.neighbor_id
 ), ranked AS (
   SELECT query_id, neighbor_id, cos_sim,
@@ -624,6 +632,14 @@ def _km_eq_col() -> Column:
     return F.transform(
         F.col("embedding"),
         lambda x: F.round(x.cast("double") * F.lit(KM_Q)).cast("long"),
+    )
+
+
+def _km_eq_sql(vec: str) -> str:
+    """_km_eq_col in DuckDB: round(x * KM_Q) as BIGINT per component."""
+    return (
+        f"list_transform({vec}, "
+        f"x -> CAST(round(CAST(x AS DOUBLE) * {KM_Q}) AS BIGINT))"
     )
 
 
@@ -723,11 +739,7 @@ def _sql_ivf_train_kmeans() -> str:
     over the embeddings table, zero data-derived literals."""
     parts = [
         f"""kmbase AS (
-  SELECT vec_id,
-         embedding,
-         list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * {KM_Q}) AS BIGINT)) AS eq
-  FROM embeddings
+  SELECT vec_id, embedding, {_km_eq_sql('embedding')} AS eq FROM embeddings
 )""",
         f"""cent0 AS (
   SELECT vec_id AS cid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ce
@@ -874,33 +886,45 @@ def q_embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_encode_with(emb, _pq_codebooks(spark, sf_dir))
 
 
-SQL_EMBEDDING_PQ = f"""
-WITH base AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * {KM_Q}) AS BIGINT)) AS eq
-  FROM embeddings
+def _sub_l2_sql(vec: str) -> str:
+    """Integer squared L2 from subspace `c.m` of the quantized `vec` to
+    the codebook entry `c.cq` (one subspace long)."""
+    return (
+        f"list_reduce(list_transform(range(1, {PQ_DSUB} + 1), "
+        f"k -> ({vec}[c.m * {PQ_DSUB} + k] - c.cq[k]) ** 2), (x, y) -> x + y)"
+    )
+
+
+def _pq_codes_sql(cb: str) -> str:
+    """CTEs `base` (every vector quantized, `eq`), `cb` (the codebook
+    rows (m, code, cq) that the query `cb` selects), and `codes` (each
+    vector's nearest code per subspace by integer squared L2, ties to
+    the lower code) — the oracle of _pq_encode_with."""
+    return f"""base AS (
+  SELECT vec_id, {_km_eq_sql('embedding')} AS eq FROM embeddings
 ), cb AS (
-  SELECT vec_id AS code,
-         list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * {KM_Q}) AS BIGINT)) AS cq
-  FROM embeddings WHERE vec_id < {PQ_KSUB}
-), scored AS (
-  SELECT b.vec_id, m.m, c.code,
-         list_reduce(
-           list_transform(range(1, {PQ_DSUB} + 1),
-                          k -> (b.eq[m.m * {PQ_DSUB} + k]
-                                - c.cq[m.m * {PQ_DSUB} + k]) ** 2),
-           (x, y) -> x + y) AS d_q
-  FROM base b, range(0, {PQ_M}) m(m), cb c
-), ranked AS (
-  SELECT vec_id, m, code, d_q,
-         row_number() OVER (PARTITION BY vec_id, m ORDER BY d_q, code) AS rk
-  FROM scored
-)
+  {cb}
+), pqscored AS (
+  SELECT b.vec_id, c.m, c.code, {_sub_l2_sql('b.eq')} AS d_q
+  FROM base b, cb c
+), codes AS (
+  SELECT vec_id, m, code, d_q FROM (
+    SELECT vec_id, m, code, d_q,
+           row_number() OVER (PARTITION BY vec_id, m ORDER BY d_q, code) AS rk
+    FROM pqscored
+  ) WHERE rk = 1
+)"""
+
+
+# the first-PQ_KSUB codebooks, derived from the table in SQL
+_FIRST_KSUB_CB_SQL = f"""SELECT m.m, e.vec_id AS code,
+         {_km_eq_sql(f"e.embedding[m.m * {PQ_DSUB} + 1:(m.m + 1) * {PQ_DSUB}]")} AS cq
+  FROM embeddings e, range(0, {PQ_M}) m(m) WHERE e.vec_id < {PQ_KSUB}"""
+SQL_EMBEDDING_PQ = f"""
+WITH {_pq_codes_sql(_FIRST_KSUB_CB_SQL)}
 SELECT vec_id, CAST(m AS INT) AS m, CAST(code AS INT) AS code,
        CAST(d_q AS BIGINT) AS d_q
-FROM ranked WHERE rk = 1
+FROM codes
 """
 
 
@@ -974,25 +998,16 @@ def train_pq_codebooks(sf_dir: str) -> list[list[list[int]]]:
 ADC_TOPK = 5
 
 
-def q_embedding_ann_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADC search with k-means-trained codebooks: the corpus is encoded
-    against the codebooks, the LUT holds each query's distance to every
-    codebook entry. Trained codebooks have lower quantization distortion
-    than the first-KSUB rows, hence higher recall (BENCH/BASELINE.md
-    "Dominated ANN variants")."""
-    from pyspark.sql.window import Window
-
-    books = train_pq_codebooks(sf_dir)
-    emb_all = load(spark, sf_dir, "embeddings")
-    codes = _pq_encode_with(emb_all, books).select("vec_id", "m", "code")
+def _adc_lut(
+    spark: SparkSession, q: DataFrame, books: list[list[list[int]]]
+) -> DataFrame:
+    """Broadcast (query_id, m, code, ld): the integer squared L2 from
+    each query's KM_Q-quantized vector `qe`, subspace m, to every
+    codebook entry — the query frame crossed with a literal codebook
+    relation of PQ_M x PQ_KSUB rows."""
     cb = spark.createDataFrame(
         [(m, c, books[m][c]) for m in range(PQ_M) for c in range(PQ_KSUB)],
         "m int, code int, cq array<long>",
-    )
-    q = (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(F.col("vec_id").alias("query_id"), _km_eq_col().alias("qe"))
     )
     ld = F.aggregate(
         F.zip_with(
@@ -1003,9 +1018,45 @@ def q_embedding_ann_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
-    lut = q.crossJoin(cb).select("query_id", "m", "code", ld.alias("ld"))
+    return F.broadcast(
+        q.crossJoin(cb).select("query_id", "m", "code", ld.alias("ld"))
+    )
+
+
+def _trained_cb_sql(sf_dir: str) -> str:
+    """The trained codebooks as (m, code, cq) VALUES rows, cq the
+    PQ_DSUB-long BIGINT subvector (the `cb` query of _pq_codes_sql)."""
+    books = train_pq_codebooks(sf_dir)
+    rows = ", ".join(
+        "({}, {}, [{}])".format(m, c, ", ".join(str(v) for v in books[m][c]))
+        for m in range(PQ_M)
+        for c in range(PQ_KSUB)
+    )
+    return f"SELECT * FROM (VALUES {rows}) v(m, code, cq)"
+
+
+# lut: each query's (q.qe, the quantized vector) distance to every cb entry
+_LUT_SQL = f"""lut AS (
+  SELECT q.query_id, c.m, c.code, {_sub_l2_sql('q.qe')} AS ld FROM q, cb c
+)"""
+
+
+def q_embedding_ann_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ADC search with k-means-trained codebooks: the corpus is encoded
+    against the codebooks, the LUT holds each query's distance to every
+    codebook entry. Trained codebooks have lower quantization distortion
+    than the first-KSUB rows, hence higher recall (BENCH/BASELINE.md
+    "Dominated ANN variants")."""
+    from pyspark.sql.window import Window
+
+    books = train_pq_codebooks(sf_dir)
+    emb = load(spark, sf_dir, "embeddings")
+    codes = _pq_encode_with(emb, books).select("vec_id", "m", "code")
+    q = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+        F.col("vec_id").alias("query_id"), _km_eq_col().alias("qe")
+    )
     scored = (
-        codes.join(F.broadcast(lut), ["m", "code"])
+        codes.join(_adc_lut(spark, q, books), ["m", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("ld").alias("adc_d"))
@@ -1023,46 +1074,11 @@ def q_embedding_ann_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_embedding_adc_trained(sf_dir: str) -> str:
     """Oracle generated from the SAME trained codebooks as the Spark
     plan (callable QuerySpec.sql — data-derived literals, resolved at
-    the driver's compare scale). Codebooks are (m, code, 8-dim BIGINT
-    list) rows, so the distance lambdas index cq[k] directly instead of
-    slicing a 64-dim vector."""
-    books = train_pq_codebooks(sf_dir)
-    rows = ", ".join(
-        "({}, {}, [{}])".format(m, c, ", ".join(str(v) for v in books[m][c]))
-        for m in range(PQ_M)
-        for c in range(PQ_KSUB)
-    )
+    the driver's compare scale)."""
     return f"""
-WITH base AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * {KM_Q}) AS BIGINT)) AS eq
-  FROM embeddings
-), cb AS (
-  SELECT * FROM (VALUES {rows}) v(m, code, cq)
-), pqscored AS (
-  SELECT b.vec_id, c.m, c.code,
-         list_reduce(
-           list_transform(range(1, {PQ_DSUB} + 1),
-                          k -> (b.eq[c.m * {PQ_DSUB} + k] - c.cq[k]) ** 2),
-           (x, y) -> x + y) AS d_q
-  FROM base b, cb c
-), codes AS (
-  SELECT vec_id, m, code FROM (
-    SELECT vec_id, m, code,
-           row_number() OVER (PARTITION BY vec_id, m ORDER BY d_q, code) AS rk
-    FROM pqscored
-  ) WHERE rk = 1
-), q AS (
+WITH {_pq_codes_sql(_trained_cb_sql(sf_dir))}, q AS (
   SELECT vec_id AS query_id, eq AS qe FROM base WHERE vec_id % {QUERY_MOD} = 0
-), lut AS (
-  SELECT q.query_id, c.m, c.code,
-         list_reduce(
-           list_transform(range(1, {PQ_DSUB} + 1),
-                          k -> (q.qe[c.m * {PQ_DSUB} + k] - c.cq[k]) ** 2),
-           (x, y) -> x + y) AS ld
-  FROM q, cb c
-), s AS (
+), {_LUT_SQL}, s AS (
   SELECT l.query_id, cd.vec_id AS neighbor_id, CAST(sum(l.ld) AS BIGINT) AS adc_d
   FROM codes cd JOIN lut l ON l.m = cd.m AND l.code = cd.code
   WHERE cd.vec_id != l.query_id
@@ -1101,57 +1117,23 @@ def _ivfadc_scored(
     books: list[list[list[int]]],
 ) -> DataFrame:
     """(query_id, neighbor_id, adc_d) ADC distances restricted to the
-    IVF-probed lists. The broadcast centroid arrays are doubles: trained
-    centroid components are 6-dp doubles, not the table's float32."""
-    from pyspark.sql.window import Window
-
+    IVF-probed lists (_probe) and scored through the query LUT
+    (_adc_lut)."""
     emb = load(spark, sf_dir, "embeddings")
     # id-only inverted lists: (cid, vec_id); the embedding never shuffles
     lists = ivf_lists(emb, centroids).select("cid", "vec_id")
     codes = _pq_encode_with(emb, books).select("vec_id", "m", "code")
-    cb = spark.createDataFrame(
-        [(m, c, books[m][c]) for m in range(PQ_M) for c in range(PQ_KSUB)],
-        "m int, code int, cq array<long>",
-    )
-    cent = F.broadcast(
-        spark.createDataFrame(
-            [(cid, ce) for cid, ce in centroids],
-            "cid int, ce array<double>",
-        )
-    )
     q = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qemb"),
         _km_eq_col().alias("qe"),
     )
-    # probe: nearest IVF_NPROBE centroids per query by the same rounded
-    # cosine + tie rule as _ivf_search's assign (window over the tiny
-    # query set only)
-    pscore = q.join(cent).select(
-        "query_id", "cid", _cos(F.col("qemb"), F.col("ce")).alias("csim")
-    )
-    pw = Window.partitionBy("query_id").orderBy(F.col("csim").desc(), F.col("cid"))
-    probes = (
-        pscore.withColumn("crank", F.row_number().over(pw))
-        .filter(F.col("crank") <= IVF_NPROBE)
-        .select("query_id", "cid")
-    )
-    ld = F.aggregate(
-        F.zip_with(
-            F.slice(F.col("qe"), F.col("m") * PQ_DSUB + 1, PQ_DSUB),
-            F.col("cq"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    lut = q.crossJoin(cb).select("query_id", "m", "code", ld.alias("ld"))
-    cand = probes.join(lists, "cid").filter(
+    cand = _probe(spark, q, centroids).join(lists, "cid").filter(
         F.col("vec_id") != F.col("query_id")
     )
     return (
         cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
+        .join(_adc_lut(spark, q, books), ["query_id", "m", "code"])
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("ld").alias("adc_d"))
     )
@@ -1247,67 +1229,13 @@ def q_embedding_ann_ivfadc_trained_rerank(
 
 def sql_ivfadc_trained_rerank(sf_dir: str) -> str:
     """Callable oracle: the rerank chain with BOTH trained artifacts
-    inlined as VALUES literals (centroids as 6-dp doubles, codebooks as
-    8-dim BIGINT rows indexed cq[k])."""
-    cent_rows = ", ".join(
-        "({}, [{}])".format(cid, ", ".join(repr(v) for v in ce))
-        for cid, ce in train_centroids(sf_dir)
-    )
-    books = train_pq_codebooks(sf_dir)
-    cb_rows = ", ".join(
-        "({}, {}, [{}])".format(m, c, ", ".join(str(v) for v in books[m][c]))
-        for m in range(PQ_M)
-        for c in range(PQ_KSUB)
-    )
+    inlined as VALUES literals."""
     return f"""
-WITH cent AS (
-  SELECT cid, ce FROM (VALUES {cent_rows}) v(cid, ce)
-), cb AS (
-  SELECT * FROM (VALUES {cb_rows}) v(m, code, cq)
-), assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.embedding', 'c.ce')} DESC, c.cid) AS crank
-    FROM embeddings e, cent c
-  ) WHERE crank = 1
-), base AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * {KM_Q}) AS BIGINT)) AS eq
-  FROM embeddings
-), pqscored AS (
-  SELECT b.vec_id, c.m, c.code,
-         list_reduce(
-           list_transform(range(1, {PQ_DSUB} + 1),
-                          k -> (b.eq[c.m * {PQ_DSUB} + k] - c.cq[k]) ** 2),
-           (x, y) -> x + y) AS d_q
-  FROM base b, cb c
-), codes AS (
-  SELECT vec_id, m, code FROM (
-    SELECT vec_id, m, code,
-           row_number() OVER (PARTITION BY vec_id, m ORDER BY d_q, code) AS rk
-    FROM pqscored
-  ) WHERE rk = 1
-), q AS (
+WITH {_assign_sql(sf_dir)}, {_pq_codes_sql(_trained_cb_sql(sf_dir))}, q AS (
   SELECT e.vec_id AS query_id, e.embedding AS qemb, b.eq AS qe
   FROM embeddings e JOIN base b USING (vec_id)
   WHERE e.vec_id % {QUERY_MOD} = 0
-), probes AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY {_cos_sql('q.qemb', 'c.ce')} DESC, c.cid) AS crank
-    FROM q, cent c
-  ) WHERE crank <= {IVF_NPROBE}
-), lut AS (
-  SELECT q.query_id, c.m, c.code,
-         list_reduce(
-           list_transform(range(1, {PQ_DSUB} + 1),
-                          k -> (q.qe[c.m * {PQ_DSUB} + k] - c.cq[k]) ** 2),
-           (x, y) -> x + y) AS ld
-  FROM q, cb c
-), cand AS (
+), {_PROBES_SQL}, {_LUT_SQL}, cand AS (
   SELECT p.query_id, a.vec_id FROM probes p JOIN assign a USING (cid)
   WHERE a.vec_id != p.query_id
 ), s AS (
@@ -1390,24 +1318,10 @@ def q_cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_cluster_label_purity(sf_dir: str) -> str:
-    """Callable oracle: the proven bit-identical assignment CTE (same
-    tiebreak as ivf_assign_col) with trained centroids inlined, purity
-    by integer division."""
-    rows = ", ".join(
-        "({}, [{}])".format(cid, ", ".join(repr(v) for v in ce))
-        for cid, ce in train_centroids(sf_dir)
-    )
+    """Callable oracle: the trained-centroid assignment (_assign_sql),
+    purity by integer division."""
     return f"""
-WITH cent AS (
-  SELECT cid, ce FROM (VALUES {rows}) v(cid, ce)
-), assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.embedding', 'c.ce')} DESC, c.cid) AS crank
-    FROM embeddings e, cent c
-  ) WHERE crank = 1
-), per AS (
+WITH {_assign_sql(sf_dir)}, per AS (
   SELECT a.cid, e.label, count(*) AS n_lab
   FROM assign a JOIN embeddings e USING (vec_id)
   GROUP BY 1, 2

@@ -134,17 +134,38 @@ _OBJ_HEAD = re.compile(rb"(\d+)\s+\d+\s+obj\b")
 _STREAM_KW = re.compile(rb"stream\r?\n")
 _LENGTH = re.compile(rb"/Length\s+(\d+)(\s+\d+\s+R)?")
 _ENDSTREAM_AT = re.compile(rb"\s*endstream")
+_INT_OBJ = re.compile(rb"(\d+)\s+\d+\s+obj\s+(\d+)\s+endobj")
+
+
+def _payload_end(buf: bytes, lo: int, kw: re.Match, int_obj) -> int:
+    """End of the payload of the stream that `kw` (a _STREAM_KW match in
+    `buf`, object head at `lo`) opens: its /Length (direct, or indirect
+    and resolved by `int_obj`) if that lands on `endstream`, else the
+    next `endstream` (kw.end() when there is none)."""
+    ln = _LENGTH.search(buf, lo, kw.start())
+    num = ln and int(ln.group(1))
+    length = ln and (num if ln.group(2) is None else int_obj(num))
+    after = -1 if length is None else kw.end() + length
+    if after < 0 or not _ENDSTREAM_AT.match(buf, after):
+        after = max(buf.find(b"endstream", kw.end()), kw.end())
+    return after
 
 
 def _pdf_objects(data: bytes) -> dict[int, bytes]:
     """num -> body bytes for every `N G obj ... endobj` in the stream.
 
     Stream payloads are binary and may spell `endobj`, so an object
-    holding `stream` is searched for `endobj` only past its payload: the
-    /Length (direct, or an indirect integer object) must land on
-    `endstream`; when it is missing, unresolvable or wrong, the search
-    resumes after the next `endstream`."""
+    holding `stream` is searched for `endobj` only past its payload
+    (_payload_end; an indirect /Length resolves through the file's
+    `N G obj <int> endobj` objects)."""
     int_objs = None  # num -> value of `N G obj <int> endobj`, built on demand
+
+    def int_obj(num: int) -> int | None:
+        nonlocal int_objs
+        if int_objs is None:
+            int_objs = {int(a): int(b) for a, b in _INT_OBJ.findall(data)}
+        return int_objs.get(num)
+
     out = {}
     pos = 0
     while (m := _OBJ_HEAD.search(data, pos)) is not None:
@@ -154,23 +175,7 @@ def _pdf_objects(data: bytes) -> dict[int, bytes]:
             break
         kw = _STREAM_KW.search(data, start, end)
         if kw is not None:
-            ln = _LENGTH.search(data, start, kw.start())
-            length = None
-            if ln is not None and ln.group(2) is None:
-                length = int(ln.group(1))
-            elif ln is not None:
-                if int_objs is None:
-                    int_objs = {
-                        int(a): int(b)
-                        for a, b in re.findall(
-                            rb"(\d+)\s+\d+\s+obj\s+(\d+)\s+endobj", data
-                        )
-                    }
-                length = int_objs.get(int(ln.group(1)))
-            after = -1 if length is None else kw.end() + length
-            if after < 0 or not _ENDSTREAM_AT.match(data, after):
-                after = max(data.find(b"endstream", kw.end()), kw.end())
-            end = data.find(b"endobj", after)
+            end = data.find(b"endobj", _payload_end(data, start, kw, int_obj))
             if end < 0:
                 break
         out[int(m.group(1))] = data[start:end]
@@ -186,28 +191,20 @@ def _pdf_ref(body: bytes, key: bytes) -> int | None:
 def _pdf_stream(
     body: bytes, objects: dict[int, bytes] | None = None
 ) -> bytes | None:
-    """Raw stream payload.  /Length may be direct, an indirect reference
-    (resolved through `objects` when given — the form most real-world
-    writers emit for compressed streams), or absent, in which case the
-    payload is everything up to the object's own `endstream` (safe:
-    `body` is already scoped to one `obj..endobj` span)."""
-    start = re.search(rb"stream\r?\n", body)
-    if start is None:
+    """Raw stream payload of one `obj..endobj` body, bounded by the same
+    rule as the object scan (_payload_end). An indirect /Length — the
+    form most real-world writers emit for compressed streams — resolves
+    through `objects` when given."""
+    kw = _STREAM_KW.search(body)
+    if kw is None:
         return None
-    s = start.end()
-    head = body[: start.start()]
-    ind = re.search(rb"/Length\s+(\d+)\s+\d+\s+R", head)
-    if ind is not None and objects is not None:
-        ref_body = objects.get(int(ind.group(1)), b"")
-        num = re.search(rb"(\d+)", ref_body)
-        if num is not None:
-            return body[s : s + int(num.group(1))]
-    elif ind is None:
-        direct = re.search(rb"/Length\s+(\d+)", head)
-        if direct is not None:
-            return body[s : s + int(direct.group(1))]
-    end = body.rfind(b"endstream")
-    return body[s:end] if end > s else None
+
+    def int_obj(num: int) -> int | None:
+        m = re.fullmatch(rb"\s+(\d+)\s+", (objects or {}).get(num, b""))
+        return int(m.group(1)) if m else None
+
+    end = _payload_end(body, 0, kw, int_obj)
+    return body[kw.end() : end] if end > kw.end() else None
 
 
 def _stream_filters(body: bytes) -> list[bytes]:

@@ -3,10 +3,11 @@
 Runs every ``__spark_entry__.queries()`` entry against its
 ``oracle_sql()`` DuckDB twin at the driver's compare scale (sf0.01) and
 records a CORRECTNESS_r*-shaped row per query: row count, sorted-schema,
-and order-insensitive value-hash matches. Exists because the r4 driver
-snapshot predates the late-round registry growth (50 of 77 entries) —
-this makes the evidence durable at HEAD until the next driver sweep
-(VERDICT r4, "Next round" #1).
+and order-insensitive value-hash matches, plus both value hashes
+(``spark_hash``, ``oracle_hash``) so two replays can be diffed per
+query. Exists because the r4 driver snapshot predates the late-round
+registry growth (50 of 77 entries) — this makes the evidence durable at
+HEAD until the next driver sweep (VERDICT r4, "Next round" #1).
 
 Usage::
 
@@ -80,6 +81,8 @@ def main() -> int:
             "hash_match": None,
             "spark_rows": None,
             "oracle_rows": None,
+            "spark_hash": None,
+            "oracle_hash": None,
             "err": None,
         }
         try:
@@ -89,6 +92,7 @@ def main() -> int:
                 scols, sdf.collect(), lambda r, c: r[c]
             )
             row["spark_rows"] = n_s
+            row["spark_hash"] = h_s
             sql = oracles.get(name)
             if sql is None:
                 # nothing to compare against: neither green nor failed
@@ -103,6 +107,7 @@ def main() -> int:
                     ocols, orows, lambda r, c: r[idx[c]]
                 )
                 row["oracle_rows"] = n_o
+                row["oracle_hash"] = h_o
                 row["rows_match"] = n_s == n_o
                 row["schema_match"] = scols == ocols
                 row["hash_match"] = row["schema_match"] and h_s == h_o

@@ -863,21 +863,18 @@ def test_leakage_safe_split_keeps_near_dup_pairs_together(spark):
 
 
 def test_kmeans_trainer_oracle_and_convergence(spark):
-    """The distributed k-means trainer must (a) hash-match the DuckDB
-    replay of the whole training run — pure SQL over the table, zero
-    data-derived literals, so bit-parity of every iteration is what is
-    being proven — and (b) actually train: mean cosine to the assigned
-    centroid strictly improves over the first-K init, and every vector
-    is counted in exactly one list."""
+    """The distributed k-means trainer must actually train: mean cosine
+    to the assigned centroid strictly improves over the first-K init,
+    and every vector is counted in exactly one list. Its hash match
+    against the DuckDB replay of the whole training run (pure SQL over
+    the table, zero data-derived literals) is
+    test_query_matches_oracle[ivf_train_kmeans]."""
     import numpy as np
     import pyarrow.parquet as pq
 
     from ocr_spark.functions import similarity as S
 
     sf = "/root/testdata/sf0.001"
-    r = compare_query(spark, sf, "ivf_train_kmeans", S.QUERIES["ivf_train_kmeans"])
-    assert r["ok"], r["detail"]
-
     out = S.q_ivf_train_kmeans(spark, sf).collect()
     tbl = pq.read_table(sf + "/embeddings.parquet")
     emb = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
@@ -899,17 +896,14 @@ def test_kmeans_trainer_oracle_and_convergence(spark):
 def test_bm25_rare_term_dominates(spark):
     """BM25 semantics on the fixture corpus: 'dup' is ~30x rarer than the
     other query terms, so its idf dominates — every doc containing 'dup'
-    must outrank every doc that merely matches the common terms, and the
-    gate itself must hash-match the oracle."""
+    must outrank every doc that merely matches the common terms. The
+    oracle hash match is test_query_matches_oracle[text_bm25]."""
     from pyspark.sql import functions as F
 
     from ocr_spark.functions import load
-    from ocr_spark.functions.textops import BM25_TOPK, QUERIES, q_text_bm25
+    from ocr_spark.functions.textops import BM25_TOPK, q_text_bm25
 
     sf = "/root/testdata/sf0.001"
-    r = compare_query(spark, sf, "text_bm25", QUERIES["text_bm25"])
-    assert r["ok"], r["detail"]
-
     top = q_text_bm25(spark, sf).collect()
     assert len(top) == BM25_TOPK
     assert [row["rank"] for row in top] == list(range(1, BM25_TOPK + 1))
@@ -970,17 +964,15 @@ def test_substring_rewrite_removes_all_but_canonical(spark, tmp_path):
 
 
 def test_media_video_frames_real_and_typed_paths(spark):
-    """The video driver gate: hash-exact vs golden, AND the three row
-    shapes are all present — multi-frame real decodes at the every-Nth
-    stride, the planted non-RIFF payload as a single stand-in row, the
-    planted truncated AVI dropped entirely."""
-    from ocr_spark.functions.extractops import QUERIES, q_media_video_frames
+    """The video driver gate: the three row shapes are all present —
+    multi-frame real decodes at the every-Nth stride, the planted
+    non-RIFF payload as a single stand-in row, the planted truncated AVI
+    dropped entirely. The hash match against the golden table is
+    test_query_matches_oracle[media_video_frames]."""
+    from ocr_spark.functions.extractops import q_media_video_frames
     from ocr_spark.functions.golden import VIDEO_EVERY_N
 
     sf = "/root/testdata/sf0.001"
-    r = compare_query(spark, sf, "media_video_frames", QUERIES["media_video_frames"])
-    assert r["ok"], r["detail"]
-
     rows = q_media_video_frames(spark, sf).collect()
     by_ref = {}
     for row in rows:
@@ -994,18 +986,14 @@ def test_media_video_frames_real_and_typed_paths(spark):
 
 
 def test_media_audio_features_typed_paths(spark):
-    """The audio driver gate: hash-exact vs golden, plus the planted
-    shapes — stereo mono-averages to the exact mean amplitude, the
-    zero-frame WAV reports rms 0.0 (never NaN), the non-audio payload
-    becomes a typed decode_ok=false row."""
-    from ocr_spark.functions.extractops import QUERIES, q_media_audio_features
+    """The audio driver gate's planted shapes: stereo mono-averages to
+    the exact mean amplitude, the zero-frame WAV reports rms 0.0 (never
+    NaN), the non-audio payload becomes a typed decode_ok=false row. The
+    hash match against the golden table is
+    test_query_matches_oracle[media_audio_features]."""
+    from ocr_spark.functions.extractops import q_media_audio_features
 
     sf = "/root/testdata/sf0.001"
-    r = compare_query(
-        spark, sf, "media_audio_features", QUERIES["media_audio_features"]
-    )
-    assert r["ok"], r["detail"]
-
     rows = {x["media_ref"]: x for x in q_media_audio_features(spark, sf).collect()}
     assert rows["aud_empty"]["decode_ok"] and rows["aud_empty"]["rms"] == 0.0
     assert not rows["aud_bad"]["decode_ok"]
@@ -1016,19 +1004,14 @@ def test_media_audio_features_typed_paths(spark):
 
 
 def test_pq_encode_oracle_and_self_codes(spark):
-    """PQ sanity: hash-exact vs the oracle, every vector emits exactly
-    PQ_M sub-codes, and the codebook vectors themselves (vec_id <
-    PQ_KSUB) encode to their own code with zero distance in every
-    subspace — the integer-exact analogue of 'reconstruction error of a
-    codeword is 0'."""
+    """PQ sanity: every vector emits exactly PQ_M sub-codes, and the
+    codebook vectors themselves (vec_id < PQ_KSUB) encode to their own
+    code with zero distance in every subspace — the integer-exact
+    analogue of 'reconstruction error of a codeword is 0'. The oracle
+    hash match is test_query_matches_oracle[embedding_pq_encode]."""
     from ocr_spark.functions import similarity as S
 
     sf = "/root/testdata/sf0.001"
-    r = compare_query(
-        spark, sf, "embedding_pq_encode", S.QUERIES["embedding_pq_encode"]
-    )
-    assert r["ok"], r["detail"]
-
     rows = S.q_embedding_pq_encode(spark, sf).collect()
     per_vec = {}
     for row in rows:
@@ -1040,20 +1023,14 @@ def test_pq_encode_oracle_and_self_codes(spark):
 
 
 def test_adc_oracle_and_recall_positive(spark):
-    """ADC over PQ codes: hash-exact vs the oracle, each query gets
-    exactly ADC_TOPK ranked neighbors, and the compressed-domain ranking
-    retrieves a nonzero fraction of the exact-cosine top-k (PQ on
-    i.i.d. vectors is lossy — the gate pins the machinery, bench
-    reports the recall)."""
+    """ADC over PQ codes: each query gets exactly ADC_TOPK ranked
+    neighbors, and the compressed-domain ranking retrieves a nonzero
+    fraction of the exact-cosine top-k (PQ on i.i.d. vectors is lossy —
+    the gate pins the machinery, bench reports the recall). The oracle
+    hash match is test_query_matches_oracle[embedding_ann_adc_trained]."""
     from ocr_spark.functions import similarity as S
 
     sf = "/root/testdata/sf0.001"
-    r = compare_query(
-        spark, sf, "embedding_ann_adc_trained",
-        S.QUERIES["embedding_ann_adc_trained"],
-    )
-    assert r["ok"], r["detail"]
-
     adc = S.q_embedding_ann_adc_trained(spark, sf).collect()
     per_q = {}
     for row in adc:

@@ -323,13 +323,15 @@ def test_walker_render_bounds_hostile_dimensions():
         _walk_pdf_render(hostile, 300)
 
 
-@pytest.mark.parametrize("length", ["direct", "indirect", "missing"])
+@pytest.mark.parametrize("length", ["direct", "indirect", "missing", "wrong"])
 def test_stream_payload_spelling_endobj_renders(length):
     """An uncompressed image stream whose first row spells `endobj` in
     pixel values renders exactly like the Flate encoding of the same
     page: the object scan skips the payload by its /Length (direct or
-    indirect), or past `endstream` without one, instead of ending the
-    object at the first `endobj` inside the payload."""
+    indirect), or past `endstream` without one or with a /Length that
+    does not land on it, instead of ending the object at the first
+    `endobj` inside the payload. The payload slice follows the same
+    rule, so a wrong /Length does not cut the image short."""
     from ocr_spark.pdfio import encode_image_pdf
 
     page = render_page(["endobj row"], 200, 80, margin=8)
@@ -342,6 +344,9 @@ def test_stream_payload_spelling_endobj_renders(length):
         data += b"99 0 obj\n%d\nendobj\n" % page.size
     elif length == "missing":
         data = data.replace(head, b"/BitsPerComponent 8 >>")
+    elif length == "wrong":
+        wrong = b"/BitsPerComponent 8 /Length %d >>" % (page.size - 100)
+        data = data.replace(head, wrong)
     want = render_pages(encode_image_pdf([page], compress=True), dpi=72)
     got = render_pages(data, dpi=72)
     assert len(got) == len(want) == 1
