@@ -115,12 +115,9 @@ def _ann_recall(spark, sf_dir: str) -> dict:
     truth = pairs("embedding_cosine_topk")
     out = {
         "k": S.IVF_TOPK,
-        "defaults": {
-            "ivf_k": S.IVF_K, "nprobe": S.IVF_NPROBE, "adc_rerank": S.ADC_RERANK
-        },
+        "defaults": {"ivf_k": S.IVF_K, "nprobe": S.IVF_NPROBE},
     }
-    for name in ("embedding_ann_ivf_trained", "embedding_ann_adc_trained",
-                 "embedding_ann_ivfadc_trained_rerank"):
+    for name in ("embedding_ann_ivf_trained", "embedding_ann_adc_trained"):
         out[name] = round(len(pairs(name) & truth) / len(truth), 3)
     return out
 

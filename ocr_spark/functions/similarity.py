@@ -367,32 +367,6 @@ def ivf_lists(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataF
     )
 
 
-def _probe(
-    spark: SparkSession, q: DataFrame, centroids: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """(query_id, cid): each query's IVF_NPROBE nearest centroids by the
-    rounded cosine of its float vector `qemb`, ties to the lower cid.
-    The centroid table is broadcast and the window shuffles only the
-    (tiny) query set. Its arrays are doubles: trained centroids are 6-dp
-    doubles, which float32 cannot hold."""
-    from pyspark.sql.window import Window
-
-    cent = F.broadcast(
-        spark.createDataFrame(
-            [(cid, ce) for cid, ce in centroids], "cid int, ce array<double>"
-        )
-    )
-    scored = q.join(cent).select(
-        "query_id", "cid", _cos(F.col("qemb"), F.col("ce")).alias("csim")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("csim").desc(), F.col("cid"))
-    return (
-        scored.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= IVF_NPROBE)
-        .select("query_id", "cid")
-    )
-
-
 def _ivf_search(
     spark: SparkSession,
     sf_dir: str,
@@ -400,8 +374,14 @@ def _ivf_search(
 ) -> DataFrame:
     """Shared IVF search body: map-side inverted-list assignment over
     literal centroids (ivf_lists — Exchange-free, plan-test asserted),
-    query-side probe of IVF_NPROBE nearest lists (_probe), exact rerank
-    of only the probed candidates."""
+    query-side probe of IVF_NPROBE nearest lists, exact rerank of only
+    the probed candidates.
+
+    The probe ranks each query's float vector `qemb` against every
+    centroid by rounded cosine, ties to the lower cid. The centroid
+    table is broadcast and its window shuffles only the (tiny) query
+    set. Its arrays are doubles: trained centroids are 6-dp doubles,
+    which float32 cannot hold."""
     from pyspark.sql.window import Window
 
     emb = load(spark, sf_dir, "embeddings")
@@ -411,9 +391,21 @@ def _ivf_search(
         F.col("embedding").alias("qemb"),
         _norm_col(F.col("embedding")).alias("qn"),
     )
+    cent = F.broadcast(
+        spark.createDataFrame(
+            [(cid, ce) for cid, ce in centroids], "cid int, ce array<double>"
+        )
+    )
+    wp = Window.partitionBy("query_id").orderBy(F.col("csim").desc(), F.col("cid"))
+    probes = (
+        q.join(cent)
+        .select("query_id", "cid", _cos(F.col("qemb"), F.col("ce")).alias("csim"))
+        .withColumn("crank", F.row_number().over(wp))
+        .filter(F.col("crank") <= IVF_NPROBE)
+        .select("query_id", "cid")
+    )
     cand = (
-        _probe(spark, q, centroids)
-        .join(lists, "cid")
+        probes.join(lists, "cid")
         .join(q, "query_id")
         .filter(F.col("vec_id") != F.col("query_id"))
     )
@@ -546,7 +538,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _nearest_cent_sql(name: str, key: str, src: str, vec: str, n_keep: int) -> str:
     """CTE `name`: the `n_keep` nearest `cent` centroids of each `src`
     row by the rounded cosine of its `vec`, ties to the lower cid — the
-    oracle of ivf_assign_col (n_keep = 1) and of _probe."""
+    oracle of ivf_assign_col (n_keep = 1) and of _ivf_search's probe."""
     return f"""{name} AS (
   SELECT {key}, cid FROM (
     SELECT s.{key}, c.cid,
@@ -555,10 +547,6 @@ def _nearest_cent_sql(name: str, key: str, src: str, vec: str, n_keep: int) -> s
     FROM {src} s, cent c
   ) WHERE crank <= {n_keep}
 )"""
-
-
-# probes: each query's (q.qemb, the float vector) IVF_NPROBE nearest lists
-_PROBES_SQL = _nearest_cent_sql("probes", "query_id", "q", "qemb", IVF_NPROBE)
 
 
 def _assign_sql(sf_dir: str) -> str:
@@ -583,7 +571,7 @@ def sql_ann_ivf_trained(sf_dir: str) -> str:
 WITH {_assign_sql(sf_dir)}, q AS (
   SELECT vec_id AS query_id, embedding AS qemb
   FROM embeddings WHERE vec_id % {QUERY_MOD} = 0
-), {_PROBES_SQL}, cand AS (
+), {_nearest_cent_sql("probes", "query_id", "q", "qemb", IVF_NPROBE)}, cand AS (
   SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
   FROM probes p JOIN assign a USING (cid)
   WHERE a.vec_id != p.query_id
@@ -991,54 +979,12 @@ def train_pq_codebooks(sf_dir: str) -> list[list[list[int]]]:
 # built by crossing the query frame with a literal codebook relation,
 # then BROADCAST), the per-code join is map-side against it, and the
 # only shuffles are the (query_id, vec_id) distance sum and the
-# per-query top-K window. At the 100 TB design point ADC runs inside
-# IVF-probed lists rather than the whole code table (full IVFADC); the
-# ranking math and the gate are identical either way. Integer-exact end
-# to end — the gate compares exact BIGINTs.
+# per-query top-K window. Integer-exact end to end — the gate compares
+# exact BIGINTs. ADC restricted to IVF-probed lists plus an exact rerank
+# (full IVFADC) was measured dominated by trained IVF on recall, wall
+# and shuffle bytes (BENCH/BASELINE.md "Dominated ANN variants"), so
+# the ladder has no IVFADC rung.
 ADC_TOPK = 5
-
-
-def _adc_lut(
-    spark: SparkSession, q: DataFrame, books: list[list[list[int]]]
-) -> DataFrame:
-    """Broadcast (query_id, m, code, ld): the integer squared L2 from
-    each query's KM_Q-quantized vector `qe`, subspace m, to every
-    codebook entry — the query frame crossed with a literal codebook
-    relation of PQ_M x PQ_KSUB rows."""
-    cb = spark.createDataFrame(
-        [(m, c, books[m][c]) for m in range(PQ_M) for c in range(PQ_KSUB)],
-        "m int, code int, cq array<long>",
-    )
-    ld = F.aggregate(
-        F.zip_with(
-            F.slice(F.col("qe"), F.col("m") * PQ_DSUB + 1, PQ_DSUB),
-            F.col("cq"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    return F.broadcast(
-        q.crossJoin(cb).select("query_id", "m", "code", ld.alias("ld"))
-    )
-
-
-def _trained_cb_sql(sf_dir: str) -> str:
-    """The trained codebooks as (m, code, cq) VALUES rows, cq the
-    PQ_DSUB-long BIGINT subvector (the `cb` query of _pq_codes_sql)."""
-    books = train_pq_codebooks(sf_dir)
-    rows = ", ".join(
-        "({}, {}, [{}])".format(m, c, ", ".join(str(v) for v in books[m][c]))
-        for m in range(PQ_M)
-        for c in range(PQ_KSUB)
-    )
-    return f"SELECT * FROM (VALUES {rows}) v(m, code, cq)"
-
-
-# lut: each query's (q.qe, the quantized vector) distance to every cb entry
-_LUT_SQL = f"""lut AS (
-  SELECT q.query_id, c.m, c.code, {_sub_l2_sql('q.qe')} AS ld FROM q, cb c
-)"""
 
 
 def q_embedding_ann_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1055,8 +1001,24 @@ def q_embedding_ann_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"), _km_eq_col().alias("qe")
     )
+    # the LUT (query_id, m, code, ld): the query frame crossed with a
+    # literal codebook relation of PQ_M x PQ_KSUB rows, broadcast
+    cb = spark.createDataFrame(
+        [(m, c, books[m][c]) for m in range(PQ_M) for c in range(PQ_KSUB)],
+        "m int, code int, cq array<long>",
+    )
+    ld = F.aggregate(
+        F.zip_with(
+            F.slice(F.col("qe"), F.col("m") * PQ_DSUB + 1, PQ_DSUB),
+            F.col("cq"),
+            lambda x, y: (x - y) * (x - y),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    lut = F.broadcast(q.crossJoin(cb).select("query_id", "m", "code", ld.alias("ld")))
     scored = (
-        codes.join(_adc_lut(spark, q, books), ["m", "code"])
+        codes.join(lut, ["m", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("ld").alias("adc_d"))
@@ -1075,10 +1037,18 @@ def sql_embedding_adc_trained(sf_dir: str) -> str:
     """Oracle generated from the SAME trained codebooks as the Spark
     plan (callable QuerySpec.sql — data-derived literals, resolved at
     the driver's compare scale)."""
+    books = train_pq_codebooks(sf_dir)
+    cb_rows = ", ".join(
+        "({}, {}, [{}])".format(m, c, ", ".join(str(v) for v in books[m][c]))
+        for m in range(PQ_M)
+        for c in range(PQ_KSUB)
+    )
     return f"""
-WITH {_pq_codes_sql(_trained_cb_sql(sf_dir))}, q AS (
+WITH {_pq_codes_sql(f"SELECT * FROM (VALUES {cb_rows}) v(m, code, cq)")}, q AS (
   SELECT vec_id AS query_id, eq AS qe FROM base WHERE vec_id % {QUERY_MOD} = 0
-), {_LUT_SQL}, s AS (
+), lut AS (
+  SELECT q.query_id, c.m, c.code, {_sub_l2_sql('q.qe')} AS ld FROM q, cb c
+), s AS (
   SELECT l.query_id, cd.vec_id AS neighbor_id, CAST(sum(l.ld) AS BIGINT) AS adc_d
   FROM codes cd JOIN lut l ON l.m = cd.m AND l.code = cd.code
   WHERE cd.vec_id != l.query_id
@@ -1089,180 +1059,6 @@ SELECT query_id, neighbor_id, rnk, adc_d FROM (
          row_number() OVER (PARTITION BY query_id
                             ORDER BY adc_d, neighbor_id) AS rnk
   FROM s
-) WHERE rnk <= {ADC_TOPK}
-"""
-
-
-# --------------------------------------------------------------------------
-# full IVFADC: ADC ranking restricted to IVF-probed inverted lists
-# --------------------------------------------------------------------------
-
-# The complete Jégou et al. search: the corpus is (inverted list id,
-# PQ codes) — 8 bytes of code + one int per vector, never the raw
-# embedding — queries probe IVF_NPROBE lists and ADC-score only the
-# vectors inside them. 100 TB shapes, composed from the pieces above:
-# list assignment and PQ encode are map-side literal projections (zero
-# Exchange, plan-tested on their standalone queries), the probe is a
-# broadcast K-row centroid table, the LUT is broadcast (n_queries x
-# PQ_M x PQ_KSUB integer rows), and the only corpus shuffles carry
-# (cid/vec_id/m/code) ids. The ADC distances are integer-exact; the
-# oracle inlines the same trained centroids and codebooks as VALUES
-# literals and re-derives lists, codes and LUT from them.
-
-
-def _ivfadc_scored(
-    spark: SparkSession,
-    sf_dir: str,
-    centroids: list[tuple[int, list[float]]],
-    books: list[list[list[int]]],
-) -> DataFrame:
-    """(query_id, neighbor_id, adc_d) ADC distances restricted to the
-    IVF-probed lists (_probe) and scored through the query LUT
-    (_adc_lut)."""
-    emb = load(spark, sf_dir, "embeddings")
-    # id-only inverted lists: (cid, vec_id); the embedding never shuffles
-    lists = ivf_lists(emb, centroids).select("cid", "vec_id")
-    codes = _pq_encode_with(emb, books).select("vec_id", "m", "code")
-    q = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qemb"),
-        _km_eq_col().alias("qe"),
-    )
-    cand = _probe(spark, q, centroids).join(lists, "cid").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    return (
-        cand.join(codes, "vec_id")
-        .join(_adc_lut(spark, q, books), ["query_id", "m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("ld").alias("adc_d"))
-    )
-
-
-# --------------------------------------------------------------------------
-# IVFADC + exact rerank (the "refine" stage: FAISS IndexRefineFlat /
-# Jégou et al. §V-D — ADC shortlists, exact distances re-rank)
-# --------------------------------------------------------------------------
-
-# ADC distances carry quantization distortion, so the true neighbor is
-# often in the ADC top-R but not the ADC top-k. The refinement keeps
-# everything about the IVFADC plan (id-only lists, broadcast LUT, codes
-# 64-bit per vector) and adds ONE bounded step: the per-query ADC
-# shortlist (R = ADC_RERANK rows per query — a window over the already
-# per-query-small candidate set) joins back to the embeddings table for
-# its R raw vectors and re-ranks by exact cosine. 100 TB shape: the
-# rerank join touches n_queries * R embedding rows by vec_id (point
-# lookups on the sorted/bucketed table), the query side broadcasts, and
-# the shortlist shuffle carries only (query_id, neighbor_id). Recall
-# approaches exact-IVF at the same nprobe while the scan stays PQ-coded.
-# Exact-rerank shortlist depth. Chosen from the measured (R, nprobe)
-# recall-cost curve (BENCH/BASELINE.md, r5 @ sf0.1): at the
-# production probe budget nprobe=8 (1/4 of IVF_K lists), R=100 lifts
-# recall@5 0.455 -> 0.585 over R=50 at equal wall (the rerank is R
-# point lookups per query — negligible either way); R beyond 100 is
-# bounded by what the probed lists contain, so deeper shortlists buy
-# nothing until nprobe rises.
-ADC_RERANK = 100
-
-
-def _rerank_tail(spark: SparkSession, sf_dir: str, scored: DataFrame) -> DataFrame:
-    """ADC top-R shortlist (R = ADC_RERANK) -> exact-cosine re-rank."""
-    from pyspark.sql.window import Window
-
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d").asc(), F.col("neighbor_id")
-    )
-    short = (
-        scored.withColumn("srk", F.row_number().over(ws))
-        .filter(F.col("srk") <= ADC_RERANK)
-        .select("query_id", "neighbor_id")
-    )
-    emb = load(spark, sf_dir, "embeddings")
-    nb = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("nemb"),
-        _norm_col(F.col("embedding")).alias("nnorm"),
-    )
-    qv = F.broadcast(
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qemb"),
-            _norm_col(F.col("embedding")).alias("qnorm"),
-        )
-    )
-    re = short.join(nb, "neighbor_id").join(qv, "query_id").select(
-        "query_id",
-        "neighbor_id",
-        _cos_pre(
-            F.col("qemb"), F.col("nemb"), F.col("qnorm"), F.col("nnorm")
-        ).alias("csim"),
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("csim").desc(), F.col("neighbor_id")
-    )
-    return (
-        re.withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= ADC_TOPK)
-        .select("query_id", "neighbor_id", "rnk", "csim")
-    )
-
-
-# --------------------------------------------------------------------------
-# trained IVFADC + rerank: the production configuration
-# --------------------------------------------------------------------------
-
-
-def q_embedding_ann_ivfadc_trained_rerank(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The full production ANN stack in one plan: k-means-trained coarse
-    quantizer (spherical, bounded driver fit) + k-means-trained PQ
-    codebooks + ADC scoring inside the probed lists + exact-cosine
-    rerank of the top-R shortlist. The plan is literal-driven: the
-    first-K/first-KSUB artifacts ran the same plan at lower recall
-    (BENCH/BASELINE.md "Dominated ANN variants")."""
-    scored = _ivfadc_scored(
-        spark, sf_dir, train_centroids(sf_dir), train_pq_codebooks(sf_dir)
-    )
-    return _rerank_tail(spark, sf_dir, scored)
-
-
-def sql_ivfadc_trained_rerank(sf_dir: str) -> str:
-    """Callable oracle: the rerank chain with BOTH trained artifacts
-    inlined as VALUES literals."""
-    return f"""
-WITH {_assign_sql(sf_dir)}, {_pq_codes_sql(_trained_cb_sql(sf_dir))}, q AS (
-  SELECT e.vec_id AS query_id, e.embedding AS qemb, b.eq AS qe
-  FROM embeddings e JOIN base b USING (vec_id)
-  WHERE e.vec_id % {QUERY_MOD} = 0
-), {_PROBES_SQL}, {_LUT_SQL}, cand AS (
-  SELECT p.query_id, a.vec_id FROM probes p JOIN assign a USING (cid)
-  WHERE a.vec_id != p.query_id
-), s AS (
-  SELECT c.query_id, cd.vec_id AS neighbor_id, CAST(sum(l.ld) AS BIGINT) AS adc_d
-  FROM cand c
-  JOIN codes cd ON cd.vec_id = c.vec_id
-  JOIN lut l ON l.query_id = c.query_id AND l.m = cd.m AND l.code = cd.code
-  GROUP BY 1, 2
-), short AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adc_d, neighbor_id) AS srk
-    FROM s
-  ) WHERE srk <= {ADC_RERANK}
-), re AS (
-  SELECT sh.query_id, sh.neighbor_id,
-         {_cos_sql('q.qemb', 'n.embedding')} AS csim
-  FROM short sh
-  JOIN q ON q.query_id = sh.query_id
-  JOIN embeddings n ON n.vec_id = sh.neighbor_id
-)
-SELECT query_id, neighbor_id, rnk, csim FROM (
-  SELECT query_id, neighbor_id, csim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY csim DESC, neighbor_id) AS rnk
-  FROM re
 ) WHERE rnk <= {ADC_TOPK}
 """
 
@@ -1415,9 +1211,6 @@ QUERIES = {
     "embedding_pq_encode": QuerySpec(q_embedding_pq_encode, SQL_EMBEDDING_PQ),
     "embedding_ann_adc_trained": QuerySpec(
         q_embedding_ann_adc_trained, sql_embedding_adc_trained
-    ),
-    "embedding_ann_ivfadc_trained_rerank": QuerySpec(
-        q_embedding_ann_ivfadc_trained_rerank, sql_ivfadc_trained_rerank
     ),
     "embedding_cluster_label_purity": QuerySpec(
         q_cluster_label_purity, sql_cluster_label_purity

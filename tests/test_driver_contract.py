@@ -5,19 +5,16 @@ deterministic."""
 
 from __future__ import annotations
 
-import pytest
-
 from ocr_spark.functions import QuerySpec
 from ocr_spark.functions.compare import compare_query
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-@pytest.mark.parametrize("mode", ["fused"])
-def test_extract_pipeline_matches_golden(spark, mode):
+def test_extract_pipeline_matches_golden(spark):
     import __spark_entry__ as E
 
-    name = f"extract_pipeline_{mode}"
+    name = "extract_pipeline_fused"
     spec = QuerySpec(E.queries()[name], E.oracle_sql()[name])
     r = compare_query(spark, SF_DIR, name, spec)
     assert r["ok"], r["detail"]

@@ -862,20 +862,25 @@ def test_leakage_safe_split_keeps_near_dup_pairs_together(spark):
     assert vals == {"train", "eval"}, vals
 
 
-def test_kmeans_trainer_oracle_and_convergence(spark):
+def test_kmeans_trainer_oracle_and_convergence():
     """The distributed k-means trainer must actually train: mean cosine
     to the assigned centroid strictly improves over the first-K init,
-    and every vector is counted in exactly one list. Its hash match
-    against the DuckDB replay of the whole training run (pure SQL over
-    the table, zero data-derived literals) is
-    test_query_matches_oracle[ivf_train_kmeans]."""
+    and every vector is counted in exactly one list. The rows read here
+    come from the DuckDB replay of the whole training run (pure SQL over
+    the table, zero data-derived literals);
+    test_query_matches_oracle[ivf_train_kmeans] asserts that Spark's
+    trainer returns exactly these rows, so the pair of tests asserts
+    that Spark's trainer converges without running it twice."""
     import numpy as np
     import pyarrow.parquet as pq
 
     from ocr_spark.functions import similarity as S
+    from ocr_spark.functions.compare import duckdb_con
 
     sf = "/root/testdata/sf0.001"
-    out = S.q_ivf_train_kmeans(spark, sf).collect()
+    res = duckdb_con(sf).execute(S.SQL_IVF_TRAIN_KMEANS)
+    cols = [d[0] for d in res.description]
+    out = [dict(zip(cols, r)) for r in res.fetchall()]
     tbl = pq.read_table(sf + "/embeddings.parquet")
     emb = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
     assert sum(row["n_members"] for row in out) // S.DIM == len(emb)

@@ -8,6 +8,8 @@ import io
 import os
 import re
 
+import pytest
+
 
 def _plan(df) -> str:
     buf = io.StringIO()
@@ -470,20 +472,21 @@ def test_range_join_is_bucketed_equi_join(spark):
     assert "HashJoin" in tree or "SortMergeJoin" in tree, plan
 
 
-def test_ivfadc_corpus_joins_are_hash_joins(spark):
-    """Full IVFADC: the only nested-loop joins allowed are the two
-    query-side constant-size crosses (queries x codebook for the LUT,
-    queries x centroids for probes — both broadcast). Every join that
-    touches a corpus-sized frame (lists, codes) must be a hash join;
-    a CartesianProduct anywhere is a regression."""
-    from ocr_spark.functions.similarity import (
-        q_embedding_ann_ivfadc_trained_rerank,
-    )
+@pytest.mark.parametrize(
+    "name", ["embedding_ann_ivf_trained", "embedding_ann_adc_trained"]
+)
+def test_trained_ann_corpus_joins_are_hash_joins(spark, name):
+    """The trained ANN rungs: the only nested-loop join allowed is the
+    one query-side constant-size cross (queries x centroids for the IVF
+    probe, queries x codebook for the ADC LUT — both broadcast). Every
+    join that touches a corpus-sized frame (lists, codes) must be a hash
+    join; a CartesianProduct anywhere is a regression."""
+    from ocr_spark.functions.similarity import QUERIES
 
-    df = q_embedding_ann_ivfadc_trained_rerank(spark, "/root/testdata/sf0.001")
+    df = QUERIES[name].fn(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 2, plan
+    assert plan.count("BroadcastNestedLoopJoin") <= 1, plan
 
 
 def test_funnel_is_single_exchange_window_cascade(spark):

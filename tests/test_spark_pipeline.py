@@ -35,15 +35,14 @@ def assert_equals_oracle(rows_by_doc, oracle_extracted):
         ), doc_id
 
 
-@pytest.mark.parametrize("mode", ["fused"])
-def test_pipeline_matches_oracle(spark, corpus_dir, oracle_extracted, mode):
+def test_pipeline_matches_oracle(spark, corpus_dir, oracle_extracted):
     docs, media = read_corpus(spark, corpus_dir)
-    out = run_pipeline(spark, docs, media, run_id=f"t-{mode}", span_partitions=16)
+    out = run_pipeline(spark, docs, media, run_id="t-fused", span_partitions=16)
     rows = {r["doc_id"]: r for r in out.collect()}
     assert_equals_oracle(rows, oracle_extracted)
     # lineage is attached and run-scoped
     any_row = next(iter(rows.values()))
-    assert any_row["lineage"]["run_id"] == f"t-{mode}"
+    assert any_row["lineage"]["run_id"] == "t-fused"
     assert any_row["lineage"]["attempt"] == 1
 
 
@@ -153,8 +152,7 @@ def test_empty_documents_input(spark, corpus_dir):
     assert out.count() == 0
 
 
-@pytest.mark.parametrize("mode", ["fused"])
-def test_profile_qari_rtl(spark, oracle_extracted, mode):
+def test_profile_qari_rtl(spark, oracle_extracted):
     """The RTL/qari profile flows through both sides identically."""
     from ocr_spark.core import process_document
     from ocr_spark.fixtures import build_corpus
@@ -186,7 +184,7 @@ def test_profile_qari_rtl(spark, oracle_extracted, mode):
         schema=MEDIA_SCHEMA,
     )
     out = run_pipeline(
-        spark, docs_df, media_df, profile="qari", run_id=f"qari-{mode}",
+        spark, docs_df, media_df, profile="qari", run_id="qari-fused",
         span_partitions=8,
     )
     rows = {r["doc_id"]: r for r in out.collect()}
