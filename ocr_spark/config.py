@@ -14,7 +14,7 @@ Spark executors via closure capture:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 
 @dataclass(frozen=True)
@@ -125,8 +125,3 @@ def get_profile(name: str) -> EngineProfile:
     Mirrors Settings.get_engine_config (/root/reference/app/config.py:120-131).
     """
     return PROFILES.get(name, _DEFAULT)
-
-
-def with_overrides(profile: EngineProfile, **pre_overrides) -> EngineProfile:
-    """Return a profile with preprocess fields overridden (test helper)."""
-    return replace(profile, preprocess=replace(profile.preprocess, **pre_overrides))

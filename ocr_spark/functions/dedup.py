@@ -20,10 +20,18 @@ pairs, then exact Jaccard over distinct shingles confirms.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocr_spark.functions import QuerySpec, load
+from ocr_spark.functions.textops import (
+    NORM_HASH_SQL,
+    SQL_QUALITY,
+    _ws_tokens,
+    _ws_tokens_sql,
+    norm_hash_col,
+    q_quality,
+)
 
 MINHASH_H = 12  # hash functions
 MINHASH_R = 3  # rows per band
@@ -46,8 +54,6 @@ SIMHASH_BANDS = SIMHASH_BITS // SIMHASH_BAND_BITS  # 4 tables
 SIMHASH_BAND_CAP = 64
 SIMHASH_HAMMING_MAX = 3  # near-dup threshold (Manku: k=3 on 64 bits)
 
-_NORM = ("lower(text)", lambda c: F.lower(c))
-
 
 def _seeded_md5(prefix: str):
     """element -> md5(prefix || element) lambda for F.transform.
@@ -63,15 +69,8 @@ def _seeded_md5(prefix: str):
     return lambda s: F.md5(F.concat(F.lit(prefix), s).cast("binary"))
 
 
-def _tokens_col():
-    return F.filter(F.split(F.lower(F.col("text")), "\\s+"), lambda w: w != F.lit(""))
-
-
-_TOKENS_SQL = "list_filter(string_split_regex(lower(text), '\\s+'), w -> w != '')"
-
-
 def _shingles_col():
-    toks = _tokens_col()
+    toks = _ws_tokens(F.lower(F.col("text")))
     n = F.size(toks)
     grams = F.transform(
         F.sequence(F.lit(1), n - (SHINGLE_W - 1)),
@@ -84,30 +83,12 @@ def _shingles_col():
     )
 
 
-_SHINGLES_SQL = f"""list_distinct(
-  CASE WHEN len({_TOKENS_SQL}) >= {SHINGLE_W}
-       THEN list_transform(range(1, len({_TOKENS_SQL}) - {SHINGLE_W - 2}),
-                           i -> {_TOKENS_SQL}[i] || ' ' || {_TOKENS_SQL}[i+1] || ' ' || {_TOKENS_SQL}[i+2])
-       ELSE [array_to_string({_TOKENS_SQL}, ' ')]
-  END)"""
+_TOKENS_SQL = _ws_tokens_sql("lower(text)")
 
 
 # --------------------------------------------------------------------------
 # exact dedup
 # --------------------------------------------------------------------------
-
-
-def norm_hash_col() -> "F.Column":
-    """Normalized-content hash shared by batch dedup_exact, the Jaccard
-    blocker, and the Structured Streaming dedup twin — one definition so
-    a backfill batch job and the live stream can never disagree on what
-    counts as a duplicate."""
-    return F.md5(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " ")).cast("binary")
-    )
-
-
-NORM_HASH_SQL = "md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))"
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,8 +135,6 @@ def _incr_split_col() -> "F.Column":
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load(spark, sf_dir, "documents")
     inc = docs.filter(_incr_split_col()).select(
         "doc_id", norm_hash_col().alias("norm_hash")
@@ -217,6 +196,8 @@ def q_dedup_exact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
+    from ocr_spark.spark.streaming import _keep_first_arrivals, _parquet_sink
+
     tmp = tempfile.mkdtemp(prefix="ocr_spark_stream_dedup_")
     # the file stream source lists a DIRECTORY; testdata ships a single
     # parquet file, so expose it through a symlink (read-only input)
@@ -233,20 +214,10 @@ def q_dedup_exact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # row whose event time IS the watermark is dropped as expired —
         # doc_id 0 would silently vanish if the clock started at epoch
         .withColumn("ts", F.timestamp_seconds(F.col("doc_id") + F.lit(86400)))
-        .withWatermark("ts", "30 minutes")
-        .withColumn("norm_hash", norm_hash_col())
-        .dropDuplicatesWithinWatermark(["norm_hash"])
-        .select("norm_hash")
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", f"{tmp}/out")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    kept = _keep_first_arrivals(stream, "30 minutes").select("norm_hash")
+    sink = _parquet_sink(kept, f"{tmp}/out", f"{tmp}/ckpt", available_now=True)
+    sink.start().awaitTermination()
     return spark.read.parquet(f"{tmp}/out").select("norm_hash").distinct()
 
 
@@ -259,6 +230,86 @@ FROM documents
 # --------------------------------------------------------------------------
 # MinHash + LSH banding
 # --------------------------------------------------------------------------
+
+# lane split (shared by MinHash-LSH and the Jaccard band prefilter):
+# each md5 hex digest yields _MD5_LANES independent 32-bit (8-hex)
+# minhash lanes, so H signatures need only H/4 md5 passes over the
+# token arrays instead of H — md5 is the dominant cost of every
+# signature projection (measured 3-4x on the sf0.1 suite). 32-bit
+# lanes are ample for minhash over ~10^3-element token sets.
+_MD5_LANES = 4
+MINHASH_SEEDS = ("mh0|", "mh1|", "mh2|")  # MINHASH_H=12 -> 3 passes
+
+
+def _lane_col(hashed_col: str, lane: int) -> "F.Column":
+    def slice_lane(h):  # factory-scoped: keeps the transform lambda unary
+        return F.substring(h, 1 + 8 * lane, 8)
+
+    return F.array_min(F.transform(F.col(hashed_col), slice_lane))
+
+
+def _minhash_bands(
+    df: DataFrame, grams: str, seeds: tuple[str, ...], r: int, b: int
+) -> DataFrame:
+    """`df` with one row per LSH band: its columns, the lane-split
+    signatures sig{s*4+lane} (min over `grams` of hex lane `lane` of
+    md5(seeds[s] || gram)), and (band_id, band_val), band_val being
+    the md5 of the band's R '|'-joined signatures. The md5 arrays get
+    their own projection, so each seed hashes the grams once."""
+    hashed = df.select(
+        "*",
+        *[
+            F.transform(grams, _seeded_md5(seed)).alias(f"_mh{s}")
+            for s, seed in enumerate(seeds)
+        ],
+    )
+    sig_names = [f"sig{i}" for i in range(len(seeds) * _MD5_LANES)]
+    sigs = hashed.select(
+        *df.columns,
+        *[
+            _lane_col(f"_mh{s}", lane).alias(f"sig{s * _MD5_LANES + lane}")
+            for s in range(len(seeds))
+            for lane in range(_MD5_LANES)
+        ],
+    )
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("band_id"),
+                F.md5(
+                    F.concat_ws("|", *sig_names[i * r : (i + 1) * r]).cast("binary")
+                ).alias("band_val"),
+            )
+            for i in range(b)
+        ]
+    )
+    return sigs.select("*", F.explode(bands).alias("_band")).select(
+        *df.columns, *sig_names, "_band.band_id", "_band.band_val"
+    )
+
+
+def _minhash_bands_sql(
+    src: str, keys: str, grams: str, seeds: tuple[str, ...], r: int, b: int
+) -> str:
+    """DuckDB twin of _minhash_bands: (keys, band_id, band_val) rows
+    over the FROM clause `src`."""
+    hashed = ", ".join(
+        f"list_transform({grams}, g -> md5('{seed}' || g)) AS mh{s}"
+        for s, seed in enumerate(seeds)
+    )
+    sigs = [
+        f"list_min(list_transform(mh{s}, h -> substr(h, {1 + 8 * lane}, 8)))"
+        for s in range(len(seeds))
+        for lane in range(_MD5_LANES)
+    ]
+    band_rows = ", ".join(
+        "{{'band_id': {i}, 'band_val': md5({parts})}}".format(
+            i=i, parts=" || '|' || ".join(sigs[i * r : (i + 1) * r])
+        )
+        for i in range(b)
+    )
+    return f"""SELECT {keys}, u.band_id AS band_id, u.band_val AS band_val
+  FROM (SELECT {keys}, {hashed} FROM {src}), unnest([{band_rows}]) AS t(u)"""
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,40 +328,12 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run (same pattern as q_dedup_embedding's bucket frame; at
     # production scale swap for persist/durable checkpoint)
     sh = docs.select("doc_id", _shingles_col().alias("shingles")).localCheckpoint()
-    # lane-split signatures (see _MD5_LANES): sig[s*4+lane] = min over
-    # shingles of hex lane `lane` of md5(seed_s || shingle) — 3 md5
-    # passes instead of 12, materialized once in their own projection
-    hashed = sh.select(
-        "doc_id",
-        "shingles",
-        *[
-            F.transform("shingles", _seeded_md5(seed)).alias(f"mh{s}")
-            for s, seed in enumerate(MINHASH_SEEDS)
-        ],
-    )
-    sigs = [
-        _lane_col(f"mh{s}", lane).alias(f"sig{s * _MD5_LANES + lane}")
-        for s in range(len(MINHASH_SEEDS))
-        for lane in range(_MD5_LANES)
-    ]
-    sig_df = hashed.select("doc_id", "shingles", *sigs)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.col(f"sig{b * MINHASH_R + r}") for r in range(MINHASH_R)]
-                ).cast("binary")
-            ).alias("band_val"),
-        )
-        for b in range(MINHASH_B)
-    ]
     # bands carry only (doc_id, band) — the shingle arrays stay out of
     # the self-join shuffle and come back via two joins on the (tiny)
     # candidate-pair set, which AQE broadcasts
-    bands = sig_df.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_val")
+    bands = _minhash_bands(
+        sh, "shingles", MINHASH_SEEDS, MINHASH_R, MINHASH_B
+    ).select("doc_id", "band_id", "band_val")
 
     a = bands.alias("a")
     b = bands.alias("b")
@@ -337,41 +360,23 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_sql() -> str:
-    # lane-split, mirroring q_dedup_minhash: sig[s*4+lane] = min over
-    # shingles of hex lane `lane` of md5(seed_s || shingle)
-    hashed_cols = ",\n         ".join(
-        f"list_transform(shingles, s -> md5('{seed}' || s)) AS mh{s}"
-        for s, seed in enumerate(MINHASH_SEEDS)
+    bands = _minhash_bands_sql(
+        "sh", "doc_id, shingles", "shingles", MINHASH_SEEDS, MINHASH_R, MINHASH_B
     )
-    sig_cols = ",\n         ".join(
-        "list_min(list_transform(mh{s}, h -> substr(h, {start}, 8))) "
-        "AS sig{i}".format(s=s, start=1 + 8 * lane, i=s * _MD5_LANES + lane)
-        for s in range(len(MINHASH_SEEDS))
-        for lane in range(_MD5_LANES)
-    )
-    band_rows = ", ".join(
-        "{{'band_id': {b}, 'band_val': md5({parts})}}".format(
-            b=b,
-            parts=" || '|' || ".join(
-                f"sig{b * MINHASH_R + r}" for r in range(MINHASH_R)
-            ),
-        )
-        for b in range(MINHASH_B)
-    )
+    # shingles read the tokens from their own CTE: inlined into the
+    # lambda, the split re-runs per shingle (31x slower at sf0.1)
     return f"""
-WITH sh AS (
-  SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents
-), hashed AS (
-  SELECT doc_id, shingles,
-         {hashed_cols}
-  FROM sh
-), sig AS (
-  SELECT doc_id, shingles,
-         {sig_cols}
-  FROM hashed
+WITH tok AS (
+  SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents
+), sh AS (
+  SELECT doc_id, list_distinct(
+    CASE WHEN len(toks) >= {SHINGLE_W}
+         THEN list_transform(range(1, len(toks) - {SHINGLE_W - 2}),
+                             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
+         ELSE [array_to_string(toks, ' ')]
+    END) AS shingles FROM tok
 ), bands AS (
-  SELECT doc_id, shingles, u.band_id AS band_id, u.band_val AS band_val
-  FROM sig, unnest([{band_rows}]) AS t(u)
+  {bands}
 ), pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          any_value(a.shingles) AS sh_a, any_value(b.shingles) AS sh_b
@@ -410,47 +415,7 @@ JAC_BLOCK_CAP = 64
 JAC_MH_H = 8
 JAC_MH_R = 2
 JAC_MH_B = JAC_MH_H // JAC_MH_R  # 4 bands
-
-
-# lane split (shared by MinHash-LSH and the Jaccard band prefilter):
-# each md5 hex digest yields _MD5_LANES independent 32-bit (8-hex)
-# minhash lanes, so H signatures need only H/4 md5 passes over the
-# token arrays instead of H — md5 is the dominant cost of every
-# signature projection (measured 3-4x on the sf0.1 suite). 32-bit
-# lanes are ample for minhash over ~10^3-element token sets.
-_MD5_LANES = 4
 _JAC_SEEDS = ("jacA|", "jacB|")  # JAC_MH_H=8 -> 2 passes
-MINHASH_SEEDS = ("mh0|", "mh1|", "mh2|")  # MINHASH_H=12 -> 3 passes
-
-
-def _lane_col(hashed_col: str, lane: int) -> "F.Column":
-    def slice_lane(h):  # factory-scoped: keeps the transform lambda unary
-        return F.substring(h, 1 + 8 * lane, 8)
-
-    return F.array_min(F.transform(F.col(hashed_col), slice_lane))
-
-
-def _gram_band_structs() -> "F.Column":
-    """array<struct<band_id,band_val>> of minhash bands over the
-    pre-hashed gram arrays h0/h1 (one per seed in _JAC_SEEDS)."""
-    sigs = [
-        _lane_col(f"h{s}", lane)
-        for s in range(len(_JAC_SEEDS))
-        for lane in range(_MD5_LANES)
-    ]
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        "|", *[sigs[b * JAC_MH_R + r] for r in range(JAC_MH_R)]
-                    ).cast("binary")
-                ).alias("band_val"),
-            )
-            for b in range(JAC_MH_B)
-        ]
-    )
 
 
 def _jac_docs_flagged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -532,23 +497,14 @@ def ngram_jaccard_banded_candidates(t2: DataFrame) -> DataFrame:
     """(doc_a, doc_b) candidates touching a big block: band-agreeing
     pairs only. Bands shuffle (doc_id, band) rows — never grams; the
     candidate set rejoins grams afterwards (minhash-style)."""
-    hashed = t2.filter(F.col("affected")).select(
-        "doc_id",
-        "source",
-        "lb",
-        "is_big",
-        *[
-            F.transform("grams", _seeded_md5(seed)).alias(f"h{s}")
-            for s, seed in enumerate(_JAC_SEEDS)
-        ],
-    )
-    bands = hashed.select(
-        "doc_id",
-        "source",
-        "lb",
-        "is_big",
-        F.explode(_gram_band_structs()).alias("band"),
-    ).select("doc_id", "source", "lb", "is_big", "band.band_id", "band.band_val")
+    keys = ["doc_id", "source", "lb", "is_big"]
+    bands = _minhash_bands(
+        t2.filter(F.col("affected")).select(*keys, "grams"),
+        "grams",
+        _JAC_SEEDS,
+        JAC_MH_R,
+        JAC_MH_B,
+    ).select(*keys, "band_id", "band_val")
     a = _with_probe(bands).alias("a")
     b = bands.alias("b")
     return (
@@ -637,27 +593,13 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ngram_jaccard_sql() -> str:
-    # lane-split minhash, mirroring _gram_band_structs: signature
-    # s*4+lane = min over grams of hex lane `lane` of md5(seed_s || g)
-    sig_exprs = [
-        "list_min(list_transform(h{s}, h -> substr(h, {start}, 8)))".format(
-            s=s, start=1 + 8 * lane
-        )
-        for s in range(len(_JAC_SEEDS))
-        for lane in range(_MD5_LANES)
-    ]
-    band_rows = ", ".join(
-        "{{'band_id': {b}, 'band_val': md5({parts})}}".format(
-            b=b,
-            parts=" || '|' || ".join(
-                sig_exprs[b * JAC_MH_R + r] for r in range(JAC_MH_R)
-            ),
-        )
-        for b in range(JAC_MH_B)
-    )
-    hashed_cols = ", ".join(
-        f"list_transform(grams, g -> md5('{seed}' || g)) AS h{s}"
-        for s, seed in enumerate(_JAC_SEEDS)
+    bands = _minhash_bands_sql(
+        "t2 WHERE affected",
+        "doc_id, source, lb, is_big",
+        "grams",
+        _JAC_SEEDS,
+        JAC_MH_R,
+        JAC_MH_B,
     )
     return f"""
 WITH t0 AS (
@@ -681,12 +623,8 @@ WITH t0 AS (
          EXISTS (SELECT 1 FROM aff
                  WHERE aff.source = t1.source AND aff.lb = t1.lb) AS affected
   FROM t1
-), hashed AS (
-  SELECT doc_id, source, lb, is_big, {hashed_cols}
-  FROM t2 WHERE affected
 ), bands AS (
-  SELECT doc_id, source, lb, is_big, u.band_id AS band_id, u.band_val AS band_val
-  FROM hashed, unnest([{band_rows}]) AS x(u)
+  {bands}
 ), direct AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          a.grams AS ga, b.grams AS gb, a.ng + b.ng AS n_total
@@ -743,9 +681,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism * 2, "doc_id")
     )
-    toks = docs.select("doc_id", F.explode(_tokens_col()).alias("tok")).select(
-        "doc_id", _tok_hash().alias("h")
-    )
+    toks = docs.select(
+        "doc_id", F.explode(_ws_tokens(F.lower(F.col("text")))).alias("tok")
+    ).select("doc_id", _tok_hash().alias("h"))
     bit_sums = [
         F.sum(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
@@ -789,6 +727,25 @@ FROM s
 """
 
 
+def _cap_buckets(df: DataFrame, keys: list[str], id_col: str, cap: int) -> DataFrame:
+    """The first `cap` rows of each `keys` bucket, ordered by `id_col`:
+    deterministic, so the oracle (_cap_buckets_sql) keeps the same
+    rows. Bounds a degenerate bucket's pairs at C(cap, 2)."""
+    w = Window.partitionBy(*keys).orderBy(id_col)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= cap)
+        .drop("_rn")
+    )
+
+
+def _cap_buckets_sql(src: str, keys: str, id_col: str, cap: int) -> str:
+    return f"""SELECT * EXCLUDE (rn) FROM (
+    SELECT *, row_number() OVER (PARTITION BY {keys} ORDER BY {id_col}) AS rn
+    FROM {src}
+  ) WHERE rn <= {cap}"""
+
+
 def simhash_candidate_bands(sim: DataFrame) -> DataFrame:
     """(doc_id, simhash, band_id, band_val) rows, capped per band bucket.
 
@@ -798,8 +755,6 @@ def simhash_candidate_bands(sim: DataFrame) -> DataFrame:
     survive: a degenerate bucket of 10^6 near-identical docs yields
     C(cap,2) pairs instead of ~5*10^11. The window shuffles only
     (doc_id, simhash) pairs — 16 bytes/row — never text."""
-    from pyspark.sql.window import Window
-
     mask = (1 << SIMHASH_BAND_BITS) - 1
     bands = sim.select(
         "doc_id",
@@ -818,12 +773,7 @@ def simhash_candidate_bands(sim: DataFrame) -> DataFrame:
             )
         ).alias("band"),
     ).select("doc_id", "simhash", "band.band_id", "band.band_val")
-    w = Window.partitionBy("band_id", "band_val").orderBy("doc_id")
-    return (
-        bands.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= SIMHASH_BAND_CAP)
-        .drop("_rn")
-    )
+    return _cap_buckets(bands, ["band_id", "band_val"], "doc_id", SIMHASH_BAND_CAP)
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -865,11 +815,7 @@ WITH sim AS ({inner}), bands AS (
   SELECT doc_id, simhash, u.band_id AS band_id, u.band_val AS band_val
   FROM sim, unnest([{band_rows}]) AS t(u)
 ), capped AS (
-  SELECT doc_id, simhash, band_id, band_val FROM (
-    SELECT *, row_number() OVER (PARTITION BY band_id, band_val
-                                 ORDER BY doc_id) AS rn
-    FROM bands
-  ) WHERE rn <= {SIMHASH_BAND_CAP}
+  {_cap_buckets_sql("bands", "band_id, band_val", "doc_id", SIMHASH_BAND_CAP)}
 )
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        bit_count(xor(a.simhash, b.simhash)) AS hamming
@@ -919,6 +865,42 @@ def emb_dup_hyperplanes(table: int) -> list[list[float]]:
     return planes
 
 
+def _cos_confirm(pairs: DataFrame, emb: DataFrame, a: str, b: str) -> DataFrame:
+    """(a, b, cos_sim): the exact cosine of each id pair in `pairs`,
+    both sides' embeddings re-fetched by key join. Norms are hoisted
+    once per vector (see similarity._norm_col): the confirm join folds
+    1 dot per pair instead of 3 — bit-identical."""
+    from ocr_spark.functions.similarity import _cos_pre, _norm_col
+
+    def side(key: str, vec: str, norm: str) -> DataFrame:
+        return emb.select(
+            F.col("vec_id").alias(key),
+            F.col("embedding").alias(vec),
+            _norm_col(F.col("embedding")).alias(norm),
+        )
+
+    return (
+        pairs.join(side(a, "ea", "na"), a)
+        .join(side(b, "eb", "nb"), b)
+        .select(
+            a,
+            b,
+            _cos_pre(
+                F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
+            ).alias("cos_sim"),
+        )
+    )
+
+
+def _cos_confirm_sql(pairs: str, a: str, b: str) -> str:
+    from ocr_spark.functions.similarity import _cos_sql
+
+    return f"""SELECT c.{a}, c.{b},
+         {_cos_sql('ea.embedding', 'eb.embedding')} AS cos_sim
+  FROM {pairs} c JOIN embeddings ea ON ea.vec_id = c.{a}
+              JOIN embeddings eb ON eb.vec_id = c.{b}"""
+
+
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic near-dup pairs over the embeddings table: multi-table
     hyperplane-LSH candidates (capped buckets), exact-cosine confirm.
@@ -931,9 +913,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashing + capping window run exactly once, and both join sides read
     the materialized id-only frame (VERDICT r3 #4; plan-test asserts
     the candidate subtree contains no embeddings scan)."""
-    from pyspark.sql.window import Window
-
-    from ocr_spark.functions.similarity import _bucket_col, _cos_pre, _norm_col
+    from ocr_spark.functions.similarity import _bucket_col
 
     emb = load(spark, sf_dir, "embeddings")
     parts = [
@@ -947,16 +927,12 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = parts[0]
     for p in parts[1:]:
         buckets = buckets.unionByName(p)
-    w = Window.partitionBy("tbl", "bkt").orderBy("vec_id")
-    capped = (
-        buckets.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= EMB_DUP_BUCKET_CAP)
-        .drop("_rn")
-        # ids-only frame (vec_id, tbl, bkt): cheap to materialize, and
-        # doing so halves the corpus scans + capping windows (the
-        # self-join would otherwise recompute the whole subtree per side)
-        .localCheckpoint()
-    )
+    # ids-only frame (vec_id, tbl, bkt): cheap to materialize, and
+    # doing so halves the corpus scans + capping windows (the self-join
+    # would otherwise recompute the whole subtree per side)
+    capped = _cap_buckets(
+        buckets, ["tbl", "bkt"], "vec_id", EMB_DUP_BUCKET_CAP
+    ).localCheckpoint()
     a, b = capped.alias("a"), capped.alias("b")
     cand = (
         a.join(
@@ -970,34 +946,13 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    # norms hoisted once per vector (see similarity._norm_col): the
-    # confirm join folds 1 dot per pair instead of 3 — bit-identical
-    ea = emb.select(
-        F.col("vec_id").alias("doc_a"),
-        F.col("embedding").alias("ea"),
-        _norm_col(F.col("embedding")).alias("na"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("doc_b"),
-        F.col("embedding").alias("eb"),
-        _norm_col(F.col("embedding")).alias("nb"),
-    )
-    return (
-        cand.join(ea, "doc_a")
-        .join(eb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            _cos_pre(
-                F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= EMB_DUP_THRESH)
+    return _cos_confirm(cand, emb, "doc_a", "doc_b").filter(
+        F.col("cos_sim") >= EMB_DUP_THRESH
     )
 
 
 def _embedding_dup_sql() -> str:
-    from ocr_spark.functions.similarity import _bucket_sql, _cos_sql
+    from ocr_spark.functions.similarity import _bucket_sql
 
     tbl_union = " UNION ALL ".join(
         f"SELECT vec_id, {t} AS tbl, "
@@ -1007,19 +962,13 @@ def _embedding_dup_sql() -> str:
     )
     return f"""
 WITH b AS ({tbl_union}), capped AS (
-  SELECT vec_id, tbl, bkt FROM (
-    SELECT *, row_number() OVER (PARTITION BY tbl, bkt ORDER BY vec_id) AS rn
-    FROM b
-  ) WHERE rn <= {EMB_DUP_BUCKET_CAP}
+  {_cap_buckets_sql("b", "tbl, bkt", "vec_id", EMB_DUP_BUCKET_CAP)}
 ), cand AS (
   SELECT DISTINCT a.vec_id AS doc_a, b.vec_id AS doc_b
   FROM capped a JOIN capped b
     ON a.tbl = b.tbl AND a.bkt = b.bkt AND a.vec_id < b.vec_id
 ), scored AS (
-  SELECT c.doc_a, c.doc_b,
-         {_cos_sql('ea.embedding', 'eb.embedding')} AS cos_sim
-  FROM cand c JOIN embeddings ea ON ea.vec_id = c.doc_a
-              JOIN embeddings eb ON eb.vec_id = c.doc_b
+  {_cos_confirm_sql("cand", "doc_a", "doc_b")}
 )
 SELECT doc_a, doc_b, cos_sim FROM scored WHERE cos_sim >= {EMB_DUP_THRESH}
 """
@@ -1061,49 +1010,23 @@ def q_dedup_semantic(
     ids only; embeddings are re-fetched by key join for the capped
     candidate set, and the per-cluster cap bounds the quadratic
     confirm at CAP^2 regardless of cluster skew."""
-    from pyspark.sql.window import Window
-
-    from ocr_spark.functions.similarity import (
-        _cos_pre,
-        _norm_col,
-        ivf_lists,
-        train_centroids,
-    )
+    from ocr_spark.functions.similarity import ivf_lists, train_centroids
 
     ckpt = _ckpt_factory(spark, checkpoint_dir)
     emb = load(spark, sf_dir, "embeddings")
     members = ckpt(
         ivf_lists(emb, train_centroids(sf_dir)).select("cid", "vec_id")
     )
-    w = Window.partitionBy("cid").orderBy("vec_id")
-    capped = (
-        members.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= SEMDEDUP_CLUSTER_CAP)
-        .drop("_rn")
-    )
+    capped = _cap_buckets(members, ["cid"], "vec_id", SEMDEDUP_CLUSTER_CAP)
     a, b = capped.alias("a"), capped.alias("b")
     cand = a.join(
         b,
         (F.col("a.cid") == F.col("b.cid"))
         & (F.col("a.vec_id") < F.col("b.vec_id")),
     ).select(F.col("a.vec_id").alias("lo"), F.col("b.vec_id").alias("hi"))
-    ea = emb.select(
-        F.col("vec_id").alias("lo"),
-        F.col("embedding").alias("ea"),
-        _norm_col(F.col("embedding")).alias("na"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("hi"),
-        F.col("embedding").alias("eb"),
-        _norm_col(F.col("embedding")).alias("nb"),
-    )
     removed = (
-        cand.join(ea, "lo")
-        .join(eb, "hi")
-        .filter(
-            _cos_pre(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
-            >= SEMDEDUP_THRESH
-        )
+        _cos_confirm(cand, emb, "lo", "hi")
+        .filter(F.col("cos_sim") >= SEMDEDUP_THRESH)
         .select(F.col("hi").alias("vec_id"))
         .distinct()
         .withColumn("_rm", F.lit(1))
@@ -1118,22 +1041,18 @@ def q_dedup_semantic(
 def _semdedup_sql(sf_dir: str) -> str:
     """Oracle generated from the SAME trained centroids as the Spark
     plan: similarity._assign_sql, the oracle of ivf_assign_col."""
-    from ocr_spark.functions.similarity import _assign_sql, _cos_sql
+    from ocr_spark.functions.similarity import _assign_sql
 
     return f"""
 WITH {_assign_sql(sf_dir)}, capped AS (
-  SELECT vec_id, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY cid ORDER BY vec_id) AS rn
-    FROM assign
-  ) WHERE rn <= {SEMDEDUP_CLUSTER_CAP}
+  {_cap_buckets_sql("assign", "cid", "vec_id", SEMDEDUP_CLUSTER_CAP)}
 ), cand AS (
   SELECT a.vec_id AS lo, b.vec_id AS hi
   FROM capped a JOIN capped b ON a.cid = b.cid AND a.vec_id < b.vec_id
+), scored AS (
+  {_cos_confirm_sql("cand", "lo", "hi")}
 ), removed AS (
-  SELECT DISTINCT c.hi AS vec_id
-  FROM cand c JOIN embeddings ea ON ea.vec_id = c.lo
-              JOIN embeddings eb ON eb.vec_id = c.hi
-  WHERE {_cos_sql('ea.embedding', 'eb.embedding')} >= {SEMDEDUP_THRESH}
+  SELECT DISTINCT hi AS vec_id FROM scored WHERE cos_sim >= {SEMDEDUP_THRESH}
 )
 SELECT m.vec_id, CAST(m.cid AS BIGINT) AS cid,
        CAST(CASE WHEN r.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
@@ -1223,8 +1142,6 @@ def q_dedup_clusters(
     `checkpoint_dir` swaps the per-round executor-local localCheckpoint
     for a DURABLE spark checkpoint rooted there — the production choice
     when the loop must survive executor loss (VERDICT r3 #3)."""
-    from pyspark.sql import Window
-
     labels = _cluster_labels(spark, sf_dir, checkpoint_dir)
     w = Window.partitionBy("rep")
     return labels.select(
@@ -1325,10 +1242,6 @@ def q_dedup_representatives(
     integers (bit-identical in Spark and DuckDB — the text_quality gate
     proves it), and the doc_id tie-break makes ranking deterministic
     even under exact score ties."""
-    from pyspark.sql import Window
-
-    from ocr_spark.functions.textops import q_quality
-
     labels = _cluster_labels(spark, sf_dir, checkpoint_dir)
     quality = q_quality(spark, sf_dir).select("doc_id", "quality_score")
     w_cnt = Window.partitionBy("rep")
@@ -1374,8 +1287,6 @@ FROM rep
 
 
 def _dedup_representatives_sql() -> str:
-    from ocr_spark.functions.textops import SQL_QUALITY
-
     return f"""
 WITH RECURSIVE {_cc_rep_cte()}, q AS (
   SELECT doc_id, quality_score FROM ({SQL_QUALITY})
@@ -1478,7 +1389,7 @@ def _dup_grams(
     # higher-order-function boundaries (see textops.q_decontaminate)
     base = (
         load(spark, sf_dir, "documents")
-        .select("doc_id", _tokens_col().alias("ws"))
+        .select("doc_id", _ws_tokens(F.lower(F.col("text"))).alias("ws"))
         .select("doc_id", F.size("ws").alias("n_words"), "ws")
     )
     grams = F.transform(
@@ -1524,8 +1435,6 @@ _DUP_GRAMS_SQL = f"""b AS (
 
 
 def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     base, occ = _dup_grams(spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy("pos")
     contrib = F.least(
@@ -1596,8 +1505,6 @@ FROM b LEFT JOIN p USING (doc_id)
 
 
 def q_dedup_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     base, occ = _dup_grams(spark, sf_dir)
     wg = Window.partitionBy("gkey").orderBy("doc_id", "pos")
     removed = (

@@ -151,9 +151,6 @@ def video_frames_frame(batch):
     )
 
 
-AUDIO_COLS = ["media_ref", "n_samples", "duration_s", "rms", "decode_ok"]
-
-
 def audio_features_frame(batch):
     """(media_ref, png[WAV]) pandas batch -> typed audio-feature rows via
     the REAL decoder (soundfile when installed, stdlib PCM16-WAV here)."""

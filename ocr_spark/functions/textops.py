@@ -28,8 +28,37 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 LANG_ORDER = ["en", "de", "fr", "es"]  # deterministic tie-break preference
 
 
+# text primitives, one per engine; dedup.py imports them, and this
+# module imports nothing from dedup.py
+
+
 def _ws_tokens(col):
+    """Non-empty whitespace-separated tokens of a string column."""
     return F.filter(F.split(col, "\\s+"), lambda w: w != F.lit(""))
+
+
+def _ws_tokens_sql(expr: str) -> str:
+    """DuckDB twin of _ws_tokens over a SQL string expression."""
+    return f"list_filter(string_split_regex({expr}, '\\s+'), w -> w != '')"
+
+
+def _norm_text_col():
+    """Lower-cased text with whitespace runs collapsed and trimmed."""
+    return F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
+
+
+_NORM_TEXT_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+
+
+def norm_hash_col() -> "F.Column":
+    """Normalized-content hash shared by batch dedup_exact, the
+    fingerprint, the curation flow and the Structured Streaming dedup
+    twin — one definition so a backfill batch job and the live stream
+    can never disagree on what counts as a duplicate."""
+    return F.md5(_norm_text_col().cast("binary"))
+
+
+NORM_HASH_SQL = f"md5({_NORM_TEXT_SQL})"
 
 
 # --------------------------------------------------------------------------
@@ -53,10 +82,9 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_TOKEN_STATS = f"""
 SELECT doc_id,
        length(text) AS n_chars_calc,
-       len(list_filter(string_split_regex(text, '\\s+'), w -> w != '')) AS ws_tokens,
+       len({_ws_tokens_sql('text')}) AS ws_tokens,
        len(regexp_extract_all(text, '{TOKEN_PATTERN}')) AS re_tokens,
-       len(list_distinct(list_filter(string_split_regex(lower(text), '\\s+'),
-                                     w -> w != ''))) AS distinct_tokens
+       len(list_distinct({_ws_tokens_sql('lower(text)')})) AS distinct_tokens
 FROM documents
 """
 
@@ -106,8 +134,7 @@ _SW_SQL = "[" + ", ".join(f"'{w}'" for w in _SW_LIST) + "]"
 # from _quality_cols): t/f CTE chain producing per-doc counters, plus the
 # rounded score expression over f's columns
 _QUALITY_CTES = f"""t AS (
-  SELECT doc_id, text,
-         list_filter(string_split_regex(lower(text), '\\s+'), w -> w != '') AS toks
+  SELECT doc_id, text, {_ws_tokens_sql('lower(text)')} AS toks
   FROM documents
 ), f AS (
   SELECT doc_id,
@@ -183,9 +210,7 @@ def _lang_sql() -> str:
     case_sql = "CASE " + " ".join(cases) + " ELSE 'und' END"
     return f"""
 WITH t AS (
-  SELECT doc_id,
-         list_distinct(list_filter(string_split_regex(lower(text), '\\s+'),
-                                   w -> w != '')) AS dtoks
+  SELECT doc_id, list_distinct({_ws_tokens_sql('lower(text)')}) AS dtoks
   FROM documents
 ), h AS (
   SELECT doc_id,
@@ -205,14 +230,14 @@ FROM h
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
+    norm = _norm_text_col()
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.length(norm) - 7, F.lit(1))),
         lambda i: F.md5(F.substring(norm, i, 8).cast("binary")),
     )
     return docs.select(
         "doc_id",
-        F.md5(norm.cast("binary")).alias("norm_hash"),
+        norm_hash_col().alias("norm_hash"),
         F.array_min(grams).alias("min_gram_hash"),
         F.array_join(F.slice(F.array_sort(F.array_distinct(grams)), 1, 8), "").alias(
             "sketch8"
@@ -220,9 +245,9 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_FINGERPRINT = """
+SQL_FINGERPRINT = f"""
 WITH t AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
+  SELECT doc_id, {_NORM_TEXT_SQL} AS norm
   FROM documents
 ), g AS (
   SELECT doc_id, norm,
@@ -259,17 +284,17 @@ def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _boilerplate_sql() -> str:
     punct = """[.,;:!?"''()]"""  # doubled single-quote for SQL literal
     link = "https?://|(^|\\W)www\\."
+    words = _ws_tokens_sql("b")
     bp = f"""(
-      len(list_filter(string_split_regex(b, '\\s+'), w -> w != '')) = 0
-      OR (len(list_filter(string_split_regex(b, '\\s+'),
-                          w -> w != '' AND regexp_matches(lower(w), '{link}')))
-          / CAST(len(list_filter(string_split_regex(b, '\\s+'), w -> w != '')) AS DOUBLE)) >= 0.25
+      len({words}) = 0
+      OR (len(list_filter({words}, w -> regexp_matches(lower(w), '{link}')))
+          / CAST(len({words}) AS DOUBLE)) >= 0.25
       OR regexp_matches(b, '^\\s*(©|\\(c\\)|copyright\\b)', 'i')
-      OR (len(list_filter(string_split_regex(b, '\\s+'), w -> w != '')) <= 6
-          AND (len(list_filter(string_split_regex(b, '\\s+'),
-                   w -> w != '' AND list_contains({_SW_SQL},
+      OR (len({words}) <= 6
+          AND (len(list_filter({words},
+                   w -> list_contains({_SW_SQL},
                         regexp_replace(lower(w), '^{punct}+|{punct}+$', '', 'g'))))
-               / CAST(len(list_filter(string_split_regex(b, '\\s+'), w -> w != '')) AS DOUBLE)) <= 0.2
+               / CAST(len({words}) AS DOUBLE)) <= 0.2
           AND NOT regexp_matches(b, '[.!?]\\s*$'))
     )"""
     return f"""
@@ -391,6 +416,19 @@ VOCAB_TOP_K = 100
 VOCAB_STRIP_PATTERN = "[^\\p{L}\\p{N}\\s]"
 
 
+def _vocab_tokens_col():
+    """Stripped tokens: the one tokenizer of vocab_top_terms and the
+    count-min sketch."""
+    return _ws_tokens(
+        F.regexp_replace(F.lower(F.col("text")), VOCAB_STRIP_PATTERN, " ")
+    )
+
+
+_VOCAB_TOKENS_SQL = _ws_tokens_sql(
+    f"regexp_replace(lower(text), '{VOCAB_STRIP_PATTERN}', ' ', 'g')"
+)
+
+
 def q_vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-K vocabulary terms: (term, term_count, rank). The
     count is a map-side-combined hash-agg (vocabulary-sized output, not
@@ -401,13 +439,8 @@ def q_vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load(spark, sf_dir, "documents")
-    terms = F.explode(
-        _ws_tokens(
-            F.regexp_replace(F.lower(F.col("text")), VOCAB_STRIP_PATTERN, " ")
-        )
-    )
     counts = (
-        docs.select(terms.alias("term"))
+        docs.select(F.explode(_vocab_tokens_col()).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("term_count"))
     )
@@ -421,11 +454,7 @@ def q_vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _vocab_sql() -> str:
     return f"""
 WITH tok AS (
-  SELECT unnest(list_filter(
-           string_split_regex(
-             regexp_replace(lower(text), '{VOCAB_STRIP_PATTERN}', ' ', 'g'),
-             '\\s+'),
-           w -> w != '')) AS term
+  SELECT unnest({_VOCAB_TOKENS_SQL}) AS term
   FROM documents
 ), c AS (
   SELECT term, CAST(count(*) AS BIGINT) AS term_count FROM tok GROUP BY 1
@@ -554,11 +583,11 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_REPETITION = """
+SQL_REPETITION = f"""
 WITH base AS (
   SELECT doc_id, text,
          list_filter(string_split(text, chr(10)), l -> l != '') AS lines,
-         list_filter(string_split_regex(lower(text), '\\s+'), w -> w != '') AS ws
+         {_ws_tokens_sql('lower(text)')} AS ws
   FROM documents
 ), m AS (
   SELECT doc_id, text,
@@ -665,8 +694,7 @@ def _decon_gram_sql() -> str:
 
 SQL_DECONTAMINATE = f"""
 WITH w AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\\s+'), x -> x != '') AS ws
+  SELECT doc_id, {_ws_tokens_sql('lower(text)')} AS ws
   FROM documents
 ), g AS (
   SELECT doc_id, {_decon_gram_sql()} AS gram
@@ -812,8 +840,7 @@ def _bloom_sql(sf_dir: str) -> str:
     return f"""
 WITH m AS (SELECT {mask}::BIGINT[] AS mask),
 w AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\\s+'), x -> x != '') AS ws
+  SELECT doc_id, {_ws_tokens_sql('lower(text)')} AS ws
   FROM documents WHERE doc_id % {DECON_MOD} != 0
 ), g AS (
   SELECT doc_id,
@@ -962,25 +989,29 @@ def _pack_frame(t: DataFrame) -> DataFrame:
     )
 
 
-SQL_PACK_SEQUENCES = f"""
-WITH t AS (
-  SELECT doc_id,
-         doc_id % {PACK_SHARDS} AS shard,
-         len(list_filter(string_split_regex(text, '\\s+'), w -> w != ''))
-           AS n_tokens
-  FROM documents
-), c AS (
+def _pack_sql(src: str) -> str:
+    """Oracle of _pack_frame over a (doc_id, shard, n_tokens) relation."""
+    return f"""SELECT doc_id, shard,
+       CAST(n_tokens AS BIGINT) AS n_tokens,
+       CAST(cum_excl // {PACK_BUDGET} AS BIGINT) AS pack_id,
+       CAST(cum_excl % {PACK_BUDGET} AS BIGINT) AS offset_in_pack
+FROM (
   SELECT *,
          sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
            - n_tokens AS cum_excl
-  FROM t
+  FROM {src}
+)"""
+
+
+SQL_PACK_SEQUENCES = f"""
+WITH t AS (
+  SELECT doc_id,
+         doc_id % {PACK_SHARDS} AS shard,
+         len({_ws_tokens_sql('text')}) AS n_tokens
+  FROM documents
 )
-SELECT doc_id, shard,
-       CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(cum_excl // {PACK_BUDGET} AS BIGINT) AS pack_id,
-       CAST(cum_excl % {PACK_BUDGET} AS BIGINT) AS offset_in_pack
-FROM c
+{_pack_sql("t")}
 """
 
 
@@ -998,8 +1029,9 @@ def q_curate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized hash) -> quality gates (minimum token count +
     corpus-trained bigram-rarity cut) -> sequence packing over the
     survivor set. Built from the SAME column expressions and constants
-    as the standalone operators (dedup.norm_hash_col, _rarity_frame,
-    _pack_frame), so the composition cannot drift from its parts; the
+    as the standalone operators (norm_hash_col, _rarity_frame,
+    _pack_frame; the oracle from NORM_HASH_SQL, SQL_BIGRAM_RARITY and
+    _pack_sql), so the composition cannot drift from its parts; the
     rarity model trains on the FULL corpus, then gates survivors.
 
     Scale shape: the canonical-doc window shuffles on norm_hash (the
@@ -1008,8 +1040,6 @@ def q_curate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     have bigrams are dropped by the rarity join (un-scorable ⇒ not
     curated) — they are all below CURATE_MIN_TOKENS anyway."""
     from pyspark.sql import Window
-
-    from ocr_spark.functions.dedup import norm_hash_col
 
     docs = load(spark, sf_dir, "documents")
     base = docs.select(
@@ -1034,31 +1064,12 @@ def q_curate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curate_pack_sql() -> str:
-    from ocr_spark.functions.dedup import NORM_HASH_SQL
-
     return f"""
 WITH d AS (
-  SELECT doc_id, lower(text) AS lt,
-         {NORM_HASH_SQL} AS nh,
-         len(list_filter(string_split_regex(text, '\\s+'), w -> w != ''))
-           AS n_tokens
+  SELECT doc_id, {NORM_HASH_SQL} AS nh, len({_ws_tokens_sql('text')}) AS n_tokens
   FROM documents
-), g AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, length(lt)), i -> substr(lt, i, 2))) AS bg
-  FROM d WHERE length(lt) >= 2
-), c AS (
-  SELECT bg, CAST(count(*) AS BIGINT) AS cnt FROM g GROUP BY bg
-), st AS (
-  SELECT CAST(sum(cnt) AS BIGINT) AS total, CAST(count(*) AS BIGINT) AS nd FROM c
-), r AS (
-  SELECT doc_id,
-         CAST(count(*) AS BIGINT) AS n_bigrams,
-         CAST(sum(CASE WHEN cnt * nd * {BIGRAM_RARE_RATIO} < total
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_rare
-  FROM g JOIN c USING (bg) CROSS JOIN st GROUP BY doc_id
 ), rp AS (
-  SELECT doc_id, (1000000 * n_rare) // n_bigrams AS rare_ppm FROM r
+  SELECT doc_id, rare_ppm FROM ({SQL_BIGRAM_RARITY})
 ), k AS (
   SELECT doc_id, n_tokens, min(doc_id) OVER (PARTITION BY nh) AS canon FROM d
 ), s AS (
@@ -1068,17 +1079,8 @@ WITH d AS (
   WHERE k.doc_id = k.canon
     AND k.n_tokens >= {CURATE_MIN_TOKENS}
     AND rp.rare_ppm < {CURATE_MAX_RARE_PPM}
-), p AS (
-  SELECT *,
-         sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - n_tokens AS cum_excl
-  FROM s
 )
-SELECT doc_id, shard, n_tokens,
-       CAST(cum_excl // {PACK_BUDGET} AS BIGINT) AS pack_id,
-       CAST(cum_excl % {PACK_BUDGET} AS BIGINT) AS offset_in_pack
-FROM p
+{_pack_sql("s")}
 """
 
 
@@ -1108,7 +1110,7 @@ def _tf_col(ltoks, term: str):
     """Per-row term frequency for one literal term. The lambda MUST stay
     single-argument: a second (even defaulted) parameter flips pyspark's
     HOF calling convention to (element, index) — the minhash seed-arity
-    bug all over again (dedup.py:52-63)."""
+    bug all over again (dedup._seeded_md5)."""
     lit_t = F.lit(term)
     return F.size(F.filter(ltoks, lambda w: w == lit_t))
 
@@ -1180,9 +1182,9 @@ def _bm25_contrib_sql(i: int) -> str:
 
 
 def _bm25_sql() -> str:
+    ltoks = _ws_tokens_sql("lower(text)")
     tf_cols = ",\n         ".join(
-        "len(list_filter(list_filter(string_split_regex(lower(text), '\\s+'), "
-        f"w -> w != ''), w -> w = '{t}')) AS tf_{i}"
+        f"len(list_filter({ltoks}, w -> w = '{t}')) AS tf_{i}"
         for i, t in enumerate(BM25_TERMS)
     )
     df_cols = ", ".join(
@@ -1193,7 +1195,7 @@ def _bm25_sql() -> str:
     return f"""
 WITH base AS (
   SELECT doc_id,
-         len(list_filter(string_split_regex(lower(text), '\\s+'), w -> w != '')) AS dl,
+         len({ltoks}) AS dl,
          {tf_cols}
   FROM documents
 ), stats AS (
@@ -1254,16 +1256,9 @@ def _cms_probe_literals() -> list[tuple[str, int, int]]:
     return out
 
 
-def _cms_tokens_col():
-    """Identical tokenizer to vocab_top_terms — shared constants."""
-    return _ws_tokens(
-        F.regexp_replace(F.lower(F.col("text")), VOCAB_STRIP_PATTERN, " ")
-    )
-
-
 def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(_cms_tokens_col()).alias("term"))
+    toks = docs.select(F.explode(_vocab_tokens_col()).alias("term"))
     cols = F.array(
         *[
             (
@@ -1332,11 +1327,7 @@ def _cms_sql() -> str:
     in_list = ", ".join(f"'{t}'" for t in CMS_PROBE_TERMS)
     return f"""
 WITH tok AS (
-  SELECT unnest(list_filter(
-           string_split_regex(
-             regexp_replace(lower(text), '{VOCAB_STRIP_PATTERN}', ' ', 'g'),
-             '\\s+'),
-           w -> w != '')) AS term
+  SELECT unnest({_VOCAB_TOKENS_SQL}) AS term
   FROM documents
 ), seeds(i, s) AS (VALUES {seeds}),
 cells AS (
@@ -1448,8 +1439,7 @@ WITH {_QUALITY_CTES}, q AS (
   FROM f
 ), d AS (
   SELECT doc.doc_id, doc.lang, q.qbin,
-         CAST(len(list_filter(string_split_regex(doc.text, '\\s+'),
-                              w -> w != '')) AS BIGINT) AS n_tokens
+         CAST(len({_ws_tokens_sql('doc.text')}) AS BIGINT) AS n_tokens
   FROM documents doc JOIN q ON q.doc_id = doc.doc_id
 ), bins AS (
   SELECT lang, qbin, CAST(sum(n_tokens) AS BIGINT) AS bin_tokens

@@ -53,7 +53,7 @@ def estimate_dpi(width: int, height: int) -> int:
 
 @dataclass(frozen=True)
 class AnalysisReuse:
-    """Intermediates computed by global_deskew, valid ONLY while the image
+    """Intermediates computed by global_deskew_ex, valid ONLY while the image
     pixels are provably unchanged (no rotation applied and the analyzed
     chunk is the whole page object). Reuse is bit-identical by
     construction — the same kernel functions over the same pixels — so
@@ -73,7 +73,7 @@ def analyze_quality(
     """One analysis pass; `compute_skew=False` skips the Hough transform
     (used for per-chunk analysis where deskew is force-disabled —
     processor.py:103 — so the angle would be dead weight). `reuse` hands
-    back the gray/noise/Sobel a preceding global_deskew computed on the
+    back the gray/noise/Sobel a preceding global_deskew_ex computed on the
     same pixels (see AnalysisReuse)."""
     is_gray = img.ndim == 2
     if reuse is not None:

@@ -118,7 +118,7 @@ def preprocess(
     gate (pipeline.py:144-158): steps see the progressively transformed
     image but decide from the initial analysis, except gates that are
     defined on the current image (binary check, dynamic range).
-    `reuse` forwards global_deskew's intermediates to analyze_quality —
+    `reuse` forwards global_deskew_ex's intermediates to analyze_quality —
     only pass it when the pixels are unchanged (see AnalysisReuse).
     """
     original_size = (img.shape[1], img.shape[0])
@@ -187,8 +187,11 @@ def preprocess(
 def global_deskew_ex(
     img: np.ndarray, cfg: PreprocessConfig
 ) -> tuple[np.ndarray, bool, float, AnalysisReuse | None]:
-    """global_deskew plus the analysis intermediates for bit-identical
-    reuse by the passthrough chunk's analyze_quality (core.process_image):
+    """Whole-page deskew applied once before splitting, so all chunks
+    share alignment (the reference's global-deskew rewrite,
+    processor.py:95-110,159-164,223-279), plus the analysis
+    intermediates for bit-identical reuse by the passthrough chunk's
+    analyze_quality (core.process_image):
     when the page is NOT rotated, the single-chunk analysis would
     recompute gray, noise and (on non-noisy pages) the very same Sobel
     over the exact same pixels. Returns (image, was_deskewed, angle,
@@ -208,16 +211,3 @@ def global_deskew_ex(
     if abs(angle) < cfg.skew_threshold:
         return img, False, angle, AnalysisReuse(gray, noise, sobel)
     return K.rotate_expand(img, -angle), True, angle, None
-
-
-def global_deskew(
-    img: np.ndarray, cfg: PreprocessConfig
-) -> tuple[np.ndarray, bool, float]:
-    """Whole-page deskew applied once before splitting.
-
-    Hoisted out of the per-chunk fold so all chunks share alignment —
-    the reference's global-deskew rewrite (processor.py:95-110,159-164,
-    223-279).  Returns (image, was_deskewed, detected_angle).
-    """
-    out, was_deskewed, angle, _ = global_deskew_ex(img, cfg)
-    return out, was_deskewed, angle

@@ -19,7 +19,7 @@ processing preserves the span-sequence-equality invariant exactly.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -76,6 +76,20 @@ def stream_extract(
     return writer.start()
 
 
+def _parquet_sink(
+    df: DataFrame, out_dir: str, checkpoint_dir: str, available_now: bool
+) -> DataStreamWriter:
+    """Append-mode parquet sink at out_dir, not yet started;
+    available_now=True drains the visible input and stops."""
+    writer = (
+        df.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    return writer.trigger(availableNow=True) if available_now else writer
+
+
 def stream_windowed_rollup(
     spark: SparkSession,
     input_dir: str,
@@ -112,15 +126,7 @@ def stream_windowed_rollup(
             "value_millis",
         )
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(agg, out_dir, checkpoint_dir, available_now).start()
 
 
 DOCS_STREAM_SCHEMA = StructType(
@@ -130,6 +136,18 @@ DOCS_STREAM_SCHEMA = StructType(
         StructField("text", StringType()),
     ]
 )
+
+
+def _keep_first_arrivals(stream: DataFrame, watermark: str) -> DataFrame:
+    """The keyed-state dedup step: the first arrival of each
+    normalized-content hash (norm_hash) within the `ts` watermark."""
+    from ocr_spark.functions.textops import norm_hash_col
+
+    return (
+        stream.withWatermark("ts", watermark)
+        .withColumn("norm_hash", norm_hash_col())
+        .dropDuplicatesWithinWatermark(["norm_hash"])
+    )
 
 
 def stream_dedup_exact(
@@ -148,26 +166,13 @@ def stream_dedup_exact(
     the horizon, never one per stream row, so it cannot grow with
     stream length at the 100 TB/day design point. Same normalization
     (lower, whitespace-collapse, trim, md5) as the batch operator — the
-    expression is literally shared (functions.dedup.norm_hash_col) so a
-    backfill batch job and the live stream agree on what is a dup."""
-    from ocr_spark.functions.dedup import norm_hash_col
-
+    expression is literally shared (functions.textops.norm_hash_col) so
+    a backfill batch job and the live stream agree on what is a dup."""
     stream = spark.readStream.schema(DOCS_STREAM_SCHEMA).parquet(input_dir)
-    keyed = (
-        stream.withWatermark("ts", watermark)
-        .withColumn("norm_hash", norm_hash_col())
-        .dropDuplicatesWithinWatermark(["norm_hash"])
-        .select("doc_id", "ts", "norm_hash")
+    keyed = _keep_first_arrivals(stream, watermark).select(
+        "doc_id", "ts", "norm_hash"
     )
-    writer = (
-        keyed.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(keyed, out_dir, checkpoint_dir, available_now).start()
 
 
 # --------------------------------------------------------------------------
@@ -307,15 +312,9 @@ def stream_sessionize(
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
+    writer = _parquet_sink(sessions, out_dir, checkpoint_dir, available_now)
     if not available_now:
         return writer.start()
-    writer = writer.trigger(availableNow=True)
     # the query reads its conf from a session clone taken at start()
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev = spark.conf.get(key)

@@ -260,17 +260,6 @@ def split_projection(img: np.ndarray, cfg: SplitConfig) -> SplitOutcome:
     )
 
 
-def projection_can_split(img: np.ndarray, cfg: SplitConfig) -> bool:
-    """can_split: any detected gap (projection.py:37-51). Not used by
-    smart_split (which fuses the gate into split_projection's
-    was_split — see its docstring); retained as the explicit spec of
-    that gate and for callers mirroring the reference's two-step API."""
-    if not needs_splitting(img.shape, cfg):
-        return False
-    layout = analyze_layout(img, cfg)
-    return bool(layout.h_gap_positions or layout.v_gap_positions)
-
-
 # --------------------------------------------------------------------------
 # X2: connected-component splitter
 # --------------------------------------------------------------------------
@@ -351,22 +340,6 @@ def split_components(img: np.ndarray, cfg: SplitConfig) -> SplitOutcome:
         was_split=True,
         metadata={"num_text_regions": len(regions)},
     )
-
-
-def components_can_split(img: np.ndarray, cfg: SplitConfig) -> bool:
-    """can_split: some valid non-intersecting line exists
-    (components.py:74-96). Like projection_can_split, retained as the
-    spec of the gate smart_split fuses into split_components."""
-    if not needs_splitting(img.shape, cfg):
-        return False
-    regions = _detect_text_regions(img)
-    if not regions:
-        return False
-    h, w = img.shape[:2]
-    rows, cols = _grid_rows_cols(_target_chunks(w, h, cfg))
-    h_splits = _occupancy_splits(regions, h, rows - 1, cfg, "y") if rows > 1 else []
-    v_splits = _occupancy_splits(regions, w, cols - 1, cfg, "x") if cols > 1 else []
-    return bool(h_splits or v_splits)
 
 
 # --------------------------------------------------------------------------

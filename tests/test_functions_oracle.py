@@ -611,11 +611,15 @@ def test_stratified_sample_is_reproducible_per_doc(spark, tmp_path):
     assert rows_big["n_total"] == 200
 
 
-def test_minhash_signatures_match_oracle_seeds(spark, tmp_path):
+@pytest.mark.parametrize("user", ["minhash_shingles", "jaccard_5grams"])
+def test_minhash_signatures_match_oracle_seeds(spark, tmp_path, user):
     """The lane-split minhash signature sig[s*4+lane] must be hex chars
-    [8*lane, 8*lane+8) of md5(seed_s || shingle) minimized over the
-    doc's shingles — the exact construction the DuckDB oracle SQL
-    generates from the same MINHASH_SEEDS/_MD5_LANES constants.
+    [8*lane, 8*lane+8) of md5(seed_s || gram) minimized over the doc's
+    grams — the exact construction the DuckDB oracle SQL generates from
+    the same seeds/_MD5_LANES constants — and each band value the md5
+    of its R '|'-joined signatures. Checked through the one band
+    builder for both of its users: MINHASH_SEEDS over word shingles
+    and the Jaccard prefilter's _JAC_SEEDS over char 5-grams.
     Regression for a silent arity bug: `lambda s, h=h: ...` inside
     F.transform is the two-parameter (element, index) form, so the seed
     stringified to an arbitrary plan-build-dependent "Column<'y_N'>|" —
@@ -627,13 +631,16 @@ def test_minhash_signatures_match_oracle_seeds(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pyspark.sql import functions as F
-
     from ocr_spark.functions.dedup import (
+        _JAC_SEEDS,
+        JAC_MH_B,
+        JAC_MH_R,
+        MINHASH_B,
+        MINHASH_R,
         MINHASH_SEEDS,
         _MD5_LANES,
-        _lane_col,
-        _seeded_md5,
+        _jac_docs_flagged,
+        _minhash_bands,
         _shingles_col,
     )
 
@@ -642,35 +649,37 @@ def test_minhash_signatures_match_oracle_seeds(spark, tmp_path):
     d = tmp_path / "sf_sig"
     d.mkdir()
     pq.write_table(
-        pa.Table.from_pylist([{"doc_id": 1, "text": text}]),
+        pa.Table.from_pylist(
+            [{"doc_id": 1, "source": "s", "text": text, "n_chars": len(text)}]
+        ),
         str(d / "documents.parquet"),
     )
-    docs = spark.read.parquet(str(d / "documents.parquet"))
-    # same projection shape as q_dedup_minhash
-    sh = docs.select("doc_id", _shingles_col().alias("shingles"))
-    hashed = sh.select(
-        "shingles",
-        *[
-            F.transform("shingles", _seeded_md5(seed)).alias(f"mh{s}")
-            for s, seed in enumerate(MINHASH_SEEDS)
-        ],
-    )
-    sigs = [
-        _lane_col(f"mh{s}", lane).alias(f"sig{s * _MD5_LANES + lane}")
-        for s in range(len(MINHASH_SEEDS))
-        for lane in range(_MD5_LANES)
-    ]
-    row = hashed.select(F.col("shingles"), *sigs).collect()[0]
-    for s, seed in enumerate(MINHASH_SEEDS):
+    if user == "minhash_shingles":
+        seeds, r, b = MINHASH_SEEDS, MINHASH_R, MINHASH_B
+        docs = spark.read.parquet(str(d / "documents.parquet"))
+        grams = docs.select("doc_id", _shingles_col().alias("grams"))
+    else:
+        seeds, r, b = _JAC_SEEDS, JAC_MH_R, JAC_MH_B
+        grams = _jac_docs_flagged(spark, str(d)).select("doc_id", "grams")
+    rows = _minhash_bands(grams, "grams", seeds, r, b).collect()
+    assert sorted(x["band_id"] for x in rows) == list(range(b))
+    row = rows[0]
+    assert row["grams"], "the doc must have grams"
+    expected_sigs = []
+    for s, seed in enumerate(seeds):
         for lane in range(_MD5_LANES):
             expected = min(
-                hashlib.md5(f"{seed}{sh_}".encode()).hexdigest()[
+                hashlib.md5(f"{seed}{g}".encode()).hexdigest()[
                     8 * lane : 8 * lane + 8
                 ]
-                for sh_ in row["shingles"]
+                for g in row["grams"]
             )
             i = s * _MD5_LANES + lane
             assert row[f"sig{i}"] == expected, f"sig{i} has a wrong seed/lane"
+            expected_sigs.append(expected)
+    for x in rows:
+        band = "|".join(expected_sigs[x["band_id"] * r : (x["band_id"] + 1) * r])
+        assert x["band_val"] == hashlib.md5(band.encode()).hexdigest()
 
 
 def test_dedup_clusters_checkpoint_dir_is_restored(spark, tmp_path):

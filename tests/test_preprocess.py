@@ -6,7 +6,7 @@ import numpy as np
 from ocr_spark.config import PreprocessConfig
 from ocr_spark.extract.glyph import extract_text, render_page
 from ocr_spark.imaging.analyzer import analyze_quality, estimate_dpi
-from ocr_spark.imaging.preprocess import global_deskew, preprocess
+from ocr_spark.imaging.preprocess import global_deskew_ex, preprocess
 
 CFG = PreprocessConfig()
 
@@ -124,12 +124,12 @@ def test_global_deskew_roundtrip():
 
     page = _page(("hello world", "abc 123", "quick brown"), 640, 400)
     rot = K.rotate_expand(page, 4.0)
-    fixed, was, angle = global_deskew(rot, CFG)
+    fixed, was, angle = global_deskew_ex(rot, CFG)[:3]
     assert was and abs(angle - 4.0) < 0.5
     text, conf = extract_text(fixed)
     assert text == "hello world\nabc 123\nquick brown"
     # below-threshold skew leaves the image alone (processor.py:239-241)
-    same, was2, _ = global_deskew(page, CFG)
+    same, was2, _ = global_deskew_ex(page, CFG)[:3]
     assert not was2 and same is page
 
 
@@ -141,6 +141,6 @@ def test_global_deskew_leaves_level_noisy_pages_alone():
 
     for seed in (10, 27, 119, 255, 1711596878):
         page = page_noisy(np.random.default_rng(seed))
-        _, was, angle = global_deskew(page, CFG)
+        _, was, angle = global_deskew_ex(page, CFG)[:3]
         assert not was, (seed, angle)
         assert abs(analyze_quality(page, CFG).skew_angle) < CFG.skew_threshold, seed
