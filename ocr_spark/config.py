@@ -58,7 +58,6 @@ class MergeConfig:
     similarity_threshold: float = 0.8
     min_overlap_chars: int = 10
     section_separator: str = "\n\n"
-    preserve_chunk_markers: bool = False
 
 
 @dataclass(frozen=True)

@@ -22,6 +22,9 @@ Cross-engine float determinism rules used throughout:
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -43,6 +46,34 @@ class QuerySpec:
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+
+def drain_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    run: Callable[[str, str, str], None],
+) -> DataFrame:
+    """Stream one testdata table through an availableNow parquet sink and
+    return the sink's rows, materialised.
+
+    The file stream source lists a DIRECTORY and testdata ships a single
+    parquet file, so the file is exposed through a symlink in a scratch
+    dir; ``run(in_dir, out_dir, ckpt_dir)`` starts the query and waits
+    for it to drain. The rows are read back and pinned with an eager
+    ``localCheckpoint`` before the scratch dir is removed, so the frame
+    outlives its files and no dir is left behind."""
+    tmp = tempfile.mkdtemp(prefix=f"ocr_spark_stream_{table}_")
+    try:
+        os.mkdir(f"{tmp}/in")
+        os.symlink(
+            os.path.abspath(f"{sf_dir}/{table}.parquet"),
+            f"{tmp}/in/{table}.parquet",
+        )
+        run(f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt")
+        return spark.read.parquet(f"{tmp}/out").localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def all_queries() -> dict[str, QuerySpec]:

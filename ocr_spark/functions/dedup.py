@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ocr_spark.functions import QuerySpec, load
+from ocr_spark.functions import QuerySpec, drain_stream, load
 from ocr_spark.functions.textops import (
     NORM_HASH_SQL,
     SQL_QUALITY,
@@ -193,32 +193,28 @@ def q_dedup_exact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator. Event time is synthesized from doc_id (the driver tables
     carry no timestamp); the kept doc_id per hash is batch-order
     arbitrary, so only the deterministic hash column is returned."""
-    import os
-    import tempfile
-
     from ocr_spark.spark.streaming import _keep_first_arrivals, _parquet_sink
 
-    tmp = tempfile.mkdtemp(prefix="ocr_spark_stream_dedup_")
-    # the file stream source lists a DIRECTORY; testdata ships a single
-    # parquet file, so expose it through a symlink (read-only input)
-    os.mkdir(f"{tmp}/in")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/documents.parquet"),
-        f"{tmp}/in/documents.parquet",
-    )
-    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .parquet(f"{tmp}/in")
-        # +1 day: the state store's initial watermark is epoch 0, and a
-        # row whose event time IS the watermark is dropped as expired —
-        # doc_id 0 would silently vanish if the clock started at epoch
-        .withColumn("ts", F.timestamp_seconds(F.col("doc_id") + F.lit(86400)))
-    )
-    kept = _keep_first_arrivals(stream, "30 minutes").select("norm_hash")
-    sink = _parquet_sink(kept, f"{tmp}/out", f"{tmp}/ckpt", available_now=True)
-    sink.start().awaitTermination()
-    return spark.read.parquet(f"{tmp}/out").select("norm_hash").distinct()
+    batch_schema = load(spark, sf_dir, "documents").schema
+
+    def run(in_dir: str, out_dir: str, ckpt_dir: str) -> None:
+        stream = (
+            spark.readStream.schema(batch_schema)
+            .parquet(in_dir)
+            # +1 day: the state store's initial watermark is epoch 0, and
+            # a row whose event time IS the watermark is dropped as
+            # expired — doc_id 0 would silently vanish if the clock
+            # started at epoch
+            .withColumn(
+                "ts", F.timestamp_seconds(F.col("doc_id") + F.lit(86400))
+            )
+        )
+        kept = _keep_first_arrivals(stream, "30 minutes").select("norm_hash")
+        sink = _parquet_sink(kept, out_dir, ckpt_dir, available_now=True)
+        sink.start().awaitTermination()
+
+    out = drain_stream(spark, sf_dir, "documents", run)
+    return out.select("norm_hash").distinct()
 
 
 SQL_DEDUP_EXACT_STREAM = f"""

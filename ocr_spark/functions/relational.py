@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ocr_spark.functions import QuerySpec, load
+from ocr_spark.functions import QuerySpec, drain_stream, load
 
 SESSION_GAP_S = 1800
 
@@ -149,22 +149,16 @@ def q_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     window aggregation values and the emit-on-finalize semantics. Still-
     open windows at stream end are withheld by design; on a live stream
     they emit when the watermark passes them."""
-    import os
-    import tempfile
-
     from ocr_spark.spark.streaming import stream_windowed_rollup
 
     _pin_utc(spark)
-    tmp = tempfile.mkdtemp(prefix="ocr_spark_stream_rollup_")
-    os.mkdir(f"{tmp}/in")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"), f"{tmp}/in/events.parquet"
-    )
-    q = stream_windowed_rollup(
-        spark, f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt", available_now=True
-    )
-    q.awaitTermination()
-    return spark.read.parquet(f"{tmp}/out")
+
+    def run(in_dir: str, out_dir: str, ckpt_dir: str) -> None:
+        stream_windowed_rollup(
+            spark, in_dir, out_dir, ckpt_dir, available_now=True
+        ).awaitTermination()
+
+    return drain_stream(spark, sf_dir, "events", run)
 
 
 SQL_ROLLUP_STREAM = """

@@ -51,6 +51,31 @@ def estimate_dpi(width: int, height: int) -> int:
     return max(72, min(600, dpi))
 
 
+Sobel = tuple[np.ndarray, np.ndarray]  # sobel_masks(gray): (edges, horiz)
+
+
+def estimate_skew(
+    gray: np.ndarray,
+    noise_level: float,
+    cfg: PreprocessConfig,
+    sobel: Sobel | None = None,
+) -> tuple[float, Sobel | None]:
+    """The page's Hough skew angle, plus the Sobel masks the estimate
+    read (`sobel` when given, computed here when needed; None on noisy
+    pages, which need none).
+
+    Salt-and-pepper noise floods the near-horizontal edge set with
+    spurious gradient points and biases the accumulator peak (a
+    noisy-but-level page can read as ~1.3 deg and get rotated into
+    undecodability), so a noisy page is estimated on the same denoised
+    view the noise_removal step will hand to downstream stages."""
+    if noise_level > cfg.noise_threshold:
+        return K.hough_skew(K.median3(gray), peak_lobe_only=True), sobel
+    if sobel is None:
+        sobel = K.sobel_masks(gray)
+    return K.hough_skew(gray, horiz=sobel[1]), sobel
+
+
 @dataclass(frozen=True)
 class AnalysisReuse:
     """Intermediates computed by global_deskew_ex, valid ONLY while the image
@@ -61,7 +86,7 @@ class AnalysisReuse:
 
     gray: np.ndarray
     noise_level: float
-    sobel: tuple[np.ndarray, np.ndarray] | None  # sobel_masks(gray)
+    sobel: Sobel | None
 
 
 def analyze_quality(
@@ -100,20 +125,13 @@ def analyze_quality(
 
     # one Sobel pass feeds the edge mask (A7/A8) and the Hough estimate (A3)
     if reuse is not None and reuse.sobel is not None:
-        edges, horiz = reuse.sobel
+        sobel = reuse.sobel
     else:
-        edges, horiz = K.sobel_masks(gray)
-    if not compute_skew:
-        skew_angle = 0.0
-    elif noise_level > cfg.noise_threshold:
-        # salt-and-pepper noise floods the near-horizontal edge set with
-        # spurious gradient points and biases the accumulator peak (a
-        # noisy-but-level page can read as ~1.3 deg and get rotated into
-        # undecodability), so estimate on the same denoised view the
-        # noise_removal step will hand to downstream stages
-        skew_angle = K.hough_skew(K.median3(gray), peak_lobe_only=True)
-    else:
-        skew_angle = K.hough_skew(gray, horiz=horiz)
+        sobel = K.sobel_masks(gray)
+    edges = sobel[0]
+    skew_angle = (
+        estimate_skew(gray, noise_level, cfg, sobel)[0] if compute_skew else 0.0
+    )
 
     gmin, gmax = float(gray.min()), float(gray.max())
     contrast = 0.0 if (gmax + gmin) == 0 else (gmax - gmin) / (gmax + gmin)

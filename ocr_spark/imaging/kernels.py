@@ -10,13 +10,16 @@ are preserved exactly.  The cv2-fidelity section below
 (PreprocessConfig.fidelity="cv2") additionally provides the reference's
 exact algorithms: real OpenCV when installed (byte-parity with the
 reference), faithful numpy equivalents (Keys A=-0.75 bicubic, gaussian
-adaptive threshold) otherwise; only fastNlMeansDenoising has no
-practical numpy twin and falls back to median3, documented at
-nlmeans_denoise.
+adaptive threshold, the NL-means invoker) otherwise.
+
+Images are uint8 (HxW, HxWxC): decode_png, the %PDF walker and fitz
+produce nothing else, so each algorithm has one implementation, and the
+gray kernels that would silently misread another dtype reject it with a
+TypeError (require_u8).
 
 Reference counterparts:
   to_gray ............. cv2.cvtColor RGB2GRAY (analyzer.py:41, grayscale.py:42-63)
-  box_mean/box_mean_u8  cv2.blur (analyzer.py:113-114)
+  box_mean_u8 ......... cv2.blur (analyzer.py:113-114)
   laplacian_var ....... cv2.Laplacian(...).var() (analyzer.py:95-103)
   estimate_noise ...... local-variance method (analyzer.py:105-121)
   sobel_masks ......... cv2.Canny stand-in for edge masks, plus the
@@ -24,9 +27,9 @@ Reference counterparts:
                         (analyzer.py:130,223,236)
   hough_skew .......... cv2.HoughLines near-horizontal median (analyzer.py:123-155)
   otsu/binarize_* ..... cv2.threshold OTSU / adaptiveThreshold (binarization.py:59-86)
-  median3 ............. fastNlMeansDenoising stand-in (noise_removal.py:33-53)
+  median3/nlmeans_denoise  fastNlMeansDenoising stand-in / twin (noise_removal.py:33-53)
   normalize_minmax .... cv2.normalize NORM_MINMAX (normalization.py:36-50)
-  resize_bilinear ..... cv2.resize (scaling.py:55-69)
+  resize_bi{linear,cubic}  cv2.resize (scaling.py:55-69)
   rotate_expand ....... cv2.warpAffine w/ expanded bbox (deskew.py:46-96,
                         processor.py:244-279)
   dilate .............. cv2.dilate (components.py:171-172)
@@ -53,97 +56,62 @@ def to_gray(img: np.ndarray) -> np.ndarray:
     return np.clip(np.rint(gray), 0, 255).astype(np.uint8)
 
 
-def _box_mean_block(img_f: np.ndarray, k: int) -> np.ndarray:
-    pad = k // 2
-    padded = np.pad(img_f, pad, mode="edge").astype(np.float64)
-    # integral image trick: one cumsum per axis. The first window's sum
-    # is cs[k-1] (implicit zero row/col) — written directly instead of
-    # prepending a zeros row/col, which would copy the whole array.
-    cs = padded.cumsum(axis=0)
-    rows = np.empty((cs.shape[0] - k + 1, cs.shape[1]))
-    rows[0] = cs[k - 1]
-    np.subtract(cs[k:], cs[:-k], out=rows[1:])
-    cs2 = rows.cumsum(axis=1)
-    summed = np.empty((rows.shape[0], cs2.shape[1] - k + 1))
-    summed[:, 0] = cs2[:, k - 1]
-    np.subtract(cs2[:, k:], cs2[:, :-k], out=summed[:, 1:])
-    summed /= k * k
-    return summed
+def require_u8(img: np.ndarray, fn: str) -> None:
+    """TypeError unless `img` is uint8, the imaging layer's one input type."""
+    if img.dtype != np.uint8:
+        raise TypeError(f"{fn} expects a uint8 image, got {img.dtype}")
 
 
-# strips keep every float64 temp under ~16 MB (see resize_bilinear note)
+# strips keep every float64/int64 temp under ~16 MB (see resize_bilinear
+# note); int32 temps allow 2x the elements
 _BOX_STRIP_ELEMS = 2 << 20
 
 
-def _box_mean_block_u8(img_u8: np.ndarray, k: int) -> np.ndarray:
-    """Integer-exact twin of _box_mean_block for uint8 inputs.
-
-    Window sums are exact integers in int32 just as they are in float64,
-    so sum/(k*k) rounds identically — bit-identical to
-    box_mean(img.astype(float64), k) at roughly half the memory traffic
-    (int32 cumsums vs float64, and no float conversion pass).
-    """
+def _box_mean_block_u8(img_u8: np.ndarray, k: int, acc: type) -> np.ndarray:
+    """k x k window sums by integral image in the integer dtype `acc`,
+    divided by k*k in float64. The first window's sum is cs[k-1]
+    (implicit zero row/col) — written directly instead of prepending a
+    zeros row/col, which would copy the whole array."""
     pad = k // 2
     padded = np.pad(img_u8, pad, mode="edge")
-    cs = padded.cumsum(axis=0, dtype=np.int32)
-    rows = np.empty((cs.shape[0] - k + 1, cs.shape[1]), dtype=np.int32)
+    cs = padded.cumsum(axis=0, dtype=acc)
+    rows = np.empty((cs.shape[0] - k + 1, cs.shape[1]), dtype=acc)
     rows[0] = cs[k - 1]
     np.subtract(cs[k:], cs[:-k], out=rows[1:])
-    cs2 = rows.cumsum(axis=1, dtype=np.int32)
-    summed = np.empty((rows.shape[0], cs2.shape[1] - k + 1), dtype=np.int32)
+    cs2 = rows.cumsum(axis=1, dtype=acc)
+    summed = np.empty((rows.shape[0], cs2.shape[1] - k + 1), dtype=acc)
     summed[:, 0] = cs2[:, k - 1]
     np.subtract(cs2[:, k:], cs2[:, :-k], out=summed[:, 1:])
     return summed / (k * k)
 
 
 def box_mean_u8(img_u8: np.ndarray, k: int) -> np.ndarray:
-    """box_mean over a uint8 image, bit-identical to the float64 path
-    (see _box_mean_block_u8). Strips like box_mean; int32 temps allow 2x
-    wider strips."""
+    """k x k moving average (replicate borders) of a uint8 image.
+
+    Window sums accumulate in int32, or in int64 where the horizontal
+    cumsum of k-row sums (values <= 255*k over w+k columns) could
+    overflow int32. Large images run in row strips with a k//2 halo;
+    the sums are exact either way, so the strip-wise result is
+    bit-identical to the whole-image computation.
+    """
+    require_u8(img_u8, "box_mean_u8")
     h, w = img_u8.shape
-    # int32 horizontal cumsum of k-row window sums must not overflow:
-    # values <= 255*k, accumulated over w+k columns
-    if 255 * k * (w + k + 1) >= 2**31:
-        return box_mean(img_u8.astype(np.float64), k)
-    elems = 2 * _BOX_STRIP_ELEMS
+    acc = np.int32 if 255 * k * (w + k + 1) < 2**31 else np.int64
+    elems = _BOX_STRIP_ELEMS * 8 // np.dtype(acc).itemsize
     if h * w <= elems or h <= 2 * k:
-        return _box_mean_block_u8(img_u8, k)
+        return _box_mean_block_u8(img_u8, k, acc)
     pad = k // 2
     out = np.empty((h, w), dtype=np.float64)
     step = max(k, elems // w)
     for s in range(0, h, step):
         e = min(s + step, h)
+        # halo rows come from the image; replicate-pad only at the ends
         s0, e0 = max(0, s - pad), min(h, e + pad)
         block = img_u8[s0:e0]
         top, bot = pad - (s - s0), pad - (e0 - e)
         if top or bot:
             block = np.pad(block, ((top, bot), (0, 0)), mode="edge")
-        out[s:e] = _box_mean_block_u8(block, k)[pad:pad + (e - s)]
-    return out
-
-
-def box_mean(img_f: np.ndarray, k: int) -> np.ndarray:
-    """k x k moving average with replicate borders (float in/out).
-
-    Large images run in row strips with a k//2 halo; pixel sums are
-    exact integers in float64, so the strip-wise result is bit-identical
-    to the whole-image integral computation.
-    """
-    h, w = img_f.shape
-    if h * w <= _BOX_STRIP_ELEMS or h <= 2 * k:
-        return _box_mean_block(img_f, k)
-    pad = k // 2
-    out = np.empty((h, w), dtype=np.float64)
-    step = max(k, _BOX_STRIP_ELEMS // w)
-    for s in range(0, h, step):
-        e = min(s + step, h)
-        # halo rows come from the image; replicate-pad only at the ends
-        s0, e0 = max(0, s - pad), min(h, e + pad)
-        block = img_f[s0:e0]
-        top, bot = pad - (s - s0), pad - (e0 - e)
-        if top or bot:
-            block = np.pad(block, ((top, bot), (0, 0)), mode="edge")
-        out[s:e] = _box_mean_block(block, k)[pad:pad + (e - s)]
+        out[s:e] = _box_mean_block_u8(block, k, acc)[pad:pad + (e - s)]
     return out
 
 
@@ -170,9 +138,9 @@ def _strip_rows(row_bytes: int) -> int:
 
 def _local_sd_u8(gray: np.ndarray) -> np.ndarray:
     """Per-pixel 5x5 (replicate-border) standard deviation of a uint8
-    image, bit-identical to the float64 box_mean formulation
-    sqrt(|box(x^2) - box(x)^2|): the window sums S1 (uint16) and S2
-    (int32) are exact integers built by shifted adds, and the float64
+    image, bit-identical to the float64 formula sqrt(|box(x^2) -
+    box(x)^2|) over 5x5 window means: the window sums S1 (uint16) and
+    S2 (int32) are exact integers built by shifted adds, and the float64
     expression S2/25 - (S1/25)^2 is kept as is."""
     h, w = gray.shape
     p = np.pad(gray, 2, mode="edge")
@@ -205,13 +173,8 @@ def _local_sd_u8(gray: np.ndarray) -> np.ndarray:
 
 def estimate_noise(gray: np.ndarray) -> float:
     """Median local std-dev over 5x5 windows, normalized by 50, clamped [0,1] (A2)."""
-    if gray.dtype == np.uint8:
-        sd = _local_sd_u8(gray)
-    else:
-        g = gray.astype(np.float64)
-        mean = box_mean(g, 5)
-        sd = np.sqrt(np.abs(box_mean(g * g, 5) - mean * mean))
-    noise = float(np.median(sd))
+    require_u8(gray, "estimate_noise")
+    noise = float(np.median(_local_sd_u8(gray)))
     return min(1.0, noise / 50.0)
 
 
@@ -226,8 +189,7 @@ def sobel_masks(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     the same masks as float32 hypot(gx, gy) > 200 and |gy| > 1.5|gx|
     over every reachable gradient pair. Runs in cache-sized row strips.
     """
-    if gray.dtype != np.uint8:
-        raise TypeError(f"sobel_masks expects a uint8 image, got {gray.dtype}")
+    require_u8(gray, "sobel_masks")
     h, w = gray.shape
     p = np.pad(gray, 1, mode="edge")
     edges = np.empty((h, w), dtype=bool)
@@ -379,20 +341,20 @@ def binarize_otsu(gray: np.ndarray, invert: bool = False) -> np.ndarray:
     return np.where(gray > t, 255, 0).astype(np.uint8)
 
 
+def _adaptive_block(h: int, w: int) -> int:
+    """The reference's adaptive-threshold block size
+    (binarization.py:69-86): min(w, h)//20 clamped to 11..101, made odd."""
+    return max(11, min(101, min(w, h) // 20)) | 1
+
+
 def binarize_adaptive(gray: np.ndarray, c: float = 11.0) -> np.ndarray:
-    """Adaptive mean thresholding, block size = clamp(min(w,h)//20, 11..101)|odd.
+    """Adaptive mean thresholding over _adaptive_block windows.
 
     Reference uses ADAPTIVE_THRESH_GAUSSIAN_C with the same block-size rule
     (binarization.py:69-86); a box mean is the deterministic equivalent here.
     """
-    h, w = gray.shape
-    block = max(11, min(101, min(w, h) // 20))
-    if block % 2 == 0:
-        block += 1
-    if gray.dtype == np.uint8:
-        local = box_mean_u8(gray, block)
-    else:
-        local = box_mean(gray.astype(np.float64), block)
+    require_u8(gray, "binarize_adaptive")
+    local = box_mean_u8(gray, _adaptive_block(*gray.shape))
     # the comparison ufunc promotes uint8 -> float64 per buffer; no full
     # float copy of the image is materialized
     return np.where(gray > local - c, 255, 0).astype(np.uint8)
@@ -524,7 +486,8 @@ def _cubic_weights(ts: np.ndarray) -> np.ndarray:
 def _resize_bicubic_np(img: np.ndarray, new_w: int, new_h: int) -> np.ndarray:
     """Separable Keys-cubic resize with cv2 half-pixel centers, clamped
     borders, overshoot clipped; strip-wise like resize_bilinear so no
-    float temp exceeds ~16 MB (sandbox page-fault tax)."""
+    float temp exceeds ~16 MB (sandbox page-fault tax). The weights
+    broadcast over a trailing channel axis when there is one."""
     h, w = img.shape[:2]
     if (new_w, new_h) == (w, h):
         return img.copy()
@@ -532,45 +495,28 @@ def _resize_bicubic_np(img: np.ndarray, new_w: int, new_h: int) -> np.ndarray:
     ys = (np.arange(new_h) + 0.5) * (h / new_h) - 0.5
     x0 = np.floor(xs).astype(np.int64)
     y0 = np.floor(ys).astype(np.int64)
-    wx = _cubic_weights((xs - x0).astype(np.float32))
-    wy = _cubic_weights((ys - y0).astype(np.float32))
+    tail = img.shape[2:]
+    ones = (1,) * len(tail)
+    wx = _cubic_weights((xs - x0).astype(np.float32)).reshape((4, 1, new_w) + ones)
+    wy = _cubic_weights((ys - y0).astype(np.float32)).reshape((4, new_h, 1) + ones)
     xi = [np.clip(x0 + k, 0, w - 1) for k in (-1, 0, 1, 2)]
     yi = [np.clip(y0 + k, 0, h - 1) for k in (-1, 0, 1, 2)]
 
     f = img.astype(np.float32)
-    if img.ndim == 2:
-        row = np.zeros((h, new_w), np.float32)
-        for k in range(4):
-            tmp = f.take(xi[k], axis=1)
-            tmp *= wx[k][None, :]
-            row += tmp
-        out = np.empty((new_h, new_w), dtype=np.uint8)
-        step = max(1, (16 << 20) // (4 * new_w))
-        for s in range(0, new_h, step):
-            e = min(s + step, new_h)
-            strip = np.zeros((e - s, new_w), np.float32)
-            for k in range(4):
-                tmp = row.take(yi[k][s:e], axis=0)
-                tmp *= wy[k][s:e][:, None]
-                strip += tmp
-            np.clip(strip, 0, 255, out=strip)
-            strip += 0.5
-            out[s:e] = strip
-        return out
-    ch = img.shape[2]
-    row = np.zeros((h, new_w, ch), np.float32)
+    row = np.zeros((h, new_w) + tail, np.float32)
     for k in range(4):
         tmp = f.take(xi[k], axis=1)
-        tmp *= wx[k][None, :, None]
+        tmp *= wx[k]
         row += tmp
-    out = np.empty((new_h, new_w, ch), dtype=np.uint8)
+    out = np.empty((new_h, new_w) + tail, dtype=np.uint8)
+    ch = img.shape[2] if img.ndim == 3 else 1
     step = max(1, (16 << 20) // (4 * new_w * ch))
     for s in range(0, new_h, step):
         e = min(s + step, new_h)
-        strip = np.zeros((e - s, new_w, ch), np.float32)
+        strip = np.zeros((e - s, new_w) + tail, np.float32)
         for k in range(4):
             tmp = row.take(yi[k][s:e], axis=0)
-            tmp *= wy[k][s:e][:, None, None]
+            tmp *= wy[k, s:e]
             strip += tmp
         np.clip(strip, 0, 255, out=strip)
         strip += 0.5
@@ -598,9 +544,7 @@ def _gaussian_kernel_1d(block: int) -> np.ndarray:
 
 def _binarize_adaptive_gaussian_np(gray: np.ndarray, c: float) -> np.ndarray:
     h, w = gray.shape
-    block = max(11, min(101, min(w, h) // 20))
-    if block % 2 == 0:
-        block += 1
+    block = _adaptive_block(h, w)
     g = _gaussian_kernel_1d(block)
     r = block // 2
     f = gray.astype(np.float32)
@@ -621,13 +565,9 @@ def binarize_adaptive_gaussian(gray: np.ndarray, c: float = 11.0) -> np.ndarray:
     gaussian-weighted local mean (replicated borders) otherwise."""
     cv2 = _cv2()
     if cv2 is not None:
-        h, w = gray.shape
-        block = max(11, min(101, min(w, h) // 20))
-        if block % 2 == 0:
-            block += 1
         return cv2.adaptiveThreshold(
             gray, 255, cv2.ADAPTIVE_THRESH_GAUSSIAN_C, cv2.THRESH_BINARY,
-            block, c,
+            _adaptive_block(*gray.shape), c,
         )
     return _binarize_adaptive_gaussian_np(gray, c)
 
@@ -663,65 +603,23 @@ def _nlm_weight_lut(h: float, cn: int = 1) -> np.ndarray:
     return w
 
 
-def _nlmeans_np(gray: np.ndarray, h: float, strip_rows: int = 256) -> np.ndarray:
-    """Pure-numpy twin of cv2.fastNlMeansDenoising (grayscale, NORM_L2,
-    template 7, search 21), following the public OpenCV algorithm
+def _nlmeans_np(img: np.ndarray, h: float, strip_rows: int = 256) -> np.ndarray:
+    """Pure-numpy twin of cv2.fastNlMeansDenoising's invoker (NORM_L2,
+    template 7, search 21) for an HxW or HxWxC uint8 image (OpenCV's
+    CV_8UC1/2/3 invoker shapes), following the public OpenCV algorithm
     (photo module, fast_nlmeans_denoising_invoker.hpp): reflect-101
     border of search/2 + template/2, per-offset template SSD via
     integral images, distances binned by >> 6 into a fixed-point weight
-    LUT, integer accumulation with round-half-up division. Runs in row
-    strips so temporaries stay under the sandbox's 32 MB re-fault
-    threshold (one (strip+6, W+6) int64 integral per offset)."""
-    H, W = gray.shape
-    th, sh = NLM_TEMPLATE // 2, NLM_SEARCH // 2  # 3, 10
-    border = th + sh  # 13
-    P = np.pad(gray, border, mode="reflect").astype(np.int32)
-    lut = _nlm_weight_lut(float(h))
-    out = np.empty((H, W), dtype=np.uint8)
-    t = NLM_TEMPLATE
-    for r0 in range(0, H, strip_rows):
-        r1 = min(H, r0 + strip_rows)
-        hh = r1 - r0
-        est = np.zeros((hh, W), dtype=np.int64)
-        wsum = np.zeros((hh, W), dtype=np.int64)
-        base = P[r0 + sh : r0 + sh + hh + t - 1, sh : sh + W + t - 1]
-        for dy in range(-sh, sh + 1):
-            for dx in range(-sh, sh + 1):
-                shifted = P[
-                    r0 + sh + dy : r0 + sh + dy + hh + t - 1,
-                    sh + dx : sh + dx + W + t - 1,
-                ]
-                d = base - shifted
-                d *= d
-                integ = np.zeros((hh + t, W + t), dtype=np.int64)
-                np.cumsum(d, axis=0, out=integ[1:, 1:])
-                np.cumsum(integ[1:, 1:], axis=1, out=integ[1:, 1:])
-                dist = (
-                    integ[t:, t:]
-                    - integ[:-t, t:]
-                    - integ[t:, :-t]
-                    + integ[:-t, :-t]
-                )
-                w = lut[dist >> _NLM_BIN_SHIFT]
-                center = P[
-                    r0 + border + dy : r0 + border + dy + hh,
-                    border + dx : border + dx + W,
-                ]
-                est += w * center
-                wsum += w
-        out[r0:r1] = ((est + (wsum >> 1)) // wsum).astype(np.uint8)
-    return out
-
-
-def _nlmeans_np_multi(
-    img: np.ndarray, h: float, strip_rows: int = 256
-) -> np.ndarray:
-    """cn-channel generalization of _nlmeans_np (OpenCV's CV_8UC2/3
-    invoker shape): template distances are VECTOR L2 — per-offset SSD
-    summed over channels through one shared integral image — the LUT
-    denominator is h^2*cn, and one weight field drives every channel's
-    fixed-point accumulation. Same strip budget: the per-offset int64
-    integral is (strip+7, W+7) regardless of cn."""
+    LUT, integer accumulation with round-half-up division. Template
+    distances are VECTOR L2 — per-offset SSD summed over channels
+    through one shared integral image — the LUT denominator is h^2*cn,
+    and one weight field drives every channel's accumulation. Runs in
+    row strips so temporaries stay under the sandbox's 32 MB re-fault
+    threshold (one (strip+7, W+7) int64 integral per offset, whatever
+    the channel count)."""
+    gray = img.ndim == 2
+    if gray:
+        img = img[..., None]
     H, W, C = img.shape
     th, sh = NLM_TEMPLATE // 2, NLM_SEARCH // 2  # 3, 10
     border = th + sh  # 13
@@ -765,7 +663,7 @@ def _nlmeans_np_multi(
         out[r0:r1] = (
             (est + (wsum >> 1)[:, :, None]) // wsum[:, :, None]
         ).astype(np.uint8)
-    return out
+    return out[..., 0] if gray else out
 
 
 # linear-BGR <-> CIELab for 8-bit images, the colorspace
@@ -818,15 +716,15 @@ def _nlmeans_color_np(
 ) -> np.ndarray:
     """Pure-numpy twin of cv2.fastNlMeansDenoisingColored (VERDICT r4
     #5), following the public OpenCV pipeline (photo/denoising.cpp):
-    convert linear-BGR to Lab, denoise the L plane with the grayscale
-    invoker at `h`, denoise the (a,b) pair as ONE 2-channel image
+    convert linear-BGR to Lab, denoise the L plane with _nlmeans_np at
+    `h`, denoise the (a,b) pair as ONE 2-channel image
     (vector L2 distances, denominator h_color^2*2) at `h_color`, and
     convert back. Chroma noise is averaged jointly — the property the
     median3 stand-in could not reproduce."""
     lab = _lbgr_to_lab_u8(img)
     out = np.empty_like(lab)
     out[..., 0] = _nlmeans_np(lab[..., 0], h, strip_rows)
-    out[..., 1:] = _nlmeans_np_multi(lab[..., 1:], h_color, strip_rows)
+    out[..., 1:] = _nlmeans_np(lab[..., 1:], h_color, strip_rows)
     return _lab_to_lbgr_u8(out)
 
 
@@ -834,7 +732,7 @@ def nlmeans_denoise(img: np.ndarray, h: float = 10.0) -> np.ndarray:
     """cv2.fastNlMeansDenoising / fastNlMeansDenoisingColored
     (noise_removal.py:33-53) — real cv2 when installed; otherwise the
     strip-wise numpy twins reproduce the OpenCV algorithms: grayscale
-    via _nlmeans_np (same LUT binning, fixed-point weights, integer
+    via the _nlmeans_np invoker (same LUT binning, fixed-point weights, integer
     rounding) and color via _nlmeans_color_np (Lab split, L at h, ab
     jointly at hColor=h — matching the cv2 call below). The only
     residual gap vs real cv2 on color is the float-math Lab transform

@@ -16,7 +16,12 @@ import numpy as np
 
 from ocr_spark.config import PreprocessConfig
 from ocr_spark.imaging import kernels as K
-from ocr_spark.imaging.analyzer import AnalysisReuse, QualityAnalysis, analyze_quality
+from ocr_spark.imaging.analyzer import (
+    AnalysisReuse,
+    QualityAnalysis,
+    analyze_quality,
+    estimate_skew,
+)
 
 STEP_ORDER = (
     "grayscale",
@@ -68,18 +73,12 @@ def _gate_normalization(img: np.ndarray, a: QualityAnalysis) -> bool:
 
 def _gate_binarization(img: np.ndarray, cfg: PreprocessConfig) -> bool:
     # steps/binarization.py:31-42: configured method, skip if already binary
+    K.require_u8(img, "_gate_binarization")
     if cfg.binarization_method == "none":
         return False
-    if img.ndim == 2:
-        # distinct-value count via bincount (uint8) — ~13x cheaper than
-        # np.unique's sort on page-sized images, same gate decision
-        if img.dtype == np.uint8:
-            n_distinct = int((np.bincount(img.ravel(), minlength=256) > 0).sum())
-        else:
-            n_distinct = np.unique(img).size
-        if n_distinct <= 2:
-            return False
-    return True
+    # distinct-value count via bincount — ~13x cheaper than np.unique's
+    # sort on page-sized images, same gate decision
+    return img.ndim != 2 or (np.bincount(img.ravel(), minlength=256) > 0).sum() > 2
 
 
 def _apply_binarization(img: np.ndarray, cfg: PreprocessConfig) -> np.ndarray:
@@ -109,7 +108,6 @@ def _scale_factor(a: QualityAnalysis, cfg: PreprocessConfig) -> float:
 def preprocess(
     img: np.ndarray,
     cfg: PreprocessConfig,
-    analysis: QualityAnalysis | None = None,
     reuse: AnalysisReuse | None = None,
 ) -> PreprocessResult:
     """Run the gated preprocessing fold on one image.
@@ -122,10 +120,7 @@ def preprocess(
     only pass it when the pixels are unchanged (see AnalysisReuse).
     """
     original_size = (img.shape[1], img.shape[0])
-    if analysis is not None:
-        a = analysis
-    else:
-        a = analyze_quality(img, cfg, compute_skew=cfg.auto_deskew, reuse=reuse)
+    a = analyze_quality(img, cfg, compute_skew=cfg.auto_deskew, reuse=reuse)
 
     if not cfg.enabled:
         return PreprocessResult(
@@ -198,16 +193,7 @@ def global_deskew_ex(
     reuse); reuse is None whenever the pixels changed."""
     gray = img if img.ndim == 2 else K.to_gray(img)
     noise = K.estimate_noise(gray)
-    # estimate on a denoised view when the page is noisy — same rationale
-    # (and same gate) as analyze_quality's skew estimate: noise points
-    # bias the Hough peak, and the rotation they cause is what corrupts
-    # an otherwise-decodable page
-    if noise > cfg.noise_threshold:
-        angle = K.hough_skew(K.median3(gray), peak_lobe_only=True)
-        sobel = None
-    else:
-        sobel = K.sobel_masks(gray)
-        angle = K.hough_skew(gray, horiz=sobel[1])
+    angle, sobel = estimate_skew(gray, noise, cfg)
     if abs(angle) < cfg.skew_threshold:
         return img, False, angle, AnalysisReuse(gray, noise, sobel)
     return K.rotate_expand(img, -angle), True, angle, None

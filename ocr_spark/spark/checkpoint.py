@@ -75,16 +75,18 @@ def bucket_expr(n_buckets: int):
     return F.expr(_bucket_sql(n_buckets))
 
 
-def bucket_filter(df, n_buckets: int, b: int) -> str:
-    """Predicate (SQL text) selecting runtime bucket `b`.
+def group_filter(df, n_buckets: int, buckets: list[int]) -> str:
+    """Predicate (SQL text) selecting a GROUP of runtime buckets in one
+    scan.
 
     If the input carries the materialized `bucket` layout column
     (corpus.write_corpus_parquet), filter on IT — Catalyst turns a
     deterministic predicate over a hive partition column into a
-    PartitionFilter, so the scan reads ~1/n of the files instead of
+    PartitionFilter, so the scan reads only the group's files instead of
     re-scanning the whole corpus once per bucket (the r1 scale bug).
     `pmod(bucket, n)` assigns every doc to exactly one runtime bucket for
-    ANY layout count and any n.
+    ANY layout count and any n; otherwise the md5 hash (bucket_expr)
+    decides.
 
     CAUTION (ADVICE r2): the two methods only assign the SAME runtime
     bucket to a given doc when n divides the layout bucket count
@@ -95,16 +97,6 @@ def bucket_filter(df, n_buckets: int, b: int) -> str:
     and media with the other in the same bucket run — see
     run_extraction_job, which only prunes media when docs also filter on
     the bucket column."""
-    return group_filter(df, n_buckets, [b])
-
-
-def group_filter(df, n_buckets: int, buckets: list[int]) -> str:
-    """Predicate (SQL text) selecting a GROUP of runtime buckets in one
-    scan.
-
-    Same two methods as bucket_filter; `pmod(partition_col, n) IN (...)`
-    is still a deterministic partition predicate, so bucketed layouts
-    prune to exactly the group's files."""
     key = (
         f"pmod(bucket, {int(n_buckets)})"
         if "bucket" in df.columns

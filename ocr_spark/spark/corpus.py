@@ -83,34 +83,20 @@ def write_corpus_parquet(
     n_docs: int = 100,
     seed: int = 42,
     skew_monster_spans: int = 120,
-    row_group_docs: int = 512,
     layout_buckets: int = LAYOUT_BUCKETS,
 ) -> tuple[str, str]:
     """Generate the deterministic corpus and write documents/media parquet,
-    hive-partitioned by `bucket` (pass layout_buckets=0 for the legacy
-    single-file layout).
+    hive-partitioned by `bucket` (layout_buckets >= 1).
 
     Returns (docs_path, media_path)."""
+    if layout_buckets < 1:
+        raise ValueError(f"layout_buckets must be >= 1, got {layout_buckets}")
     docs, media = build_corpus(
         n_docs=n_docs, seed=seed, skew_monster_spans=skew_monster_spans
     )
     os.makedirs(out_dir, exist_ok=True)
     docs_path = os.path.join(out_dir, "documents.parquet")
     media_path = os.path.join(out_dir, "media.parquet")
-
-    if not layout_buckets:
-        docs_tbl = pa.Table.from_pylist(
-            [{"doc_id": d["doc_id"], "spans": d["spans"]} for d in docs],
-            schema=pa.schema([f for f in DOCS_ARROW if f.name != "bucket"]),
-        )
-        keep = ("media_ref", "png", "width", "height")
-        media_tbl = pa.Table.from_pylist(
-            [{k: m[k] for k in keep} for m in media],
-            schema=pa.schema([f for f in MEDIA_ARROW if f.name in keep]),
-        )
-        pq.write_table(docs_tbl, docs_path, row_group_size=row_group_docs)
-        pq.write_table(media_tbl, media_path, row_group_size=256)
-        return docs_path, media_path
 
     doc_bucket = {d["doc_id"]: bucket_of(d["doc_id"], layout_buckets) for d in docs}
     # media inherits the owning doc's bucket so per-bucket runs prune
@@ -159,7 +145,7 @@ def write_corpus_parquet(
             {"doc_id": d["doc_id"], "spans": d["spans"], "bucket": doc_bucket[d["doc_id"]]}
             for d in docs
         ],
-        DOCS_ARROW, docs_path, ["bucket"], row_group_docs,
+        DOCS_ARROW, docs_path, ["bucket"], 512,
     )
     # media rows carry PNGs; small row groups keep Spark input splits balanced
     _write_partitioned(

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
 import os
 import sys
 import time
@@ -29,17 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
-
-def _canon(v):
-    # driver-style canonicalization (ocr_spark.functions.compare._canon):
-    # floats at 6 dp, NULL -> "", everything else str()
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return f"{v:.6f}"
-    if v is None:
-        return ""
-    return str(v)
+from ocr_spark.functions.compare import _canon  # noqa: E402
 
 
 def _value_hash(cols: list[str], rows, getter) -> tuple[int, str]:

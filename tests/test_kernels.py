@@ -549,13 +549,53 @@ def test_sobel_masks_threshold_boundaries():
     assert list(zip(edges[1, 1::3].tolist(), horiz[1, 1::3].tolist())) == list(cases.values())
 
 
+def _ref_estimate_noise(gray):
+    """Median 5x5 local std-dev over float64 window means, normalized by
+    50 and clamped to 1: the formula estimate_noise computes from exact
+    integer window sums."""
+    from numpy.lib.stride_tricks import sliding_window_view
+
+    g = np.pad(gray.astype(np.float64), 2, mode="edge")
+    mean = sliding_window_view(g, (5, 5)).mean(axis=(-2, -1))
+    sq = sliding_window_view(g * g, (5, 5)).mean(axis=(-2, -1))
+    return min(1.0, float(np.median(np.sqrt(np.abs(sq - mean * mean)))) / 50.0)
+
+
 def test_estimate_noise_u8_matches_float_path():
     """The uint8 path (exact integer window sums in strips) gives the same
-    float as the float64 box_mean path, strip boundaries included."""
+    float as a float64 sliding-window reference, strip boundaries
+    included."""
     rng = np.random.default_rng(9)
     extra = [np.where(rng.random((400, 300)) < 0.1, 0, 255).astype(np.uint8)]
     for gray in _gray_images() + extra:
-        assert K.estimate_noise(gray) == K.estimate_noise(gray.astype(np.float64))
+        assert K.estimate_noise(gray) == _ref_estimate_noise(gray)
+
+
+def test_box_mean_u8_int64_path_wide_image():
+    """A row wide enough for 255*k*(w+k+1) to reach 2^31 accumulates in
+    int64 (the running sums of this near-white image pass 2^31); the
+    means equal a float64 reference."""
+    from numpy.lib.stride_tricks import sliding_window_view
+
+    k, h, w = 11, 3, 800_000
+    assert 255 * k * (w + k + 1) >= 2**31
+    rng = np.random.default_rng(12)
+    img = np.where(rng.random((h, w)) < 0.01, 0, 255).astype(np.uint8)
+    p = np.pad(img, k // 2, mode="edge")
+    cols = sliding_window_view(p, k, axis=0).sum(axis=-1, dtype=np.float64)
+    want = sliding_window_view(cols, k, axis=1).sum(axis=-1) / (k * k)
+    assert np.array_equal(K.box_mean_u8(img, k), want)
+
+
+@pytest.mark.parametrize(
+    "fn",
+    [K.estimate_noise, K.sobel_masks, K.binarize_adaptive, lambda g: K.box_mean_u8(g, 5)],
+    ids=["estimate_noise", "sobel_masks", "binarize_adaptive", "box_mean_u8"],
+)
+def test_gray_kernels_reject_non_uint8(fn):
+    for dtype in (np.float64, np.uint16):
+        with pytest.raises(TypeError, match="uint8"):
+            fn(np.full((20, 20), 128, dtype=dtype))
 
 
 def _ref_resize_bilinear(img, new_w, new_h):

@@ -2,11 +2,16 @@
 (/root/reference/app/ocr/preprocessing/steps/*.py)."""
 
 import numpy as np
+import pytest
 
 from ocr_spark.config import PreprocessConfig
 from ocr_spark.extract.glyph import extract_text, render_page
 from ocr_spark.imaging.analyzer import analyze_quality, estimate_dpi
-from ocr_spark.imaging.preprocess import global_deskew_ex, preprocess
+from ocr_spark.imaging.preprocess import (
+    _gate_binarization,
+    global_deskew_ex,
+    preprocess,
+)
 
 CFG = PreprocessConfig()
 
@@ -80,6 +85,11 @@ def test_binarization_gate_skips_binary():
     )
     assert "binarization" in r2.steps_applied
     assert set(np.unique(r2.image)).issubset({0, 255})
+
+
+def test_binarization_gate_rejects_non_uint8():
+    with pytest.raises(TypeError, match="uint8"):
+        _gate_binarization(_page().astype(np.float64), CFG)
 
 
 def _ramped(page):

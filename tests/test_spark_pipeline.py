@@ -273,6 +273,14 @@ def test_mixed_inputs_hash_docs_bucketed_media(
     assert_equals_oracle(rows, oracle_extracted)
 
 
+def test_write_corpus_rejects_unbucketed_layout(tmp_path):
+    from ocr_spark.spark.corpus import write_corpus_parquet
+
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="layout_buckets"):
+            write_corpus_parquet(str(tmp_path), n_docs=1, layout_buckets=bad)
+
+
 def test_mixed_geometry_judged_against_ingested_layout(
     spark, oracle_extracted, tmp_path
 ):
