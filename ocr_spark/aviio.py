@@ -1,13 +1,12 @@
 """Uncompressed-AVI (RIFF ``AVI ``) writer + frame walker.
 
-PyAV/ffmpeg is the real video decoder when installed, but it is absent
-in this container — and unlike audio (stdlib ``wave``) the stdlib has no
-video codec at all, so until now the frame-sampling path could only run
-its deterministic fake here. This module is the video sibling of
-pdfio's no-fitz header walker: *uncompressed* DIB AVIs (``BI_RGB``,
-8-bit grayscale palette or 24-bit BGR) parse in pure numpy, so the REAL
-frame-sampling path — container parse, per-frame decode, every-Nth
-stride — executes and is testable in this sandbox. Compressed codecs
+PyAV/ffmpeg is the real video decoder when installed; without it, and
+unlike audio (stdlib ``wave``), the stdlib has no video codec at all.
+This module is the video sibling of pdfio's no-fitz header walker:
+*uncompressed* DIB AVIs (``BI_RGB``, 8-bit grayscale palette or 24-bit
+BGR) parse in pure numpy, so the REAL frame-sampling path — container
+parse, per-frame decode, every-Nth stride — executes and is testable
+without PyAV. Compressed codecs
 (MJPEG, H.264, …) remain PyAV's job and raise here, exactly like
 compressed-xref PDFs raise in the pdf walker.
 

@@ -14,6 +14,11 @@ Spark pipeline consume identical bytes.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from collections.abc import Callable
+
 import numpy as np
 
 from ocr_spark.extract.glyph import CELL, line_width_px, render_page, wrap_line
@@ -336,6 +341,45 @@ def build_corpus(n_docs: int = 100, seed: int = 42, skew_monster_spans: int = 12
 
 
 # --------------------------------------------------------------------------
+# cached fixture tables under the temp dir
+# --------------------------------------------------------------------------
+
+def cached_dir(name: str, build: Callable[[str], None]) -> str:
+    """``<tempdir>/name``, built once by ``build(dir)`` and reused.
+
+    The build runs in a private dir that is renamed into place (atomic on
+    one filesystem) after a ``_done`` marker is written, so a process
+    racing here never reads a half-written table: the first rename wins
+    and a losing builder discards its (byte-identical) build. A build
+    that raises leaves no final dir behind."""
+    d = os.path.join(tempfile.gettempdir(), name)
+    if os.path.exists(os.path.join(d, "_done")):
+        return d
+    tmp = tempfile.mkdtemp(prefix=f"{name}.build.", dir=os.path.dirname(d))
+    try:
+        build(tmp)
+        with open(os.path.join(tmp, "_done"), "w") as f:
+            f.write("ok")
+        try:
+            os.rename(tmp, d)
+        except OSError:
+            if not os.path.exists(os.path.join(d, "_done")):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return d
+
+
+def _write_payloads(path: str, rows: list[dict]) -> None:
+    """(media_ref, png) rows -> one parquet file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema([("media_ref", pa.string()), ("png", pa.binary())])
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), path)
+
+
+# --------------------------------------------------------------------------
 # video fixture table (uncompressed DIB AVIs for the real no-PyAV path)
 # --------------------------------------------------------------------------
 
@@ -377,29 +421,12 @@ def build_video_rows(n: int = VIDEO_TABLE_N, seed: int = 42) -> list[dict]:
 
 
 def video_table_dir() -> str:
-    """Deterministic video-fixture parquet under /tmp, cached per
-    version — the fixture_corpus_dir pattern."""
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = os.path.join(
-        tempfile.gettempdir(),
+    """Deterministic video-fixture table (videos.parquet), cached per
+    version."""
+    return cached_dir(
         f"ocr_spark_videos_{VIDEO_VERSION}_n{VIDEO_TABLE_N}",
+        lambda d: _write_payloads(f"{d}/videos.parquet", build_video_rows()),
     )
-    marker = os.path.join(d, "_done")
-    if not os.path.exists(marker):
-        os.makedirs(d, exist_ok=True)
-        schema = pa.schema([("media_ref", pa.string()), ("png", pa.binary())])
-        pq.write_table(
-            pa.Table.from_pylist(build_video_rows(), schema=schema),
-            os.path.join(d, "videos.parquet"),
-        )
-        with open(marker, "w") as f:
-            f.write("ok")
-    return d
 
 
 AUDIO_TABLE_N = 16
@@ -451,26 +478,9 @@ def build_audio_rows(n: int = AUDIO_TABLE_N, seed: int = 42) -> list[dict]:
 
 
 def audio_table_dir() -> str:
-    """Deterministic audio-fixture parquet under /tmp, cached per
-    version — the fixture_corpus_dir pattern."""
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = os.path.join(
-        tempfile.gettempdir(),
+    """Deterministic audio-fixture table (audio.parquet), cached per
+    version."""
+    return cached_dir(
         f"ocr_spark_audio_{AUDIO_VERSION}_n{AUDIO_TABLE_N}",
+        lambda d: _write_payloads(f"{d}/audio.parquet", build_audio_rows()),
     )
-    marker = os.path.join(d, "_done")
-    if not os.path.exists(marker):
-        os.makedirs(d, exist_ok=True)
-        schema = pa.schema([("media_ref", pa.string()), ("png", pa.binary())])
-        pq.write_table(
-            pa.Table.from_pylist(build_audio_rows(), schema=schema),
-            os.path.join(d, "audio.parquet"),
-        )
-        with open(marker, "w") as f:
-            f.write("ok")
-    return d

@@ -4,18 +4,23 @@
   a pure Catalyst array expression with a DuckDB oracle. The query
   synthesizes a model-stdout wrapper around each document's text in both
   engines identically, then parses it back out.
-* ``extract_pdf_metadata`` — the S3 metadata probe over the fixture
-  media table (rows-only; payloads aren't visible to DuckDB).
-* ``media_image_stats`` — multimodal binary-column plumbing: decode +
-  per-image stats via an Arrow-batched UDF (rows-only).
+* the golden-gated media queries — ``extract_pdf_metadata`` (the S3
+  pdf metadata probe), ``media_image_stats``, ``media_quality_analysis``
+  (A1-A8), ``media_video_frames`` and ``media_audio_features``: one
+  ``golden.MEDIA_QUERIES`` entry each, run here as an Arrow-batched
+  ``mapInPandas`` over the entry's fixture parquet and hash-gated
+  against its precomputed golden table.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.functions import QuerySpec, load
+from ocr_spark.functions.golden import MEDIA_QUERIES, MediaQuery, ensure_golden
 
 MARKER = "=" * 21
 BREAKER = "=" * 15
@@ -129,139 +134,28 @@ SELECT doc_id, length(parsed) AS parsed_len, md5(parsed) AS parsed_md5 FROM k
 
 
 # --------------------------------------------------------------------------
-# pdf metadata probe + multimodal image stats — golden-table oracles:
-# the expected results are precomputed by the single-process reference
-# implementation (functions/golden.py) over the SAME deterministic
-# fixture media table, so these image-path queries are fully hash-gated
-# despite their binary inputs being opaque to SQL.
+# golden-gated media queries (functions/golden.py): binary payloads are
+# opaque to SQL, so each query's expected rows are precomputed by the
+# same row builder over the same cached fixture parquet, single-process,
+# and its oracle reads that golden table back.
 # --------------------------------------------------------------------------
 
 
-def _golden_media(spark: SparkSession):
-    from ocr_spark.functions.golden import GOLDEN_DOCS, GOLDEN_SKEW, ensure_golden
-    from ocr_spark.spark.corpus import fixture_corpus_dir
+def _media_query(q: MediaQuery) -> Callable[[SparkSession, str], DataFrame]:
+    rows = q.rows
 
-    ensure_golden()  # the oracle SQL reads this parquet right after us
-    corpus = fixture_corpus_dir(GOLDEN_DOCS, GOLDEN_SKEW)
-    return spark.read.parquet(f"{corpus}/media.parquet")
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ensure_golden()  # the oracle SQL reads the golden table right after us
+        media = spark.read.parquet(q.source()).select("media_ref", "png")
+        return media.mapInPandas(lambda batches: map(rows, batches), q.schema)
 
-
-def q_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S3: page_count/title/author for every SPDF payload in the fixture
-    media table (/root/reference/app/services/pdf_service.py:182-214)."""
-    from ocr_spark.functions.golden import pdf_meta_frame
-
-    media = _golden_media(spark)
-
-    def fn(batches):
-        for b in batches:
-            yield pdf_meta_frame(b)
-
-    return media.mapInPandas(
-        fn, "media_ref string, page_count int, title string, author string"
-    )
-
-
-def q_media_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal binary-column path: decode PNG payloads in Arrow
-    batches and emit typed per-image stats (SURVEY.md §2 extension for
-    training-data pipelines)."""
-    from ocr_spark.multimodal import IMAGE_STATS_SCHEMA, image_stats_udf
-
-    media = _golden_media(spark)
-    return media.mapInPandas(image_stats_udf, IMAGE_STATS_SCHEMA)
-
-
-def q_media_quality_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1-A8 as a queryable table: one analyzer pass per image, metrics
-    exported for corpus-level aggregation (SURVEY.md §2.4)."""
-    from ocr_spark.functions.golden import quality_frame
-
-    media = _golden_media(spark)
-
-    def fn(batches):
-        for b in batches:
-            yield quality_frame(b)
-
-    schema = (
-        "media_ref string, width int, height int, is_grayscale boolean, "
-        "blur_score double, noise_level double, skew_angle double, "
-        "contrast_ratio double, brightness double, estimated_dpi int, "
-        "has_text boolean, is_inverted boolean"
-    )
-    return media.mapInPandas(fn, schema)
-
-
-def q_media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling over the deterministic AVI fixture table:
-    the real decoder per row (the pure-numpy uncompressed-AVI walker in
-    this container; PyAV when installed), every-Nth-frame stride, frames
-    reduced to md5 digests. The planted truncated AVI must vanish
-    (dropped row) and the planted non-RIFF payload must appear as the
-    single-frame stand-in — both shapes are part of the golden gate."""
-    import os
-
-    from ocr_spark.fixtures import video_table_dir
-    from ocr_spark.functions.golden import ensure_golden, video_frames_frame
-
-    ensure_golden()
-    vids = spark.read.parquet(
-        os.path.join(video_table_dir(), "videos.parquet")
-    )
-
-    def fn(batches):
-        for b in batches:
-            yield video_frames_frame(b)
-
-    return vids.mapInPandas(
-        fn, "media_ref string, frame_idx int, frame_md5 string"
-    )
-
-
-def q_media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio features over the deterministic WAV fixture table: real
-    per-row decode (stdlib PCM16 WAV here, soundfile when installed) —
-    mono-averaged stereo, a zero-frame WAV pinning rms 0.0, and a
-    non-audio payload pinning the typed decode_ok=false row."""
-    import os
-
-    from ocr_spark.fixtures import audio_table_dir
-    from ocr_spark.functions.golden import audio_features_frame, ensure_golden
-    from ocr_spark.multimodal import AUDIO_FEATURES_SCHEMA
-
-    ensure_golden()
-    auds = spark.read.parquet(os.path.join(audio_table_dir(), "audio.parquet"))
-
-    def fn(batches):
-        for b in batches:
-            yield audio_features_frame(b)
-
-    return auds.mapInPandas(fn, AUDIO_FEATURES_SCHEMA)
-
-
-def _golden_sql(name: str) -> str:
-    from ocr_spark.functions import golden
-
-    return {
-        "pdf_metadata": golden.SQL_PDF_METADATA,
-        "image_stats": golden.SQL_IMAGE_STATS,
-        "quality": golden.SQL_QUALITY,
-        "video_frames": golden.SQL_VIDEO_FRAMES,
-        "audio_features": golden.SQL_AUDIO_FEATURES,
-    }[name]
+    return fn
 
 
 QUERIES = {
     "infer_output_parse": QuerySpec(q_infer_parse, SQL_INFER_PARSE),
-    "extract_pdf_metadata": QuerySpec(q_pdf_metadata, _golden_sql("pdf_metadata")),
-    "media_image_stats": QuerySpec(q_media_image_stats, _golden_sql("image_stats")),
-    "media_quality_analysis": QuerySpec(
-        q_media_quality_analysis, _golden_sql("quality")
-    ),
-    "media_video_frames": QuerySpec(
-        q_media_video_frames, _golden_sql("video_frames")
-    ),
-    "media_audio_features": QuerySpec(
-        q_media_audio_features, _golden_sql("audio_features")
-    ),
+    **{
+        name: QuerySpec(_media_query(q), q.sql)
+        for name, q in MEDIA_QUERIES.items()
+    },
 }

@@ -14,7 +14,13 @@ but this repo's code — a genuine independent check of the distributed
 plan, not a tautology (Spark runs the Arrow/Catalyst pipeline; the
 golden runs the sequential reference implementation).
 
-All image-path queries pin the SAME fixed-size corpus
+Each golden media query is one ``MEDIA_QUERIES`` entry — its cached
+fixture parquet, its row builder (pandas batch -> DataFrame) and its DDL
+schema — from which extractops derives the Spark query, ``_build`` the
+golden table and ``MediaQuery.sql`` the oracle. The extraction pipeline
+golden (``extract_spans``) keeps its own shape.
+
+All corpus-media queries pin the SAME fixed-size corpus
 (GOLDEN_DOCS/GOLDEN_SKEW), decoupling correctness from the bench corpus
 scaling (bench.py sizes its own corpora).
 """
@@ -24,23 +30,30 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+from collections.abc import Callable
+from dataclasses import dataclass
+
+import pandas as pd
+
+from ocr_spark.fixtures import audio_table_dir, cached_dir, video_table_dir
+from ocr_spark.multimodal import (
+    AUDIO_FEATURES_SCHEMA,
+    IMAGE_STATS_SCHEMA,
+    audio_features_frame,
+    image_stats_frame,
+    make_frame_sample_udf,
+)
 
 GOLDEN_DOCS = 60
 GOLDEN_SKEW = 24
 # bump when fixture generation, kernels, or golden schemas change
 GOLDEN_VERSION = "v5"  # v3: + video_frames; v4: + audio_features; v5: noisy-page skew estimate
 
-_TABLES = (
-    "extract_spans", "pdf_metadata", "image_stats", "quality",
-    "video_frames", "audio_features",
-)
+_GOLDEN_NAME = f"ocr_spark_golden_{GOLDEN_VERSION}_n{GOLDEN_DOCS}_s{GOLDEN_SKEW}"
 
 
 def golden_dir() -> str:
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"ocr_spark_golden_{GOLDEN_VERSION}_n{GOLDEN_DOCS}_s{GOLDEN_SKEW}",
-    )
+    return os.path.join(tempfile.gettempdir(), _GOLDEN_NAME)
 
 
 def golden_path(table: str) -> str:
@@ -49,16 +62,16 @@ def golden_path(table: str) -> str:
 
 
 # --------------------------------------------------------------------------
-# shared per-batch row builders: the Spark UDFs and the golden builder
-# call the SAME functions, so the only thing the gate can catch is the
-# distributed plan (scan/join/shuffle/reassembly) — which is the point.
+# per-batch row builders: the Spark queries and the golden build call the
+# SAME functions, so the only thing the gate can catch is the distributed
+# plan (scan/join/shuffle/reassembly) — which is the point.
 # --------------------------------------------------------------------------
 
 
-def pdf_meta_frame(batch):
-    """(media_ref, png) pandas batch -> pdf metadata rows (S3 probe)."""
-    import pandas as pd
-
+def pdf_meta_frame(batch: pd.DataFrame) -> pd.DataFrame:
+    """(media_ref, png) pandas batch -> pdf metadata rows: the S3 probe's
+    page_count/title/author for every SPDF payload (the reference's
+    pdf_service.py:182-214)."""
     from ocr_spark.pdfio import is_pdf, pdf_metadata
 
     rows = []
@@ -78,20 +91,13 @@ def pdf_meta_frame(batch):
                 "author": str(meta.get("author", "")),
             }
         )
-    return pd.DataFrame(rows, columns=["media_ref", "page_count", "title", "author"])
+    return pd.DataFrame(rows)
 
 
-QUALITY_COLS = [
-    "media_ref", "width", "height", "is_grayscale", "blur_score",
-    "noise_level", "skew_angle", "contrast_ratio", "brightness",
-    "estimated_dpi", "has_text", "is_inverted",
-]
-
-
-def quality_frame(batch):
-    """(media_ref, png) pandas batch -> A1-A8 analyzer rows."""
-    import pandas as pd
-
+def quality_frame(batch: pd.DataFrame) -> pd.DataFrame:
+    """(media_ref, png) pandas batch -> A1-A8 analyzer rows: one analyzer
+    pass per image, metrics exported for corpus-level aggregation
+    (SURVEY.md §2.4)."""
     from ocr_spark.config import PreprocessConfig
     from ocr_spark.imaging.analyzer import analyze_quality
     from ocr_spark.imaging.png import decode_png
@@ -120,24 +126,19 @@ def quality_frame(batch):
                 "is_inverted": a.is_inverted,
             }
         )
-    return pd.DataFrame(rows, columns=QUALITY_COLS)
+    return pd.DataFrame(rows)
 
 
 VIDEO_EVERY_N = 3
-VIDEO_COLS = ["media_ref", "frame_idx", "frame_md5"]
 
 
-def video_frames_frame(batch):
+def video_frames_frame(batch: pd.DataFrame) -> pd.DataFrame:
     """(media_ref, png[AVI]) pandas batch -> sampled-frame digest rows.
     Runs the REAL frame-sampling UDF (PyAV when installed, the pure-numpy
-    AVI walker here) and reduces each frame PNG to its md5 — the
-    hash-gateable shape of the video path."""
-    import hashlib
-
-    import pandas as pd
-
-    from ocr_spark.multimodal import make_frame_sample_udf
-
+    AVI walker otherwise) at every VIDEO_EVERY_N-th frame and reduces
+    each frame PNG to its md5 — the hash-gateable shape of the video
+    path. The planted truncated AVI vanishes (dropped row) and the
+    planted non-RIFF payload appears as the single-frame stand-in."""
     (out,) = list(make_frame_sample_udf(every_n=VIDEO_EVERY_N)(iter([batch])))
     return pd.DataFrame(
         {
@@ -146,18 +147,84 @@ def video_frames_frame(batch):
             "frame_md5": [
                 hashlib.md5(bytes(b)).hexdigest() for b in out["frame_png"]
             ],
-        },
-        columns=VIDEO_COLS,
+        }
     )
 
 
-def audio_features_frame(batch):
-    """(media_ref, png[WAV]) pandas batch -> typed audio-feature rows via
-    the REAL decoder (soundfile when installed, stdlib PCM16-WAV here)."""
-    from ocr_spark.multimodal import make_audio_features_udf
+# --------------------------------------------------------------------------
+# the golden media queries: one entry each drives the Spark query
+# (extractops), the golden table (_build) and the oracle SQL
+# --------------------------------------------------------------------------
 
-    (out,) = list(make_audio_features_udf()(iter([batch])))
-    return out
+
+def _corpus_table(table: str) -> str:
+    """A table of the fixed-size golden fixture corpus (cached parquet)."""
+    from ocr_spark.spark.corpus import fixture_corpus_dir
+
+    corpus = fixture_corpus_dir(GOLDEN_DOCS, GOLDEN_SKEW)
+    return os.path.join(corpus, f"{table}.parquet")
+
+
+def _corpus_media() -> str:
+    return _corpus_table("media")
+
+
+def _videos() -> str:
+    return os.path.join(video_table_dir(), "videos.parquet")
+
+
+def _audio() -> str:
+    return os.path.join(audio_table_dir(), "audio.parquet")
+
+
+@dataclass(frozen=True)
+class MediaQuery:
+    """One golden-gated media query: ``rows`` maps a (media_ref, png)
+    pandas batch of the ``source`` parquet to result rows; ``schema``
+    (Spark DDL) is the query's one column list."""
+
+    table: str  # golden table name
+    source: Callable[[], str]  # builds (once) and returns the parquet path
+    rows: Callable[[pd.DataFrame], pd.DataFrame]
+    schema: str
+
+    @property
+    def columns(self) -> list[str]:
+        return [f.split()[0] for f in self.schema.split(",")]
+
+    @property
+    def sql(self) -> str:
+        return (
+            f"SELECT {', '.join(self.columns)} "
+            f"FROM read_parquet('{golden_path(self.table)}')"
+        )
+
+
+MEDIA_QUERIES = {
+    "extract_pdf_metadata": MediaQuery(
+        "pdf_metadata", _corpus_media, pdf_meta_frame,
+        "media_ref string, page_count int, title string, author string",
+    ),
+    "media_image_stats": MediaQuery(
+        "image_stats", _corpus_media, image_stats_frame, IMAGE_STATS_SCHEMA
+    ),
+    "media_quality_analysis": MediaQuery(
+        "quality", _corpus_media, quality_frame,
+        "media_ref string, width int, height int, is_grayscale boolean, "
+        "blur_score double, noise_level double, skew_angle double, "
+        "contrast_ratio double, brightness double, estimated_dpi int, "
+        "has_text boolean, is_inverted boolean",
+    ),
+    "media_video_frames": MediaQuery(
+        "video_frames", _videos, video_frames_frame,
+        "media_ref string, frame_idx int, frame_md5 string",
+    ),
+    "media_audio_features": MediaQuery(
+        "audio_features", _audio, audio_features_frame, AUDIO_FEATURES_SCHEMA
+    ),
+}
+
+_TABLES = ("extract_spans", *(q.table for q in MEDIA_QUERIES.values()))
 
 
 # --------------------------------------------------------------------------
@@ -169,28 +236,31 @@ def _md5_utf8(text: str) -> str:
     return hashlib.md5(text.encode("utf-8")).hexdigest()
 
 
+def _payloads(path: str) -> pd.DataFrame:
+    import pyarrow.parquet as pq
+
+    return pq.read_table(path, columns=["media_ref", "png"]).to_pandas()
+
+
 def _build(out_dir: str) -> None:
-    import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from ocr_spark.core import process_document
-    from ocr_spark.fixtures import build_corpus
-    from ocr_spark.multimodal import image_stats_udf
 
-    docs, media = build_corpus(
-        n_docs=GOLDEN_DOCS, seed=42, skew_monster_spans=GOLDEN_SKEW
-    )
-    lookup = {m["media_ref"]: m["png"] for m in media}
+    # the same cached corpus parquet the Spark queries scan
+    media = _payloads(_corpus_media())
+    lookup = dict(zip(media["media_ref"], media["png"]))
+    docs = pq.read_table(
+        _corpus_table("documents"), columns=["doc_id", "spans"]
+    ).to_pylist()
 
     # 1. extract_spans — the single-process oracle, flattened exactly like
     # __spark_entry__._extract_query flattens the Spark result
     # (explode_outer: an empty-spans doc keeps one all-null span row)
     span_rows = []
     for d in docs:
-        out_spans, _metrics = process_document(
-            d["doc_id"], d["spans"], lambda r: lookup.get(r)
-        )
+        out_spans, _metrics = process_document(d["doc_id"], d["spans"], lookup.get)
         if not out_spans:
             # sentinel row for the explode_outer null span: keep every
             # column non-null so no engine/client coerces ints to floats
@@ -227,101 +297,30 @@ def _build(out_dir: str) -> None:
         ]
     )
 
-    media_pdf = pd.DataFrame(
-        {
-            "media_ref": [m["media_ref"] for m in media],
-            "png": [m["png"] for m in media],
-        }
-    )
-
-    # write into out_dir (the caller's private build dir — ensure_golden
-    # renames it into place atomically), NOT golden_path's final dir
-    os.makedirs(out_dir, exist_ok=True)
     pq.write_table(
         pa.Table.from_pylist(span_rows, schema=spans_schema),
         os.path.join(out_dir, "extract_spans.parquet"),
     )
-    pq.write_table(
-        pa.Table.from_pandas(pdf_meta_frame(media_pdf), preserve_index=False),
-        os.path.join(out_dir, "pdf_metadata.parquet"),
-    )
-    stats = pd.concat(list(image_stats_udf(iter([media_pdf]))), ignore_index=True)
-    pq.write_table(
-        pa.Table.from_pandas(stats, preserve_index=False),
-        os.path.join(out_dir, "image_stats.parquet"),
-    )
-    pq.write_table(
-        pa.Table.from_pandas(quality_frame(media_pdf), preserve_index=False),
-        os.path.join(out_dir, "quality.parquet"),
-    )
-
-    from ocr_spark.fixtures import build_audio_rows, build_video_rows
-
-    vids = pd.DataFrame(build_video_rows())
-    pq.write_table(
-        pa.Table.from_pandas(video_frames_frame(vids), preserve_index=False),
-        os.path.join(out_dir, "video_frames.parquet"),
-    )
-    auds = pd.DataFrame(build_audio_rows())
-    pq.write_table(
-        pa.Table.from_pandas(audio_features_frame(auds), preserve_index=False),
-        os.path.join(out_dir, "audio_features.parquet"),
-    )
+    # 2. the media queries: each row builder over its whole source table
+    for q in MEDIA_QUERIES.values():
+        rows = q.rows(_payloads(q.source())).reindex(columns=q.columns)
+        pq.write_table(
+            pa.Table.from_pandas(rows, preserve_index=False),
+            os.path.join(out_dir, f"{q.table}.parquet"),
+        )
 
 
 def ensure_golden() -> str:
     """Idempotently build the golden tables; returns their directory.
-
-    Concurrency-safe: builds into a process-private temp dir and
-    os.rename()s it into place (atomic on one filesystem), so two
-    processes racing here (pytest-xdist workers, bench + driver gate)
-    can never observe a half-written parquet — one rename wins, the
-    loser discards its build."""
-    d = golden_dir()
-    marker = os.path.join(d, "_done")
-    if not os.path.exists(marker):
-        tmp = f"{d}.build.{os.getpid()}"
-        _build(tmp)
-        with open(os.path.join(tmp, "_done"), "w") as f:
-            f.write("ok")
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            # a concurrent builder renamed first; its tables are
-            # byte-identical (deterministic build) — keep theirs
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-    return d
+    Built once per temp dir, concurrency-safe (fixtures.cached_dir)."""
+    return cached_dir(_GOLDEN_NAME, _build)
 
 
-# oracle SQL over the golden tables (paths are deterministic constants,
-# so these strings are static — safe to hand to the driver's DuckDB)
+# oracle SQL of the extraction pipeline over its golden table (the path
+# is a deterministic constant, so the string is static); the media
+# queries' SQL is MediaQuery.sql
 
 SQL_EXTRACT_SPANS = (
     'SELECT doc_id, "offset", kind, media_ref, n_chars, text_md5 '
     f"FROM read_parquet('{golden_path('extract_spans')}')"
-)
-SQL_PDF_METADATA = (
-    "SELECT media_ref, page_count, title, author "
-    f"FROM read_parquet('{golden_path('pdf_metadata')}')"
-)
-SQL_IMAGE_STATS = (
-    "SELECT media_ref, width, height, channels, mean_intensity, "
-    "std_intensity, decode_ok "
-    f"FROM read_parquet('{golden_path('image_stats')}')"
-)
-SQL_QUALITY = (
-    "SELECT media_ref, width, height, is_grayscale, blur_score, "
-    "noise_level, skew_angle, contrast_ratio, brightness, estimated_dpi, "
-    "has_text, is_inverted "
-    f"FROM read_parquet('{golden_path('quality')}')"
-)
-SQL_VIDEO_FRAMES = (
-    "SELECT media_ref, frame_idx, frame_md5 "
-    f"FROM read_parquet('{golden_path('video_frames')}')"
-)
-SQL_AUDIO_FEATURES = (
-    "SELECT media_ref, n_samples, duration_s, rms, decode_ok "
-    f"FROM read_parquet('{golden_path('audio_features')}')"
 )

@@ -62,24 +62,25 @@ def require_u8(img: np.ndarray, fn: str) -> None:
         raise TypeError(f"{fn} expects a uint8 image, got {img.dtype}")
 
 
-# strips keep every float64/int64 temp under ~16 MB (see resize_bilinear
-# note); int32 temps allow 2x the elements
-_BOX_STRIP_ELEMS = 2 << 20
+# strips keep every int32 temp under ~16 MB (see resize_bilinear note)
+_BOX_STRIP_ELEMS = 4 << 20
 
 
-def _box_mean_block_u8(img_u8: np.ndarray, k: int, acc: type) -> np.ndarray:
-    """k x k window sums by integral image in the integer dtype `acc`,
-    divided by k*k in float64. The first window's sum is cs[k-1]
-    (implicit zero row/col) — written directly instead of prepending a
-    zeros row/col, which would copy the whole array."""
+def _box_mean_block_u8(img_u8: np.ndarray, k: int) -> np.ndarray:
+    """k x k window sums by integral image in int32, divided by k*k in
+    float64. The running cumsums may wrap past 2^31, but every window sum
+    is a difference of two of them and fits int32 (<= 255*k*k), so the
+    wrapping subtraction recovers it exactly. The first window's sum is
+    cs[k-1] (implicit zero row/col) — written directly instead of
+    prepending a zeros row/col, which would copy the whole array."""
     pad = k // 2
     padded = np.pad(img_u8, pad, mode="edge")
-    cs = padded.cumsum(axis=0, dtype=acc)
-    rows = np.empty((cs.shape[0] - k + 1, cs.shape[1]), dtype=acc)
+    cs = padded.cumsum(axis=0, dtype=np.int32)
+    rows = np.empty((cs.shape[0] - k + 1, cs.shape[1]), dtype=np.int32)
     rows[0] = cs[k - 1]
     np.subtract(cs[k:], cs[:-k], out=rows[1:])
-    cs2 = rows.cumsum(axis=1, dtype=acc)
-    summed = np.empty((rows.shape[0], cs2.shape[1] - k + 1), dtype=acc)
+    cs2 = rows.cumsum(axis=1, dtype=np.int32)
+    summed = np.empty((rows.shape[0], cs2.shape[1] - k + 1), dtype=np.int32)
     summed[:, 0] = cs2[:, k - 1]
     np.subtract(cs2[:, k:], cs2[:, :-k], out=summed[:, 1:])
     return summed / (k * k)
@@ -88,21 +89,18 @@ def _box_mean_block_u8(img_u8: np.ndarray, k: int, acc: type) -> np.ndarray:
 def box_mean_u8(img_u8: np.ndarray, k: int) -> np.ndarray:
     """k x k moving average (replicate borders) of a uint8 image.
 
-    Window sums accumulate in int32, or in int64 where the horizontal
-    cumsum of k-row sums (values <= 255*k over w+k columns) could
-    overflow int32. Large images run in row strips with a k//2 halo;
-    the sums are exact either way, so the strip-wise result is
-    bit-identical to the whole-image computation.
+    Window sums are exact int32 integers (see _box_mean_block_u8). Large
+    images run in row strips with a k//2 halo; the sums are exact either
+    way, so the strip-wise result is bit-identical to the whole-image
+    computation.
     """
     require_u8(img_u8, "box_mean_u8")
     h, w = img_u8.shape
-    acc = np.int32 if 255 * k * (w + k + 1) < 2**31 else np.int64
-    elems = _BOX_STRIP_ELEMS * 8 // np.dtype(acc).itemsize
-    if h * w <= elems or h <= 2 * k:
-        return _box_mean_block_u8(img_u8, k, acc)
+    if h * w <= _BOX_STRIP_ELEMS or h <= 2 * k:
+        return _box_mean_block_u8(img_u8, k)
     pad = k // 2
     out = np.empty((h, w), dtype=np.float64)
-    step = max(k, elems // w)
+    step = max(k, _BOX_STRIP_ELEMS // w)
     for s in range(0, h, step):
         e = min(s + step, h)
         # halo rows come from the image; replicate-pad only at the ends
@@ -111,7 +109,7 @@ def box_mean_u8(img_u8: np.ndarray, k: int) -> np.ndarray:
         top, bot = pad - (s - s0), pad - (e0 - e)
         if top or bot:
             block = np.pad(block, ((top, bot), (0, 0)), mode="edge")
-        out[s:e] = _box_mean_block_u8(block, k, acc)[pad:pad + (e - s)]
+        out[s:e] = _box_mean_block_u8(block, k)[pad:pad + (e - s)]
     return out
 
 

@@ -1,19 +1,19 @@
 """Multimodal column support: image/audio/video as opaque binary columns
-with typed metadata, processed by Arrow-batched UDFs.
+with typed metadata, processed by Arrow-batched row builders.
 
 The image path is real (our PNG codec + numpy kernels). Audio and video
 decode are feature-detected like pdfio's fitz pattern: soundfile / PyAV
 run real decodes when installed; without them, PCM16 WAV still decodes
-for real via the stdlib ``wave`` fallback, video falls back to a
-deterministic fake, and undecodable payloads become typed
-decode_ok=False rows — never exceptions. The Spark-side plumbing
-(schemas, UDF signatures, batch shapes, partitioning) is identical in
-every mode and is what the tests pin.
+for real via the stdlib ``wave`` fallback and uncompressed AVIs via the
+pure-numpy RIFF walker. Undecodable audio/image payloads become typed
+decode_ok=False rows, never exceptions; a video payload no decoder
+covers becomes a single-frame stand-in row. ``image_stats_frame`` and
+``audio_features_frame`` are the row builders of the golden-gated
+media queries (functions/golden.py, which pairs each with its schema).
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -24,8 +24,6 @@ IMAGE_STATS_SCHEMA = (
     "mean_intensity double, std_intensity double, decode_ok boolean"
 )
 
-THUMBNAIL_SCHEMA = "media_ref string, thumb binary, thumb_w int, thumb_h int"
-
 AUDIO_FEATURES_SCHEMA = (
     "media_ref string, n_samples bigint, duration_s double, rms double, "
     "decode_ok boolean"
@@ -34,78 +32,41 @@ AUDIO_FEATURES_SCHEMA = (
 VIDEO_FRAMES_SCHEMA = "media_ref string, frame_idx int, frame_png binary"
 
 
-def image_stats_udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Decode PNG payloads and emit typed per-image stats."""
+def image_stats_frame(batch: pd.DataFrame) -> pd.DataFrame:
+    """(media_ref, png) pandas batch -> typed per-image stats rows
+    (IMAGE_STATS_SCHEMA)."""
     from ocr_spark.imaging.png import decode_png
 
-    for b in batches:
-        rows = []
-        for r in b.itertuples():
-            data = bytes(r.png) if r.png is not None else b""
-            try:
-                img = decode_png(data)
-                ch = 1 if img.ndim == 2 else img.shape[2]
-                rows.append(
-                    {
-                        "media_ref": r.media_ref,
-                        "width": int(img.shape[1]),
-                        "height": int(img.shape[0]),
-                        "channels": ch,
-                        "mean_intensity": round(float(img.mean()), 6),
-                        "std_intensity": round(float(img.std()), 6),
-                        "decode_ok": True,
-                    }
-                )
-            except Exception:  # noqa: BLE001 — undecodable -> typed skip row
-                rows.append(
-                    {
-                        "media_ref": r.media_ref,
-                        "width": 0,
-                        "height": 0,
-                        "channels": 0,
-                        "mean_intensity": 0.0,
-                        "std_intensity": 0.0,
-                        "decode_ok": False,
-                    }
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "media_ref", "width", "height", "channels",
-                "mean_intensity", "std_intensity", "decode_ok",
-            ],
-        )
-
-
-def make_thumbnail_udf(size: int = 64):
-    """Resize every decodable image to size x size (real, bilinear)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_spark.imaging.kernels import resize_bilinear, to_gray
-        from ocr_spark.imaging.png import decode_png, encode_png
-
-        for b in batches:
-            rows = []
-            for r in b.itertuples():
-                data = bytes(r.png) if r.png is not None else b""
-                try:
-                    img = to_gray(decode_png(data))
-                except Exception:  # noqa: BLE001
-                    continue
-                thumb = resize_bilinear(img, size, size)
-                rows.append(
-                    {
-                        "media_ref": r.media_ref,
-                        "thumb": encode_png(thumb),
-                        "thumb_w": size,
-                        "thumb_h": size,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "thumb", "thumb_w", "thumb_h"]
+    rows = []
+    for r in batch.itertuples():
+        data = bytes(r.png) if r.png is not None else b""
+        try:
+            img = decode_png(data)
+            ch = 1 if img.ndim == 2 else img.shape[2]
+            rows.append(
+                {
+                    "media_ref": r.media_ref,
+                    "width": int(img.shape[1]),
+                    "height": int(img.shape[0]),
+                    "channels": ch,
+                    "mean_intensity": round(float(img.mean()), 6),
+                    "std_intensity": round(float(img.std()), 6),
+                    "decode_ok": True,
+                }
             )
-
-    return fn
+        except Exception:  # noqa: BLE001 — undecodable -> typed skip row
+            rows.append(
+                {
+                    "media_ref": r.media_ref,
+                    "width": 0,
+                    "height": 0,
+                    "channels": 0,
+                    "mean_intensity": 0.0,
+                    "std_intensity": 0.0,
+                    "decode_ok": False,
+                }
+            )
+    return pd.DataFrame(rows)
 
 
 def _soundfile():
@@ -136,8 +97,7 @@ def _decode_audio(data: bytes) -> tuple[np.ndarray, int]:
     PCM16 RIFF/WAVE payloads decode via the stdlib ``wave`` module (the
     same executable-fallback pattern as pdfio's header walker), so the
     real path runs in this container too. Anything else raises
-    NotImplementedError — the caller turns that into a typed skip row
-    or uses the deterministic fake."""
+    NotImplementedError — the caller turns that into a typed skip row."""
     sf = _soundfile()
     if sf is not None:
         import io
@@ -164,67 +124,45 @@ def _decode_audio(data: bytes) -> tuple[np.ndarray, int]:
     raise NotImplementedError(
         "audio decode requires soundfile/ffmpeg for non-WAV payloads "
         "(absent in this container); PCM16 WAV decodes via the stdlib "
-        "fallback; fake=True gives the deterministic stand-in"
+        "fallback"
     )
 
 
-def _fake_samples(data: bytes, n: int = 16000) -> np.ndarray:
-    """Deterministic stand-in: bytes -> seeded waveform (same shape the
-    real decoder would produce), so partitioning/batching is testable."""
-    seed = int.from_bytes(hashlib.md5(data).digest()[:4], "big")
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal(n).astype(np.float32)
-
-
-def make_audio_features_udf(sample_rate: int = 16000, fake: bool | None = None):
-    """Per-payload audio features. ``fake=None`` (default) attempts the
-    real decoder per row — soundfile when installed, stdlib WAV fallback
-    otherwise — and emits a typed decode_ok=False row for payloads it
-    cannot decode (same discipline as the image path). ``fake=True``
-    forces the deterministic stand-in (plumbing tests / non-audio
-    corpora); duration then uses the nominal ``sample_rate``."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for r in b.itertuples():
-                data = bytes(r.png) if r.png is not None else b""
-                try:
-                    if fake:
-                        samples, rate = _fake_samples(data), sample_rate
-                    else:
-                        samples, rate = _decode_audio(data)
-                    # a structurally valid zero-frame WAV decodes to an
-                    # empty array; mean([]) is NaN, and NaN in a
-                    # decode_ok row breaks downstream aggregation
-                    rms = (
-                        float(np.sqrt(np.mean(samples**2))) if len(samples) else 0.0
-                    )
-                    rows.append(
-                        {
-                            "media_ref": r.media_ref,
-                            "n_samples": len(samples),
-                            "duration_s": round(len(samples) / rate, 6),
-                            "rms": round(rms, 6),
-                            "decode_ok": True,
-                        }
-                    )
-                except Exception:  # noqa: BLE001 — undecodable -> typed skip
-                    rows.append(
-                        {
-                            "media_ref": r.media_ref,
-                            "n_samples": 0,
-                            "duration_s": 0.0,
-                            "rms": 0.0,
-                            "decode_ok": False,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "n_samples", "duration_s", "rms", "decode_ok"],
+def audio_features_frame(batch: pd.DataFrame) -> pd.DataFrame:
+    """(media_ref, png) pandas batch -> typed audio-feature rows
+    (AUDIO_FEATURES_SCHEMA). Each row runs the real decoder — soundfile
+    when installed, the stdlib WAV fallback otherwise — and a payload it
+    cannot decode becomes a typed decode_ok=False row (same discipline
+    as the image path)."""
+    rows = []
+    for r in batch.itertuples():
+        data = bytes(r.png) if r.png is not None else b""
+        try:
+            samples, rate = _decode_audio(data)
+            # a structurally valid zero-frame WAV decodes to an
+            # empty array; mean([]) is NaN, and NaN in a
+            # decode_ok row breaks downstream aggregation
+            rms = float(np.sqrt(np.mean(samples**2))) if len(samples) else 0.0
+            rows.append(
+                {
+                    "media_ref": r.media_ref,
+                    "n_samples": len(samples),
+                    "duration_s": round(len(samples) / rate, 6),
+                    "rms": round(rms, 6),
+                    "decode_ok": True,
+                }
             )
-
-    return fn
+        except Exception:  # noqa: BLE001 — undecodable -> typed skip
+            rows.append(
+                {
+                    "media_ref": r.media_ref,
+                    "n_samples": 0,
+                    "duration_s": 0.0,
+                    "rms": 0.0,
+                    "decode_ok": False,
+                }
+            )
+    return pd.DataFrame(rows)
 
 
 def _decode_video_frames(data: bytes, every_n: int) -> list[tuple[int, np.ndarray]]:
@@ -243,8 +181,7 @@ def _decode_video_frames(data: bytes, every_n: int) -> list[tuple[int, np.ndarra
         raise NotImplementedError(
             "video decode requires PyAV/ffmpeg for non-AVI payloads "
             "(absent in this container); uncompressed DIB AVIs decode "
-            "via the RIFF walker; fake=True gives the single-frame "
-            "stand-in"
+            "via the RIFF walker"
         )
     import io
 
@@ -256,15 +193,12 @@ def _decode_video_frames(data: bytes, every_n: int) -> list[tuple[int, np.ndarra
     return out
 
 
-def make_frame_sample_udf(every_n: int = 10, fake: bool | None = None):
-    """Video frame sampling. ``fake=None`` (default) attempts the real
+def make_frame_sample_udf(every_n: int = 10):
+    """Video frame sampling: every Nth frame of each payload via the real
     decoder per row — PyAV when installed, the pure-numpy uncompressed-AVI
-    walker otherwise — and emits the deterministic single-frame stand-in
-    only for payloads no available decoder covers; ``fake=False`` forces
-    real decode (NotImplementedError propagates); ``fake=True`` forces
-    the stand-in (plumbing tests / non-video corpora). The stand-in
-    treats the payload as a single-frame 'video' (its PNG), emitting the
-    rows the real sampler would."""
+    walker otherwise. A payload no available decoder covers becomes the
+    deterministic single-frame stand-in (its bytes as frame 0); a
+    malformed one is dropped."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ocr_spark.imaging.png import encode_png
 
@@ -277,16 +211,9 @@ def make_frame_sample_udf(every_n: int = 10, fake: bool | None = None):
                 data = bytes(r.png) if r.png is not None else b""
                 if not data:
                     continue
-                if fake:
-                    rows.append(
-                        {"media_ref": r.media_ref, "frame_idx": 0, "frame_png": data}
-                    )
-                    continue
                 try:
                     frames = _decode_video_frames(data, every_n)
                 except NotImplementedError:
-                    if fake is False:
-                        raise
                     rows.append(
                         {"media_ref": r.media_ref, "frame_idx": 0, "frame_png": data}
                     )

@@ -19,12 +19,11 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from ocr_spark.fixtures import build_corpus
+from ocr_spark.fixtures import build_corpus, cached_dir
 
 # number of layout partitions; any runtime n_buckets works (each doc
 # lands in exactly one pmod(bucket, n) class), but hash-fallback
@@ -175,13 +174,9 @@ def fixture_corpus_dir(n_docs: int, skew_spans: int = 24) -> str:
 
     Lives here (not in __spark_entry__) so library code never imports the
     driver shim (VERDICT r1 #10)."""
-    d = os.path.join(
-        tempfile.gettempdir(),
+    return cached_dir(
         f"ocr_spark_corpus_{CORPUS_VERSION}_n{n_docs}_s{skew_spans}",
+        lambda d: write_corpus_parquet(
+            d, n_docs=n_docs, skew_monster_spans=skew_spans
+        ),
     )
-    marker = os.path.join(d, "_done")
-    if not os.path.exists(marker):
-        write_corpus_parquet(d, n_docs=n_docs, skew_monster_spans=skew_spans)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return d

@@ -995,11 +995,11 @@ def test_media_video_frames_real_and_typed_paths(spark):
     non-RIFF payload as a single stand-in row, the planted truncated AVI
     dropped entirely. The hash match against the golden table is
     test_query_matches_oracle[media_video_frames]."""
-    from ocr_spark.functions.extractops import q_media_video_frames
+    from ocr_spark.functions.extractops import QUERIES
     from ocr_spark.functions.golden import VIDEO_EVERY_N
 
     sf = "/root/testdata/sf0.001"
-    rows = q_media_video_frames(spark, sf).collect()
+    rows = QUERIES["media_video_frames"].fn(spark, sf).collect()
     by_ref = {}
     for row in rows:
         by_ref.setdefault(row["media_ref"], []).append(row["frame_idx"])
@@ -1017,10 +1017,13 @@ def test_media_audio_features_typed_paths(spark):
     NaN), the non-audio payload becomes a typed decode_ok=false row. The
     hash match against the golden table is
     test_query_matches_oracle[media_audio_features]."""
-    from ocr_spark.functions.extractops import q_media_audio_features
+    from ocr_spark.functions.extractops import QUERIES
 
     sf = "/root/testdata/sf0.001"
-    rows = {x["media_ref"]: x for x in q_media_audio_features(spark, sf).collect()}
+    rows = {
+        x["media_ref"]: x
+        for x in QUERIES["media_audio_features"].fn(spark, sf).collect()
+    }
     assert rows["aud_empty"]["decode_ok"] and rows["aud_empty"]["rms"] == 0.0
     assert not rows["aud_bad"]["decode_ok"]
     # stereo (8000, -4000) mono-averages to 2000/32768

@@ -572,9 +572,10 @@ def test_estimate_noise_u8_matches_float_path():
 
 
 def test_box_mean_u8_int64_path_wide_image():
-    """A row wide enough for 255*k*(w+k+1) to reach 2^31 accumulates in
-    int64 (the running sums of this near-white image pass 2^31); the
-    means equal a float64 reference."""
+    """A row wide enough for 255*k*(w+k+1) to reach 2^31: the int32
+    running sums of this near-white image wrap past 2^31, yet every
+    window sum (a difference of two of them) is exact, so the means
+    equal a float64 reference."""
     from numpy.lib.stride_tricks import sliding_window_view
 
     k, h, w = 11, 3, 800_000

@@ -1,22 +1,20 @@
-"""Multimodal binary-column plumbing: image stats/thumbnails (real) and
-the stubbed audio/video decoders keep typed schemas and batch shapes."""
+"""Multimodal binary-column plumbing: image stats, audio features and
+video frame sampling keep typed schemas and batch shapes."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from ocr_spark.imaging.png import decode_png, encode_png
+from ocr_spark.imaging.png import encode_png
 from ocr_spark.multimodal import (
     AUDIO_FEATURES_SCHEMA,
     IMAGE_STATS_SCHEMA,
-    THUMBNAIL_SCHEMA,
     VIDEO_FRAMES_SCHEMA,
     _decode_audio,
-    image_stats_udf,
-    make_audio_features_udf,
+    audio_features_frame,
+    image_stats_frame,
     make_frame_sample_udf,
-    make_thumbnail_udf,
 )
 
 
@@ -36,21 +34,14 @@ def media_df(spark):
 def test_image_stats(spark, media_df):
     out = {
         r["media_ref"]: r
-        for r in media_df.mapInPandas(image_stats_udf, IMAGE_STATS_SCHEMA).collect()
+        for r in media_df.mapInPandas(
+            lambda it: map(image_stats_frame, it), IMAGE_STATS_SCHEMA
+        ).collect()
     }
     assert out["m_gray"]["width"] == 60 and out["m_gray"]["channels"] == 1
     assert out["m_gray"]["mean_intensity"] == 128.0
     assert out["m_rgb"]["channels"] == 3
     assert out["m_bad"]["decode_ok"] is False
-
-
-def test_thumbnail(spark, media_df):
-    out = media_df.mapInPandas(make_thumbnail_udf(16), THUMBNAIL_SCHEMA).collect()
-    refs = {r["media_ref"] for r in out}
-    assert refs == {"m_gray", "m_rgb"}  # undecodable row dropped
-    for r in out:
-        t = decode_png(bytes(r["thumb"]))
-        assert t.shape == (16, 16)
 
 
 def _wav_bytes(n: int = 800, rate: int = 8000, amp: int = 16384) -> bytes:
@@ -94,7 +85,7 @@ def test_audio_real_wav_decode(spark):
     out = {
         r["media_ref"]: r
         for r in df.mapInPandas(
-            make_audio_features_udf(), AUDIO_FEATURES_SCHEMA
+            lambda it: map(audio_features_frame, it), AUDIO_FEATURES_SCHEMA
         ).collect()
     }
     assert out["a_wav"]["decode_ok"] is True
@@ -104,8 +95,8 @@ def test_audio_real_wav_decode(spark):
 
 
 def test_video_real_decode_under_av(spark):
-    """Real frame sampling runs only when PyAV/ffmpeg is installed;
-    skips cleanly (and the forced-real path raises) when absent."""
+    """Real frame sampling of an mp4 runs only when PyAV/ffmpeg is
+    installed; skips cleanly (and the decoder raises) when absent."""
     from ocr_spark.multimodal import _av, _decode_video_frames
 
     if _av() is None:
@@ -130,29 +121,9 @@ def test_video_real_decode_under_av(spark):
         [("v1", buf.getvalue())], "media_ref string, png binary"
     )
     out = df.mapInPandas(
-        make_frame_sample_udf(every_n=4, fake=False), VIDEO_FRAMES_SCHEMA
+        make_frame_sample_udf(every_n=4), VIDEO_FRAMES_SCHEMA
     ).collect()
     assert [r["frame_idx"] for r in out] == [0, 4, 8]
-
-
-def test_audio_fake_deterministic(spark, media_df):
-    out1 = media_df.mapInPandas(
-        make_audio_features_udf(fake=True), AUDIO_FEATURES_SCHEMA
-    ).collect()
-    out2 = media_df.mapInPandas(
-        make_audio_features_udf(fake=True), AUDIO_FEATURES_SCHEMA
-    ).collect()
-    k = lambda rows: sorted((r["media_ref"], r["rms"]) for r in rows)  # noqa: E731
-    assert k(out1) == k(out2)
-    assert all(r["n_samples"] == 16000 for r in out1)
-
-
-def test_frame_sample_fake(spark, media_df):
-    out = media_df.mapInPandas(
-        make_frame_sample_udf(fake=True), VIDEO_FRAMES_SCHEMA
-    ).collect()
-    assert {r["media_ref"] for r in out} == {"m_gray", "m_rgb", "m_bad"}
-    assert all(r["frame_idx"] == 0 for r in out)
 
 
 def test_audio_zero_frame_wav_has_zero_rms_not_nan():
@@ -164,8 +135,6 @@ def test_audio_zero_frame_wav_has_zero_rms_not_nan():
 
     import pandas as pd
 
-    from ocr_spark.multimodal import make_audio_features_udf
-
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
@@ -173,8 +142,7 @@ def test_audio_zero_frame_wav_has_zero_rms_not_nan():
         w.setframerate(8000)
         w.writeframes(b"")
     batch = pd.DataFrame({"media_ref": ["a0"], "png": [buf.getvalue()]})
-    (out,) = list(make_audio_features_udf()(iter([batch])))
-    row = out.iloc[0]
+    row = audio_features_frame(batch).iloc[0]
     assert bool(row["decode_ok"]) is True
     assert row["n_samples"] == 0
     assert row["rms"] == 0.0 and row["rms"] == row["rms"]  # not NaN
@@ -272,7 +240,7 @@ def test_avi_walker_rejects_compressed_and_truncated():
 
 
 def test_frame_sample_udf_real_avi_mixed_batch(spark):
-    """Default (fake=None) frame sampling over a mixed corpus: AVI
+    """Frame sampling over a mixed corpus: AVI
     payloads decode for REAL in this container (RIFF walker), payloads
     no decoder covers get the single-frame stand-in, malformed AVIs are
     dropped — one batch, three behaviors, typed schema throughout."""
